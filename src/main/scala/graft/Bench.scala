@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Contract-line key for a catalog query name: the prefix before the
     * first underscore, with "ext" compressed to "x" ("ext38_…" -> "x38"),
@@ -135,7 +134,8 @@ object Bench {
       extra: String = "", load1m: Double = -1.0,
       loadRounds: Seq[Double] = Nil,
       minRound: Map[String, Int] = Map.empty,
-      seedS: Double = -1.0): String = {
+      seedS: Double = -1.0,
+      errors: Map[String, String] = Map.empty): String = {
     def m(x: Map[String, Double]): String =
       x.map { case (k, v) => "\"" + k + "\":" + r2(v) }.mkString("{", ",", "}")
     // load1m: the host 1-minute load average sampled at bench START
@@ -163,37 +163,25 @@ object Bench {
     // run's true wall-clock stays reconstructible (-1 = no label entry
     // selected / build skipped)
     val sd = if (seedS < 0) "" else s""","seed_s":${r2(seedS)}"""
-    s"""{"total":${r2(total)},"sf":"$sfDir","load1m":${r2(load1m)}$lr$qr$sd,"queries":${m(queries)},"probe":${m(probes)}$extra}"""
+    // errors: the exception class of every entry that threw in any
+    // timed round — its recorded time is the time to the throw, so
+    // without this a failing entry reads as a fast one ({} = clean run)
+    val er = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
+      .mkString(""","errors":{""", ",", "}")
+    s"""{"total":${r2(total)},"sf":"$sfDir","load1m":${r2(load1m)}$lr$qr$sd,"queries":${m(queries)},"probe":${m(probes)}$er$extra}"""
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     def sampleLoad(): Double = try java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     catch { case _: Throwable => -1.0 }
     val load1m = sampleLoad()
-    // local iteration only (the driver sets no filter): comma-separated
-    // selectors, each matching a full name ("ext03_dedup_minhash_lsh"), an
-    // underscore-delimited prefix ("ext03", "q10"), or a shortKey ("x03",
-    // "10"). Token equality, not startsWith: "q10" must not drag in
-    // q100-q103 during local iteration.
+    // local iteration only (unset in contract runs): Harness.selector tokens
     val filtered = sys.env.contains("SPARK_GRAFT_BENCH_ONLY")
-    val only: String => Boolean = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(pfx) =>
-        val ps = pfx.split(',').map(_.trim).filter(_.nonEmpty).toSet
-        n => ps(n) || ps(n.takeWhile(_ != '_')) || ps(shortKey(n))
-      case None => _ => true
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Verify/SparkTestBase: date-bucketed queries (ext90/ext91)
-      // must group on the same calendar the correctness gate verified
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only: String => Boolean = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(Harness.selector).getOrElse(_ => true)
+    val spark = Harness.session()
     // Warm-up pass at the smallest SF: absorbs JVM/JIT, codegen-compiler
     // and parquet-footer startup so the timed numbers below measure
     // steady-state throughput (the first timed query otherwise absorbs
@@ -202,9 +190,7 @@ object Bench {
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
       SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (_, fn) =>
         try fn(spark, warmDir).count() catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        Harness.release(spark)
       }
     // Shared label seeds (round-14): fixture construction, not query
     // cost — built HERE, in the warmup phase, exactly like JIT/codegen
@@ -252,23 +238,22 @@ object Bench {
     val idxOf = order.zipWithIndex.toMap
     // (total seconds, probe-only seconds) — the probe clock starts when
     // the entry function returns its frame (setup — fixture DDL, ensure*
-    // builds — runs eagerly inside the call; see Bench.runJson)
+    // builds — runs eagerly inside the call; see Bench.runJson). An
+    // entry that throws keeps its time-to-throw and lands in `errors`.
+    var errors = Map.empty[String, String]
     def timeQueries(names: Iterable[String]): Map[String, (Double, Double)] =
       names.map { name =>
+        var err: Throwable = null
         val t0 = System.nanoTime()
         val df = try Some(qmap(name)(spark, sfDir))
-          catch { case _: Throwable => None }
+          catch { case t: Throwable => err = t; None }
         val t1 = System.nanoTime()
-        try df.foreach(_.count()) catch { case _: Throwable => () }
+        try df.foreach(_.count()) catch { case t: Throwable => err = t }
         val t2 = System.nanoTime()
-        // drop per-query persist()ed intermediates so cached blocks don't
-        // accumulate (and skew later queries) across the run; ALSO drop
-        // leftover RDD-level storage — localCheckpoint blocks are not in
-        // the SQL cache and otherwise pin block-manager memory for the
-        // life of the ~170-query JVM
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        if (err != null) errors += name -> err.getClass.getName
+        // per-query cached blocks would otherwise pin block-manager
+        // memory for the life of the ~170-query JVM
+        Harness.release(spark)
         name -> (((t2 - t0) / 1e9, (t2 - t1) / 1e9))
       }.toMap
     val benchStart = System.nanoTime()
@@ -393,7 +378,7 @@ object Bench {
       val w = new java.io.PrintWriter(
         s"${sys.props("user.dir")}/$localFile")
       try w.println(runJson(total, sfDir, results, probes, vsBaseline, load1m,
-        loadRounds.toSeq, minRound, seedS))
+        loadRounds.toSeq, minRound, seedS, errors))
       finally w.close()
     } catch { case _: Throwable => () }
     // stop BEFORE printing: Spark's shutdown logging must not land between

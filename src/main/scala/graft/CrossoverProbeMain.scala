@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Local measurement harness for the ensureLabels exact/capped
@@ -26,13 +25,7 @@ import org.apache.spark.sql.functions._
 object CrossoverProbeMain {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(40000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     graft.ops.configure(spark)
     graft.ops.ensureGraftCatalog(spark)
     val pid = ProcessHandle.current().pid()
@@ -120,9 +113,7 @@ object CrossoverProbeMain {
       val (cb, ca) = measure(t, s"xoc_${variant}_$d", d, capped = true)
       spark.sql(s"DROP TABLE IF EXISTS $t")
       println(f"""{"variant":"$variant","d":$d,"max_df":$mx,"posts":$ps,"pairs":$pr,"pf":${pr.toDouble / ps}%.1f,"choice":"$choice","exact_build_s":$eb%.2f,"exact_apply_s":$ea%.2f,"capped_build_s":$cb%.2f,"capped_apply_s":$ca%.2f}""")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.release(spark)
     }
 
     // warmup (codegen/catalog) on a tiny point

@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` of selected catalog queries to files —
   * the plans/r15 evidence artifacts (optimization guide §1: capture the
   * plan shape — Exchange count, join strategy, PushedFilters/ReadSchema,
   * codegen spans — before and after each change).
   *
   * Usage: tools/run_main.sh graft.PlanDumpMain <sfDir> <outDir> <sel,...>
-  * Selectors match Bench's SPARK_GRAFT_BENCH_ONLY tokens. Each query's
+  * Selectors match Bench's SPARK_GRAFT_BENCH_ONLY tokens; the session is
+  * Bench's ([[Harness.session]], `SPARK_GRAFT_CPUS` cores). Each query's
   * entry function RUNS (index entries build their fixtures eagerly), then
   * the returned frame's formatted plan is written to <outDir>/<name>.txt.
   */
@@ -16,22 +15,14 @@ object PlanDumpMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    val sel = args(2).split(',').map(_.trim).filter(_.nonEmpty).toSet
+    val only = Harness.selector(args(2))
     val suffix = if (args.length > 3) args(3) else ""
-    val only: String => Boolean =
-      n => sel(n) || sel(n.takeWhile(_ != '_')) || sel(Bench.shortKey(n))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // special selector "cc_iteration": dump one executed CC-loop
     // iteration's final adaptive plan (the plans/r16 evidence for the
     // 3-exchanges-per-iteration claim; ExtensionsSpec pins the count)
-    if (sel("cc_iteration")) {
+    if (only("cc_iteration")) {
       import spark.implicits._
       ext.Dedup.ccCapturePlan.set(true)
       try {
@@ -62,9 +53,7 @@ object PlanDumpMain {
         case t: Throwable =>
           System.err.println(s"[plandump] $name failed: $t")
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.release(spark)
     }
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Job-level profiler for bench entries (guide §1.1/§1.5): runs the named
   * catalog queries with a listener that attributes every Spark job to its
@@ -13,22 +12,15 @@ import org.apache.spark.sql.SparkSession
   * dominates fixture-scale applies.
   *
   * Usage: tools/run_main.sh graft.ProfMain <sfDir> <sel1,sel2,...> [reps]
-  * Selectors match Bench's SPARK_GRAFT_BENCH_ONLY tokens.
+  * Selectors match Bench's SPARK_GRAFT_BENCH_ONLY tokens; the session is
+  * Bench's ([[Harness.session]], `SPARK_GRAFT_CPUS` cores).
   */
 object ProfMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val sel = args(1).split(',').map(_.trim).filter(_.nonEmpty).toSet
+    val only = Harness.selector(args(1))
     val reps = if (args.length > 2) args(2).toInt else 2
-    val only: String => Boolean =
-      n => sel(n) || sel(n.takeWhile(_ != '_')) || sel(Bench.shortKey(n))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     case class Rec(desc: String, start: Long, var end: Long = -1L)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Rec]()
@@ -60,9 +52,7 @@ object ProfMain {
         val t1 = System.nanoTime()
         df.count()
         val t2 = System.nanoTime()
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        Harness.release(spark)
         // drain the listener bus before reading the jobs map (round-16,
         // ADVICE r15): SparkListener events are delivered async — a
         // late onJobEnd would otherwise be dropped by the end == -1

@@ -47,13 +47,7 @@ object RecallProbeMain {
 
   def main(args: Array[String]): Unit = {
     val d0 = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     graft.ops.configure(spark)
     val synth = d0.startsWith("synth:")
     val d = if (synth) synthDir(spark, d0.stripPrefix("synth:").toLong)
@@ -132,9 +126,7 @@ object RecallProbeMain {
         .agg(avg("recall_global"), avg("recall_cell")).head
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"""{"probes":$p,"lloyd":$l,"beam":$b,"hops":$h,"per_cell":$pc,"entries":$e,"cell_rerank":$cr,"recall_global":${r.getDouble(0)}%.3f,"recall_cell":${r.getDouble(1)}%.3f,"s":$dt%.1f}""")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.release(spark)
     }
     spark.stop()
   }

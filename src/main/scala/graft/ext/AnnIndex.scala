@@ -84,8 +84,7 @@ object AnnIndex {
       CdcIndex.requireBaseFamilyName(name, "ann")
       graft.ops.ensureGraftCatalog(s)
       graft.functions.SquaredDistance.register(s)
-      val t = Tables(s"graft_cat.db.ann_${name}_cells",
-        s"graft_cat.db.ann_${name}_cents")
+      val t = tables(name)
 
       def tableState(tbl: String): Option[(Long, Long)] =
         try {
@@ -118,10 +117,7 @@ object AnnIndex {
             // append-only growth: assign the delta to the STORED
             // centroids; old assignments and the quantizer are untouched
             val delta = corpus.filter(col("vec_id") > storedMax)
-            assign(delta, s.table(t.cents))
-              .select(col("vec_id"), col("cell").cast("bigint").as("cell"),
-                col("v"), col("norm"))
-              .writeTo(t.cells).append()
+            cellsOf(delta, s.table(t.cents)).writeTo(t.cells).append()
             refreshes.incrementAndGet()
             t
           } else build(s, corpus, t)
@@ -139,22 +135,16 @@ object AnnIndex {
     * twin of [[DedupIndex.ensureCdc]]: [[ensure]]'s count/max watermark
     * can only prove append-only growth (a delete forces a full rebuild;
     * a re-embedded vector under the same id is NOT even detected), so
-    * this variant keys coverage on the
-    * table's committed VERSION and applies the change feed between the
-    * covered version and the head — retract the changed vec_ids from
-    * the cells table (a deletion-vector append; the bucketed layout is
-    * untouched), re-assign the surviving head images against the STORED
-    * centroids, advance the watermark. The quantizer stays as built
-    * (the production IVF discipline — centroids retrain on rebuild, not
-    * per change), so the maintained cells table is row-identical to
+    * this variant keys coverage on the table's committed VERSION and
+    * maintains the cells table through [[CdcIndex.ensureKeyed]], keyed
+    * by `vec_id` (the retraction is a deletion-vector append; the
+    * bucketed layout is untouched): touched head images are re-assigned
+    * against the STORED centroids. The quantizer stays as built (the
+    * production IVF discipline — centroids retrain on rebuild, not per
+    * change), so the maintained cells table is row-identical to
     * re-assigning the head corpus against the stored centroids
-    * (spec-pinned).
-    *
-    * Meta (CDC variant only): `graft_cat.db.ann_<name>_meta
-    * (version BIGINT)`. Crash discipline matches the dedup twin: the
-    * retraction publishes immediately and idempotently; the re-assign
-    * insert + watermark advance land in ONE cross-table txn, so a crash
-    * between the two replays the same slice and converges.
+    * (spec-pinned). Meta (CDC variant only): `graft_cat.db.ann_<name>_meta
+    * (version BIGINT, corpus STRING)`.
     *
     * At 100 TB this is the erasure path for the vector tier: deleting a
     * user's embeddings (q155's pipeline on the primary) reaches the
@@ -163,61 +153,28 @@ object AnnIndex {
   def ensureCdc(s: SparkSession, corpusTable: String, name: String): Tables =
     CdcIndex.withNameLock(s"ann:$name") {
       CdcIndex.requireBaseFamilyName(name, "ann")
-      graft.ops.ensureGraftCatalog(s)
       graft.functions.SquaredDistance.register(s)
-      val t = Tables(s"graft_cat.db.ann_${name}_cells",
-        s"graft_cat.db.ann_${name}_cents")
-      val meta = s"graft_cat.db.ann_${name}_meta"
-      CdcIndex.ensure(s, corpusTable, meta)(t) { (v0, headV) =>
-        applyCdc(s, corpusTable, t, meta, v0, headV); t
-      }(headV => buildCdc(s, corpusTable, t, meta, headV))
+      CdcIndex.ensureKeyed(s, corpusTable, ivfKeyed(s, name))
+      tables(name)
     }
 
-  private def applyCdc(s: SparkSession, corpusTable: String, t: Tables,
-      meta: String, v0: Long, headV: Long): Unit = {
-    val suffix = java.util.UUID.randomUUID().toString.replace("-", "")
-    val tv = s"graft_ann_touched_$suffix"
-    val rv = s"graft_ann_reassigned_$suffix"
-    s.sql(s"SELECT DISTINCT vec_id FROM $corpusTable " +
-        s"VERSION AS OF 'cdf:$v0..$headV'")
-      .createOrReplaceTempView(tv)
-    try {
-      // 1. retract every changed vector's cell row — idempotent replay
-      s.sql(s"DELETE FROM ${t.cells} WHERE vec_id IN (SELECT vec_id FROM $tv)")
-      // 2. re-assign the surviving HEAD images against the STORED
-      //    quantizer and advance the watermark — one atomic publish
-      val head = s.table(corpusTable)
-        .select(col("vec_id"), col("v"), col("norm"))
-      assign(head.join(s.table(tv), Seq("vec_id"), "left_semi"),
-          s.table(t.cents))
-        .select(col("vec_id"), col("cell").cast("bigint").as("cell"),
-          col("v"), col("norm"))
-        .createOrReplaceTempView(rv)
-      CdcIndex.inTxn(s) {
-        s.sql(s"INSERT INTO ${t.cells} SELECT * FROM $rv")
-        s.sql(s"INSERT OVERWRITE $meta SELECT CAST($headV AS BIGINT), '$corpusTable'")
-      }
-      cdcRefreshes.incrementAndGet()
-    } finally {
-      s.catalog.dropTempView(tv)
-      s.catalog.dropTempView(rv)
-    }
+  private def tables(name: String): Tables =
+    Tables(s"graft_cat.db.ann_${name}_cells", s"graft_cat.db.ann_${name}_cents")
+
+  /** The IVF cells family as a [[CdcIndex.Keyed]] (keyed by `vec_id`). */
+  private[graft] def ivfKeyed(s: SparkSession, name: String): CdcIndex.Keyed = {
+    val t = tables(name)
+    CdcIndex.Keyed(s"graft_cat.db.ann_${name}_meta", "vec_id", "vec_id",
+      Seq("vec_id", "v", "norm"),
+      Seq(t.cells -> (cellsOf(_, s.table(t.cents)))), build(s, _, t),
+      cdcRefreshes)
   }
 
-  private def buildCdc(s: SparkSession, corpusTable: String, t: Tables,
-      meta: String, headV: Long): Tables = {
-    build(s, s.table(corpusTable).select(col("vec_id"), col("v"),
-      col("norm")), t)
-    // retractions must be deletion-vector appends, not segment rewrites
-    s.sql(s"ALTER TABLE ${t.cells} SET TBLPROPERTIES " +
-      "('graft.dml.mode'='merge-on-read')")
-    // meta LAST: a crash above leaves meta ≠ version → next ensure rebuilds
-    s.sql(s"DROP TABLE IF EXISTS $meta")
-    s.sql(s"CREATE TABLE $meta (version BIGINT, corpus STRING)")
-    s.sql(s"INSERT INTO $meta SELECT CAST($headV AS BIGINT), '$corpusTable'")
-    t
-  }
-
+  /** Stored cells rows: `vs` assigned against `cents`. */
+  private def cellsOf(vs: DataFrame, cents: DataFrame): DataFrame =
+    assign(vs, cents)
+      .select(col("vec_id"), col("cell").cast("bigint").as("cell"),
+        col("v"), col("norm"))
 
   // ---------------------------------------------------------------- PQ
 
@@ -276,8 +233,7 @@ object AnnIndex {
       CdcIndex.requireIndexName(name)
       graft.ops.ensureGraftCatalog(s)
       graft.functions.SquaredDistance.register(s)
-      val t = PqTables(s"graft_cat.db.ann_${name}_pq_codes",
-        s"graft_cat.db.ann_${name}_pq_cents")
+      val t = pqTables(name)
 
       def codesState: Option[(Long, Long)] =
         try {
@@ -300,10 +256,7 @@ object AnnIndex {
             // append-only growth: encode the delta against the STORED
             // codebooks; old codes and the codebooks are untouched
             val delta = corpus.filter(col("vec_id") > storedMax)
-            encode(subvectors(delta), s.table(t.cents))
-              .select(col("vec_id"), col("j").cast("int").as("j"),
-                col("code").cast("int").as("code"))
-              .writeTo(t.codes).append()
+            pqCodes(delta, s.table(t.cents)).writeTo(t.codes).append()
             pqRefreshes.incrementAndGet()
             t
           } else buildPq(s, corpus, t)
@@ -317,66 +270,37 @@ object AnnIndex {
   /** Version-keyed CDC maintenance of the PQ tier — the last derived
     * artifact in the erasure story: an 8-byte code still encodes the
     * deleted vector's quantized content, so right-to-erasure must reach
-    * it. Same discipline as [[ensureCdc]]: one feed slice retracts the
-    * changed vec_ids' 8 code rows (a deletion-vector append), re-encodes
-    * only the touched head images against the STORED codebooks (they
-    * retrain on rebuild, not per change), advances the watermark. The
-    * maintained codes table is row-identical to re-encoding the head
-    * (spec-pinned). Meta: `graft_cat.db.ann_<name>_pq_meta (version
-    * BIGINT)`; crash ordering identical to the twins. */
+    * it. Keyed by `vec_id` ([[CdcIndex.ensureKeyed]]): one feed slice
+    * retracts the changed vectors' 8 code rows and re-encodes only the
+    * touched head images against the STORED codebooks (they retrain on
+    * rebuild, not per change). The maintained codes table is
+    * row-identical to re-encoding the head (spec-pinned). Meta:
+    * `graft_cat.db.ann_<name>_pq_meta (version BIGINT, corpus STRING)`. */
   def ensurePqCdc(s: SparkSession, corpusTable: String,
       name: String): PqTables = CdcIndex.withNameLock(s"ann-pq:$name") {
     CdcIndex.requireIndexName(name)
-    graft.ops.ensureGraftCatalog(s)
     graft.functions.SquaredDistance.register(s)
-    val t = PqTables(s"graft_cat.db.ann_${name}_pq_codes",
+    CdcIndex.ensureKeyed(s, corpusTable, pqKeyed(s, name))
+    pqTables(name)
+  }
+
+  private def pqTables(name: String): PqTables =
+    PqTables(s"graft_cat.db.ann_${name}_pq_codes",
       s"graft_cat.db.ann_${name}_pq_cents")
-    val meta = s"graft_cat.db.ann_${name}_pq_meta"
-    CdcIndex.ensure(s, corpusTable, meta)(t) { (v0, headV) =>
-      applyPqCdc(s, corpusTable, t, meta, v0, headV); t
-    }(headV => buildPqCdc(s, corpusTable, t, meta, headV))
+
+  /** The PQ codes family as a [[CdcIndex.Keyed]] (keyed by `vec_id`). */
+  private[graft] def pqKeyed(s: SparkSession, name: String): CdcIndex.Keyed = {
+    val t = pqTables(name)
+    CdcIndex.Keyed(s"graft_cat.db.ann_${name}_pq_meta", "vec_id", "vec_id",
+      Seq("vec_id", "v"), Seq(t.codes -> (pqCodes(_, s.table(t.cents)))),
+      buildPq(s, _, t), pqCdcRefreshes)
   }
 
-  private def applyPqCdc(s: SparkSession, corpusTable: String, t: PqTables,
-      meta: String, v0: Long, headV: Long): Unit = {
-    val suffix = java.util.UUID.randomUUID().toString.replace("-", "")
-    val tv = s"graft_pq_touched_$suffix"
-    val rv = s"graft_pq_reencoded_$suffix"
-    s.sql(s"SELECT DISTINCT vec_id FROM $corpusTable " +
-        s"VERSION AS OF 'cdf:$v0..$headV'")
-      .createOrReplaceTempView(tv)
-    try {
-      // 1. retract every changed vector's code rows — idempotent replay
-      s.sql(s"DELETE FROM ${t.codes} WHERE vec_id IN (SELECT vec_id FROM $tv)")
-      // 2. re-encode the surviving HEAD images against the STORED
-      //    codebooks and advance the watermark — one atomic publish
-      val head = s.table(corpusTable).select(col("vec_id"), col("v"))
-      encode(subvectors(head.join(s.table(tv), Seq("vec_id"), "left_semi")),
-          s.table(t.cents))
-        .select(col("vec_id"), col("j").cast("int").as("j"),
-          col("code").cast("int").as("code"))
-        .createOrReplaceTempView(rv)
-      CdcIndex.inTxn(s) {
-        s.sql(s"INSERT INTO ${t.codes} SELECT * FROM $rv")
-        s.sql(s"INSERT OVERWRITE $meta SELECT CAST($headV AS BIGINT), '$corpusTable'")
-      }
-      pqCdcRefreshes.incrementAndGet()
-    } finally {
-      s.catalog.dropTempView(tv)
-      s.catalog.dropTempView(rv)
-    }
-  }
-
-  private def buildPqCdc(s: SparkSession, corpusTable: String, t: PqTables,
-      meta: String, headV: Long): PqTables = {
-    buildPq(s, s.table(corpusTable).select(col("vec_id"), col("v")), t)
-    s.sql(s"ALTER TABLE ${t.codes} SET TBLPROPERTIES " +
-      "('graft.dml.mode'='merge-on-read')")
-    s.sql(s"DROP TABLE IF EXISTS $meta")
-    s.sql(s"CREATE TABLE $meta (version BIGINT, corpus STRING)")
-    s.sql(s"INSERT INTO $meta SELECT CAST($headV AS BIGINT), '$corpusTable'")
-    t
-  }
+  /** Stored code rows: `vs` encoded against the codebooks `cents`. */
+  private def pqCodes(vs: DataFrame, cents: DataFrame): DataFrame =
+    encode(subvectors(vs), cents)
+      .select(col("vec_id"), col("j").cast("int").as("j"),
+        col("code").cast("int").as("code"))
 
   /** Deterministic PQ full build — bit-identical to ext75's in-query
     * construction (seed every 64th vector per subspace, ONE
@@ -404,12 +328,7 @@ object AnnIndex {
       .select(col("j").cast("int").as("j"), col("cid").cast("int").as("cid"),
         expr("transform(array_sort(pc), t -> t.cv)").as("c"))
     cents1.writeTo(t.cents).createOrReplace()
-    encode(sub, s.table(t.cents))
-      .select(col("vec_id"), col("j").cast("int").as("j"),
-        col("code").cast("int").as("code"))
-      .writeTo(t.codes)
-      .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
-      .createOrReplace()
+    CdcIndex.createArtifact(pqCodes(corpus, s.table(t.cents)), t.codes)
     pqBuilds.incrementAndGet()
     t
   }
@@ -444,9 +363,7 @@ object AnnIndex {
     // bucket(8, cell): the corpus lands co-located by cell, so probe
     // joins are storage-partitioned (no corpus-side exchange) wherever
     // v2 bucketing is enabled — and plain shuffled joins elsewhere
-    assign(corpus, s.table(t.cents))
-      .select(col("vec_id"), col("cell").cast("bigint").as("cell"),
-        col("v"), col("norm"))
+    cellsOf(corpus, s.table(t.cents))
       .writeTo(t.cells)
       .partitionedBy(bucket(8, col("cell")))
       .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
@@ -536,66 +453,32 @@ object AnnIndex {
       }
     }
 
-  /** Version-keyed CDC maintenance of the SQ tier: retract the changed
-    * vec_ids' code rows (deletion-vector append), re-encode only the
-    * touched head images (row-local — nothing to retrain), advance the
-    * watermark in the same cross-table txn. Meta:
-    * `graft_cat.db.ann_<name>_sq_meta (version BIGINT, corpus STRING)`;
-    * crash ordering identical to the cells/PQ twins. */
+  /** Version-keyed CDC maintenance of the SQ tier, keyed by `vec_id`
+    * ([[CdcIndex.ensureKeyed]]): retract the changed vectors' code rows
+    * and re-encode only the touched head images (row-local — nothing to
+    * retrain). Meta: `graft_cat.db.ann_<name>_sq_meta (version BIGINT,
+    * corpus STRING)`. */
   def ensureSqCdc(s: SparkSession, corpusTable: String,
       name: String): String = CdcIndex.withNameLock(s"ann-sq:$name") {
     CdcIndex.requireIndexName(name)
-    graft.ops.ensureGraftCatalog(s)
-    val codes = s"graft_cat.db.ann_${name}_sq_codes"
-    val meta = s"graft_cat.db.ann_${name}_sq_meta"
-    CdcIndex.ensure(s, corpusTable, meta)(codes) { (v0, headV) =>
-      applySqCdc(s, corpusTable, codes, meta, v0, headV); codes
-    } { headV =>
-      buildSq(s, s.table(corpusTable).select(col("vec_id"), col("v")), codes)
-      s.sql(s"ALTER TABLE $codes SET TBLPROPERTIES " +
-        "('graft.dml.mode'='merge-on-read')")
-      s.sql(s"DROP TABLE IF EXISTS $meta")
-      s.sql(s"CREATE TABLE $meta (version BIGINT, corpus STRING)")
-      s.sql(s"INSERT INTO $meta SELECT CAST($headV AS BIGINT), '$corpusTable'")
-      codes
-    }
+    val f = sqKeyed(s, name)
+    CdcIndex.ensureKeyed(s, corpusTable, f)
+    f.artifacts.head._1
   }
 
-  private def applySqCdc(s: SparkSession, corpusTable: String, codes: String,
-      meta: String, v0: Long, headV: Long): Unit = {
-    val suffix = java.util.UUID.randomUUID().toString.replace("-", "")
-    val tv = s"graft_sq_touched_$suffix"
-    val rv = s"graft_sq_reencoded_$suffix"
-    s.sql(s"SELECT DISTINCT vec_id FROM $corpusTable " +
-        s"VERSION AS OF 'cdf:$v0..$headV'")
-      .createOrReplaceTempView(tv)
-    try {
-      // 1. retract every changed vector's code row — idempotent replay
-      s.sql(s"DELETE FROM $codes WHERE vec_id IN (SELECT vec_id FROM $tv)")
-      // 2. re-encode the surviving HEAD images (row-local) and advance
-      //    the watermark — one atomic publish
-      val head = s.table(corpusTable).select(col("vec_id"), col("v"))
-      sqEncode(head.join(s.table(tv), Seq("vec_id"), "left_semi"))
-        .createOrReplaceTempView(rv)
-      CdcIndex.inTxn(s) {
-        s.sql(s"INSERT INTO $codes SELECT * FROM $rv")
-        s.sql(s"INSERT OVERWRITE $meta SELECT CAST($headV AS BIGINT), '$corpusTable'")
-      }
-      sqCdcRefreshes.incrementAndGet()
-    } finally {
-      s.catalog.dropTempView(tv)
-      s.catalog.dropTempView(rv)
-    }
+  /** The SQ codes family as a [[CdcIndex.Keyed]] (keyed by `vec_id`). */
+  private[graft] def sqKeyed(s: SparkSession, name: String): CdcIndex.Keyed = {
+    val codes = s"graft_cat.db.ann_${name}_sq_codes"
+    CdcIndex.Keyed(s"graft_cat.db.ann_${name}_sq_meta", "vec_id", "vec_id",
+      Seq("vec_id", "v"), Seq(codes -> (sqEncode _)), buildSq(s, _, codes),
+      sqCdcRefreshes)
   }
 
   private def buildSq(s: SparkSession, corpus: DataFrame,
       codes: String): String = {
     // plain rebuild invalidates any CDC watermark (see build())
     s.sql("DROP TABLE IF EXISTS " + codes.stripSuffix("_codes") + "_meta")
-    sqEncode(corpus)
-      .writeTo(codes)
-      .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
-      .createOrReplace()
+    CdcIndex.createArtifact(sqEncode(corpus), codes)
     sqBuilds.incrementAndGet()
     codes
   }
@@ -624,8 +507,7 @@ object AnnIndex {
     * quadratic on a hot cell; the quantizer's cell count remains the
     * recall lever (more centroids → smaller cells → fewer capped
     * splits). Meta: `graft_cat.db.ann_<name>_gr_meta (version
-    * BIGINT, corpus STRING)`; crash ordering identical to the other
-    * families. */
+    * BIGINT, corpus STRING)`. */
   val graphBuilds = new java.util.concurrent.atomic.AtomicLong(0)
   val graphCdcRefreshes = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -682,53 +564,22 @@ object AnnIndex {
   def ensureGraphCdc(s: SparkSession, corpusTable: String,
       name: String): String = CdcIndex.withNameLock(s"ann-gr:$name") {
     CdcIndex.requireIndexName(name)
-    graft.ops.ensureGraftCatalog(s)
     graft.functions.CosineSimilarity.register(s)
-    val edges = s"graft_cat.db.ann_${name}_gr_edges"
-    val meta = s"graft_cat.db.ann_${name}_gr_meta"
-    CdcIndex.ensure(s, corpusTable, meta)(edges) { (v0, headV) =>
-      applyGraphCdc(s, corpusTable, edges, meta, v0, headV); edges
-    } { headV =>
-      graphEdges(s.table(corpusTable))
-        .writeTo(edges)
-        .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
-        .createOrReplace()
-      s.sql(s"ALTER TABLE $edges SET TBLPROPERTIES " +
-        "('graft.dml.mode'='merge-on-read')")
-      s.sql(s"DROP TABLE IF EXISTS $meta")
-      s.sql(s"CREATE TABLE $meta (version BIGINT, corpus STRING)")
-      s.sql(s"INSERT INTO $meta SELECT CAST($headV AS BIGINT), '$corpusTable'")
-      graphBuilds.incrementAndGet()
-      edges
-    }
+    val f = graphKeyed(name)
+    CdcIndex.ensureKeyed(s, corpusTable, f)
+    f.artifacts.head._1
   }
 
-  private def applyGraphCdc(s: SparkSession, corpusTable: String,
-      edges: String, meta: String, v0: Long, headV: Long): Unit = {
-    val suffix = java.util.UUID.randomUUID().toString.replace("-", "")
-    val cv = s"graft_gr_cells_$suffix"
-    val rv = s"graft_gr_rederived_$suffix"
-    // the feed slice carries full rows, so DELETED vectors still expose
-    // their cell — the retraction key
-    s.sql(s"SELECT DISTINCT CAST(label AS BIGINT) AS cell " +
-        s"FROM $corpusTable VERSION AS OF 'cdf:$v0..$headV'")
-      .createOrReplaceTempView(cv)
-    try {
-      // 1. retract every touched CELL's edges — idempotent replay
-      s.sql(s"DELETE FROM $edges WHERE cell IN (SELECT cell FROM $cv)")
-      // 2. re-derive those cells from the head corpus (cell-local pair
-      //    joins) and advance the watermark — one atomic publish
-      val head = s.table(corpusTable).select(col("vec_id"), col("label"), col("v"))
-        .join(s.table(cv), col("label").cast("bigint") === col("cell"), "left_semi")
-      graphEdges(head).createOrReplaceTempView(rv)
-      CdcIndex.inTxn(s) {
-        s.sql(s"INSERT INTO $edges SELECT * FROM $rv")
-        s.sql(s"INSERT OVERWRITE $meta SELECT CAST($headV AS BIGINT), '$corpusTable'")
-      }
-      graphCdcRefreshes.incrementAndGet()
-    } finally {
-      s.catalog.dropTempView(cv)
-      s.catalog.dropTempView(rv)
-    }
+  /** The graph family as a [[CdcIndex.Keyed]], keyed by `cell`: the
+    * feed slice carries full rows, so a DELETED vector still exposes its
+    * cell — the retraction key. */
+  private[graft] def graphKeyed(name: String): CdcIndex.Keyed = {
+    val edges = s"graft_cat.db.ann_${name}_gr_edges"
+    CdcIndex.Keyed(s"graft_cat.db.ann_${name}_gr_meta", "cell",
+      "CAST(label AS BIGINT)", Seq("vec_id", "label", "v"),
+      Seq(edges -> (graphEdges _)), { head =>
+        CdcIndex.createArtifact(graphEdges(head), edges)
+        graphBuilds.incrementAndGet()
+      }, graphCdcRefreshes)
   }
 }

@@ -1,19 +1,21 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared skeleton of version-keyed CDC index maintenance — the common
-  * half of [[DedupIndex.ensureCdc]], [[AnnIndex.ensureCdc]],
-  * [[AnnIndex.ensurePqCdc]] and [[SearchIndex.ensureCdc]]: resolve the
-  * corpus table's committed head version, compare it to the watermark
-  * stored in the index's meta table, and dispatch to no-op / feed apply
-  * / full rebuild. The artifact-specific halves (what to retract, what
-  * to re-derive, the meta schema) stay with each index.
+/** Version-keyed CDC index maintenance. [[ensure]] resolves the corpus
+  * table's committed head version, compares it to the watermark stored
+  * in the index's `(version, corpus)` meta table, and dispatches to
+  * no-op / feed apply / full rebuild. [[ensureKeyed]] is the whole
+  * lifecycle of the seven KEYED families (minhash sigs, exact grams,
+  * BM25 postings, IVF cells, PQ codes, SQ codes, NSW graph edges): each
+  * supplies only its key, derives and full build as a [[Keyed]]. The
+  * two component-label families keep their own apply over [[ensure]]
+  * — a label is a global property, not a per-key one.
   *
   * The feed-apply callback may throw `UnsupportedOperationException`
   * when the change feed refuses a slice it cannot attribute row-exactly
-  * (e.g. a copy-on-write rewrite in history) — the skeleton then falls
+  * (e.g. a copy-on-write rewrite in history) — the dispatch then falls
   * back to the full rebuild, the documented degradation path.
   */
 private[graft] object CdcIndex {
@@ -74,24 +76,20 @@ private[graft] object CdcIndex {
     graft.ops.withDesc(s, "cdc: watermark")(
       s.table(s"$table.versions").agg(max(col("v"))).head.getLong(0))
 
-  /** The stored watermark, or None when the meta table is absent/empty
-    * or predates the CDC layout (no `version` column → rebuild). */
-  def storedVersion(s: SparkSession, meta: String): Option[Long] =
-    try Some(graft.ops.withDesc(s, "cdc: watermark")(
-      s.table(meta).select("version").head.getLong(0)))
-    catch {
-      case _: org.apache.spark.sql.AnalysisException => None
-      case _: NoSuchElementException => None
-    }
-
-  /** The corpus table a CDC meta is bound to — None when the meta is
-    * absent/empty or predates the identity column. */
-  def storedCorpus(s: SparkSession, meta: String): Option[String] =
+  /** (version, corpus) from one meta read, or None when the meta is
+    * absent, empty, or not exactly the `(version BIGINT, corpus STRING)`
+    * layout — a legacy meta (pre-`corpus`, or the older keyed metas'
+    * write-only `n_docs`/`max_id` columns) is unverifiable, and [[ensure]]
+    * rebuilds it once, which self-migrates it. */
+  private def storedMeta(s: SparkSession, meta: String)
+      : Option[(Long, String)] =
     try {
       val df = s.table(meta)
-      if (!df.schema.fieldNames.contains("corpus")) None
-      else Option(graft.ops.withDesc(s, "cdc: watermark")(
-        df.select("corpus").head.getString(0)))
+      if (df.schema.fieldNames.toSeq != Seq("version", "corpus")) None
+      else {
+        val r = graft.ops.withDesc(s, "cdc: watermark")(df.head())
+        Some((r.getLong(0), r.getString(1)))
+      }
     } catch {
       case _: org.apache.spark.sql.AnalysisException => None
       case _: NoSuchElementException => None
@@ -104,37 +102,13 @@ private[graft] object CdcIndex {
     * table it was recorded for — so the meta also records the corpus
     * IDENT, and a call naming a DIFFERENT table rebuilds (re-binding
     * the index to the requested corpus) instead of silently no-opping
-    * or grafting another table's feed slice onto this index. A meta
-    * from before the identity column exists is unverifiable and
-    * rebuilds once, which self-migrates it. */
-  /** (version, corpus) from one meta read (round-16): storedVersion +
-    * storedCorpus each paid a separate scan job of the same one-row
-    * table — at ~0.1 s scheduler floor per job that was a visible slice
-    * of every ensure* call's fixed cost (ext141 alone makes 18 of
-    * them). Same absent/legacy semantics as the two helpers. */
-  private def storedMeta(s: SparkSession, meta: String)
-      : Option[(Long, Option[String])] =
-    try {
-      val df = s.table(meta)
-      val hasCorpus = df.schema.fieldNames.contains("corpus")
-      val r = graft.ops.withDesc(s, "cdc: watermark")(
-        (if (hasCorpus) df.select(col("version"), col("corpus"))
-         else df.select(col("version"), lit(null).cast("string"))).head())
-      Some((r.getLong(0), Option(r.getString(1))))
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => None
-      case _: NoSuchElementException => None
-    }
-
+    * or grafting another table's feed slice onto this index. */
   def ensure[T](s: SparkSession, corpusTable: String, meta: String)(
       noOp: => T)(apply: (Long, Long) => T)(rebuild: Long => T): T = {
     val headV = headVersion(s, corpusTable)
-    val stored = storedMeta(s, meta)
-    stored.map(_._1) match {
-      case Some(_) if !stored.exists(_._2.contains(corpusTable)) =>
-        rebuild(headV)
-      case Some(v0) if v0 >= headV => noOp
-      case Some(v0) =>
+    storedMeta(s, meta) match {
+      case Some((v0, c)) if c == corpusTable && v0 >= headV => noOp
+      case Some((v0, c)) if c == corpusTable =>
         // retention guard: `expire_versions` may have dropped commits
         // INSIDE (v0, headV] — the change feed then refuses the range
         // with IllegalArgumentException (NOT the feed-refusal
@@ -156,9 +130,108 @@ private[graft] object CdcIndex {
         catch {
           case _: UnsupportedOperationException => rebuild(headV)
         }
-      case None => rebuild(headV)
+      case _ => rebuild(headV)
     }
   }
+
+  /** A KEYED index family: every artifact row belongs to exactly one
+    * key, and the rows of a key are a pure function of the head images
+    * that carry that key (plus, at most, stored state that only a
+    * rebuild changes — the IVF/PQ quantizers). That is what lets
+    * [[ensureKeyed]] maintain it from the change feed by retracting and
+    * re-deriving touched keys only.
+    *
+    * @param meta      the `(version, corpus)` watermark table
+    * @param key       the retraction column every artifact table carries
+    * @param keyOf     SQL expression computing `key` from a corpus row
+    *                  (the feed slice carries full rows, so a deleted row
+    *                  still exposes its key)
+    * @param head      corpus columns the derives and the build read
+    * @param artifacts each artifact table with the derive of its rows
+    *                  from head images
+    * @param build     the family's full build over the head projection
+    *                  (it counts its own builds)
+    * @param refreshes the family's CDC-apply counter */
+  final case class Keyed(meta: String, key: String, keyOf: String,
+      head: Seq[String], artifacts: Seq[(String, DataFrame => DataFrame)],
+      build: DataFrame => Unit,
+      refreshes: java.util.concurrent.atomic.AtomicLong)
+
+  /** Version-keyed CDC maintenance of a [[Keyed]] family over a
+    * CATALOG-table corpus, dispatched by [[ensure]]:
+    *
+    *   - apply: the DISTINCT keys of the `cdf:v0..head` slice become a
+    *     touched-key view; every artifact table retracts those keys
+    *     (DELETE — a deletion-vector append on the merge-on-read
+    *     artifacts, cost ∝ changes); the touched keys' surviving head
+    *     images are re-derived; ONE cross-table txn ([[inTxn]]) lands
+    *     every insert together with the `(version, corpus)` advance;
+    *   - rebuild: the family's full build, `merge-on-read` on every
+    *     artifact table (retractions must be DV appends, not segment
+    *     rewrites), the meta LAST.
+    *
+    * Crash ordering: the retraction publishes immediately (row-level
+    * ops never stage into [[graft.sources.SegTxn]]), the inserts and the
+    * watermark advance publish atomically. A crash between the two
+    * leaves meta at the old version, and the re-run replays the SAME
+    * feed slice: the DELETE is a no-op on already-retracted keys and the
+    * txn lands re-derive + advance together — convergent without
+    * exactly-once. A crash inside a rebuild leaves meta absent or
+    * stale against the rebuilt tables, so the next call rebuilds. */
+  def ensureKeyed(s: SparkSession, corpusTable: String, f: Keyed): Unit = {
+    graft.ops.ensureGraftCatalog(s)
+    ensure(s, corpusTable, f.meta)(()) { (v0, headV) =>
+      val uid = java.util.UUID.randomUUID().toString.replace("-", "")
+      val tv = s"graft_cdc_touched_$uid"
+      val views = f.artifacts.indices.map(i => s"graft_cdc_derived_${uid}_$i")
+      s.sql(s"SELECT DISTINCT ${f.keyOf} AS ${f.key} FROM $corpusTable " +
+          s"VERSION AS OF 'cdf:$v0..$headV'")
+        .createOrReplaceTempView(tv)
+      try {
+        f.artifacts.foreach { case (t, _) =>
+          s.sql(s"DELETE FROM $t WHERE ${f.key} IN (SELECT ${f.key} FROM $tv)")
+        }
+        val images = s.table(corpusTable).select(f.head.map(col): _*)
+          .join(s.table(tv).select(col(f.key).as("cdc_touched_key")),
+            expr(f.keyOf) === col("cdc_touched_key"), "left_semi")
+        f.artifacts.zip(views).foreach { case ((_, derive), v) =>
+          derive(images).createOrReplaceTempView(v)
+        }
+        inTxn(s) {
+          f.artifacts.zip(views).foreach { case ((t, _), v) =>
+            s.sql(s"INSERT INTO $t SELECT * FROM $v")
+          }
+          s.sql(s"INSERT OVERWRITE ${f.meta} SELECT CAST($headV AS BIGINT), " +
+            s"'$corpusTable'")
+        }
+        f.refreshes.incrementAndGet()
+      } finally (tv +: views).foreach(s.catalog.dropTempView)
+    } { headV =>
+      f.build(s.table(corpusTable).select(f.head.map(col): _*))
+      f.artifacts.foreach { case (t, _) =>
+        s.sql(s"ALTER TABLE $t SET TBLPROPERTIES " +
+          "('graft.dml.mode'='merge-on-read')")
+      }
+      writeMeta(s, f.meta, headV, corpusTable)
+    }
+  }
+
+  /** (Re)create a `(version, corpus)` meta at `version` — the LAST step
+    * of every rebuild, so a crash before it leaves the meta absent or
+    * stale and the next ensure rebuilds. */
+  def writeMeta(s: SparkSession, meta: String, version: Long,
+      corpusTable: String): Unit = {
+    s.sql(s"DROP TABLE IF EXISTS $meta")
+    s.sql(s"CREATE TABLE $meta (version BIGINT, corpus STRING)")
+    s.sql(s"INSERT INTO $meta SELECT CAST($version AS BIGINT), '$corpusTable'")
+  }
+
+  /** Create-or-replace an index artifact from `df`, declaring the
+    * [[AutoCompactSpec]] compaction policy. */
+  def createArtifact(df: DataFrame, table: String): Unit =
+    df.writeTo(table)
+      .tableProperty("graft.autocompact", AutoCompactSpec)
+      .createOrReplace()
 
   /** The (catalog table ident, committed head version) behind `df` when
     * it is a PURE scan of one `graft_cat` table — optional subquery

@@ -1114,11 +1114,8 @@ object Dedup {
       s.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_${toIx}_$x"))
     arts.foreach(x => s.sql(
       s"CALL graft_cat.system.clone('db.dedup_${srcIx}_$x', 'db.dedup_${toIx}_$x')"))
-    val v = CdcIndex.headVersion(s, boundCorpus)
-    s.sql(s"CREATE TABLE graft_cat.db.dedup_${toIx}_$metaSuffix " +
-      "(version BIGINT, corpus STRING)")
-    s.sql(s"INSERT INTO graft_cat.db.dedup_${toIx}_$metaSuffix " +
-      s"SELECT CAST($v AS BIGINT), '$boundCorpus'")
+    CdcIndex.writeMeta(s, s"graft_cat.db.dedup_${toIx}_$metaSuffix",
+      CdcIndex.headVersion(s, boundCorpus), boundCorpus)
   }
 
   /** ext153 — INCREMENTAL COMPONENT LABELS from the persisted label

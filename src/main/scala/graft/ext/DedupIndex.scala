@@ -85,8 +85,7 @@ object DedupIndex {
     CdcIndex.withNameLock(s"dedup:$name") {
       CdcIndex.requireBaseFamilyName(name, "dedup")
       graft.ops.ensureGraftCatalog(s)
-      val t = Tables(s"graft_cat.db.dedup_${name}_sigs",
-        s"graft_cat.db.dedup_${name}_meta")
+      val t = tables(name)
 
       val src = CdcIndex.sourceVersion(s, docs)
       val metaCols: Option[Seq[String]] =
@@ -167,24 +166,12 @@ object DedupIndex {
     * count/max check catches deletes; the version fingerprint catches
     * in-place updates on catalog sources, forcing a full rebuild), this
     * variant keys coverage on the table's committed VERSION and applies
-    * the change feed between the covered version and the head —
-    * retract the signatures of every changed doc_id, re-sign the
-    * surviving head images, advance the watermark. Because a MinHash
-    * signature is a pure per-document function, CDC maintenance is
-    * EXACT: the maintained index is row-identical to a rebuild over the
-    * head snapshot (spec-pinned).
-    *
-    * Meta layout here is `(version BIGINT, n_docs BIGINT, max_id
-    * BIGINT)` — coverage IS the version; counts are diagnostics.
-    *
-    * Crash/atomicity discipline: the retraction DELETE publishes
-    * immediately (row-level ops never stage into [[graft.sources.SegTxn]];
-    * on the merge-on-read sigs table it is a deletion-vector append,
-    * cost ∝ changes), the re-sign INSERT and the meta advance publish
-    * in ONE cross-table txn. A crash between the two leaves meta at the
-    * old version, and the re-run replays the same feed slice: the
-    * DELETE is a no-op on already-retracted rows and the txn lands the
-    * insert+advance together — convergent without exactly-once.
+    * the change feed through [[CdcIndex.ensureKeyed]], keyed by
+    * `doc_id`: a MinHash signature is a pure per-document function, so
+    * retracting every changed doc and re-signing its head image makes
+    * CDC maintenance EXACT — the maintained index is row-identical to a
+    * rebuild over the head snapshot (spec-pinned). Meta:
+    * `(version BIGINT, corpus STRING)`.
     *
     * At 100 TB this is the erasure-compliance path for the index tier:
     * a right-to-erasure DELETE on the corpus (q155's pipeline) reaches
@@ -193,65 +180,24 @@ object DedupIndex {
   def ensureCdc(s: SparkSession, corpusTable: String, name: String): Tables =
     CdcIndex.withNameLock(s"dedup:$name") {
       CdcIndex.requireBaseFamilyName(name, "dedup")
-      graft.ops.ensureGraftCatalog(s)
-      val t = Tables(s"graft_cat.db.dedup_${name}_sigs",
-        s"graft_cat.db.dedup_${name}_meta")
-      CdcIndex.ensure(s, corpusTable, t.meta)(t) { (v0, headV) =>
-        applyCdc(s, corpusTable, t, v0, headV); t
-      }(headV => buildCdc(s, corpusTable, t, headV))
+      CdcIndex.ensureKeyed(s, corpusTable, sigsKeyed(name))
+      tables(name)
     }
 
-  private def applyCdc(s: SparkSession, corpusTable: String, t: Tables,
-      v0: Long, headV: Long): Unit = {
-    val suffix = java.util.UUID.randomUUID().toString.replace("-", "")
-    val tv = s"graft_cdc_touched_$suffix"
-    val rv = s"graft_cdc_resigned_$suffix"
-    s.sql(s"SELECT DISTINCT doc_id FROM $corpusTable " +
-        s"VERSION AS OF 'cdf:$v0..$headV'")
-      .createOrReplaceTempView(tv)
-    try {
-      // 1. retract every changed doc's signature — idempotent replay
-      s.sql(s"DELETE FROM ${t.sigs} WHERE doc_id IN (SELECT doc_id FROM $tv)")
-      // 2. re-sign the surviving HEAD images of the touched docs and
-      //    advance the watermark — one atomic cross-table publish
-      val head = s.table(corpusTable).select(col("doc_id"), col("text"))
-      signatures(head.join(s.table(tv), Seq("doc_id"), "left_semi"))
-        .createOrReplaceTempView(rv)
-      val cs = head.agg(count(lit(1)), max(col("doc_id"))).head
-      val (cnt, mx) = (cs.getLong(0),
-        if (cs.isNullAt(1)) -1L else cs.getLong(1))
-      CdcIndex.inTxn(s) {
-        s.sql(s"INSERT INTO ${t.sigs} SELECT * FROM $rv")
-        s.sql(s"INSERT OVERWRITE ${t.meta} SELECT CAST($headV AS BIGINT), " +
-          s"CAST($cnt AS BIGINT), CAST($mx AS BIGINT), '$corpusTable'")
-      }
-      cdcRefreshes.incrementAndGet()
-    } finally {
-      s.catalog.dropTempView(tv)
-      s.catalog.dropTempView(rv)
-    }
+  private def tables(name: String): Tables =
+    Tables(s"graft_cat.db.dedup_${name}_sigs",
+      s"graft_cat.db.dedup_${name}_meta")
+
+  /** The signature family as a [[CdcIndex.Keyed]] (keyed by `doc_id`). */
+  private[graft] def sigsKeyed(name: String): CdcIndex.Keyed = {
+    val t = tables(name)
+    CdcIndex.Keyed(t.meta, "doc_id", "doc_id", Seq("doc_id", "text"),
+      Seq(t.sigs -> (signatures _)), writeSigs(_, t), cdcRefreshes)
   }
 
-  private def buildCdc(s: SparkSession, corpusTable: String, t: Tables,
-      headV: Long): Tables = {
-    val docs = s.table(corpusTable).select(col("doc_id"), col("text"))
-    val cs = docs.agg(count(lit(1)), max(col("doc_id"))).head
-    val (cnt, mx) = (cs.getLong(0),
-      if (cs.isNullAt(1)) -1L else cs.getLong(1))
-    signatures(docs).writeTo(t.sigs)
-      .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
-      .createOrReplace()
-    // retractions must be deletion-vector appends, not segment rewrites
-    s.sql(s"ALTER TABLE ${t.sigs} SET TBLPROPERTIES " +
-      "('graft.dml.mode'='merge-on-read')")
-    // meta LAST: a crash above leaves meta ≠ version → next ensure rebuilds
-    s.sql(s"DROP TABLE IF EXISTS ${t.meta}")
-    s.sql(s"CREATE TABLE ${t.meta} " +
-      "(version BIGINT, n_docs BIGINT, max_id BIGINT, corpus STRING)")
-    s.sql(s"INSERT INTO ${t.meta} SELECT CAST($headV AS BIGINT), " +
-      s"CAST($cnt AS BIGINT), CAST($mx AS BIGINT), '$corpusTable'")
+  private def writeSigs(docs: DataFrame, t: Tables): Unit = {
+    CdcIndex.createArtifact(signatures(docs), t.sigs)
     builds.incrementAndGet()
-    t
   }
 
   private def build(s: SparkSession, docs: DataFrame, t: Tables,
@@ -259,15 +205,12 @@ object DedupIndex {
     val cs = docs.agg(count(lit(1)), max(col("doc_id"))).head
     val (cnt, mx) = (cs.getLong(0),
       if (cs.isNullAt(1)) -1L else cs.getLong(1))
-    signatures(docs).writeTo(t.sigs)
-      .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
-      .createOrReplace()
+    writeSigs(docs, t)
     // meta LAST: a crash above leaves meta ≠ corpus → next ensure rebuilds
     s.sql(s"DROP TABLE IF EXISTS ${t.meta}")
     s.sql(s"CREATE TABLE ${t.meta} (k BIGINT, n_docs BIGINT, max_id BIGINT)")
     s.sql(s"INSERT INTO ${t.meta} SELECT CAST($fp AS BIGINT), " +
       s"CAST($cnt AS BIGINT), CAST($mx AS BIGINT)")
-    builds.incrementAndGet()
     t
   }
 
@@ -407,9 +350,7 @@ object DedupIndex {
       sym.unpersist(blocking = false)
       s.sql(s"ALTER TABLE $labels SET TBLPROPERTIES " +
         "('graft.dml.mode'='merge-on-read')")
-      s.sql(s"DROP TABLE IF EXISTS $meta")
-      s.sql(s"CREATE TABLE $meta (version BIGINT, corpus STRING)")
-      s.sql(s"INSERT INTO $meta SELECT CAST($headV AS BIGINT), '$corpusTable'")
+      CdcIndex.writeMeta(s, meta, headV, corpusTable)
       labelBuilds.incrementAndGet()
       labels
     }
@@ -843,9 +784,7 @@ object DedupIndex {
       }
       s.sql(s"ALTER TABLE $labels SET TBLPROPERTIES " +
         "('graft.dml.mode'='merge-on-read')")
-      s.sql(s"DROP TABLE IF EXISTS $meta")
-      s.sql(s"CREATE TABLE $meta (version BIGINT, corpus STRING)")
-      s.sql(s"INSERT INTO $meta SELECT CAST($headV AS BIGINT), '$corpusTable'")
+      CdcIndex.writeMeta(s, meta, headV, corpusTable)
       labelCappedBuilds.incrementAndGet()
       labels
     }
@@ -1295,48 +1234,19 @@ object DedupIndex {
   def ensureGramsCdc(s: SparkSession, corpusTable: String,
       name: String): String = CdcIndex.withNameLock(s"dedup-gr:$name") {
     CdcIndex.requireIndexName(name)
-    graft.ops.ensureGraftCatalog(s)
+    val f = gramsKeyed(name)
+    CdcIndex.ensureKeyed(s, corpusTable, f)
+    f.artifacts.head._1
+  }
+
+  /** The gram family as a [[CdcIndex.Keyed]] (keyed by `doc_id`). */
+  private[graft] def gramsKeyed(name: String): CdcIndex.Keyed = {
     val grams = s"graft_cat.db.dedup_${name}_gr_grams"
-    val meta = s"graft_cat.db.dedup_${name}_gr_meta"
-    CdcIndex.ensure(s, corpusTable, meta)(grams) { (v0, headV) =>
-      val suffix = java.util.UUID.randomUUID().toString.replace("-", "")
-      val tv = s"graft_gram_touched_$suffix"
-      val rv = s"graft_gram_rederived_$suffix"
-      s.sql(s"SELECT DISTINCT doc_id FROM $corpusTable " +
-          s"VERSION AS OF 'cdf:$v0..$headV'")
-        .createOrReplaceTempView(tv)
-      try {
-        // 1. retract every changed doc's gram rows — idempotent replay
-        s.sql(s"DELETE FROM $grams WHERE doc_id IN (SELECT doc_id FROM $tv)")
-        // 2. re-derive the surviving HEAD images (per-doc pure) and
-        //    advance the watermark — one atomic publish
-        val head = s.table(corpusTable).select(col("doc_id"), col("text"))
-        gramRows(head.join(s.table(tv), Seq("doc_id"), "left_semi"))
-          .createOrReplaceTempView(rv)
-        CdcIndex.inTxn(s) {
-          s.sql(s"INSERT INTO $grams SELECT * FROM $rv")
-          s.sql(s"INSERT OVERWRITE $meta SELECT CAST($headV AS BIGINT), '$corpusTable'")
-        }
-        gramCdcRefreshes.incrementAndGet()
-      } finally {
-        s.catalog.dropTempView(tv)
-        s.catalog.dropTempView(rv)
-      }
-      grams
-    } { headV =>
-      gramRows(s.table(corpusTable).select(col("doc_id"), col("text")),
-        widen = true)
-        .writeTo(grams)
-        .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
-        .createOrReplace()
-      s.sql(s"ALTER TABLE $grams SET TBLPROPERTIES " +
-        "('graft.dml.mode'='merge-on-read')")
-      s.sql(s"DROP TABLE IF EXISTS $meta")
-      s.sql(s"CREATE TABLE $meta (version BIGINT, corpus STRING)")
-      s.sql(s"INSERT INTO $meta SELECT CAST($headV AS BIGINT), '$corpusTable'")
-      gramBuilds.incrementAndGet()
-      grams
-    }
+    CdcIndex.Keyed(s"graft_cat.db.dedup_${name}_gr_meta", "doc_id", "doc_id",
+      Seq("doc_id", "text"), Seq(grams -> (gramRows(_))), { head =>
+        CdcIndex.createArtifact(gramRows(head, widen = true), grams)
+        gramBuilds.incrementAndGet()
+      }, gramCdcRefreshes)
   }
 
 }

@@ -189,55 +189,43 @@ object Pipeline {
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("norm", expr("sqrt(aggregate(v, 0D, (a, x) -> a + x * x))"))
       .writeTo("graft_cat.db.er_vecs").append()
-    // the nine family builds write DISJOINT artifact sets: overlap them
+    // the nine families, each named by the audit leg its returned table
+    // feeds. Their builds write DISJOINT artifact sets: overlap them
     // (optimization guide §2.6 — the striped ensure* locks + thread-
     // scoped txns make concurrent maintenance of different indexes in
     // one driver safe; measured r15: the builds are many small stages,
     // so back-filling the stage tails cuts the entry's wall-clock
     // without changing any artifact). The two label families share the
     // "label:er" lock and serialize with each other by design.
-    graft.ops.inParallel[Any](Seq(
-      () => DedupIndex.ensureCdc(s, "graft_cat.db.er_docs", "er"),
-      () => DedupIndex.ensureGramsCdc(s, "graft_cat.db.er_docs", "er"),
-      () => DedupIndex.ensureLabelsCdc(s, "graft_cat.db.er_docs", "er"),
-      () => DedupIndex.ensureLabelsCappedCdc(s, "graft_cat.db.er_docs", "er"),
-      () => SearchIndex.ensureCdc(s, "graft_cat.db.er_docs", "er"),
-      () => AnnIndex.ensureCdc(s, "graft_cat.db.er_vecs", "er"),
-      () => AnnIndex.ensurePqCdc(s, "graft_cat.db.er_vecs", "er"),
-      () => AnnIndex.ensureSqCdc(s, "graft_cat.db.er_vecs", "er"),
-      () => AnnIndex.ensureGraphCdc(s, "graft_cat.db.er_vecs", "er")))
+    val (docs, vecs) = ("graft_cat.db.er_docs", "graft_cat.db.er_vecs")
+    val families: Seq[(String, () => String)] = Seq(
+      "minhash-signatures" -> (() => DedupIndex.ensureCdc(s, docs, "er").sigs),
+      "exact-grams" -> (() => DedupIndex.ensureGramsCdc(s, docs, "er")),
+      "component-labels" -> (() => DedupIndex.ensureLabelsCdc(s, docs, "er")),
+      "component-labels-capped" ->
+        (() => DedupIndex.ensureLabelsCappedCdc(s, docs, "er")),
+      "bm25-postings" -> (() => SearchIndex.ensureCdc(s, docs, "er").postings),
+      "ivf-cells" -> (() => AnnIndex.ensureCdc(s, vecs, "er").cells),
+      "pq-codes" -> (() => AnnIndex.ensurePqCdc(s, vecs, "er").codes),
+      "sq-codes" -> (() => AnnIndex.ensureSqCdc(s, vecs, "er")),
+      "nsw-edges" -> (() => AnnIndex.ensureGraphCdc(s, vecs, "er")))
+    def ensureAll(): Map[String, String] = families.map(_._1)
+      .zip(graft.ops.inParallel(families.map(_._2))).toMap
+    ensureAll()
     // the erasure request lands on the PRIMARY tables only
-    s.sql("DELETE FROM graft_cat.db.er_docs WHERE doc_id % 7 = 2")
-    s.sql("DELETE FROM graft_cat.db.er_vecs WHERE vec_id % 7 = 2")
+    s.sql(s"DELETE FROM $docs WHERE doc_id % 7 = 2")
+    s.sql(s"DELETE FROM $vecs WHERE vec_id % 7 = 2")
     // propagation: one change-feed slice per family, same overlap
-    val props = graft.ops.inParallel[Any](Seq(
-      () => DedupIndex.ensureCdc(s, "graft_cat.db.er_docs", "er"),
-      () => DedupIndex.ensureGramsCdc(s, "graft_cat.db.er_docs", "er"),
-      () => DedupIndex.ensureLabelsCdc(s, "graft_cat.db.er_docs", "er"),
-      () => DedupIndex.ensureLabelsCappedCdc(s, "graft_cat.db.er_docs", "er"),
-      () => SearchIndex.ensureCdc(s, "graft_cat.db.er_docs", "er"),
-      () => AnnIndex.ensureCdc(s, "graft_cat.db.er_vecs", "er"),
-      () => AnnIndex.ensurePqCdc(s, "graft_cat.db.er_vecs", "er"),
-      () => AnnIndex.ensureSqCdc(s, "graft_cat.db.er_vecs", "er"),
-      () => AnnIndex.ensureGraphCdc(s, "graft_cat.db.er_vecs", "er")))
-    val td = props(0).asInstanceOf[DedupIndex.Tables]
-    val tgm = props(1).asInstanceOf[String]
-    val tl = props(2).asInstanceOf[String]
-    val tlc = props(3).asInstanceOf[String]
-    val ts = props(4).asInstanceOf[SearchIndex.Tables]
-    val ta = props(5).asInstanceOf[AnnIndex.Tables]
-    val tp = props(6).asInstanceOf[AnnIndex.PqTables]
-    val tq = props(7).asInstanceOf[String]
-    val tg = props(8).asInstanceOf[String]
-    def leg(family: String, t: String, id: String) =
-      s.table(t).agg(
+    val t = ensureAll()
+    def leg(family: String, tbl: String, id: String) =
+      s.table(tbl).agg(
         count(when(col(id) % 7 === 2, 1)).as("n_erased_live"),
         count(lit(1)).as("n_live"))
         .select(lit(family).as("family"),
           col("n_erased_live"), col("n_live"))
-    leg("bm25-doclens", ts.docs, "doc_id")
-      .unionAll(leg("bm25-postings", ts.postings, "doc_id"))
-      .unionAll(leg("component-labels", tl, "doc_id"))
+    leg("bm25-doclens", "graft_cat.db.search_er_docs", "doc_id")
+      .unionAll(leg("bm25-postings", t("bm25-postings"), "doc_id"))
+      .unionAll(leg("component-labels", t("component-labels"), "doc_id"))
       .unionAll(s.table("graft_cat.db.dedup_er_lb_edges").agg(
         count(when(col("a_id") % 7 === 2 || col("b_id") % 7 === 2, 1))
           .as("n_erased_live"),
@@ -246,15 +234,16 @@ object Pipeline {
           col("n_erased_live"), col("n_live")))
       .unionAll(leg("component-postings",
         "graft_cat.db.dedup_er_lb_posts", "doc_id"))
-      .unionAll(leg("component-labels-capped", tlc, "doc_id"))
+      .unionAll(leg("component-labels-capped",
+        t("component-labels-capped"), "doc_id"))
       .unionAll(leg("component-capped-postings",
         "graft_cat.db.dedup_er_lc_posts", "doc_id"))
-      .unionAll(leg("ivf-cells", ta.cells, "vec_id"))
-      .unionAll(leg("minhash-signatures", td.sigs, "doc_id"))
-      .unionAll(leg("exact-grams", tgm, "doc_id"))
-      .unionAll(leg("pq-codes", tp.codes, "vec_id"))
-      .unionAll(leg("sq-codes", tq, "vec_id"))
-      .unionAll(s.table(tg).agg(
+      .unionAll(leg("ivf-cells", t("ivf-cells"), "vec_id"))
+      .unionAll(leg("minhash-signatures", t("minhash-signatures"), "doc_id"))
+      .unionAll(leg("exact-grams", t("exact-grams"), "doc_id"))
+      .unionAll(leg("pq-codes", t("pq-codes"), "vec_id"))
+      .unionAll(leg("sq-codes", t("sq-codes"), "vec_id"))
+      .unionAll(s.table(t("nsw-edges")).agg(
         count(when(col("src") % 7 === 2 || col("dst") % 7 === 2, 1))
           .as("n_erased_live"),
         count(lit(1)).as("n_live"))

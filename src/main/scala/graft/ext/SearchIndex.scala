@@ -94,9 +94,7 @@ object SearchIndex {
     CdcIndex.withNameLock(s"search:$name") {
       CdcIndex.requireIndexName(name)
       graft.ops.ensureGraftCatalog(s)
-      val t = Tables(s"graft_cat.db.search_${name}_postings",
-        s"graft_cat.db.search_${name}_docs",
-        s"graft_cat.db.search_${name}_meta")
+      val t = tables(name)
 
       val src = CdcIndex.sourceVersion(s, docs)
       val metaCols: Option[Seq[String]] =
@@ -174,97 +172,42 @@ object SearchIndex {
     * a rebuild" through this. */
   val cdcRefreshes = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Version-keyed maintenance over a CATALOG-table corpus — the lexical
-    * member of the CDC-maintenance triple ([[DedupIndex.ensureCdc]],
-    * [[AnnIndex.ensureCdc]]): coverage keys on the table's committed
-    * VERSION, and one change-feed slice retracts the changed docs'
-    * postings AND dl rows (merge-on-read deletion-vector appends on both
-    * tables), re-tokenizes only the touched head images, and advances
-    * the watermark. Postings and dl are per-document pure, and the
+  /** Version-keyed maintenance over a CATALOG-table corpus through
+    * [[CdcIndex.ensureKeyed]], keyed by `doc_id` on BOTH artifact tables:
+    * one change-feed slice retracts the changed docs' postings AND dl
+    * rows, re-tokenizes only the touched head images, and advances the
+    * watermark. Postings and dl are per-document pure, and the
     * corpus-level BM25 inputs (df, n_docs, sum_dl) are derived at probe
     * time from the stored tables — so CDC maintenance is EXACT and the
     * probe-time stats can never go stale (spec-pinned: maintained state
-    * equals a rebuild over the head).
-    *
-    * Meta (CDC variant): `(version BIGINT, n_docs BIGINT, max_id
-    * BIGINT)`. Crash ordering as in the twins: retractions publish
-    * immediately and idempotently; both inserts + the watermark advance
-    * land in ONE three-table txn, so a crash between replays the same
-    * slice and converges. */
+    * equals a rebuild over the head). The two inserts land in the same
+    * txn as the watermark, so dl rows never publish without their
+    * postings. Meta: `(version BIGINT, corpus STRING)`. */
   def ensureCdc(s: SparkSession, corpusTable: String, name: String): Tables =
     CdcIndex.withNameLock(s"search:$name") {
       CdcIndex.requireIndexName(name)
-      graft.ops.ensureGraftCatalog(s)
-      val t = Tables(s"graft_cat.db.search_${name}_postings",
-        s"graft_cat.db.search_${name}_docs",
-        s"graft_cat.db.search_${name}_meta")
-      CdcIndex.ensure(s, corpusTable, t.meta)(t) { (v0, headV) =>
-        applyCdc(s, corpusTable, t, v0, headV); t
-      }(headV => buildCdc(s, corpusTable, t, headV))
+      CdcIndex.ensureKeyed(s, corpusTable, postingsKeyed(name))
+      tables(name)
     }
 
-  private def applyCdc(s: SparkSession, corpusTable: String, t: Tables,
-      v0: Long, headV: Long): Unit = {
-    val uid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val tv = s"graft_srch_touched_$uid"
-    val (tfV, dlV) = (s"graft_srch_ctf_$uid", s"graft_srch_cdl_$uid")
-    s.sql(s"SELECT DISTINCT doc_id FROM $corpusTable " +
-        s"VERSION AS OF 'cdf:$v0..$headV'")
-      .createOrReplaceTempView(tv)
-    try {
-      // 1. retract the changed docs from BOTH tables — idempotent replay
-      s.sql(s"DELETE FROM ${t.postings} WHERE doc_id IN " +
-        s"(SELECT doc_id FROM $tv)")
-      s.sql(s"DELETE FROM ${t.docs} WHERE doc_id IN " +
-        s"(SELECT doc_id FROM $tv)")
-      // 2. re-tokenize the surviving HEAD images + advance the watermark
-      //    in ONE three-table txn
-      val head = s.table(corpusTable).select(col("doc_id"), col("text"))
-      val (tf, dl) = postingsOf(
-        head.join(s.table(tv), Seq("doc_id"), "left_semi"))
-      tf.createOrReplaceTempView(tfV)
-      dl.createOrReplaceTempView(dlV)
-      val cs = head.agg(count(lit(1)), max(col("doc_id"))).head
-      val (cnt, mx) = (cs.getLong(0),
-        if (cs.isNullAt(1)) -1L else cs.getLong(1))
-      CdcIndex.inTxn(s) {
-        s.sql(s"INSERT INTO ${t.postings} SELECT * FROM $tfV")
-        s.sql(s"INSERT INTO ${t.docs} SELECT * FROM $dlV")
-        s.sql(s"INSERT OVERWRITE ${t.meta} SELECT CAST($headV AS BIGINT), " +
-          s"CAST($cnt AS BIGINT), CAST($mx AS BIGINT), '$corpusTable'")
-      }
-      cdcRefreshes.incrementAndGet()
-    } finally {
-      s.catalog.dropTempView(tv)
-      s.catalog.dropTempView(tfV)
-      s.catalog.dropTempView(dlV)
-    }
+  private def tables(name: String): Tables =
+    Tables(s"graft_cat.db.search_${name}_postings",
+      s"graft_cat.db.search_${name}_docs",
+      s"graft_cat.db.search_${name}_meta")
+
+  /** The postings family as a [[CdcIndex.Keyed]] (keyed by `doc_id`). */
+  private[graft] def postingsKeyed(name: String): CdcIndex.Keyed = {
+    val t = tables(name)
+    CdcIndex.Keyed(t.meta, "doc_id", "doc_id", Seq("doc_id", "text"),
+      Seq(t.postings -> (postingsOf(_)._1), t.docs -> (postingsOf(_)._2)),
+      writeAll(_, t), cdcRefreshes)
   }
 
-  private def buildCdc(s: SparkSession, corpusTable: String, t: Tables,
-      headV: Long): Tables = {
-    val docs = s.table(corpusTable).select(col("doc_id"), col("text"))
-    val cs = docs.agg(count(lit(1)), max(col("doc_id"))).head
-    val (cnt, mx) = (cs.getLong(0),
-      if (cs.isNullAt(1)) -1L else cs.getLong(1))
+  private def writeAll(docs: DataFrame, t: Tables): Unit = {
     val (tf, dl) = postingsOf(docs)
     writePostings(tf, t)
-    dl.writeTo(t.docs)
-      .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
-      .createOrReplace()
-    // retractions must be deletion-vector appends, not segment rewrites
-    s.sql(s"ALTER TABLE ${t.postings} SET TBLPROPERTIES " +
-      "('graft.dml.mode'='merge-on-read')")
-    s.sql(s"ALTER TABLE ${t.docs} SET TBLPROPERTIES " +
-      "('graft.dml.mode'='merge-on-read')")
-    // meta LAST: a crash above leaves meta ≠ version → next ensure rebuilds
-    s.sql(s"DROP TABLE IF EXISTS ${t.meta}")
-    s.sql(s"CREATE TABLE ${t.meta} " +
-      "(version BIGINT, n_docs BIGINT, max_id BIGINT, corpus STRING)")
-    s.sql(s"INSERT INTO ${t.meta} SELECT CAST($headV AS BIGINT), " +
-      s"CAST($cnt AS BIGINT), CAST($mx AS BIGINT), '$corpusTable'")
+    CdcIndex.createArtifact(dl, t.docs)
     builds.incrementAndGet()
-    t
   }
 
   private def build(s: SparkSession, docs: DataFrame, t: Tables,
@@ -272,16 +215,11 @@ object SearchIndex {
     val cs = docs.agg(count(lit(1)), max(col("doc_id"))).head
     val (cnt, mx) = (cs.getLong(0),
       if (cs.isNullAt(1)) -1L else cs.getLong(1))
-    val (tf, dl) = postingsOf(docs)
-    writePostings(tf, t)
-    dl.writeTo(t.docs)
-      .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
-      .createOrReplace()
+    writeAll(docs, t)
     s.sql(s"DROP TABLE IF EXISTS ${t.meta}")
     s.sql(s"CREATE TABLE ${t.meta} (k BIGINT, n_docs BIGINT, max_id BIGINT)")
     s.sql(s"INSERT INTO ${t.meta} SELECT CAST($fp AS BIGINT), " +
       s"CAST($cnt AS BIGINT), CAST($mx AS BIGINT)")
-    builds.incrementAndGet()
     t
   }
 

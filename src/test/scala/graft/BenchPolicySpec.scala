@@ -72,7 +72,8 @@ class BenchPolicySpec extends AnyFunSuite {
     // probe fraction — and BenchFold folds both into the pin
     val j = Bench.runJson(3.5, "/x/sf0.1",
       Map("ext147_graph_index_probe" -> 3.0, "q01_agg" -> 0.5),
-      Map("ext147_graph_index_probe" -> 0.4, "q01_agg" -> 0.5))
+      Map("ext147_graph_index_probe" -> 0.4, "q01_agg" -> 0.5),
+      errors = Map("q01_agg" -> "java.lang.IllegalStateException"))
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     implicit val fmts: Formats = DefaultFormats
@@ -82,6 +83,14 @@ class BenchPolicySpec extends AnyFunSuite {
     assert((p \ "probe").extract[Map[String, Double]]
       .apply("ext147_graph_index_probe") === 0.4)
     assert((p \ "total").extract[Double] === 3.5)
+    // a throwing entry's time is its time-to-throw: the record names the
+    // error class of every entry that threw, and a clean run says so
+    assert((p \ "errors").extract[Map[String, String]] ===
+      Map("q01_agg" -> "java.lang.IllegalStateException"))
+    val clean = Bench.runJson(1.0, "/x/sf0.1", Map("q01_agg" -> 1.0),
+      Map("q01_agg" -> 1.0))
+    assert((JsonMethods.parse(clean) \ "errors")
+      .extract[Map[String, String]] === Map.empty)
   }
 
   test("runJson records the start-of-run load average (contention self-label)") {

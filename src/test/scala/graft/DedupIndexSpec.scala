@@ -215,6 +215,53 @@ class DedupIndexSpec extends SparkTestBase {
     assert(DedupIndex.builds.get() === b0 + 1)
   }
 
+  test("legacy 4-column CDC meta rebuilds exactly once, then applies incrementally") {
+    // older builds wrote the keyed CDC metas as (version, n_docs, max_id,
+    // corpus); the catalog persists across processes, so such a meta can
+    // meet the (version, corpus) layout — it must self-migrate by one
+    // rebuild instead of failing every 2-column watermark overwrite
+    ops.configure(spark)
+    ops.ensureGraftCatalog(spark)
+    val corpus = "graft_cat.db.leg4_docs"
+    Seq(corpus, "graft_cat.db.dedup_spec_leg4_sigs",
+      "graft_cat.db.dedup_spec_leg4_meta").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t"))
+    spark.sql(s"CREATE TABLE $corpus (doc_id BIGINT, text STRING) " +
+      "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
+    docs.filter(col("doc_id") < 300).writeTo(corpus).append()
+    val t = DedupIndex.ensureCdc(spark, corpus, "spec_leg4")
+    val headV = spark.sql(s"SELECT max(v) FROM $corpus.versions")
+      .head.getLong(0)
+    spark.sql(s"DROP TABLE ${t.meta}")
+    spark.sql(s"CREATE TABLE ${t.meta} (version BIGINT, n_docs BIGINT, " +
+      "max_id BIGINT, corpus STRING)")
+    spark.sql(s"INSERT INTO ${t.meta} SELECT CAST($headV AS BIGINT), " +
+      s"CAST(300 AS BIGINT), CAST(299 AS BIGINT), '$corpus'")
+    val b0 = DedupIndex.builds.get()
+    val c0 = DedupIndex.cdcRefreshes.get()
+
+    DedupIndex.ensureCdc(spark, corpus, "spec_leg4")
+    assert(DedupIndex.builds.get() === b0 + 1,
+      "a legacy-layout meta must rebuild once")
+    assert(spark.table(t.meta).schema.fieldNames.toSeq ===
+      Seq("version", "corpus"), "the rebuild did not migrate the meta")
+    DedupIndex.ensureCdc(spark, corpus, "spec_leg4")
+    assert(DedupIndex.builds.get() === b0 + 1,
+      "a migrated meta at the head must be a no-op")
+
+    spark.sql(s"DELETE FROM $corpus WHERE doc_id % 7 = 0")
+    DedupIndex.ensureCdc(spark, corpus, "spec_leg4")
+    assert(DedupIndex.builds.get() === b0 + 1,
+      "the migrated index rebuilt instead of applying the feed")
+    assert(DedupIndex.cdcRefreshes.get() === c0 + 1)
+    val stored = spark.table(t.sigs).orderBy("doc_id").collect().map(_.toSeq)
+    val fresh = DedupIndex.signatures(
+        spark.table(corpus).select("doc_id", "text"))
+      .orderBy("doc_id").collect().map(_.toSeq)
+    assert(stored.toSeq === fresh.toSeq,
+      "incremental apply after the migration diverged from a rebuild")
+  }
+
   test("content-preserving corpus commits advance the fingerprint, no rebuild") {
     ops.configure(spark)
     ops.ensureGraftCatalog(spark)

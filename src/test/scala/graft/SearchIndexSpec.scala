@@ -281,43 +281,76 @@ class SearchIndexSpec extends SparkTestBase {
   }
 
   test("CDC crash replay: a retraction without its txn re-applies and converges") {
-    // the documented crash window: the DELETE published but the
-    // insert+watermark txn did not — meta still points at the old
-    // version, so the next ensureCdc replays the SAME feed slice; the
-    // re-run's retraction is a no-op on already-deleted rows and the
-    // txn lands the re-tokenize + advance together
+    // the documented crash window of CdcIndex.ensureKeyed, for every
+    // keyed family: the DELETE published but the insert+watermark txn
+    // did not — meta still points at the old version, so the next
+    // ensure*Cdc replays the SAME feed slice; the re-run's retraction is
+    // a no-op on already-deleted keys and the txn lands the re-derive +
+    // advance together
+    import graft.ext.{AnnIndex, CdcIndex, DedupIndex}
     ops.configure(spark)
     ops.ensureGraftCatalog(spark)
-    spark.sql("DROP TABLE IF EXISTS graft_cat.db.cdc_crash_docs")
-    Seq("postings", "docs", "meta").foreach(x =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.search_cdc_cr_$x"))
-    spark.sql("CREATE TABLE graft_cat.db.cdc_crash_docs (doc_id BIGINT, " +
-      "text STRING) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
-    spark.read.parquet(s"$d/documents.parquet").select("doc_id", "text")
-      .writeTo("graft_cat.db.cdc_crash_docs").append()
-    val t = SearchIndex.ensureCdc(spark, "graft_cat.db.cdc_crash_docs", "cdc_cr")
-    spark.sql("DELETE FROM graft_cat.db.cdc_crash_docs WHERE doc_id % 5 = 0")
-    spark.sql("UPDATE graft_cat.db.cdc_crash_docs " +
+    val (docsT, vecsT) =
+      ("graft_cat.db.cdc_crash_docs", "graft_cat.db.cdc_crash_vecs")
+    val n = "cdc_cr"
+    // (corpus, public ensure, the family's keyed lifecycle)
+    val families: Seq[(String, () => Any, CdcIndex.Keyed)] = Seq(
+      (docsT, () => DedupIndex.ensureCdc(spark, docsT, n),
+        DedupIndex.sigsKeyed(n)),
+      (docsT, () => DedupIndex.ensureGramsCdc(spark, docsT, n),
+        DedupIndex.gramsKeyed(n)),
+      (docsT, () => SearchIndex.ensureCdc(spark, docsT, n),
+        SearchIndex.postingsKeyed(n)),
+      (vecsT, () => AnnIndex.ensureCdc(spark, vecsT, n),
+        AnnIndex.ivfKeyed(spark, n)),
+      (vecsT, () => AnnIndex.ensurePqCdc(spark, vecsT, n),
+        AnnIndex.pqKeyed(spark, n)),
+      (vecsT, () => AnnIndex.ensureSqCdc(spark, vecsT, n),
+        AnnIndex.sqKeyed(spark, n)),
+      (vecsT, () => AnnIndex.ensureGraphCdc(spark, vecsT, n),
+        AnnIndex.graphKeyed(n)))
+    (Seq(docsT, vecsT) ++ families.flatMap { case (_, _, f) =>
+      f.meta +: f.artifacts.map(_._1) }).foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t"))
+    spark.sql(s"CREATE TABLE $docsT (doc_id BIGINT, text STRING) " +
+      "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
+    docs.writeTo(docsT).append()
+    spark.sql(s"CREATE TABLE $vecsT (vec_id BIGINT, label INT, " +
+      "v ARRAY<DOUBLE>, norm DOUBLE) " +
+      "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
+    spark.read.parquet(s"$d/embeddings.parquet")
+      .selectExpr("vec_id", "label",
+        "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
+      .selectExpr("*", "sqrt(aggregate(v, 0D, (a, x) -> a + x * x)) AS norm")
+      .writeTo(vecsT).append()
+    def head(t: String) = spark.sql(s"SELECT max(v) FROM $t.versions")
+      .head.getLong(0)
+    families.foreach(_._2())
+    val v0 = Seq(docsT, vecsT).map(t => t -> head(t)).toMap
+    spark.sql(s"DELETE FROM $docsT WHERE doc_id % 5 = 0")
+    spark.sql(s"UPDATE $docsT " +
       "SET text = concat(text, ' crashed refresh') WHERE doc_id % 5 = 1")
-    // simulate the crash: ONLY the retraction half of the refresh ran
-    // (both the deleted AND the updated docs lost their index rows; the
-    // replay must re-insert the updated ones from the head images)
-    spark.sql(s"DELETE FROM ${t.postings} WHERE doc_id % 5 IN (0, 1)")
-    spark.sql(s"DELETE FROM ${t.docs} WHERE doc_id % 5 IN (0, 1)")
-    // replay: the version watermark is stale, so ensureCdc re-applies
-    val c0 = SearchIndex.cdcRefreshes.get()
-    SearchIndex.ensureCdc(spark, "graft_cat.db.cdc_crash_docs", "cdc_cr")
-    assert(SearchIndex.cdcRefreshes.get() === c0 + 1)
-    val head = spark.table("graft_cat.db.cdc_crash_docs")
-      .select("doc_id", "text")
-    val (tfFresh, dlFresh) = SearchIndex.postingsOf(head)
-    assert(spark.table(t.postings).orderBy("doc_id", "tok")
-        .collect().map(_.toSeq).toSeq
-      === tfFresh.orderBy("doc_id", "tok").collect().map(_.toSeq).toSeq,
-      "crash replay left duplicated or missing postings")
-    assert(spark.table(t.docs).orderBy("doc_id")
-        .collect().map(_.toSeq).toSeq
-      === dlFresh.orderBy("doc_id").collect().map(_.toSeq).toSeq,
-      "crash replay left duplicated or missing dl rows")
+    spark.sql(s"DELETE FROM $vecsT WHERE vec_id % 5 = 0")
+    spark.sql(s"UPDATE $vecsT SET v = reverse(v) WHERE vec_id % 5 = 1")
+
+    families.foreach { case (corpus, ensure, f) =>
+      // simulate the crash: ONLY the retraction half of the refresh ran
+      // (deleted AND updated keys lost their rows; the replay must
+      // re-insert the updated ones from the head images)
+      f.artifacts.foreach { case (t, _) =>
+        spark.sql(s"DELETE FROM $t WHERE ${f.key} IN (SELECT ${f.keyOf} " +
+          s"FROM $corpus VERSION AS OF 'cdf:${v0(corpus)}..${head(corpus)}')")
+      }
+      val c0 = f.refreshes.get()
+      ensure()
+      assert(f.refreshes.get() === c0 + 1, s"${f.meta}: replay did not apply")
+      val images = spark.table(corpus).select(f.head.map(col): _*)
+      f.artifacts.foreach { case (t, derive) =>
+        val (stored, fresh) = (spark.table(t), derive(images))
+        assert(stored.exceptAll(fresh).count() === 0 &&
+          fresh.exceptAll(stored).count() === 0,
+          s"crash replay left duplicated or missing rows in $t")
+      }
+    }
   }
 }
