@@ -77,10 +77,9 @@ object CrossoverProbeMain {
     }
 
     def dropIx(name: String): Unit = {
-      Seq("lb_labels", "lb_edges", "lb_posts", "lb_meta",
-        "lc_labels", "lc_posts", "lc_df", "lc_meta", "lu_choice")
-        .foreach(x => spark.sql(
-          s"DROP TABLE IF EXISTS graft_cat.db.dedup_${name}_$x"))
+      graft.ext.DedupIndex.exactLabelTables(name).drop(spark)
+      graft.ext.DedupIndex.cappedLabelTables(name).drop(spark)
+      spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_${name}_lu_choice")
     }
 
     /** Build + one-block append apply for ONE family; returns secs. */

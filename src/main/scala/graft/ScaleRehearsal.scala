@@ -309,8 +309,7 @@ object ScaleRehearsal {
     val name = s"lblsc_${tag}_$pid"
     val corpus = s"graft_cat.db.lblsc_docs_${tag}_$pid"
     spark.sql(s"DROP TABLE IF EXISTS $corpus")
-    Seq("lb_labels", "lb_edges", "lb_posts", "lb_meta").foreach(x =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_${name}_$x"))
+    graft.ext.DedupIndex.exactLabelTables(name).drop(spark)
     spark.sql(s"CREATE TABLE $corpus (doc_id BIGINT, text STRING) " +
       "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -331,8 +330,7 @@ object ScaleRehearsal {
       // wouldn't be cleaned by this run's entry drop — drop our own
       // tables here instead of orphaning them in the shared catalog
       spark.sql(s"DROP TABLE IF EXISTS $corpus")
-      Seq("lb_labels", "lb_edges", "lb_posts", "lb_meta").foreach(x =>
-        spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_${name}_$x"))
+      graft.ext.DedupIndex.exactLabelTables(name).drop(spark)
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
@@ -448,10 +446,10 @@ object ScaleRehearsal {
     val name = s"lbst_${tag}_$pid"
     val corpus = s"graft_cat.db.lbst_docs_${tag}_$pid"
     spark.sql(s"DROP TABLE IF EXISTS $corpus")
-    val arts = if (capped) Seq("lc_labels", "lc_posts", "lc_df", "lc_meta")
-               else Seq("lb_labels", "lb_edges", "lb_posts", "lb_meta")
-    arts.foreach(x =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_${name}_$x"))
+    val arts =
+      if (capped) graft.ext.DedupIndex.cappedLabelTables(name)
+      else graft.ext.DedupIndex.exactLabelTables(name)
+    arts.drop(spark)
     spark.sql(s"CREATE TABLE $corpus (doc_id BIGINT, text STRING) " +
       "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     try {
@@ -464,8 +462,7 @@ object ScaleRehearsal {
       (System.nanoTime() - t0) / 1e9
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $corpus")
-      arts.foreach(x =>
-        spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_${name}_$x"))
+      arts.drop(spark)
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
@@ -488,8 +485,7 @@ object ScaleRehearsal {
     val name = s"lcx_${tag}_$pid"
     val corpus = s"graft_cat.db.lcx_docs_${tag}_$pid"
     spark.sql(s"DROP TABLE IF EXISTS $corpus")
-    Seq("lc_labels", "lc_posts", "lc_df", "lc_meta").foreach(x =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_${name}_$x"))
+    graft.ext.DedupIndex.cappedLabelTables(name).drop(spark)
     spark.sql(s"CREATE TABLE $corpus (doc_id BIGINT, text STRING) " +
       "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     try {
@@ -507,8 +503,7 @@ object ScaleRehearsal {
       (System.nanoTime() - t0) / 1e9
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $corpus")
-      Seq("lc_labels", "lc_posts", "lc_df", "lc_meta").foreach(x =>
-        spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_${name}_$x"))
+      graft.ext.DedupIndex.cappedLabelTables(name).drop(spark)
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

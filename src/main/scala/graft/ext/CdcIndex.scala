@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * lifecycle of the seven KEYED families (minhash sigs, exact grams,
   * BM25 postings, IVF cells, PQ codes, SQ codes, NSW graph edges): each
   * supplies only its key, derives and full build as a [[Keyed]]. The
-  * two component-label families keep their own apply over [[ensure]]
-  * — a label is a global property, not a per-key one.
+  * two component-label families run over [[ensure]] with one shared
+  * relabel path of their own (`DedupIndex.publishLabels` and its
+  * helpers) — a label is a global property, not a per-key one.
   *
   * The feed-apply callback may throw `UnsupportedOperationException`
   * when the change feed refuses a slice it cannot attribute row-exactly
@@ -188,8 +189,11 @@ private[graft] object CdcIndex {
           s"VERSION AS OF 'cdf:$v0..$headV'")
         .createOrReplaceTempView(tv)
       try {
-        f.artifacts.foreach { case (t, _) =>
-          s.sql(s"DELETE FROM $t WHERE ${f.key} IN (SELECT ${f.key} FROM $tv)")
+        graft.ops.withDesc(s, "cdc: retract") {
+          f.artifacts.foreach { case (t, _) =>
+            s.sql(s"DELETE FROM $t WHERE ${f.key} IN " +
+              s"(SELECT ${f.key} FROM $tv)")
+          }
         }
         val images = s.table(corpusTable).select(f.head.map(col): _*)
           .join(s.table(tv).select(col(f.key).as("cdc_touched_key")),
@@ -198,8 +202,10 @@ private[graft] object CdcIndex {
           derive(images).createOrReplaceTempView(v)
         }
         inTxn(s) {
-          f.artifacts.zip(views).foreach { case ((t, _), v) =>
-            s.sql(s"INSERT INTO $t SELECT * FROM $v")
+          graft.ops.withDesc(s, "cdc: derive+insert") {
+            f.artifacts.zip(views).foreach { case ((t, _), v) =>
+              s.sql(s"INSERT INTO $t SELECT * FROM $v")
+            }
           }
           s.sql(s"INSERT OVERWRITE ${f.meta} SELECT CAST($headV AS BIGINT), " +
             s"'$corpusTable'")
@@ -207,14 +213,19 @@ private[graft] object CdcIndex {
         f.refreshes.incrementAndGet()
       } finally (tv +: views).foreach(s.catalog.dropTempView)
     } { headV =>
-      f.build(s.table(corpusTable).select(f.head.map(col): _*))
-      f.artifacts.foreach { case (t, _) =>
-        s.sql(s"ALTER TABLE $t SET TBLPROPERTIES " +
-          "('graft.dml.mode'='merge-on-read')")
+      graft.ops.withDesc(s, "cdc: rebuild") {
+        f.build(s.table(corpusTable).select(f.head.map(col): _*))
+        f.artifacts.foreach { case (t, _) => mergeOnRead(s, t) }
+        writeMeta(s, f.meta, headV, corpusTable)
       }
-      writeMeta(s, f.meta, headV, corpusTable)
     }
   }
+
+  /** Declare `table`'s row-level DML merge-on-read: CDC retractions then
+    * land as deletion-vector appends, not segment rewrites. */
+  def mergeOnRead(s: SparkSession, table: String): Unit =
+    s.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
+      "('graft.dml.mode'='merge-on-read')")
 
   /** (Re)create a `(version, corpus)` meta at `version` — the LAST step
     * of every rebuild, so a crash before it leaves the meta absent or

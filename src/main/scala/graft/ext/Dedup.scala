@@ -554,6 +554,16 @@ object Dedup {
       .orderBy(col("df").desc, col("tok"))
       .limit(50)
 
+  /** Both directions of the undirected edges `(a, b)` as `(src, dst)`
+    * rows, from ONE evaluation of `edges` (explode, not union — an
+    * uncached pair pipeline under a union runs twice). */
+  private[graft] def undirected(edges: DataFrame, a: String = "a_id",
+      b: String = "b_id"): DataFrame =
+    edges.select(explode(array(
+        struct(col(a).as("src"), col(b).as("dst")),
+        struct(col(b).as("src"), col(a).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
   /** Dedup-cluster consolidation: pairwise near-dup hits are only half
     * the operator — production pipelines then union the pairs into
     * CONNECTED COMPONENTS and keep one canonical doc per cluster (A~B,
@@ -567,14 +577,8 @@ object Dedup {
     * just plausibility — is what hash-matching proves. */
   val dedupComponents: Q = (s, d) => {
     val pairs = ngramJaccard(table(s, d, "documents")).select("a_id", "b_id")
-    // both directions from ONE evaluation of the pair pipeline (explode,
-    // not union — `pairs` is uncached and a union runs it twice);
     // ccOverEdges measures the graph and sizes the loop width to it
-    val sym = pairs.select(explode(array(
-        struct(col("a_id").as("src"), col("b_id").as("dst")),
-        struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    val (labels, _) = ccOverEdges(s, sym)
+    val (labels, _) = ccOverEdges(s, undirected(pairs))
     labels
       .select(col("id").as("doc_id"), col("comp").as("cluster"),
         (col("id") === col("comp")).as("is_canonical"))
@@ -611,12 +615,7 @@ object Dedup {
       .partitionBy("src").orderBy(col("jaccard").desc, col("dst"))
     val kept = sym.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 4).select("src", "dst")
-    val edges = kept.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-    val (labels, _) = ccOverEdges(s, edges)
+    val (labels, _) = ccOverEdges(s, undirected(kept, "src", "dst").distinct())
     labels
       .select(col("id").as("doc_id"), col("comp").as("cluster"),
         (col("id") === col("comp")).as("is_canonical"))
@@ -1033,14 +1032,11 @@ object Dedup {
         seededDir.set("") // flag was stale — reseed below
       }
       graft.ops.ensureGraftCatalog(s)
-      Seq("lbseed_docs", "lbfull_docs", "lcseed_docs", "lcfull_docs")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS graft_cat.db.$t"))
-      Seq("lbseed_ix", "lbfull_ix").foreach(ix =>
-        Seq("lb_labels", "lb_edges", "lb_posts", "lb_meta").foreach(x =>
-          s.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_${ix}_$x")))
-      Seq("lcseed_ix", "lcfull_ix").foreach(ix =>
-        Seq("lc_labels", "lc_posts", "lc_df", "lc_meta").foreach(x =>
-          s.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_${ix}_$x")))
+      Seq("exact", "full", "capped", "lcfull").map(seedNames).foreach {
+        case (docs, ix, tables) =>
+          s.sql(s"DROP TABLE IF EXISTS graft_cat.db.$docs")
+          tables(ix).drop(s)
+      }
       // all four seed states are DIRECT from-scratch builds: the
       // measured decomposition (round 14) put a from-scratch build at
       // ~3 s vs ~16 s for an incremental append-apply at fixture scale
@@ -1081,22 +1077,20 @@ object Dedup {
     * version, so the next ensure() over the clone no-ops until the
     * entry's own mutations land and then applies exactly their slice. */
   private def seedNames(seed: String)
-      : (String, String, Seq[String], String) = seed match {
-    case "exact" => ("lbseed_docs", "lbseed_ix",
-      Seq("lb_labels", "lb_edges", "lb_posts"), "lb_meta")
-    case "full" => ("lbfull_docs", "lbfull_ix",
-      Seq("lb_labels", "lb_edges", "lb_posts"), "lb_meta")
-    case "capped" => ("lcseed_docs", "lcseed_ix",
-      Seq("lc_labels", "lc_posts", "lc_df"), "lc_meta")
-    case "lcfull" => ("lcfull_docs", "lcfull_ix",
-      Seq("lc_labels", "lc_posts", "lc_df"), "lc_meta")
+      : (String, String, String => DedupIndex.LabelTables) = seed match {
+    case "exact" => ("lbseed_docs", "lbseed_ix", DedupIndex.exactLabelTables)
+    case "full" => ("lbfull_docs", "lbfull_ix", DedupIndex.exactLabelTables)
+    case "capped" =>
+      ("lcseed_docs", "lcseed_ix", DedupIndex.cappedLabelTables)
+    case "lcfull" =>
+      ("lcfull_docs", "lcfull_ix", DedupIndex.cappedLabelTables)
     case other => throw new IllegalArgumentException(s"bad seed: $other")
   }
 
   private[graft] def cloneLabelIndex(s: SparkSession, seed: String,
       toCorpus: String, toIx: String): Unit =
     graft.ops.withDesc(s, "lbl: clone seed") {
-      val (srcCorpus, _, _, _) = seedNames(seed)
+      val (srcCorpus, _, _) = seedNames(seed)
       val toShort = toCorpus.stripPrefix("graft_cat.db.")
       s.sql(s"DROP TABLE IF EXISTS $toCorpus")
       s.sql(s"CALL graft_cat.system.clone('db.$srcCorpus', 'db.$toShort')")
@@ -1109,13 +1103,14 @@ object Dedup {
     * it, or a clone-sibling like ext141's shared `er_docs`). */
   private[graft] def cloneSeedIndexTo(s: SparkSession, seed: String,
       toIx: String, boundCorpus: String): Unit = {
-    val (_, srcIx, arts, metaSuffix) = seedNames(seed)
-    (arts :+ metaSuffix).foreach(x =>
-      s.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_${toIx}_$x"))
-    arts.foreach(x => s.sql(
-      s"CALL graft_cat.system.clone('db.dedup_${srcIx}_$x', 'db.dedup_${toIx}_$x')"))
-    CdcIndex.writeMeta(s, s"graft_cat.db.dedup_${toIx}_$metaSuffix",
-      CdcIndex.headVersion(s, boundCorpus), boundCorpus)
+    val (_, srcIx, tables) = seedNames(seed)
+    val (from, to) = (tables(srcIx), tables(toIx))
+    to.drop(s)
+    def short(t: String) = t.stripPrefix("graft_cat.")
+    from.data.zip(to.data).foreach { case (a, b) => s.sql(
+      s"CALL graft_cat.system.clone('${short(a)}', '${short(b)}')") }
+    CdcIndex.writeMeta(s, to.meta, CdcIndex.headVersion(s, boundCorpus),
+      boundCorpus)
   }
 
   /** ext153 — INCREMENTAL COMPONENT LABELS from the persisted label

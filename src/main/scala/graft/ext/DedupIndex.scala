@@ -216,6 +216,30 @@ object DedupIndex {
 
   // ------------------------------------------- component-label index
 
+  /** The artifact tables of one component-label family under index
+    * `name`: `dedup_<name>_<fam>_{labels, <sidecar>, posts, meta}`. The
+    * sidecar is the exact family's persisted edge set (`lb_edges`) or
+    * the capped family's document frequencies (`lc_df`). The ensures,
+    * the superseded-family drop of [[ensureLabels]] and the shared
+    * seeds all spell the two families' tables through this. */
+  private[graft] final case class LabelTables(fam: String, part: String,
+      name: String) {
+    private def t(x: String) = s"graft_cat.db.dedup_${name}_${fam}_$x"
+    val labels: String = t("labels")
+    val sidecar: String = t(part)
+    val posts: String = t("posts")
+    val meta: String = t("meta")
+    /** The data tables (what a seed clone copies), then every table. */
+    def data: Seq[String] = Seq(labels, sidecar, posts)
+    def all: Seq[String] = data :+ meta
+    def drop(s: SparkSession): Unit =
+      all.foreach(x => s.sql(s"DROP TABLE IF EXISTS $x"))
+  }
+  private[graft] def exactLabelTables(name: String): LabelTables =
+    LabelTables("lb", "edges", name)
+  private[graft] def cappedLabelTables(name: String): LabelTables =
+    LabelTables("lc", "df", name)
+
   /** PERSISTED DEDUP-CLUSTER LABELS with APPEND-INCREMENTAL maintenance
     * — the hardest derived artifact so far, because a component label is
     * a GLOBAL property (every other family's rows are per-doc or
@@ -229,12 +253,8 @@ object DedupIndex {
     * incident to the new docs (batch shingles ⨝ head shingles — work ∝
     * the batch's posting lists), contract every edge endpoint to its
     * STORED label, and run component discovery on that QUOTIENT graph —
-    * which is merge-activity-sized, never corpus-sized. Because a
-    * stored label IS its component's min id, the quotient's min-label
-    * answer equals the full rebuild's: min over merged old components
-    * and new ids = the global min. (Min-label CC over a contracted
-    * graph is exact for min labels; this is the union-find-by-min
-    * argument run declaratively.)
+    * which is merge-activity-sized, never corpus-sized (see
+    * [[quotientLabels]]).
     *
     * DELETE TOLERANCE (round-12): component SPLITS are not derivable
     * from a min-label table alone — a deleted doc may have been the
@@ -245,44 +265,41 @@ object DedupIndex {
     * are exactly the information splits need: on a slice with deletes
     * or updates the apply RETRACTS every touched doc — recompute the
     * touched components' SURVIVING members over their stored mutual
-    * edges (cluster-local work: the induced subgraph of a component
-    * contains every path between its members, so no corpus-wide edges
-    * can rejoin what the retraction splits) — then RE-ADDS every
-    * touched doc still in the head via the append path's quotient
-    * contraction. Work ∝ touched clusters + the batch's posting lists,
-    * never the corpus. The storage price is the pair list itself
-    * (near-dup-pair-sized — the same order as the pairs any dedup run
-    * materializes transiently), which is the documented cost of
-    * erasure without rebuilds.
+    * edges ([[splitTouched]]) — then RE-ADDS every touched doc still in
+    * the head via the append path's quotient contraction. Work ∝
+    * touched clusters + the batch's posting lists, never the corpus.
+    * The storage price is the pair list itself (near-dup-pair-sized —
+    * the same order as the pairs any dedup run materializes
+    * transiently), which is the documented cost of erasure without
+    * rebuilds.
     *
-    * Publication: edge retraction (DELETE, idempotent) → ONE atomic
-    * MERGE INTO on the labels (conditional DELETE for erased docs +
-    * remap + upsert) → head-edge INSERT + watermark advance in one
-    * cross-table txn. Every crash window replays convergently: the
-    * apply derives its plan from the stored PRE-state (checkpointed
-    * before any mutation) or, after a post-MERGE crash, from the
-    * already-converged head state — retract+re-add of an
-    * already-current doc is a fixpoint (spec-pinned, including the
-    * watermark-windback replay and a replay slice spanning newer
-    * commits). A legacy index without the edge artifact throws
+    * Publication and crash replay: [[publishLabels]], with the edge and
+    * postings retractions by touched doc overlapped with the label
+    * MERGE, the head edges and postings in the txn. A legacy index
+    * without the edge/postings artifacts throws
     * UnsupportedOperationException on its first apply and
     * [[CdcIndex.ensure]] rebuilds, which migrates it. */
   val labelBuilds = new java.util.concurrent.atomic.AtomicLong(0)
   val labelIncRefreshes = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Exact-Jaccard edges (J ≥ 0.5, a_id < b_id) among `docs`. */
-  private def jaccardEdges(docs: DataFrame): DataFrame =
-    jaccardEdgesFromShingles(Dedup.shingles(docs))
+  /** Exact-Jaccard edges (J ≥ 0.5, a_id < b_id) over an explicit
+    * DISTINCT (doc_id, sh) frame — the build derives it from text once
+    * and STORES it; applies read the stored postings instead of
+    * re-shingling the corpus. */
+  private def jaccardEdgesFromShingles(sh: DataFrame): DataFrame =
+    jaccardAtLeastHalf(
+      sh.as("a").join(sh.as("b"),
+          col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
+        .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+        .agg(count(lit(1)).as("inter")),
+      sh.groupBy("doc_id").agg(count(lit(1)).as("n")))
 
-  /** [[jaccardEdges]] over an explicit DISTINCT (doc_id, sh) frame —
-    * the build derives it from text once and STORES it; applies read
-    * the stored postings instead of re-shingling the corpus. */
-  private def jaccardEdgesFromShingles(sh: DataFrame): DataFrame = {
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    sh.as("a").join(sh.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .agg(count(lit(1)).as("inter"))
+  /** The `(a_id, b_id)` of the `(a_id, b_id, inter)` shared-shingle
+    * counts whose Jaccard over the shingle-set sizes `(doc_id, n)` is at
+    * least 0.5. */
+  private def jaccardAtLeastHalf(pairs: DataFrame,
+      sizes: DataFrame): DataFrame =
+    pairs
       .join(sizes.withColumnRenamed("doc_id", "a_id")
         .withColumnRenamed("n", "n_a"), "a_id")
       .join(sizes.withColumnRenamed("doc_id", "b_id")
@@ -290,99 +307,266 @@ object DedupIndex {
       .filter(col("inter").cast("double")
         / (col("n_a") + col("n_b") - col("inter")) >= 0.5)
       .select(col("a_id"), col("b_id"))
-  }
 
   /** Version-keyed maintenance of the label table. Returns its name. */
   def ensureLabelsCdc(s: SparkSession, corpusTable: String,
       name: String): String = CdcIndex.withNameLock(s"label:$name") {
     CdcIndex.requireIndexName(name)
     graft.ops.ensureGraftCatalog(s)
-    val labels = s"graft_cat.db.dedup_${name}_lb_labels"
-    val edges = s"graft_cat.db.dedup_${name}_lb_edges"
-    val posts = s"graft_cat.db.dedup_${name}_lb_posts"
-    val meta = s"graft_cat.db.dedup_${name}_lb_meta"
-    CdcIndex.ensure(s, corpusTable, meta)(labels) { (v0, headV) =>
-      applyLabelsInc(s, corpusTable, labels, edges, posts, meta, v0, headV)
-      labels
+    val t = exactLabelTables(name)
+    CdcIndex.ensure(s, corpusTable, t.meta)(t.labels) { (v0, headV) =>
+      applyLabelsInc(s, corpusTable, t, v0, headV)
+      t.labels
     } { headV =>
-      val docs = s.table(corpusTable).select(col("doc_id"), col("text"))
-      // the SHINGLE POSTINGS land first: the corpus is shingled exactly
-      // once per build, the edge artifact derives from the stored
-      // postings, and every later apply joins the BATCH's shingles
-      // against these stored rows instead of re-shingling the corpus —
-      // the ext149 gram-index discipline applied to the label family
-      // (a torn build — postings without labels/meta — just rebuilds)
-      graft.ops.withDesc(s, "lbl-build: postings") {
-        Dedup.shingles(docs, widen = true)
-          .writeTo(posts)
-          .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
-          .createOrReplace()
-        s.sql(s"ALTER TABLE $posts SET TBLPROPERTIES " +
-          "('graft.dml.mode'='merge-on-read')")
+      rebuildLabels(s, "lbl-build", corpusTable, t, headV, labelBuilds) {
+        // the edge artifact derives from the stored postings
+        graft.ops.withDesc(s, "lbl-build: edges") {
+          CdcIndex.createArtifact(jaccardEdgesFromShingles(s.table(t.posts)),
+            t.sidecar)
+          CdcIndex.mergeOnRead(s, t.sidecar)
+        }
+        // the edge artifact just landed, so its MANIFEST row count (one
+        // metadata read, never a scan) is the exact symmetric count / 2
+        (s.table(t.sidecar), () => 2L * s.table(s"${t.sidecar}.files")
+          .agg(coalesce(sum("live_rows"), lit(0L))).head.getLong(0))
       }
-      graft.ops.withDesc(s, "lbl-build: edges") {
-        jaccardEdgesFromShingles(s.table(posts))
-          .writeTo(edges)
-          .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
-          .createOrReplace()
-        s.sql(s"ALTER TABLE $edges SET TBLPROPERTIES " +
-          "('graft.dml.mode'='merge-on-read')")
-      }
-      val sym = s.table(edges).select(explode(array(
-          struct(col("a_id").as("src"), col("b_id").as("dst")),
-          struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      // pre-join size hint for the CC materialization (VERDICT r13 #1):
-      // the edge artifact just landed, so its MANIFEST row count (one
-      // metadata read, never a scan) is the exact symmetric count / 2 —
-      // a billion-edge graph lays out wide from the first cache pass
-      graft.ops.withDesc(s, "lbl-build: cc+labels") {
-        val edgeRows = s.table(s"$edges.files")
-          .agg(coalesce(sum("live_rows"), lit(0L))).head.getLong(0)
-        val (lab, _) = Dedup.ccOverEdges(s, sym, Some(2L * edgeRows))
-        docs.select(col("doc_id"))
-          .join(lab.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp"))
-          .writeTo(labels)
-          .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
-          .createOrReplace()
-      }
-      sym.unpersist(blocking = false)
-      s.sql(s"ALTER TABLE $labels SET TBLPROPERTIES " +
-        "('graft.dml.mode'='merge-on-read')")
-      CdcIndex.writeMeta(s, meta, headV, corpusTable)
-      labelBuilds.incrementAndGet()
-      labels
     }
   }
 
-  /** The generalized (insert/update/delete) incremental apply —
-    * RETRACT every touched doc, then RE-ADD its head image:
+  /** The rebuild both label families share. The corpus SHINGLE
+    * POSTINGS land first: the corpus is shingled exactly once per build
+    * and every later apply joins the BATCH's shingles against these
+    * stored rows instead of re-shingling the corpus (the ext149
+    * gram-index discipline). `sidecar` then writes the family's own
+    * artifact and returns the family's edges `(a_id, b_id)` with a
+    * pre-join size hint for the CC materialization (VERDICT r13 #1: a
+    * billion-edge graph lays out wide from the first cache pass). The
+    * labels are each doc's min component id over those edges, and the
+    * meta lands LAST — a torn build just rebuilds. */
+  private def rebuildLabels(s: SparkSession, tag: String,
+      corpusTable: String, t: LabelTables, headV: Long,
+      builds: java.util.concurrent.atomic.AtomicLong)(
+      sidecar: => (DataFrame, () => Long)): String = {
+    val docs = s.table(corpusTable).select(col("doc_id"), col("text"))
+    graft.ops.withDesc(s, s"$tag: postings") {
+      CdcIndex.createArtifact(Dedup.shingles(docs, widen = true), t.posts)
+      CdcIndex.mergeOnRead(s, t.posts)
+    }
+    val (edges, sizeHint) = sidecar
+    graft.ops.withDesc(s, s"$tag: cc+labels") {
+      val (lab, _) = Dedup.ccOverEdges(s, Dedup.undirected(edges),
+        Some(sizeHint()))
+      CdcIndex.createArtifact(docs.select(col("doc_id"))
+        .join(lab.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp")),
+        t.labels)
+    }
+    CdcIndex.mergeOnRead(s, t.labels)
+    CdcIndex.writeMeta(s, t.meta, headV, corpusTable)
+    builds.incrementAndGet()
+    t.labels
+  }
+
+  /** Caches a label apply persists, released together. Each apply
+    * holds two: its inputs, released when it ends (a failed apply
+    * included), and the N-phase intermediates, released as soon as the
+    * quotient CC has consumed them — still cached, every later DML on a
+    * table they read would make the cache manager re-plan them. */
+  private final class Held {
+    private val dfs = collection.mutable.ArrayBuffer.empty[DataFrame]
+    def apply(df: DataFrame): DataFrame = synchronized {
+      dfs += df
+      df.persist()
+    }
+    def release(): Unit = synchronized {
+      dfs.foreach(_.unpersist(blocking = false))
+      dfs.clear()
+    }
+  }
+
+  /** D-phase (splits): the components holding a `touched` doc have
+    * their members — minus the `retracted` docs — re-labelled by
+    * connected components over `memberEdges(members)` (symmetric `(src,
+    * dst)` rows). Cluster-local and exact: a component's induced
+    * subgraph contains every path between its members. Returns each
+    * member's post-split node (the min of its sub-component; edge-less
+    * members are their own) and the untouched components' stored rows.
+    * When `any` is false no stored component is touched: the phase is
+    * provably a no-op, and every stored row is untouched. */
+  private def splitTouched(s: SparkSession, tag: String, stored: DataFrame,
+      touched: DataFrame, retracted: Option[DataFrame], any: => Boolean)(
+      memberEdges: DataFrame => DataFrame): (DataFrame, DataFrame) =
+    if (!any)
+      (touched.limit(0).select(col("doc_id"), col("doc_id").as("node")),
+        stored.select(col("doc_id"), col("comp")))
+    else {
+      val touchedComps = stored.join(touched, Seq("doc_id"), "left_semi")
+        .select(col("comp")).distinct()
+      val inComps = stored.join(touchedComps, Seq("comp"), "left_semi")
+      val members = retracted
+        .fold(inComps)(inComps.join(_, Seq("doc_id"), "left_anti"))
+        .select(col("doc_id"))
+      // ccOverEdges output is already self-contained (the loop's
+      // converged frame is localCheckpoint'ed; the union-find path
+      // returns a checkpointed RDD) — no further checkpoint job
+      val lab = graft.ops.withDesc(s, s"$tag: D-phase cc")(
+        Dedup.ccOverEdges(s, memberEdges(members))._1)
+      (members
+        .join(lab.withColumnRenamed("id", "doc_id")
+          .withColumnRenamed("comp", "c2"), Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("c2"), col("doc_id")).as("node")),
+        stored.join(touchedComps, Seq("comp"), "left_anti")
+          .select(col("doc_id"), col("comp")))
+    }
+
+  /** N-phase candidate edges: the pairs of a `batch` posting's doc with
+    * a `corpus` posting's doc that share a shingle, kept at Jaccard ≥
+    * 0.5 over the corpus postings' set sizes. Both intermediate frames
+    * are `held`: the candidates are consumed three times (both ids legs
+    * and the edge filter) and the sizes twice, each with a different
+    * pruned column set — subtree equality fails, exchange reuse does
+    * not fire, and the candidate join re-ran per consumer (round-16;
+    * both frames are batch-bounded at any scale). */
+  private def candidateEdges(held: Held, batch: DataFrame,
+      corpus: DataFrame): DataFrame = {
+    val cand = held(batch.as("b").join(corpus.as("a"),
+        col("a.sh") === col("b.sh") && col("a.doc_id") =!= col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+      .agg(count(lit(1)).as("inter")))
+    val ids = cand.select(col("a_id").as("doc_id"))
+      .unionAll(cand.select(col("b_id").as("doc_id"))).distinct()
+    jaccardAtLeastHalf(cand, held(corpus.join(ids, Seq("doc_id"), "left_semi")
+      .groupBy("doc_id").agg(count(lit(1)).as("n"))))
+  }
+
+  /** N-phase merges: the candidate `edges`' endpoints contract to the
+    * post-split label state (a member to its split node, an untouched
+    * doc to its stored comp, a doc absent from both — re-added or new —
+    * to its own id), and min-label CC runs on that QUOTIENT graph.
+    * Because a stored or split label IS its (sub)component's min id,
+    * the quotient's min-label answer equals the full rebuild's: the
+    * union-find-by-min argument, run declaratively. Returns `(id, comp)`
+    * for the quotient nodes the CC reached. */
+  private def quotientLabels(s: SparkSession, tag: String, edges: DataFrame,
+      splitNodes: DataFrame, untouchedRows: DataFrame): DataFrame = {
+    val afterD = untouchedRows
+      .unionAll(splitNodes.select(col("doc_id"), col("node").as("comp")))
+    val q = edges
+      .join(afterD.withColumnRenamed("doc_id", "a_id")
+        .withColumnRenamed("comp", "ca"), Seq("a_id"), "left")
+      .join(afterD.withColumnRenamed("doc_id", "b_id")
+        .withColumnRenamed("comp", "cb"), Seq("b_id"), "left")
+      .select(coalesce(col("ca"), col("a_id")).as("src"),
+        coalesce(col("cb"), col("b_id")).as("dst"))
+      .filter(col("src") =!= col("dst"))
+    // ccOverEdges output is self-contained — no extra checkpoint job
+    graft.ops.withDesc(s, s"$tag: N-phase cc")(
+      Dedup.ccOverEdges(s, Dedup.undirected(q, "src", "dst").distinct())._1)
+  }
+
+  /** The label MERGE source, one row per affected doc and disjoint by
+    * construction: split members, the changed rows of untouched
+    * components, the `added` docs (each its own node before the
+    * quotient) — all labelled through the quotient `qlab` — and the
+    * `erased` docs, marked `del`. */
+  private def labelRows(qlab: DataFrame, splitNodes: DataFrame,
+      untouchedRows: DataFrame, added: DataFrame,
+      erased: Option[DataFrame]): DataFrame = {
+    def viaQ(df: DataFrame): DataFrame = df
+      .join(qlab.withColumnRenamed("id", "node"), Seq("node"), "left")
+      .select(col("doc_id"), coalesce(col("comp"), col("node")).as("comp"))
+    val remapChanged = untouchedRows
+      .withColumnRenamed("comp", "node").as("l")
+      .join(qlab.as("qq"), col("l.node") === col("qq.id"))
+      .filter(col("qq.comp") =!= col("qq.id"))
+      .select(col("l.doc_id").as("doc_id"), col("qq.comp").as("comp"))
+    val rows = viaQ(splitNodes).unionAll(remapChanged)
+      .unionAll(viaQ(added.distinct().withColumn("node", col("doc_id"))))
+      .withColumn("del", lit(false))
+    erased.fold(rows)(g => rows.unionAll(
+      g.select(col("doc_id"), lit(0L).as("comp"), lit(true).as("del"))))
+  }
+
+  /** One artifact statement of a label publish, given the temp-view
+    * name of each input frame. */
+  private type LabelDml = (DataFrame => String) => String
+
+  /** The publish step both label applies end with.
     *
-    *  D-phase (splits): the components containing any touched doc have
-    *  their SURVIVING members re-labeled by connected components over
-    *  their stored mutual edges (touched-incident edges excluded) —
-    *  cluster-local, exact (a component's induced subgraph contains
-    *  every path between its members).
+    *  1. Checkpoint the MERGE source `rows` and the `ckpt` inputs,
+    *     overlapped (independent reads of cached inputs; each job's
+    *     tail leaves most task slots idle at fixture scale): every
+    *     mutation input is materialized from the stored PRE-state
+    *     BEFORE anything mutates.
+    *  2. The family's `retract` DMLs and the ONE atomic label `MERGE`
+    *     (erase + remap + upsert), overlapped: they write disjoint
+    *     tables and read only checkpointed inputs, so no statement
+    *     observes another's target.
+    *  3. ONE cross-table txn: the family's `insert`s and the watermark
+    *     advance.
     *
-    *  N-phase (merges): the head edges incident to the touched head
-    *  images are re-derived from text (batch shingles ⨝ head shingles),
-    *  endpoints contract to the POST-RETRACT labels (touched docs to
-    *  their own ids), and min-label CC on that quotient yields the
-    *  final labels — the union-find-by-min exactness argument, with the
-    *  D-phase labels (each the min of its sub-component) as the
-    *  contracted nodes.
-    *
-    * An insert-only slice of genuinely-new docs has an empty D-phase
-    * (no touched doc is stored) and reduces to the append path. */
+    * Crash replay: a crash before the txn leaves the watermark behind,
+    * and the next ensure replays the same feed slice. Under ANY
+    * interleaving of step 2 the replay converges: the retractions are
+    * idempotent, each family's read side derives its plan without the
+    * retracted rows by construction (anti-joins on the touched docs),
+    * and a replay after the MERGE derives from the already-converged
+    * labels — retract + re-add of a current doc is a fixpoint. The
+    * capped family instead detects a landed MERGE by its stored-probe
+    * guard and rebuilds. */
+  private def publishLabels(s: SparkSession, tag: String,
+      corpusTable: String, headV: Long, t: LabelTables,
+      refreshes: java.util.concurrent.atomic.AtomicLong)(
+      rows: DataFrame, ckpt: Seq[DataFrame], ready: Seq[DataFrame])(
+      retract: Seq[LabelDml], insert: Seq[LabelDml]): Unit = {
+    val done = graft.ops.inParallel[DataFrame]((rows +: ckpt).map(df => () =>
+      graft.ops.withDesc(s, s"$tag: mutation-input ckpts")(
+        df.localCheckpoint(true))))
+    val sfx = java.util.UUID.randomUUID().toString.replace("-", "")
+    val inputs = ckpt ++ ready
+    val views = inputs.indices.map(i => s"graft_lbl_${i}_$sfx")
+    val uv = s"graft_lbl_merge_$sfx"
+    done.head.createOrReplaceTempView(uv)
+    (done.tail ++ ready).zip(views).foreach { case (df, v) =>
+      df.createOrReplaceTempView(v)
+    }
+    val view: DataFrame => String = df => views(inputs.indexWhere(_ eq df))
+    try {
+      graft.ops.inParallel[Unit](retract.map(dml => () =>
+        graft.ops.withDesc(s, s"$tag: retract DML") { s.sql(dml(view)); () }
+      ) :+ (() => graft.ops.withDesc(s, s"$tag: label MERGE") {
+        s.sql(s"""MERGE INTO ${t.labels} t USING $uv u ON t.doc_id = u.doc_id
+          WHEN MATCHED AND u.del THEN DELETE
+          WHEN MATCHED THEN UPDATE SET comp = u.comp
+          WHEN NOT MATCHED AND NOT u.del THEN
+            INSERT (doc_id, comp) VALUES (u.doc_id, u.comp)"""); ()
+      }))
+      CdcIndex.inTxn(s) {
+        insert.foreach(dml => s.sql(dml(view)))
+        s.sql(s"INSERT OVERWRITE ${t.meta} SELECT CAST($headV AS BIGINT), " +
+          s"'$corpusTable'")
+      }
+      refreshes.incrementAndGet()
+    } finally (uv +: views).foreach(s.catalog.dropTempView)
+  }
+
+  /** The generalized (insert/update/delete) incremental apply of the
+    * exact family — RETRACT every touched doc, then RE-ADD its head
+    * image: the D-phase splits the touched components over their stored
+    * mutual edges (touched-incident edges excluded); the N-phase
+    * re-derives the head edges incident to the touched head images
+    * (batch shingles ⨝ stored head postings) and contracts them onto the
+    * post-split labels. An insert-only slice of genuinely-new docs has
+    * an empty D-phase (no touched doc is stored) and reduces to the
+    * append path. */
   private def applyLabelsInc(s: SparkSession, corpusTable: String,
-      labels: String, edges: String, posts: String, meta: String, v0: Long,
-      headV: Long): Unit = {
+      t: LabelTables, v0: Long, headV: Long): Unit = {
+    val edges = t.sidecar
     // a legacy index without the edge/postings artifacts cannot
     // retract / cannot apply batch-sized — rebuild (which migrates it;
     // the feed-refusal path of CdcIndex.ensure)
     val artifactsExist =
-      try { s.table(edges).schema; s.table(posts).schema; true }
+      try { s.table(edges).schema; s.table(t.posts).schema; true }
       catch { case _: org.apache.spark.sql.AnalysisException => false }
     if (!artifactsExist)
       throw new UnsupportedOperationException(
@@ -392,273 +576,104 @@ object DedupIndex {
     val feed = s.sql(s"SELECT * FROM $corpusTable " +
       s"VERSION AS OF 'cdf:$v0..$headV'")
     // checkpoint the touched set ONCE (batch-id-sized): it feeds the
-    // D-phase probe, the N-phase posting anti-join, `gone`, `newRows`
-    // and the retraction DMLs — without this the change-feed DIFF is
-    // re-planned and re-computed at every one of those references
-    // (measured: a visible slice of the apply's fixed overhead at
-    // fixture scale; the capped apply already did this)
+    // D-phase probe, the N-phase posting anti-join, `gone`, the added
+    // rows and the retraction DMLs — without this the change-feed DIFF
+    // is re-planned and re-computed at every one of those references
     val touched = graft.ops.withDesc(s, "lbl-apply: touched ckpt")(
       feed.select(col("doc_id")).distinct().localCheckpoint(true))
     val head = s.table(corpusTable).select(col("doc_id"), col("text"))
     val headTouched = head.join(touched, Seq("doc_id"), "left_semi")
     val gone = touched.join(head.select("doc_id"), Seq("doc_id"), "left_anti")
-    val stored = s.table(labels)
-    val storedEdges = s.table(edges)
-
-    // ---- D-phase and the N-phase CANDIDATE materialization are
-    // INDEPENDENT — the split CC reads stored labels+edges, the
-    // candidate join reads posts+head; both are touched-bounded — so
-    // they run OVERLAPPED (round-16, guide §2.6): an update-shaped
-    // slice (ext161/164/169) hides the D-phase CC under the candidate
-    // join's stage tail. Only the final contraction of candidate edges
-    // onto the post-retract labels needs both.
-
-    // D-phase: split the touched components over stored edges.
-    // Fast path: a slice of GENUINELY NEW docs (the common append —
-    // ext153's daily batch) touches no stored component, so the whole
-    // retract machinery (two semi-joins, a CC loop, a checkpoint) is
-    // provably a no-op — one cheap existence probe skips it and afterD
-    // IS the stored table, restoring the pure-append plan shape
-    def dPhase(): (DataFrame, DataFrame) = {
-      val anyStored = graft.ops.withDesc(s, "lbl-apply: stored probe")(
-        stored.join(touched, Seq("doc_id"), "left_semi").limit(1).count() > 0L)
-      if (!anyStored)
-        (touched.limit(0).select(col("doc_id"), col("doc_id").as("node")),
-          stored.select(col("doc_id"), col("comp")))
-      else {
-        val touchedComps = stored.join(touched, Seq("doc_id"), "left_semi")
-          .select(col("comp")).distinct()
-        val survIds = stored.join(touchedComps, Seq("comp"), "left_semi")
-          .join(touched, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"))
-        val subEdges = storedEdges
-          .join(survIds.withColumnRenamed("doc_id", "a_id"), Seq("a_id"),
-            "left_semi")
-          .join(survIds.withColumnRenamed("doc_id", "b_id"), Seq("b_id"),
-            "left_semi")
-        val dsym = subEdges.select(explode(array(
-            struct(col("a_id").as("src"), col("b_id").as("dst")),
-            struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst")).distinct()
-        // ccOverEdges output is already self-contained (the loop's
-        // converged frame is localCheckpoint'ed; the union-find path
-        // returns a checkpointed RDD) — no further checkpoint job
-        val dlab = graft.ops.withDesc(s, "lbl-apply: D-phase cc") {
-          val (dlab0, _) = Dedup.ccOverEdges(s, dsym)
-          dlab0
-        }
-        // each survivor's post-retract label: min of its sub-component
-        // (edge-less survivors are their own)
-        val sn = survIds
-          .join(dlab.withColumnRenamed("id", "doc_id")
-            .withColumnRenamed("comp", "c2"), Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("c2"), col("doc_id")).as("node"))
-        // untouched components keep their stored rows
-        (sn, stored.join(touchedComps, Seq("comp"), "left_anti")
-          .select(col("doc_id"), col("comp")))
-      }
-    }
-
-    // N-phase candidates: head edges incident to the touched head
-    // images. The corpus side is the STORED postings (retracted to the
-    // head view: stored rows minus touched docs' plus the batch's fresh
-    // shingles), so the apply never re-shingles the corpus — work is
-    // the batch's shingle derivation + joins ∝ its posting lists.
-    //
-    // Pure-erasure short-circuit (round-16, VERDICT r15 #1): a slice
-    // whose touched docs are ALL gone from the head (the erasure window
-    // — ext141/ext161's shape) has an empty batch image, so the fresh
-    // shingles, the candidate join, the quotient edges and the N-phase
-    // CC are ALL provably empty — yet materializing that emptiness
-    // through the ~25-exchange candidate pipeline measured 7-9 s wall
-    // per apply at fixture scale (ProfMain, 67-78 Spark jobs for zero
-    // rows). One bounded existence probe skips the whole phase.
-    def nCandidates(): Option[(DataFrame, DataFrame, DataFrame, DataFrame)] = {
-      val anyHead = graft.ops.withDesc(s, "lbl-apply: head probe")(
-        headTouched.select(col("doc_id")).limit(1).count() > 0L)
-      if (!anyHead) None
-      else {
-        // batch-bounded at any scale — unconditional probe-free spread
-        // to the session's parallelism (see the capped apply's
-        // shNewFeed note)
-        val shN = Dedup.shingles(headTouched
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
-          .persist()
-        val postsHead = s.table(posts)
-          .join(touched, Seq("doc_id"), "left_anti")
-          .unionAll(shN)
-        // persisted: cand is consumed THREE times (both ids legs + the
-        // edge filter) and sizes twice, each with a different pruned
-        // column set — subtree equality fails, exchange reuse does not
-        // fire, and the whole candidate join re-ran per consumer
-        // (round-16; both frames are batch-bounded at any scale)
-        val cand = shN.as("b").join(postsHead.as("a"),
-            col("a.sh") === col("b.sh") && col("a.doc_id") =!= col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-          .agg(count(lit(1)).as("inter"))
-          .persist()
-        val ids = cand.select(col("a_id").as("doc_id"))
-          .unionAll(cand.select(col("b_id").as("doc_id"))).distinct()
-        val sizes = postsHead.join(ids, Seq("doc_id"), "left_semi")
-          .groupBy("doc_id").agg(count(lit(1)).as("n"))
-          .persist()
-        // persisted: consumed by BOTH the quotient path (q → CC) and the
-        // edge-artifact insert — without it the batch-shingle join runs
-        // twice
-        val eN = cand
-          .join(sizes.withColumnRenamed("doc_id", "a_id")
-            .withColumnRenamed("n", "n_a"), "a_id")
-          .join(sizes.withColumnRenamed("doc_id", "b_id")
-            .withColumnRenamed("n", "n_b"), "b_id")
-          .filter(col("inter").cast("double")
-            / (col("n_a") + col("n_b") - col("inter")) >= 0.5)
-          .select(col("a_id"), col("b_id"))
-          .persist()
-        graft.ops.withDesc(s, "lbl-apply: N-phase cand")(eN.count())
-        Some((shN, cand, sizes, eN))
-      }
-    }
-
-    val phases = graft.ops.inParallel[Any](Seq(
-      () => dPhase(), () => nCandidates()))
-    val (splitNodes, untouchedRows) =
-      phases(0).asInstanceOf[(DataFrame, DataFrame)]
-    val nCand =
-      phases(1).asInstanceOf[Option[(DataFrame, DataFrame, DataFrame,
-        DataFrame)]]
-    val anyHead = nCand.isDefined
-    // the complete post-retract label state (touched docs absent)
-    val afterD = untouchedRows
-      .unionAll(splitNodes.select(col("doc_id"), col("node").as("comp")))
-    val (qlab, edgesNew, shNew) = nCand match {
-      case None =>
-        (touched.limit(0)
-           .select(col("doc_id").as("id"), col("doc_id").as("comp")),
-         touched.limit(0)
-           .select(col("doc_id").as("a_id"), col("doc_id").as("b_id")),
-         Dedup.shingles(headTouched).limit(0))
-      case Some((shN, cand, sizes, eN)) =>
-        // contract endpoints to the POST-RETRACT labels; touched head
-        // docs are absent from afterD and become their own nodes
-        // (re-added)
-        val q = eN
-          .join(afterD.withColumnRenamed("doc_id", "a_id")
-            .withColumnRenamed("comp", "ca"), Seq("a_id"), "left")
-          .join(afterD.withColumnRenamed("doc_id", "b_id")
-            .withColumnRenamed("comp", "cb"), Seq("b_id"), "left")
-          .select(coalesce(col("ca"), col("a_id")).as("src"),
-            coalesce(col("cb"), col("b_id")).as("dst"))
-          .filter(col("src") =!= col("dst"))
-        val qsym = q.select(explode(array(
-            struct(col("src"), col("dst")),
-            struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst")).distinct()
-        // ccOverEdges output is self-contained — no extra checkpoint job
-        val ql = graft.ops.withDesc(s, "lbl-apply: N-phase cc") {
-          val (qlab0, _) = Dedup.ccOverEdges(s, qsym)
-          qlab0
-        }
-        // the contraction CC also drained the intermediate caches'
-        // consumers — dead weight from here
-        cand.unpersist(blocking = false)
-        sizes.unpersist(blocking = false)
-        (ql, eN, shN)
-    }
-
-    // ---- final rows, one per affected doc (disjoint by construction:
-    // survivors of touched comps / changed rows of untouched comps /
-    // touched head docs / erased docs)
-    def viaQ(df: DataFrame): DataFrame = df
-      .join(qlab.withColumnRenamed("id", "node"), Seq("node"), "left")
-      .select(col("doc_id"), coalesce(col("comp"), col("node")).as("comp"))
-    val splitRows = viaQ(splitNodes)
-    val remapChanged = untouchedRows
-      .withColumnRenamed("comp", "node").as("l")
-      .join(qlab.as("qq"), col("l.node") === col("qq.id"))
-      .filter(col("qq.comp") =!= col("qq.id"))
-      .select(col("l.doc_id").as("doc_id"), col("qq.comp").as("comp"))
-    val newRows =
-      if (!anyHead) splitNodes.limit(0)
-        .select(col("doc_id"), col("node").as("comp"))
-      else viaQ(headTouched.select(col("doc_id")).distinct()
-        .withColumn("node", col("doc_id")))
-    // materialize the merge plan BEFORE mutating anything: it reads the
-    // MERGE target (stored labels) and the edge table. The three
-    // checkpoints are independent reads of already-cached inputs —
-    // overlap them (guide §2.6; each job's tail leaves most task slots
-    // idle at fixture scale)
-    val ckpts = graft.ops.inParallel[DataFrame](Seq(
-      () => graft.ops.withDesc(s, "lbl-apply: mutation-input ckpts")(
-        splitRows.unionAll(remapChanged).unionAll(newRows)
-          .withColumn("del", lit(false))
-          .unionAll(gone.select(col("doc_id"), lit(0L).as("comp"),
-            lit(true).as("del")))
-          .localCheckpoint(true)),
-      () => graft.ops.withDesc(s, "lbl-apply: mutation-input ckpts")(
-        edgesNew
-          .select(least(col("a_id"), col("b_id")).as("a_id"),
-            greatest(col("a_id"), col("b_id")).as("b_id"))
-          .distinct().localCheckpoint(true)),
-      () => graft.ops.withDesc(s, "lbl-apply: mutation-input ckpts")(
-        shNew.localCheckpoint(true))))
-    val (usrc, newEdgeRows, newPostRows) = (ckpts(0), ckpts(1), ckpts(2))
-    val touchedCk = touched // already checkpointed at derivation
-
-    val sfx = java.util.UUID.randomUUID().toString.replace("-", "")
-    val uv = s"graft_lbl_merge_$sfx"
-    val ev = s"graft_lbl_edges_$sfx"
-    val pv = s"graft_lbl_posts_$sfx"
-    val tv = s"graft_lbl_touched_$sfx"
-    usrc.createOrReplaceTempView(uv)
-    newEdgeRows.createOrReplaceTempView(ev)
-    newPostRows.createOrReplaceTempView(pv)
-    touchedCk.createOrReplaceTempView(tv)
+    val stored = s.table(t.labels)
+    val (held, scratch) = (new Held, new Held)
     try {
-      // 1.+2. retract the touched docs' edges + postings (idempotent DV
-      //    appends; postings are per-doc rows, so doc_id is the key)
-      //    and the ONE atomic label statement (erase + remap + upsert),
-      //    OVERLAPPED (round-16, guide §2.6): the three DMLs write
-      //    DISJOINT tables and read only pre-checkpointed inputs, so no
-      //    statement observes another's target. Replay stays convergent
-      //    under ANY crash interleaving: the apply's read side excludes
-      //    touched-incident rows from edges/posts by construction
-      //    (survIds/anti-joins), so a replay that finds the MERGE
-      //    landed but a retract not (or vice versa) derives the same
-      //    plan — retract+re-add of a current doc is a fixpoint.
-      graft.ops.inParallel[Unit](Seq(
-        () => graft.ops.withDesc(s, "lbl-apply: retract DML") {
-          s.sql(s"DELETE FROM $edges WHERE a_id IN (SELECT doc_id FROM $tv) " +
-            s"OR b_id IN (SELECT doc_id FROM $tv)"); ()
-        },
-        () => graft.ops.withDesc(s, "lbl-apply: retract DML") {
-          s.sql(s"DELETE FROM $posts WHERE doc_id IN (SELECT doc_id FROM $tv)")
-          ()
-        },
-        () => graft.ops.withDesc(s, "lbl-apply: label MERGE") {
-          s.sql(s"""MERGE INTO $labels t USING $uv u ON t.doc_id = u.doc_id
-          WHEN MATCHED AND u.del THEN DELETE
-          WHEN MATCHED THEN UPDATE SET comp = u.comp
-          WHEN NOT MATCHED AND NOT u.del THEN
-            INSERT (doc_id, comp) VALUES (u.doc_id, u.comp)"""); ()
-        }))
-      // 3. publish the head edges + postings + watermark together; a
-      //    crash before this txn replays the slice against the
-      //    already-converged labels — retract+re-add of a current doc
-      //    is a fixpoint
-      CdcIndex.inTxn(s) {
-        s.sql(s"INSERT INTO $edges SELECT * FROM $ev")
-        s.sql(s"INSERT INTO $posts SELECT * FROM $pv")
-        s.sql(s"INSERT OVERWRITE $meta SELECT CAST($headV AS BIGINT), '$corpusTable'")
-      }
-      labelIncRefreshes.incrementAndGet()
-    } finally {
-      s.catalog.dropTempView(uv)
-      s.catalog.dropTempView(ev)
-      s.catalog.dropTempView(pv)
-      s.catalog.dropTempView(tv)
-      edgesNew.unpersist(blocking = false)
-      shNew.unpersist(blocking = false)
-    }
+      // D-phase: fast path — a slice of GENUINELY NEW docs (the common
+      // append, ext153's daily batch) touches no stored component, so
+      // one cheap existence probe skips the retract machinery and the
+      // post-split state IS the stored table (the pure-append plan)
+      def dPhase(): (DataFrame, DataFrame) =
+        splitTouched(s, "lbl-apply", stored, touched, Some(touched),
+          graft.ops.withDesc(s, "lbl-apply: stored probe")(
+            stored.join(touched, Seq("doc_id"), "left_semi")
+              .limit(1).count() > 0L)) { surv =>
+          Dedup.undirected(s.table(edges)
+            .join(surv.withColumnRenamed("doc_id", "a_id"), Seq("a_id"),
+              "left_semi")
+            .join(surv.withColumnRenamed("doc_id", "b_id"), Seq("b_id"),
+              "left_semi")).distinct()
+        }
+
+      // N-phase candidates: head edges incident to the touched head
+      // images. The corpus side is the STORED postings retracted to the
+      // head view (stored rows minus touched docs' plus the batch's
+      // fresh shingles), so the apply never re-shingles the corpus.
+      //
+      // Pure-erasure short-circuit (round-16, VERDICT r15 #1): a slice
+      // whose touched docs are ALL gone from the head (ext141/ext161's
+      // shape) has an empty batch image, so the fresh shingles, the
+      // candidate join, the quotient edges and the N-phase CC are ALL
+      // provably empty — yet materializing that emptiness through the
+      // ~25-exchange candidate pipeline measured 7-9 s wall per apply at
+      // fixture scale. One bounded existence probe skips the phase.
+      def nCandidates(): Option[(DataFrame, DataFrame)] =
+        if (!graft.ops.withDesc(s, "lbl-apply: head probe")(
+            headTouched.select(col("doc_id")).limit(1).count() > 0L)) None
+        else {
+          // batch-bounded at any scale — unconditional probe-free spread
+          // to the session's parallelism (see the capped apply's
+          // shNewFeed note)
+          val shN = held(Dedup.shingles(headTouched
+            .repartition(s.sparkContext.defaultParallelism, col("doc_id"))))
+          val postsHead = s.table(t.posts)
+            .join(touched, Seq("doc_id"), "left_anti")
+            .unionAll(shN)
+          // held: consumed by BOTH the quotient path (q → CC) and the
+          // edge-artifact insert — without it the candidate join runs
+          // twice
+          val eN = held(candidateEdges(scratch, shN, postsHead))
+          graft.ops.withDesc(s, "lbl-apply: N-phase cand")(eN.count())
+          Some((shN, eN))
+        }
+
+      // the D-phase and the N-phase candidates are INDEPENDENT (stored
+      // labels+edges vs posts+head, both touched-bounded), so they run
+      // OVERLAPPED (round-16): an update-shaped slice (ext161/164/169)
+      // hides the D-phase CC under the candidate join's stage tail.
+      // Only the quotient contraction needs both.
+      val phases = graft.ops.inParallel[Any](Seq(
+        () => dPhase(), () => nCandidates()))
+      val (splitNodes, untouchedRows) =
+        phases(0).asInstanceOf[(DataFrame, DataFrame)]
+      val (qlab, edgesNew, shNew, added) =
+        phases(1).asInstanceOf[Option[(DataFrame, DataFrame)]] match {
+          case None =>
+            (touched.limit(0)
+               .select(col("doc_id").as("id"), col("doc_id").as("comp")),
+             touched.limit(0)
+               .select(col("doc_id").as("a_id"), col("doc_id").as("b_id")),
+             Dedup.shingles(headTouched).limit(0), touched.limit(0))
+          case Some((shN, eN)) =>
+            (quotientLabels(s, "lbl-apply", eN, splitNodes, untouchedRows),
+              eN, shN, headTouched.select(col("doc_id")))
+        }
+      scratch.release()
+      val headEdges = edgesNew
+        .select(least(col("a_id"), col("b_id")).as("a_id"),
+          greatest(col("a_id"), col("b_id")).as("b_id"))
+        .distinct()
+      // postings are per-doc rows, so doc_id is their retraction key
+      publishLabels(s, "lbl-apply", corpusTable, headV, t, labelIncRefreshes)(
+        labelRows(qlab, splitNodes, untouchedRows, added, Some(gone)),
+        Seq(headEdges, shNew), Seq(touched))(
+        retract = Seq(
+          v => s"DELETE FROM $edges WHERE a_id IN (SELECT doc_id FROM " +
+            s"${v(touched)}) OR b_id IN (SELECT doc_id FROM ${v(touched)})",
+          v => s"DELETE FROM ${t.posts} WHERE doc_id IN " +
+            s"(SELECT doc_id FROM ${v(touched)})"),
+        insert = Seq(
+          v => s"INSERT INTO $edges SELECT * FROM ${v(headEdges)}",
+          v => s"INSERT INTO ${t.posts} SELECT * FROM ${v(shNew)}"))
+    } finally { scratch.release(); held.release() }
   }
 
   // -------------------------------------- capped label family (lc_)
@@ -716,88 +731,52 @@ object DedupIndex {
     * persisted edge artifact: splits are never derived incrementally
     * here, so edges stay transient.
     *
-    * Crash-replay: the rebuild is createOrReplace-atomic per table
-    * with the meta watermark last (a torn rebuild just rebuilds). The
-    * incremental path orders [df DELETE of affected shingles — a set
-    * derived from the immutable feed, replay-stable] → [label MERGE] →
-    * txn[posts INSERT + df INSERT + meta]. A replay after the label
-    * MERGE sees the batch's doc_ids already stored and takes the
-    * rebuild guard; a replay after the df DELETE recomputes identical
-    * df rows from (stored posts) ∪ (fresh shingles), and an affected
-    * shingle whose df row is missing but whose postings exist has its
-    * pre-apply df reconstructed exactly from the stored postings (the
-    * feed's postings land only in the final txn), so the replay window
-    * pays the same cap×crossings-bounded work as a live run. Every
-    * window converges (spec-pinned). */
+    * Crash replay ([[publishLabels]]: the df retraction of the affected
+    * shingles ∥ the label MERGE, then the postings + df inserts in the
+    * txn): a replay after the MERGE sees the batch's doc_ids already
+    * stored and takes the rebuild guard; a replay after the df DELETE
+    * recomputes identical df rows from (stored posts) ∪ (fresh
+    * shingles), and an affected shingle whose df row is missing but
+    * whose postings exist has its pre-apply df reconstructed exactly
+    * from the stored postings (the feed's postings land only in the
+    * txn), so the replay window pays the same cap×crossings-bounded
+    * work as a live run. Every window converges (spec-pinned). */
   def ensureLabelsCappedCdc(s: SparkSession, corpusTable: String,
       name: String, cap: Int = LabelDfCap): String =
     CdcIndex.withNameLock(s"label:$name") {
     CdcIndex.requireIndexName(name)
     graft.ops.ensureGraftCatalog(s)
-    val labels = s"graft_cat.db.dedup_${name}_lc_labels"
-    val posts = s"graft_cat.db.dedup_${name}_lc_posts"
-    val dfTab = s"graft_cat.db.dedup_${name}_lc_df"
-    val meta = s"graft_cat.db.dedup_${name}_lc_meta"
-    def rebuild(headV: Long): String = {
-      val docs = s.table(corpusTable).select(col("doc_id"), col("text"))
-      graft.ops.withDesc(s, "lc-build: postings") {
-        Dedup.shingles(docs, widen = true)
-          .writeTo(posts)
-          .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
-          .createOrReplace()
-        s.sql(s"ALTER TABLE $posts SET TBLPROPERTIES " +
-          "('graft.dml.mode'='merge-on-read')")
+    val t = cappedLabelTables(name)
+    def rebuild(headV: Long): String =
+      rebuildLabels(s, "lc-build", corpusTable, t, headV, labelCappedBuilds) {
+        graft.ops.withDesc(s, "lc-build: df sidecar") {
+          CdcIndex.createArtifact(
+            s.table(t.posts).groupBy("sh").agg(count(lit(1)).as("df")),
+            t.sidecar)
+          CdcIndex.mergeOnRead(s, t.sidecar)
+        }
+        // the capped view: postings whose shingle survives the df cap —
+        // every posting list entering the self-join is ≤ cap docs. Size
+        // hint: Σ df·(df−1) over the cap-surviving shingles bounds the
+        // symmetric pair count — one aggregate over the
+        // (shingle-count-sized) sidecar, BEFORE the edge build
+        val okDf = s.table(t.sidecar).filter(col("df") <= cap)
+        (jaccardEdgesFromShingles(s.table(t.posts)
+            .join(okDf.select("sh"), Seq("sh"), "left_semi")),
+          () => okDf.agg(coalesce(sum(expr("df * (df - 1)")), lit(0L)))
+            .head.getLong(0))
       }
-      graft.ops.withDesc(s, "lc-build: df sidecar") {
-        s.table(posts).groupBy("sh").agg(count(lit(1)).as("df"))
-          .writeTo(dfTab)
-          .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
-          .createOrReplace()
-        s.sql(s"ALTER TABLE $dfTab SET TBLPROPERTIES " +
-          "('graft.dml.mode'='merge-on-read')")
-      }
-      // the capped view: postings whose shingle survives the df cap —
-      // every posting list entering the self-join is ≤ cap docs
-      val capped = s.table(posts).join(
-        s.table(dfTab).filter(col("df") <= cap).select("sh"),
-        Seq("sh"), "left_semi")
-      val sym = jaccardEdgesFromShingles(capped)
-        .select(explode(array(
-          struct(col("a_id").as("src"), col("b_id").as("dst")),
-          struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      // pre-join size hint (VERDICT r13 #1): the df sidecar bounds the
-      // symmetric pair count at Σ df·(df−1) over the cap-surviving
-      // shingles — one aggregate over the (shingle-count-sized) sidecar,
-      // so the CC materialization lays out wide BEFORE the edge build
-      // instead of funneling a large graph through the 4-partition floor
-      graft.ops.withDesc(s, "lc-build: cc+labels") {
-        val pairBound = s.table(dfTab).filter(col("df") <= cap)
-          .agg(coalesce(sum(expr("df * (df - 1)")), lit(0L))).head.getLong(0)
-        val (lab, _) = Dedup.ccOverEdges(s, sym, Some(pairBound))
-        docs.select(col("doc_id"))
-          .join(lab.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp"))
-          .writeTo(labels)
-          .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
-          .createOrReplace()
-      }
-      s.sql(s"ALTER TABLE $labels SET TBLPROPERTIES " +
-        "('graft.dml.mode'='merge-on-read')")
-      CdcIndex.writeMeta(s, meta, headV, corpusTable)
-      labelCappedBuilds.incrementAndGet()
-      labels
-    }
-    CdcIndex.ensure(s, corpusTable, meta)(labels) { (v0, headV) =>
-      if (!applyLabelsCappedInc(s, corpusTable, labels, posts, dfTab, meta,
-          cap, v0, headV)) rebuild(headV)
-      labels
+    CdcIndex.ensure(s, corpusTable, t.meta)(t.labels) { (v0, headV) =>
+      if (!applyLabelsCappedInc(s, corpusTable, t, cap, v0, headV))
+        rebuild(headV)
+      t.labels
     }(rebuild)
   }
 
   /** The append-slice incremental apply of the capped family. Returns
     * false when the slice is outside the incremental contract (erasure,
-    * re-used ids, post-MERGE replay) — the caller then rebuilds.
+    * re-used ids, post-MERGE replay, the cost gate) — the caller then
+    * rebuilds.
     *
     * CAP CROSSINGS ARE HANDLED INCREMENTALLY (round-13, second pass):
     * an append can push a stored shingle's df across the cap, shrinking
@@ -818,8 +797,8 @@ object DedupIndex {
     * capped rows derive from the STORED postings (no re-shingle) and
     * the postings/df artifacts need no writes for them. */
   private def applyLabelsCappedInc(s: SparkSession, corpusTable: String,
-      labels: String, posts: String, dfTab: String, meta: String, cap: Int,
-      v0: Long, headV: Long): Boolean = {
+      t: LabelTables, cap: Int, v0: Long, headV: Long): Boolean = {
+    val dfTab = t.sidecar
     val feed = s.sql(s"SELECT * FROM $corpusTable " +
       s"VERSION AS OF 'cdf:$v0..$headV'")
     if (graft.ops.withDesc(s, "lc-apply: erasure probe")(
@@ -827,260 +806,138 @@ object DedupIndex {
       return false // erasure slice → rebuild
     val feedTouched = graft.ops.withDesc(s, "lc-apply: touched ckpt")(
       feed.select(col("doc_id")).distinct().localCheckpoint(true))
-    val stored = s.table(labels)
+    val stored = s.table(t.labels)
     if (graft.ops.withDesc(s, "lc-apply: stored probe")(
         stored.join(feedTouched, Seq("doc_id"), "left_semi")
           .limit(1).count() > 0L))
       return false // re-used id (update-shaped) or post-MERGE replay
 
     val head = s.table(corpusTable).select(col("doc_id"), col("text"))
-    // the batch image is batch-bounded at ANY corpus scale, so an
-    // unconditional keyed spread to the session's parallelism is safe
-    // and probe-free (round-16: replaces widenForCompute's `.rdd`
-    // partition probe, which executed the semi-join once just to ask
-    // its width — ADVICE r15); the shingle derivation and the df
-    // recompute that consumes it then parallelize off the cache
-    val shNewFeed = Dedup.shingles(
-      head.join(feedTouched, Seq("doc_id"), "left_semi")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
-      .persist()
-    // affected shingles (df changes come ONLY from the feed's new docs)
-    // + their HEAD df, recomputed from the logical head postings
-    // (stored ∪ fresh) — identical values on any replay
-    val affected = shNewFeed.select("sh").distinct()
-    val postsStored = s.table(posts)
-    val postsHeadFull = postsStored
-      .join(feedTouched, Seq("doc_id"), "left_anti") // replay paranoia
-      .unionAll(shNewFeed)
-    val dfNew = graft.ops.withDesc(s, "lc-apply: df recompute")(
-      postsHeadFull.join(affected, Seq("sh"), "left_semi")
-        .groupBy("sh").agg(count(lit(1)).as("df"))
-        .localCheckpoint(true))
-    // crossing-up detection (append-only ⇒ df never decreases). A
-    // MISSING stored df row for an affected shingle that nonetheless
-    // has stored postings is the replay-after-df-DELETE window; its
-    // pre-apply df is reconstructible EXACTLY by counting its stored
-    // postings (the feed's postings land only in the final txn, and a
-    // post-MERGE replay never reaches this code, so the stored rows ARE
-    // the pre-apply state). The reconstruction keeps the replay window
-    // on the same crossed-iff(old ≤ cap < new) rule — an already-hot
-    // shingle (df ≫ cap) whose df row the crash retired no longer
-    // floods crossDocs with its full posting list, so the documented
-    // work-∝-cap×crossings bound holds in the replay window too
-    // (ADVICE r13).
-    val dfOldAff = s.table(dfTab).withColumnRenamed("df", "df_old")
-      .join(affected, Seq("sh"), "left_semi")
-    val dfOldRecon = postsStored
-      .join(feedTouched, Seq("doc_id"), "left_anti") // replay paranoia
-      .join(affected.join(dfOldAff.select("sh"), Seq("sh"), "left_anti"),
-        Seq("sh"), "left_semi")
-      .groupBy("sh").agg(count(lit(1)).as("df_old"))
-    val crossings = graft.ops.withDesc(s, "lc-apply: crossings")(
-      dfOldAff.select("sh", "df_old").unionAll(dfOldRecon)
-        .join(dfNew, Seq("sh"))
-        .filter(col("df_old") <= cap && col("df") > cap).select("sh")
-        .distinct()
-        .localCheckpoint(true))
-    // the common production append crosses nothing — short-circuit
-    // before any posts-table pass for the crossing machinery
-    val anyCross = graft.ops.withDesc(s, "lc-apply: crossings")(
-      crossings.limit(1).count() > 0L)
-    val crossDocs =
-      if (!anyCross) feedTouched.limit(0).select(col("doc_id"))
-      else postsStored.join(crossings, Seq("sh"), "left_semi")
-        .select(col("doc_id")).distinct()
-    // COST GATE: each crossing touches ≤ cap stored docs, but a batch
-    // that is large RELATIVE TO THE CORPUS can cross so many shingles
-    // that the expanded-touched machinery (induced-subgraph CC + MERGE)
-    // costs more than the linear rebuild it exists to avoid. When the
-    // crossing-touched stored docs exceed a third of the corpus, the
-    // rebuild is the cheaper exact plan — take it. (Answers identical
-    // either way; this is purely the optimizer's crossover choice.)
-    // The corpus size comes from the label table's MANIFEST (one
-    // metadata read, never a scan): Σ live_rows over the head segments
-    // — physical rows MINUS deletion-vector retractions, so a
-    // merge-on-read history of label MERGEs can't drift the count above
-    // the live doc count and bias this crossover toward the incremental
-    // path (ADVICE r13).
-    if (anyCross) {
-      val crossCnt = crossDocs.count()
-      val storedCnt = s.table(s"$labels.files")
-        .agg(coalesce(sum("live_rows"), lit(0L))).head.getLong(0)
-      if (crossCnt * 3L > storedCnt) {
-        shNewFeed.unpersist(blocking = false)
-        return false
-      }
-    }
-    val touched = graft.ops.withDesc(s, "lc-apply: touched ckpt")(
-      feedTouched.select("doc_id").unionAll(crossDocs)
-        .distinct().localCheckpoint(true))
-
-    // head cap filter: stored df overridden by the recomputed rows
-    val dfHead = s.table(dfTab).join(affected, Seq("sh"), "left_anti")
-      .unionAll(dfNew)
-    val okSh = dfHead.filter(col("df") <= cap).select("sh")
-    val postsHeadCapped = postsHeadFull.join(okSh, Seq("sh"), "left_semi")
-
-    // ---- D-phase (splits/gains among stored members of the touched
-    // components): only runs when a crossing touched stored docs
-    val (splitNodes, untouchedRows) =
-      if (!anyCross)
-        (feedTouched.limit(0)
-          .select(col("doc_id"), col("doc_id").as("node")),
-          stored.select(col("doc_id"), col("comp")))
-      else {
-        val touchedComps = stored.join(touched, Seq("doc_id"), "left_semi")
-          .select(col("comp")).distinct()
-        val members = stored.join(touchedComps, Seq("comp"), "left_semi")
-          .select(col("doc_id"))
-        // exact induced subgraph of the members over HEAD capped
-        // postings (crossing docs carry their shrunk sets; unchanged
-        // member-member edges recompute to the same values)
-        val mPosts = postsHeadCapped
-          .join(members, Seq("doc_id"), "left_semi").persist()
-        val mEdges = jaccardEdgesFromShingles(mPosts)
-        val msym = mEdges.select(explode(array(
-            struct(col("a_id").as("src"), col("b_id").as("dst")),
-            struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        // ccOverEdges output is already self-contained — no extra job
-        val mlab = graft.ops.withDesc(s, "lc-apply: D-phase cc") {
-          val (mlab0, _) = Dedup.ccOverEdges(s, msym)
-          mlab0
-        }
-        mPosts.unpersist(blocking = false)
-        val sn = members
-          .join(mlab.withColumnRenamed("id", "doc_id")
-            .withColumnRenamed("comp", "c2"), Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("c2"), col("doc_id")).as("node"))
-        (sn, stored.join(touchedComps, Seq("comp"), "left_anti")
-          .select(col("doc_id"), col("comp")))
-      }
-    val afterD = untouchedRows
-      .unionAll(splitNodes.select(col("doc_id"), col("node").as("comp")))
-
-    // ---- N-phase: head edges incident to the touched docs. Feed docs
-    // contribute fresh capped shingles; crossing docs contribute their
-    // STORED rows cap-filtered at head df (texts unchanged).
-    val shTouchedCapped = shNewFeed.join(okSh, Seq("sh"), "left_semi")
-      .unionAll(postsStored.join(crossDocs, Seq("doc_id"), "left_semi")
-        .join(okSh, Seq("sh"), "left_semi"))
-    // persisted (round-16): see the exact apply — consumed with
-    // different pruned column sets, so exchange reuse cannot dedup the
-    // candidate join; both frames are batch-bounded
-    val cand = shTouchedCapped.as("b").join(postsHeadCapped.as("a"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") =!= col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .agg(count(lit(1)).as("inter"))
-      .persist()
-    val ids = cand.select(col("a_id").as("doc_id"))
-      .unionAll(cand.select(col("b_id").as("doc_id"))).distinct()
-    val sizes = postsHeadCapped.join(ids, Seq("doc_id"), "left_semi")
-      .groupBy("doc_id").agg(count(lit(1)).as("n"))
-      .persist()
-    val edgesNew = cand
-      .join(sizes.withColumnRenamed("doc_id", "a_id")
-        .withColumnRenamed("n", "n_a"), "a_id")
-      .join(sizes.withColumnRenamed("doc_id", "b_id")
-        .withColumnRenamed("n", "n_b"), "b_id")
-      .filter(col("inter").cast("double")
-        / (col("n_a") + col("n_b") - col("inter")) >= 0.5)
-      .select(col("a_id"), col("b_id"))
-    // contract endpoints onto the post-D labels (members → their split
-    // node, untouched docs → stored comp, feed docs → own id), min-label
-    // CC on the quotient — the union-find-by-min argument
-    val q = edgesNew
-      .join(afterD.withColumnRenamed("doc_id", "a_id")
-        .withColumnRenamed("comp", "ca"), Seq("a_id"), "left")
-      .join(afterD.withColumnRenamed("doc_id", "b_id")
-        .withColumnRenamed("comp", "cb"), Seq("b_id"), "left")
-      .select(coalesce(col("ca"), col("a_id")).as("src"),
-        coalesce(col("cb"), col("b_id")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val qsym = q.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst")).distinct()
-    // ccOverEdges output is already self-contained — no extra job
-    val qlab = graft.ops.withDesc(s, "lc-apply: N-phase cc") {
-      val (qlab0, _) = Dedup.ccOverEdges(s, qsym)
-      qlab0
-    }
-    cand.unpersist(blocking = false)
-    sizes.unpersist(blocking = false)
-
-    def viaQ(df: DataFrame): DataFrame = df
-      .join(qlab.withColumnRenamed("id", "node"), Seq("node"), "left")
-      .select(col("doc_id"), coalesce(col("comp"), col("node")).as("comp"))
-    val splitRows = viaQ(splitNodes)
-    val remapChanged = untouchedRows
-      .withColumnRenamed("comp", "node").as("l")
-      .join(qlab.as("qq"), col("l.node") === col("qq.id"))
-      .filter(col("qq.comp") =!= col("qq.id"))
-      .select(col("l.doc_id").as("doc_id"), col("qq.comp").as("comp"))
-    val newRows = viaQ(head.join(feedTouched, Seq("doc_id"), "left_semi")
-      .select(col("doc_id")).distinct().withColumn("node", col("doc_id")))
-    // materialize every mutation input BEFORE the first mutation
-    // (disjoint by construction: members of touched comps / rows of
-    // untouched comps / genuinely-new feed docs) — the three
-    // checkpoints are independent reads of cached inputs: overlap them
-    // (round-16, guide §2.6)
-    val ckpts = graft.ops.inParallel[DataFrame](Seq(
-      () => graft.ops.withDesc(s, "lc-apply: mutation-input ckpts")(
-        splitRows.unionAll(remapChanged).unionAll(newRows)
-          .localCheckpoint(true)),
-      () => graft.ops.withDesc(s, "lc-apply: mutation-input ckpts")(
-        shNewFeed.localCheckpoint(true)),
-      () => graft.ops.withDesc(s, "lc-apply: mutation-input ckpts")(
-        affected.localCheckpoint(true))))
-    val (usrc, newPostRows, affectedCk) = (ckpts(0), ckpts(1), ckpts(2))
-    val dfNewCk = dfNew.filter(col("df") > 0)
-
-    val sfx = java.util.UUID.randomUUID().toString.replace("-", "")
-    val uv = s"graft_lc_merge_$sfx"
-    val pv = s"graft_lc_posts_$sfx"
-    val dv = s"graft_lc_df_$sfx"
-    val av = s"graft_lc_aff_$sfx"
-    usrc.createOrReplaceTempView(uv)
-    newPostRows.createOrReplaceTempView(pv)
-    dfNewCk.createOrReplaceTempView(dv)
-    affectedCk.createOrReplaceTempView(av)
+    val (held, scratch) = (new Held, new Held)
     try {
-      // 1.+2. retire the affected shingles' stored df rows (idempotent;
-      //    the affected set derives from the immutable feed) and the
-      //    ONE atomic label statement, OVERLAPPED (round-16, guide
-      //    §2.6): disjoint target tables, pre-checkpointed inputs.
-      //    Replay stays on the documented paths under any interleaving:
-      //    MERGE-landed-first replays into the stored-probe rebuild
-      //    guard; DELETE-landed-first replays into the df
-      //    reconstruction window.
-      graft.ops.inParallel[Unit](Seq(
-        () => graft.ops.withDesc(s, "lc-apply: retract DML") {
-          s.sql(s"DELETE FROM $dfTab WHERE sh IN (SELECT sh FROM $av)"); ()
-        },
-        () => graft.ops.withDesc(s, "lc-apply: label MERGE") {
-          s.sql(s"""MERGE INTO $labels t USING $uv u ON t.doc_id = u.doc_id
-          WHEN MATCHED THEN UPDATE SET comp = u.comp
-          WHEN NOT MATCHED THEN INSERT (doc_id, comp) VALUES (u.doc_id, u.comp)""")
-          ()
-        }))
-      // 3. postings + df + watermark in one cross-table txn (only the
-      //    feed's fresh rows land — crossing docs' postings are already
-      //    stored and unchanged)
-      CdcIndex.inTxn(s) {
-        s.sql(s"INSERT INTO $posts SELECT * FROM $pv")
-        s.sql(s"INSERT INTO $dfTab SELECT * FROM $dv")
-        s.sql(s"INSERT OVERWRITE $meta SELECT CAST($headV AS BIGINT), '$corpusTable'")
+      // the batch image is batch-bounded at ANY corpus scale, so an
+      // unconditional keyed spread to the session's parallelism is safe
+      // and probe-free (round-16: replaces widenForCompute's `.rdd`
+      // partition probe, which executed the semi-join once just to ask
+      // its width — ADVICE r15); the shingle derivation and the df
+      // recompute that consumes it then parallelize off the cache
+      val shNewFeed = held(Dedup.shingles(
+        head.join(feedTouched, Seq("doc_id"), "left_semi")
+          .repartition(s.sparkContext.defaultParallelism, col("doc_id"))))
+      // affected shingles (df changes come ONLY from the feed's new docs)
+      // + their HEAD df, recomputed from the logical head postings
+      // (stored ∪ fresh) — identical values on any replay
+      val affected = shNewFeed.select("sh").distinct()
+      val postsStored = s.table(t.posts)
+      val postsHeadFull = postsStored
+        .join(feedTouched, Seq("doc_id"), "left_anti") // replay paranoia
+        .unionAll(shNewFeed)
+      val dfNew = graft.ops.withDesc(s, "lc-apply: df recompute")(
+        postsHeadFull.join(affected, Seq("sh"), "left_semi")
+          .groupBy("sh").agg(count(lit(1)).as("df"))
+          .localCheckpoint(true))
+      // crossing-up detection (append-only ⇒ df never decreases). A
+      // MISSING stored df row for an affected shingle that nonetheless
+      // has stored postings is the replay-after-df-DELETE window; its
+      // pre-apply df is reconstructible EXACTLY by counting its stored
+      // postings (the feed's postings land only in the final txn, and a
+      // post-MERGE replay never reaches this code, so the stored rows ARE
+      // the pre-apply state). The reconstruction keeps the replay window
+      // on the same crossed-iff(old ≤ cap < new) rule — an already-hot
+      // shingle (df ≫ cap) whose df row the crash retired no longer
+      // floods crossDocs with its full posting list, so the documented
+      // work-∝-cap×crossings bound holds in the replay window too
+      // (ADVICE r13).
+      val dfOldAff = s.table(dfTab).withColumnRenamed("df", "df_old")
+        .join(affected, Seq("sh"), "left_semi")
+      val dfOldRecon = postsStored
+        .join(feedTouched, Seq("doc_id"), "left_anti") // replay paranoia
+        .join(affected.join(dfOldAff.select("sh"), Seq("sh"), "left_anti"),
+          Seq("sh"), "left_semi")
+        .groupBy("sh").agg(count(lit(1)).as("df_old"))
+      val crossings = graft.ops.withDesc(s, "lc-apply: crossings")(
+        dfOldAff.select("sh", "df_old").unionAll(dfOldRecon)
+          .join(dfNew, Seq("sh"))
+          .filter(col("df_old") <= cap && col("df") > cap).select("sh")
+          .distinct()
+          .localCheckpoint(true))
+      // the common production append crosses nothing — short-circuit
+      // before any posts-table pass for the crossing machinery
+      val anyCross = graft.ops.withDesc(s, "lc-apply: crossings")(
+        crossings.limit(1).count() > 0L)
+      val crossDocs =
+        if (!anyCross) feedTouched.limit(0).select(col("doc_id"))
+        else postsStored.join(crossings, Seq("sh"), "left_semi")
+          .select(col("doc_id")).distinct()
+      // COST GATE: each crossing touches ≤ cap stored docs, but a batch
+      // that is large RELATIVE TO THE CORPUS can cross so many shingles
+      // that the expanded-touched machinery (induced-subgraph CC + MERGE)
+      // costs more than the linear rebuild it exists to avoid. When the
+      // crossing-touched stored docs exceed a third of the corpus, the
+      // rebuild is the cheaper exact plan — take it. (Answers identical
+      // either way; this is purely the optimizer's crossover choice.)
+      // The corpus size comes from the label table's MANIFEST (one
+      // metadata read, never a scan): Σ live_rows over the head segments
+      // — physical rows MINUS deletion-vector retractions, so a
+      // merge-on-read history of label MERGEs can't drift the count above
+      // the live doc count and bias this crossover toward the incremental
+      // path (ADVICE r13).
+      if (anyCross) {
+        val crossCnt = crossDocs.count()
+        val storedCnt = s.table(s"${t.labels}.files")
+          .agg(coalesce(sum("live_rows"), lit(0L))).head.getLong(0)
+        if (crossCnt * 3L > storedCnt) return false
       }
-      labelCappedIncRefreshes.incrementAndGet()
+      val touched = graft.ops.withDesc(s, "lc-apply: touched ckpt")(
+        feedTouched.select("doc_id").unionAll(crossDocs)
+          .distinct().localCheckpoint(true))
+
+      // head cap filter: stored df overridden by the recomputed rows
+      val dfHead = s.table(dfTab).join(affected, Seq("sh"), "left_anti")
+        .unionAll(dfNew)
+      val okSh = dfHead.filter(col("df") <= cap).select("sh")
+      val postsHeadCapped = postsHeadFull.join(okSh, Seq("sh"), "left_semi")
+
+      // D-phase (splits/gains among the stored members of the touched
+      // components) only when a crossing touched stored docs: the exact
+      // induced subgraph of the members over HEAD capped postings
+      // (crossing docs carry their shrunk sets; unchanged member-member
+      // edges recompute to the same values). Feed docs are not stored, so
+      // nothing is retracted.
+      val (splitNodes, untouchedRows) =
+        splitTouched(s, "lc-apply", stored, touched, None, anyCross) { m =>
+          Dedup.undirected(jaccardEdgesFromShingles(
+            scratch(postsHeadCapped.join(m, Seq("doc_id"), "left_semi"))))
+        }
+
+      // N-phase: head edges incident to the touched docs. Feed docs
+      // contribute fresh capped shingles; crossing docs contribute their
+      // STORED rows cap-filtered at head df (texts unchanged).
+      val shTouchedCapped = shNewFeed.join(okSh, Seq("sh"), "left_semi")
+        .unionAll(postsStored.join(crossDocs, Seq("doc_id"), "left_semi")
+          .join(okSh, Seq("sh"), "left_semi"))
+      val qlab = quotientLabels(s, "lc-apply",
+        candidateEdges(scratch, shTouchedCapped, postsHeadCapped),
+        splitNodes, untouchedRows)
+      scratch.release()
+      // only the feed's fresh rows land — crossing docs' postings are
+      // already stored and unchanged; the affected shingles' stored df
+      // rows are retired (idempotent: the affected set derives from the
+      // immutable feed) and re-inserted at their head df
+      val dfRows = dfNew.filter(col("df") > 0)
+      publishLabels(s, "lc-apply", corpusTable, headV, t,
+        labelCappedIncRefreshes)(
+        labelRows(qlab, splitNodes, untouchedRows,
+          head.join(feedTouched, Seq("doc_id"), "left_semi")
+            .select(col("doc_id")), None),
+        Seq(shNewFeed, affected), Seq(dfRows))(
+        retract = Seq(v =>
+          s"DELETE FROM $dfTab WHERE sh IN (SELECT sh FROM ${v(affected)})"),
+        insert = Seq(
+          v => s"INSERT INTO ${t.posts} SELECT * FROM ${v(shNewFeed)}",
+          v => s"INSERT INTO $dfTab SELECT * FROM ${v(dfRows)}"))
       true
-    } finally {
-      s.catalog.dropTempView(uv)
-      s.catalog.dropTempView(pv)
-      s.catalog.dropTempView(dv)
-      s.catalog.dropTempView(av)
-      shNewFeed.unpersist(blocking = false)
-    }
+    } finally { scratch.release(); held.release() }
   }
 
   // ---------------------------------- unified label entry (lu_ meta)
@@ -1177,11 +1034,8 @@ object DedupIndex {
       // family's artifacts (its meta watermark included) — one name,
       // one index
       recorded.foreach { old =>
-        val arts = if (old == "exact")
-          Seq("lb_labels", "lb_edges", "lb_posts", "lb_meta")
-        else Seq("lc_labels", "lc_posts", "lc_df", "lc_meta")
-        arts.foreach(x =>
-          s.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_${name}_$x"))
+        (if (old == "exact") exactLabelTables(name)
+         else cappedLabelTables(name)).drop(s)
       }
       s.sql(s"DROP TABLE IF EXISTS $meta")
       s.sql(s"CREATE TABLE $meta (family STRING, forced BOOLEAN, " +

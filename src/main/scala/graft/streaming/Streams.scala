@@ -765,8 +765,7 @@ object Streams {
   val streamLabelMaintenance: Q = (s, d) => {
     graft.ops.ensureGraftCatalog(s)
     s.sql("DROP TABLE IF EXISTS graft_cat.db.slb_docs")
-    Seq("lb_labels", "lb_edges", "lb_posts", "lb_meta").foreach(x =>
-      s.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_stream_lb_$x"))
+    graft.ext.DedupIndex.exactLabelTables("stream_lb").drop(s)
     s.sql("CREATE TABLE graft_cat.db.slb_docs (doc_id BIGINT, " +
       "text STRING) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     val docs = graft.ops.table(s, d, "documents")
@@ -813,8 +812,7 @@ object Streams {
   val streamCappedLabelMaintenance: Q = (s, d) => {
     graft.ops.ensureGraftCatalog(s)
     s.sql("DROP TABLE IF EXISTS graft_cat.db.slc_docs")
-    Seq("lc_labels", "lc_posts", "lc_df", "lc_meta").foreach(x =>
-      s.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_stream_lc_$x"))
+    graft.ext.DedupIndex.cappedLabelTables("stream_lc").drop(s)
     s.sql("CREATE TABLE graft_cat.db.slc_docs (doc_id BIGINT, " +
       "text STRING) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     val docs = graft.ops.table(s, d, "documents")
