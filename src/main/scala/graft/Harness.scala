@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The session and entry selection shared by the measuring mains
   * (Bench, ProfMain, PlanDumpMain, RecallProbeMain, CrossoverProbeMain),
   * so a layer breakdown runs under the same configuration as the
-  * end-to-end number it explains. */
+  * end-to-end number it explains. WarehouseMain builds its session here
+  * too. */
 object Harness {
 
   /** `local[N]` with N shuffle partitions, N = `SPARK_GRAFT_CPUS`

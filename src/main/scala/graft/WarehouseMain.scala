@@ -1,7 +1,6 @@
 package graft
 
 import graft.dw.Warehouse
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end warehouse build CLI — the `transformation.py main()`
   * equivalent (`/root/reference/transformation.py:602-691`).
@@ -17,16 +16,8 @@ import org.apache.spark.sql.SparkSession
 object WarehouseMain {
   def main(args: Array[String]): Unit = {
     val Array(rawDir, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-warehouse")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    ops.configure(spark)
 
     val t0 = System.nanoTime()
     val tables = Warehouse.build(spark, Warehouse.Inputs(

@@ -8,10 +8,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The reference runs 8 dataset pipelines on a 4-thread pool then CTAS's
   * each pandas frame into DuckDB (X1, S7). Here the "pipeline" is a map of
-  * lazy plans; Spark's scheduler overlaps their stages naturally when the
-  * outputs are written/consumed, so no explicit thread pool exists. The
-  * serving layer is Spark SQL over registered views (S6/S8/S9) instead of
-  * DuckDB.
+  * lazy plans. Spark runs one job per action, and one thread submits its
+  * actions one at a time, so [[register]]'s emptiness probes and the
+  * sinks' table writes run on [[graft.ops.inParallel]] with 4 workers, as
+  * the reference's pool does. Registration itself stays serial and keeps
+  * input order. The serving layer is Spark SQL over registered views
+  * (S6/S8/S9) instead of DuckDB.
   */
 object Warehouse {
 
@@ -66,23 +68,24 @@ object Warehouse {
   }
 
   /** Register non-empty tables as temp views — the reference's
-    * skip-empty CTAS semantics (S7, transformation.py:528-538). Returns
-    * the registered names.
+    * skip-empty CTAS semantics (S7, transformation.py:528-538). The
+    * emptiness probes run overlapped; the views are created afterwards,
+    * in input order. Returns the registered names in input order.
     */
-  def register(tables: Seq[(String, DataFrame)]): Seq[String] =
-    tables.collect {
-      case (name, df) if !df.isEmpty =>
-        df.createOrReplaceTempView(name)
-        name
+  def register(tables: Seq[(String, DataFrame)]): Seq[String] = {
+    val nonEmpty = graft.ops.inParallel(tables.map { case (_, df) =>
+      () => !df.isEmpty })
+    tables.zip(nonEmpty).collect { case ((name, df), true) =>
+      df.createOrReplaceTempView(name)
+      name
     }
+  }
 
   /** Persist tables as parquet under `dir` (columnar at-rest layer; see
     * [[writeScaled]] for the 100 TB layout variant).
     */
   def writeParquet(tables: Seq[(String, DataFrame)], dir: String): Unit =
-    tables.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$dir/$name")
-    }
+    writeScaled(tables, dir, Map.empty)
 
   /** At-rest layout for one table in the scaled sink: hive-style
     * partition columns (→ partition-pruned scans) and/or a bucket spec
@@ -99,11 +102,13 @@ object Warehouse {
     * parquet. Joining two tables bucketed the same way on their join key
     * plans with NO exchange on either side (asserted in WarehouseSpec);
     * partition columns turn fact-date filters into partition pruning
-    * (asserted in ScaleInfraSpec).
+    * (asserted in ScaleInfraSpec). Tables write overlapped; each goes to
+    * its own directory and catalog name. The first failure is rethrown
+    * unwrapped.
     */
   def writeScaled(tables: Seq[(String, DataFrame)], dir: String,
-      layouts: Map[String, TableLayout]): Unit =
-    tables.foreach { case (name, df) =>
+      layouts: Map[String, TableLayout]): Unit = {
+    def write(name: String, df: DataFrame): Unit = {
       val lay = layouts.getOrElse(name, TableLayout())
       if (lay.buckets > 0) {
         require(lay.bucketCols.nonEmpty,
@@ -121,4 +126,7 @@ object Warehouse {
           .parquet(s"$dir/$name")
       }
     }
+    graft.ops.inParallel[Unit](tables.map { case (name, df) =>
+      () => write(name, df) })
+  }
 }

@@ -178,6 +178,44 @@ class WarehouseSpec extends SparkTestBase {
     assert(registered.toSet === Set("dim_datetime", "dim_date", "dim_hour"))
   }
 
+  test("register: a partial build registers its non-empty tables in assembly order") {
+    val partial = Warehouse.build(spark, Warehouse.Inputs(
+      business = s"$fixtureDir/business.json",
+      checkin = s"$fixtureDir/checkin.json"))
+    val registered = Warehouse.register(partial)
+    assert(registered === Seq("dim_datetime", "dim_date", "dim_hour",
+      "dim_business", "dim_category", "fact_business_categories",
+      "dim_attribute", "fact_business_attributes", "fact_business_hours",
+      "fact_checkins"))
+    assert(registered === partial.collect { case (n, df) if df.count() > 0 => n })
+    val frames = partial.toMap
+    registered.foreach { n =>
+      assert(spark.table(n).count() === frames(n).count(), n)
+    }
+  }
+
+  test("writeParquet: every table of the full build reads back with its row count") {
+    val outDir = Files.createTempDirectory("graft_wh_parquet").toString
+    Warehouse.writeParquet(tables.toSeq, outDir)
+    tables.foreach { case (n, df) =>
+      assert(spark.read.parquet(s"$outDir/$n").count() === df.count(), n)
+    }
+  }
+
+  test("writeParquet: a failing table surfaces its own error, not an ExecutionException") {
+    val outDir = Files.createTempDirectory("graft_wh_fail").toString
+    val bad = spark.range(3).select(
+      raise_error(concat(lit("bad table row "), col("id").cast("string"))).as("x"))
+    val err = intercept[Throwable] {
+      Warehouse.writeParquet(Seq(
+        "dim_hour" -> tables("dim_hour"),
+        "bad" -> bad,
+        "dim_date" -> tables("dim_date")), outDir)
+    }
+    assert(!err.isInstanceOf[java.util.concurrent.ExecutionException])
+    assert(err.getMessage.contains("bad table row"), s"unexpected failure: $err")
+  }
+
   test("writeScaled: same-bucketed fact and dim join with no exchange (S7 at scale)") {
     // stale catalog entries / warehouse dirs survive across JVMs — clear
     Seq("graft_wh_fact_checkins", "graft_wh_dim_business").foreach { t =>
