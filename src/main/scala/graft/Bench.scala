@@ -192,35 +192,11 @@ object Bench {
         try fn(spark, warmDir).count() catch { case _: Throwable => () }
         Harness.release(spark)
       }
-    // Shared label seeds (round-14): fixture construction, not query
-    // cost — built HERE, in the warmup phase, exactly like JIT/codegen
-    // warmup, so first-pass and retry-pass measurements are consistent.
-    // Without this the FIRST label entry absorbed the once-per-run seed
-    // build in pass 1 while its retry (seeds already present) did not,
-    // and the min-fold silently attributed the cost to nothing. Guarded
-    // on a label entry actually being selected (a filtered non-label
-    // run must not pay ~13 s of irrelevant setup). The prefix set lives
-    // next to ensureLabelSeeds so new seed consumers can't silently
-    // bypass the guard; the measured seed seconds are recorded in
-    // BENCH_RUN as `seed_s` (VERDICT r14 #3 — the construction cost
-    // that moved out of the entries must stay visible in the artifact,
-    // or cross-round totals silently stop being comparable). A FAILED
-    // seed build shifts that cost back into the first timed label
-    // entry, so it is logged to stderr (outside the contract line) —
-    // the contaminated measurement is then self-labeling.
-    var seedS = -1.0
-    if (SparkEntry.queries.keys.exists(n =>
-        only(n) && graft.ext.Dedup.SeedConsumerPrefixes.exists(n.startsWith)))
-      try {
-        ops.configure(spark)
-        val t0 = System.nanoTime()
-        graft.ext.Dedup.ensureLabelSeeds(spark, sfDir)
-        seedS = (System.nanoTime() - t0) / 1e9
-      } catch {
-        case t: Throwable =>
-          System.err.println(s"[bench] WARM-UP SEED BUILD FAILED — the " +
-            s"first timed label entry will absorb the seed cost: $t")
-      }
+    // Shared label seeds (round-14), built in the warmup phase; the
+    // measured seconds ride BENCH_RUN and the contract line as `seed_s`
+    // (VERDICT r14 #3 — cross-round totals stay comparable).
+    val seedS = Harness.warmSeeds(spark, sfDir,
+      SparkEntry.queries.keys.filter(only))
     // Timed pass + targeted re-timing, keep the per-query minimum.
     // Concurrent host activity (observed: periodic external jobs crushing
     // throughput for minutes at a time) inflates exactly the queries that

@@ -37,10 +37,7 @@ object PlanDumpMain {
       } finally ext.Dedup.ccCapturePlan.set(false)
     }
     val qmap = SparkEntry.queries.filter(kv => only(kv._1))
-    if (qmap.keys.exists(n => ext.Dedup.SeedConsumerPrefixes.exists(n.startsWith))) {
-      ops.configure(spark)
-      ext.Dedup.ensureLabelSeeds(spark, sfDir)
-    }
+    Harness.warmSeeds(spark, sfDir, qmap.keys)
     qmap.keys.toSeq.sorted.foreach { name =>
       try {
         val df = qmap(name)(spark, sfDir)

@@ -38,12 +38,7 @@ object ProfMain {
     })
 
     val qmap = SparkEntry.queries.filter(kv => only(kv._1))
-    // match Bench: build shared seeds outside the timed region when a
-    // seed consumer is selected
-    if (qmap.keys.exists(n => ext.Dedup.SeedConsumerPrefixes.exists(n.startsWith))) {
-      ops.configure(spark)
-      ext.Dedup.ensureLabelSeeds(spark, sfDir)
-    }
+    Harness.warmSeeds(spark, sfDir, qmap.keys)
     qmap.keys.toSeq.sorted.foreach { name =>
       (1 to reps).foreach { rep =>
         jobs.clear()

@@ -25,7 +25,9 @@ import org.apache.spark.sql.functions._
   *   - events ×K: ids offset, timestamps shifted a day per copy.
   *
   * Usage: runMain graft.ScaleRehearsal [srcSfDir] [fixtureDir] [K]
-  * Prints one JSON line per query:
+  * The session is Bench's ([[Harness.session]]: `local[N]` with N
+  * shuffle partitions, N = `SPARK_GRAFT_CPUS`, default 4), plus
+  * `ops.configure`. Prints one JSON line per query:
   *   {"q":"…","base_s":…,"scaled_s":…,"ratio":…}
   */
 object ScaleRehearsal {
@@ -106,13 +108,7 @@ object ScaleRehearsal {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/tmp/graft_scale_sf1"
     val k = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     graft.ops.configure(spark)
     // supplier.parquet is the newest fixture table (round-8 TPC-H tier)
     // — its absence means the fixture predates it and must be regenerated
@@ -122,9 +118,7 @@ object ScaleRehearsal {
     def time(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, dir).count()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.release(spark)
       (System.nanoTime() - t0) / 1e9
     }
     // local iteration only: SPARK_GRAFT_REHEARSE_ONLY=queries,wh,mor,lbl
@@ -331,9 +325,7 @@ object ScaleRehearsal {
       // tables here instead of orphaning them in the shared catalog
       spark.sql(s"DROP TABLE IF EXISTS $corpus")
       graft.ext.DedupIndex.exactLabelTables(name).drop(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.release(spark)
     }
   }
 
@@ -412,9 +404,7 @@ object ScaleRehearsal {
       spark.sql(s"DROP TABLE IF EXISTS $corpus")
       Seq("gr_edges", "gr_meta").foreach(x =>
         spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.ann_${name}_$x"))
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.release(spark)
     }
   }
 
@@ -463,9 +453,7 @@ object ScaleRehearsal {
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $corpus")
       arts.drop(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.release(spark)
     }
   }
 
@@ -504,9 +492,7 @@ object ScaleRehearsal {
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $corpus")
       graft.ext.DedupIndex.cappedLabelTables(name).drop(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.release(spark)
     }
   }
 

@@ -11,10 +11,16 @@ import org.apache.spark.sql.functions._
   *
   * Layout (per index name):
   *   - `graft_cat.db.ann_<name>_cents`  (cid INT, c ARRAY<DOUBLE>)
-  *   - `graft_cat.db.ann_<name>_cells`  (vec_id BIGINT, cell INT,
+  *   - `graft_cat.db.ann_<name>_cells`  (vec_id BIGINT, cell BIGINT,
   *                                        v ARRAY<DOUBLE>, norm DOUBLE)
   *
-  * [[ensure]] is the single entry point and is IDEMPOTENT:
+  * Each tier (IVF cells, PQ codes, SQ codes) has two entry points over
+  * the same tables: `ensure*Cdc` maintains them from a catalog table's
+  * change feed (version watermark, exact under deletes and updates),
+  * and the DataFrame `ensure`/`ensurePq`/`ensureSq` hands a pure
+  * catalog scan to that twin and keeps any other frame current with
+  * [[CdcIndex.ensureAppend]]'s append watermark. For IVF, that is
+  * IDEMPOTENT:
   *   - tables absent / corpus changed non-monotonically → FULL BUILD
   *     (the deterministic k-means-lite of ext20 — seed every 64th
   *     vector, one integer-scaled Lloyd step, re-assign — so a freshly
@@ -71,57 +77,34 @@ object AnnIndex {
     * commit); concurrent readers see either the old or the new complete
     * index version, never a torn one.
     *
-    * Watermark limits: coverage keys on (count, max vec_id) of the
-    * stored cells vs the corpus, so an in-place UPDATE that preserves
-    * BOTH — a re-embedded vector under the same id — is NOT detected
-    * and the no-op branch would serve the stale assignment. Route
-    * mutable corpora through [[ensureCdc]], whose committed-version
-    * watermark is exact. A cells table whose layout predates the
-    * BIGINT/bucketed migration routes to a full rebuild instead of
-    * failing the append (see `cellsLayoutCurrent`). */
+    * A pure scan of a catalog table goes to [[ensureCdc]]; any other
+    * frame takes the shared append watermark ([[CdcIndex.ensureAppend]])
+    * read off the cells table's (count, max vec_id). A cells table whose
+    * layout predates the BIGINT/bucketed migration (or whose centroids
+    * are missing) has no usable watermark and rebuilds — an INT-cell
+    * table could not take the delta append. */
   def ensure(s: SparkSession, corpus: DataFrame, name: String): Tables =
     CdcIndex.withNameLock(s"ann:$name") {
       CdcIndex.requireBaseFamilyName(name, "ann")
       graft.ops.ensureGraftCatalog(s)
-      graft.functions.SquaredDistance.register(s)
-      val t = tables(name)
-
-      def tableState(tbl: String): Option[(Long, Long)] =
-        try {
-          // ungrouped COUNT/MAX folds from the manifest — no data scan
-          val r = s.table(tbl).agg(count(lit(1)), max(col("vec_id"))).head
-          Some((r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
-        } catch { case _: org.apache.spark.sql.AnalysisException => None }
-
-      val centsExist =
-        try { s.table(t.cents).schema; true }
-        catch { case _: org.apache.spark.sql.AnalysisException => false }
-
-      // A pre-migration cells table (INT cell, unpartitioned) cannot
-      // take a BIGINT delta append — it would fail analysis, not fall
-      // back. Treat the layout mismatch as "not covered": rebuild.
-      def cellsLayoutCurrent: Boolean =
-        try s.table(t.cells).schema("cell").dataType ==
-          org.apache.spark.sql.types.LongType
-        catch { case _: Exception => false }
-
-      (tableState(t.cells), centsExist) match {
-        case (Some((storedCnt, storedMax)), true)
-            if storedCnt > 0 && cellsLayoutCurrent =>
-          val cs = corpus.agg(count(lit(1)), max(col("vec_id")),
-            count(when(col("vec_id") <= lit(storedMax), 1))).head
-          val (cnt, mx, prefixCnt) = (cs.getLong(0),
-            if (cs.isNullAt(1)) -1L else cs.getLong(1), cs.getLong(2))
-          if (cnt == storedCnt && mx == storedMax) t // fresh — no-op
-          else if (mx > storedMax && prefixCnt == storedCnt) {
-            // append-only growth: assign the delta to the STORED
-            // centroids; old assignments and the quantizer are untouched
-            val delta = corpus.filter(col("vec_id") > storedMax)
+      CdcIndex.sourceTable(s, corpus) match {
+        case Some(tbl) => ensureCdc(s, tbl, name)
+        case None =>
+          graft.functions.SquaredDistance.register(s)
+          val t = tables(name)
+          val current = CdcIndex.exists(s, t.cents) &&
+            scala.util.Try(s.table(t.cells).schema("cell").dataType)
+              .toOption.contains(org.apache.spark.sql.types.LongType)
+          val stored =
+            if (current) CdcIndex.artifactWatermark(s, t.cells, "vec_id")
+            else None
+          CdcIndex.ensureAppend(corpus, "vec_id", stored) { (delta, _) =>
+            // assign the delta to the STORED centroids; old assignments
+            // and the quantizer are untouched
             cellsOf(delta, s.table(t.cents)).writeTo(t.cells).append()
             refreshes.incrementAndGet()
-            t
-          } else build(s, corpus, t)
-        case _ => build(s, corpus, t)
+          }(_ => build(s, corpus, t))
+          t
       }
     }
 
@@ -132,10 +115,10 @@ object AnnIndex {
   val cdcRefreshes = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Version-keyed maintenance over a CATALOG-table corpus — the vector
-    * twin of [[DedupIndex.ensureCdc]]: [[ensure]]'s count/max watermark
-    * can only prove append-only growth (a delete forces a full rebuild;
-    * a re-embedded vector under the same id is NOT even detected), so
-    * this variant keys coverage on the table's committed VERSION and
+    * twin of [[DedupIndex.ensureCdc]]: where an append watermark can only
+    * prove append-only growth (a delete forces a full rebuild; a
+    * re-embedded vector under the same id is NOT even detected), this
+    * variant keys coverage on the table's committed VERSION and
     * maintains the cells table through [[CdcIndex.ensureKeyed]], keyed
     * by `vec_id` (the retraction is a deletion-vector append; the
     * bucketed layout is untouched): touched head images are re-assigned
@@ -223,44 +206,31 @@ object AnnIndex {
       .drop("cents")
 
   /** Ensure the PQ tier of the named index covers `corpus`
-    * (vec_id BIGINT, v ARRAY<DOUBLE> of 64 dims). Same idempotence /
-    * incremental-append / rebuild contract as [[ensure]] — including
-    * its watermark limit: a count+max-preserving in-place UPDATE is NOT
-    * detected (stale codes would be served); use [[ensurePqCdc]] for
-    * mutable catalog corpora. */
+    * (vec_id BIGINT, v ARRAY<DOUBLE> of 64 dims). A pure scan of a
+    * catalog table goes to [[ensurePqCdc]]; any other frame takes
+    * [[ensure]]'s append watermark, read off the codes table (8 rows per
+    * vector; missing codebooks or a partial vector read as no
+    * watermark, which rebuilds). */
   def ensurePq(s: SparkSession, corpus: DataFrame, name: String): PqTables =
     CdcIndex.withNameLock(s"ann-pq:$name") {
       CdcIndex.requireIndexName(name)
       graft.ops.ensureGraftCatalog(s)
-      graft.functions.SquaredDistance.register(s)
-      val t = pqTables(name)
-
-      def codesState: Option[(Long, Long)] =
-        try {
-          val r = s.table(t.codes).agg(count(lit(1)), max(col("vec_id"))).head
-          Some((r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
-        } catch { case _: org.apache.spark.sql.AnalysisException => None }
-
-      val centsExist =
-        try { s.table(t.cents).schema; true }
-        catch { case _: org.apache.spark.sql.AnalysisException => false }
-
-      (codesState, centsExist) match {
-        case (Some((storedCnt, storedMax)), true) if storedCnt > 0 =>
-          val cs = corpus.agg(count(lit(1)), max(col("vec_id")),
-            count(when(col("vec_id") <= lit(storedMax), 1))).head
-          val (cnt, mx, prefixCnt) = (cs.getLong(0),
-            if (cs.isNullAt(1)) -1L else cs.getLong(1), cs.getLong(2))
-          if (cnt * 8 == storedCnt && mx == storedMax) t // fresh — no-op
-          else if (mx > storedMax && prefixCnt * 8 == storedCnt) {
-            // append-only growth: encode the delta against the STORED
-            // codebooks; old codes and the codebooks are untouched
-            val delta = corpus.filter(col("vec_id") > storedMax)
+      CdcIndex.sourceTable(s, corpus) match {
+        case Some(tbl) => ensurePqCdc(s, tbl, name)
+        case None =>
+          graft.functions.SquaredDistance.register(s)
+          val t = pqTables(name)
+          val stored =
+            if (!CdcIndex.exists(s, t.cents)) None
+            else CdcIndex.artifactWatermark(s, t.codes, "vec_id")
+              .collect { case (n, mx) if n % 8 == 0 => (n / 8, mx) }
+          CdcIndex.ensureAppend(corpus, "vec_id", stored) { (delta, _) =>
+            // encode the delta against the STORED codebooks; old codes
+            // and the codebooks are untouched
             pqCodes(delta, s.table(t.cents)).writeTo(t.codes).append()
             pqRefreshes.incrementAndGet()
-            t
-          } else buildPq(s, corpus, t)
-        case _ => buildPq(s, corpus, t)
+          }(_ => buildPq(s, corpus, t))
+          t
       }
     }
 
@@ -407,49 +377,23 @@ object AnnIndex {
           .as("codes"))
 
   /** Ensure the SQ tier of the named index covers `corpus` (vec_id
-    * BIGINT, v ARRAY<DOUBLE>). Same coverage contract as [[ensure]] /
-    * [[ensurePq]] — covered → no-op, append-only growth → encode ONLY
-    * the delta, anything else → rebuild.
-    *
-    * Watermark strength: when `corpus` is a PURE scan of a `graft_cat`
-    * table ([[CdcIndex.sourceVersion]]), this DELEGATES to
-    * [[ensureSqCdc]] — the committed-version watermark is exact, so a
-    * count+max-preserving in-place UPDATE (invisible to the plain
-    * (cnt, max, prefixCnt) check) still refreshes the codes, and the
-    * refresh stays change-bound rather than rebuild. Only a
-    * non-catalog corpus (derived frame, temp view, raw parquet) takes
-    * the plain watermark below, which shares [[ensure]]'s documented
-    * limit: an UPDATE preserving count+max is NOT detected. */
+    * BIGINT, v ARRAY<DOUBLE>). A pure scan of a catalog table goes to
+    * [[ensureSqCdc]]; any other frame takes [[ensure]]'s append
+    * watermark, read off the codes table (one row per vector). */
   def ensureSq(s: SparkSession, corpus: DataFrame, name: String): String =
     CdcIndex.withNameLock(s"ann-sq:$name") {
       CdcIndex.requireIndexName(name)
       graft.ops.ensureGraftCatalog(s)
-      CdcIndex.sourceVersion(s, corpus) match {
-        case Some((tbl, _)) => return ensureSqCdc(s, tbl, name)
+      CdcIndex.sourceTable(s, corpus) match {
+        case Some(tbl) => ensureSqCdc(s, tbl, name)
         case None =>
-      }
-      val codes = s"graft_cat.db.ann_${name}_sq_codes"
-
-      def codesState: Option[(Long, Long)] =
-        try {
-          val r = s.table(codes).agg(count(lit(1)), max(col("vec_id"))).head
-          Some((r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
-        } catch { case _: org.apache.spark.sql.AnalysisException => None }
-
-      codesState match {
-        case Some((storedCnt, storedMax)) if storedCnt > 0 =>
-          val cs = corpus.agg(count(lit(1)), max(col("vec_id")),
-            count(when(col("vec_id") <= lit(storedMax), 1))).head
-          val (cnt, mx, prefixCnt) = (cs.getLong(0),
-            if (cs.isNullAt(1)) -1L else cs.getLong(1), cs.getLong(2))
-          if (cnt == storedCnt && mx == storedMax) codes // fresh — no-op
-          else if (mx > storedMax && prefixCnt == storedCnt) {
-            sqEncode(corpus.filter(col("vec_id") > storedMax))
-              .writeTo(codes).append()
+          val codes = s"graft_cat.db.ann_${name}_sq_codes"
+          CdcIndex.ensureAppend(corpus, "vec_id",
+              CdcIndex.artifactWatermark(s, codes, "vec_id")) { (delta, _) =>
+            sqEncode(delta).writeTo(codes).append()
             sqRefreshes.incrementAndGet()
-            codes
-          } else buildSq(s, corpus, codes)
-        case _ => buildSq(s, corpus, codes)
+          }(_ => buildSq(s, corpus, codes))
+          codes
       }
     }
 

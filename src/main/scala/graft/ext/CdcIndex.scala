@@ -1,18 +1,27 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Version-keyed CDC index maintenance. [[ensure]] resolves the corpus
-  * table's committed head version, compares it to the watermark stored
-  * in the index's `(version, corpus)` meta table, and dispatches to
-  * no-op / feed apply / full rebuild. [[ensureKeyed]] is the whole
-  * lifecycle of the seven KEYED families (minhash sigs, exact grams,
-  * BM25 postings, IVF cells, PQ codes, SQ codes, NSW graph edges): each
-  * supplies only its key, derives and full build as a [[Keyed]]. The
-  * two component-label families run over [[ensure]] with one shared
-  * relabel path of their own (`DedupIndex.publishLabels` and its
-  * helpers) — a label is a global property, not a per-key one.
+/** Watermark-keyed index maintenance, one rule per corpus kind.
+  *
+  * A CATALOG-table corpus is keyed on its committed version:
+  * [[ensure]] resolves the table's head version, compares it to the
+  * watermark stored in the index's `(version, corpus)` meta table, and
+  * dispatches to no-op / feed apply / full rebuild. [[ensureKeyed]] is
+  * the whole lifecycle of the seven KEYED families (minhash sigs, exact
+  * grams, BM25 postings, IVF cells, PQ codes, SQ codes, NSW graph
+  * edges): each supplies only its key, derives and full build as a
+  * [[Keyed]]. The two component-label families run over [[ensure]] with
+  * one shared relabel path of their own (`DedupIndex.publishLabels` and
+  * its helpers) — a label is a global property, not a per-key one.
+  *
+  * Any OTHER corpus (a derived frame, raw parquet) has no version, so
+  * the five DataFrame entry points (`DedupIndex.ensure`,
+  * `SearchIndex.ensure`, `AnnIndex.ensure`/`ensurePq`/`ensureSq`) share
+  * one append watermark, [[ensureAppend]]; a frame that is a pure scan
+  * of a catalog table ([[sourceTable]]) goes to the entry point's
+  * version-keyed `ensure*Cdc` twin instead.
   *
   * The feed-apply callback may throw `UnsupportedOperationException`
   * when the change feed refuses a slice it cannot attribute row-exactly
@@ -84,13 +93,17 @@ private[graft] object CdcIndex {
     * rebuilds it once, which self-migrates it. */
   private def storedMeta(s: SparkSession, meta: String)
       : Option[(Long, String)] =
+    graft.ops.withDesc(s, "cdc: watermark")(
+      metaRow(s, meta, "version", "corpus"))
+      .map(r => (r.getLong(0), r.getString(1)))
+
+  /** The one row of `meta` when its columns are exactly `layout`; None
+    * when it is absent, empty, or of any other layout. */
+  private def metaRow(s: SparkSession, meta: String, layout: String*)
+      : Option[Row] =
     try {
       val df = s.table(meta)
-      if (df.schema.fieldNames.toSeq != Seq("version", "corpus")) None
-      else {
-        val r = graft.ops.withDesc(s, "cdc: watermark")(df.head())
-        Some((r.getLong(0), r.getString(1)))
-      }
+      if (df.schema.fieldNames.toSeq != layout) None else Some(df.head())
     } catch {
       case _: org.apache.spark.sql.AnalysisException => None
       case _: NoSuchElementException => None
@@ -182,9 +195,7 @@ private[graft] object CdcIndex {
   def ensureKeyed(s: SparkSession, corpusTable: String, f: Keyed): Unit = {
     graft.ops.ensureGraftCatalog(s)
     ensure(s, corpusTable, f.meta)(()) { (v0, headV) =>
-      val uid = java.util.UUID.randomUUID().toString.replace("-", "")
-      val tv = s"graft_cdc_touched_$uid"
-      val views = f.artifacts.indices.map(i => s"graft_cdc_derived_${uid}_$i")
+      val tv = s"graft_cdc_touched_${uid()}"
       s.sql(s"SELECT DISTINCT ${f.keyOf} AS ${f.key} FROM $corpusTable " +
           s"VERSION AS OF 'cdf:$v0..$headV'")
         .createOrReplaceTempView(tv)
@@ -198,20 +209,8 @@ private[graft] object CdcIndex {
         val images = s.table(corpusTable).select(f.head.map(col): _*)
           .join(s.table(tv).select(col(f.key).as("cdc_touched_key")),
             expr(f.keyOf) === col("cdc_touched_key"), "left_semi")
-        f.artifacts.zip(views).foreach { case ((_, derive), v) =>
-          derive(images).createOrReplaceTempView(v)
-        }
-        inTxn(s) {
-          graft.ops.withDesc(s, "cdc: derive+insert") {
-            f.artifacts.zip(views).foreach { case ((t, _), v) =>
-              s.sql(s"INSERT INTO $t SELECT * FROM $v")
-            }
-          }
-          s.sql(s"INSERT OVERWRITE ${f.meta} SELECT CAST($headV AS BIGINT), " +
-            s"'$corpusTable'")
-        }
-        f.refreshes.incrementAndGet()
-      } finally (tv +: views).foreach(s.catalog.dropTempView)
+        publish(s, f, images, s"CAST($headV AS BIGINT), '$corpusTable'")
+      } finally s.catalog.dropTempView(tv)
     } { headV =>
       graft.ops.withDesc(s, "cdc: rebuild") {
         f.build(s.table(corpusTable).select(f.head.map(col): _*))
@@ -220,6 +219,102 @@ private[graft] object CdcIndex {
       }
     }
   }
+
+  /** The publish that ends every incremental refresh of a [[Keyed]]
+    * family: each artifact's derive over `rows` is inserted, and the
+    * meta overwritten with the `watermark` row, in ONE cross-table txn
+    * ([[inTxn]]), so "rows derived" and "watermark advanced" never
+    * diverge durably. */
+  private def publish(s: SparkSession, f: Keyed, rows: DataFrame,
+      watermark: String): Unit = {
+    val id = uid()
+    val views = f.artifacts.indices.map(i => s"graft_cdc_derived_${id}_$i")
+    f.artifacts.zip(views).foreach { case ((_, derive), v) =>
+      derive(rows).createOrReplaceTempView(v)
+    }
+    try inTxn(s) {
+      graft.ops.withDesc(s, "cdc: derive+insert") {
+        f.artifacts.zip(views).foreach { case ((t, _), v) =>
+          s.sql(s"INSERT INTO $t SELECT * FROM $v")
+        }
+      }
+      s.sql(s"INSERT OVERWRITE ${f.meta} SELECT $watermark")
+    } finally views.foreach(s.catalog.dropTempView)
+    f.refreshes.incrementAndGet()
+  }
+
+  private def uid(): String =
+    java.util.UUID.randomUUID().toString.replace("-", "")
+
+  /** The append watermark every DataFrame-corpus ensure shares: `stored`
+    * is the (rows, max `key`) the index covers, read by the family from
+    * its meta or its artifact (None when absent or unusable). One
+    * count/max aggregate over `corpus` then decides:
+    *   - covered (same count, same max) → no-op;
+    *   - the stored rows are exactly the prefix `key <= max` and the
+    *     corpus grew past it → `delta` derives and publishes the rows
+    *     above the stored max (given the corpus count and max);
+    *   - anything else (a delete, a shrink, an edit that moves the
+    *     count) → `build`, given the corpus count and max BY NAME: only
+    *     the meta-backed families read it, so an absent watermark costs
+    *     the others no aggregate.
+    * An in-place edit that keeps count and max is invisible here — which
+    * is why a pure catalog scan never takes this path ([[sourceTable]]
+    * routes it to the version-keyed twin). */
+  def ensureAppend(corpus: DataFrame, key: String,
+      stored: Option[(Long, Long)])(delta: (DataFrame, (Long, Long)) => Unit)(
+      build: (=> (Long, Long)) => Unit): Unit =
+    stored.filter(_._1 > 0) match {
+      case Some((n0, max0)) =>
+        val r = corpus.agg(count(lit(1)), max(col(key)),
+          count(when(col(key) <= lit(max0), 1))).head
+        val now = countMax(r)
+        if (now == ((n0, max0))) ()
+        else if (now._2 > max0 && r.getLong(2) == n0)
+          delta(corpus.filter(col(key) > lit(max0)), now)
+        else build(now)
+      case None => build(countMax(corpus.agg(count(lit(1)), max(col(key))).head))
+    }
+
+  /** [[ensureAppend]] for a [[Keyed]] family whose artifacts cannot show
+    * coverage (minhash sigs, BM25 postings: a doc without shingles or
+    * tokens leaves no row), so the watermark lives in `f.meta` as
+    * `(n_docs, max_id)`. The delta's derives and the meta advance publish
+    * in one txn and count on `f.refreshes`; a build writes the meta LAST,
+    * so a crash before it rebuilds. A meta of any other layout — the
+    * older `(k, n_docs, max_id)`, or the CDC twin's `(version, corpus)` —
+    * reads as absent and rebuilds once. */
+  def ensureAppendMeta(s: SparkSession, corpus: DataFrame, f: Keyed): Unit = {
+    val stored =
+      if (!f.artifacts.forall(a => exists(s, a._1))) None
+      else metaRow(s, f.meta, "n_docs", "max_id")
+        .map(r => (r.getLong(0), r.getLong(1)))
+    ensureAppend(corpus, f.key, stored) { case (delta, (n, mx)) =>
+      publish(s, f, delta, s"CAST($n AS BIGINT), CAST($mx AS BIGINT)")
+    } { now =>
+      val (n, mx) = now
+      f.build(corpus)
+      replaceMeta(s, f.meta, "n_docs BIGINT, max_id BIGINT",
+        s"CAST($n AS BIGINT), CAST($mx AS BIGINT)")
+    }
+  }
+
+  /** (count, max) from an aggregate row's first two columns; the max of
+    * an empty frame reads as -1. */
+  private def countMax(r: Row): (Long, Long) =
+    (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
+
+  /** (rows, max `key`) of an index artifact, None when it is absent: an
+    * ungrouped COUNT/MAX, which folds from the manifest (no data scan). */
+  def artifactWatermark(s: SparkSession, table: String,
+      key: String): Option[(Long, Long)] =
+    try Some(countMax(s.table(table).agg(count(lit(1)), max(col(key))).head))
+    catch { case _: org.apache.spark.sql.AnalysisException => None }
+
+  /** True when `table` resolves (schema only, no read). */
+  def exists(s: SparkSession, table: String): Boolean =
+    try { s.table(table).schema; true }
+    catch { case _: org.apache.spark.sql.AnalysisException => false }
 
   /** Declare `table`'s row-level DML merge-on-read: CDC retractions then
     * land as deletion-vector appends, not segment rewrites. */
@@ -231,10 +326,15 @@ private[graft] object CdcIndex {
     * of every rebuild, so a crash before it leaves the meta absent or
     * stale and the next ensure rebuilds. */
   def writeMeta(s: SparkSession, meta: String, version: Long,
-      corpusTable: String): Unit = {
+      corpusTable: String): Unit =
+    replaceMeta(s, meta, "version BIGINT, corpus STRING",
+      s"CAST($version AS BIGINT), '$corpusTable'")
+
+  private def replaceMeta(s: SparkSession, meta: String, schema: String,
+      row: String): Unit = {
     s.sql(s"DROP TABLE IF EXISTS $meta")
-    s.sql(s"CREATE TABLE $meta (version BIGINT, corpus STRING)")
-    s.sql(s"INSERT INTO $meta SELECT CAST($version AS BIGINT), '$corpusTable'")
+    s.sql(s"CREATE TABLE $meta ($schema)")
+    s.sql(s"INSERT INTO $meta SELECT $row")
   }
 
   /** Create-or-replace an index artifact from `df`, declaring the
@@ -244,18 +344,15 @@ private[graft] object CdcIndex {
       .tableProperty("graft.autocompact", AutoCompactSpec)
       .createOrReplace()
 
-  /** The (catalog table ident, committed head version) behind `df` when
-    * it is a PURE scan of one `graft_cat` table — optional subquery
-    * aliases / bare-attribute projections over a single
-    * DataSourceV2Relation; None for anything else (filters, computed
-    * columns, joins, non-catalog sources), where content cannot be
-    * keyed by a table version. Plain ensure() uses this as a cheap
-    * content fingerprint: a catalog table's version changes on EVERY
-    * commit, so an in-place UPDATE that preserves row count and max id
-    * — invisible to the (cnt, max, prefixCnt) watermark — still moves
-    * the fingerprint. One manifest read, no data scan. */
-  def sourceVersion(s: SparkSession, df: org.apache.spark.sql.DataFrame)
-      : Option[(String, Long)] = {
+  /** The catalog table `df` is a PURE scan of — optional subquery
+    * aliases / bare-attribute projections over one head-version
+    * `graft_cat` DataSourceV2Relation whose `.versions` log resolves —
+    * or None for anything else (filters, computed columns, joins, time
+    * travel, branches, non-catalog sources). The DataFrame entry points
+    * hand such a corpus to their version-keyed `ensure*Cdc` twin, whose
+    * watermark also sees the count+max-preserving in-place edits
+    * [[ensureAppend]] cannot. Plan and schema inspection only, no read. */
+  def sourceTable(s: SparkSession, df: DataFrame): Option[String] = {
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
@@ -269,33 +366,13 @@ private[graft] object CdcIndex {
     }
     strip(df.queryExecution.analyzed).flatMap { r =>
       (r.catalog, r.identifier) match {
-        case (Some(cat), Some(id)) if cat.name == "graft_cat" =>
-          val ident = (cat.name +: id.namespace :+ id.name).mkString(".")
-          try Some((ident, headVersion(s, ident)))
-          catch { case _: Exception => None }
+        case (Some(cat), Some(id))
+            if cat.name == "graft_cat" && r.timeTravelSpec.isEmpty =>
+          Some((cat.name +: id.namespace :+ id.name).mkString("."))
+            .filter(t => exists(s, s"$t.versions"))
         case _ => None
       }
     }
-  }
-
-  /** True when every commit in (v0, v1] on `table` is append-only or
-    * content-preserving ("append", "compact", "zorder", "alter", "tag")
-    * — the proof plain ensure()'s delta-append path needs that the
-    * already-indexed prefix was not edited in place while new rows
-    * arrived. Metadata-sized (one manifest read, one row per version). */
-  def appendOnlyBetween(s: SparkSession, table: String, v0: Long,
-      v1: Long): Boolean = {
-    val safe = Set("append", "compact", "zorder", "alter", "tag")
-    val ops = s.table(s"$table.versions")
-      .filter(col("v") > v0 && col("v") <= v1)
-      .select("operation").collect()
-    // completeness first: expire_versions may have dropped commits
-    // inside the range, and an EXPIRED non-append commit (an in-place
-    // UPDATE, say) must not become invisible to this proof — judging
-    // only the retained rows would let the delta path serve stale
-    // entries for rows the missing commit rewrote
-    ops.length == (v1 - v0) &&
-      ops.forall(r => safe(r.getString(0).split('@').head))
   }
 
   /** One cross-table transaction (CALL system.txn_*): the atomic

@@ -21,13 +21,12 @@ import org.apache.spark.sql.functions._
   * Layout (per index name):
   *   - `graft_cat.db.dedup_<name>_sigs` (doc_id BIGINT,
   *     h0..h15 STRING) — one row per signable doc (≥ 3 tokens);
-  *   - `graft_cat.db.dedup_<name>_meta` (k BIGINT, n_docs BIGINT,
-  *     max_id BIGINT) — one row describing the covered CORPUS (not the
-  *     sig table: shingle-less docs are signless, so corpus coverage
-  *     cannot be derived from sig counts). `k` is the content
-  *     fingerprint: the corpus table's committed version when the
-  *     source is a pure `graft_cat` scan, `-1` otherwise (see
-  *     [[ensure]] for what each proves).
+  *   - `graft_cat.db.dedup_<name>_meta` — one row describing the
+  *     covered CORPUS (not the sig table: shingle-less docs are
+  *     signless, so corpus coverage cannot be derived from sig counts):
+  *     `(n_docs BIGINT, max_id BIGINT)` when maintained from a plain
+  *     DataFrame, `(version BIGINT, corpus STRING)` when maintained
+  *     from a catalog table's change feed ([[ensureCdc]]).
   *
   * The incremental refresh publishes the sigs append and the meta
   * advance in ONE cross-table transaction ([[graft.sources.SegTxn]]'s
@@ -67,91 +66,21 @@ object DedupIndex {
   }
 
   /** Ensure the named index covers `docs` (doc_id BIGINT, text STRING).
-    * Three states, keyed on the corpus watermark in `meta`:
-    * covered → no-op; append-only growth → sign ONLY the delta and
-    * publish sigs+meta in one txn; any other change → full rebuild.
-    *
-    * Watermark strength: when `docs` is a PURE scan of a `graft_cat`
-    * table, the meta row additionally stores the table's committed
-    * VERSION as a content fingerprint (`k` column; `-1` for any other
-    * source), so in-place UPDATEs that preserve row count and max
-    * doc_id — invisible to the (cnt, max, prefixCnt) check — still
-    * force a rebuild, and the delta-append path is only taken when the
-    * intervening commits are provably append-only. For a plain
-    * DataFrame corpus (k = −1) no such fingerprint exists: an UPDATE
-    * preserving count+max is NOT detected — route mutable corpora
-    * through [[ensureCdc]], whose version watermark is exact. */
+    * A pure scan of a catalog table goes to [[ensureCdc]] (its version
+    * watermark is exact). Any other frame takes the shared append
+    * watermark ([[CdcIndex.ensureAppendMeta]], `(n_docs, max_id)` in
+    * meta): covered → no-op; append-only growth → sign ONLY the delta
+    * and publish sigs+meta in one txn; any other change → full rebuild. */
   def ensure(s: SparkSession, docs: DataFrame, name: String): Tables =
     CdcIndex.withNameLock(s"dedup:$name") {
       CdcIndex.requireBaseFamilyName(name, "dedup")
       graft.ops.ensureGraftCatalog(s)
-      val t = tables(name)
-
-      val src = CdcIndex.sourceVersion(s, docs)
-      val metaCols: Option[Seq[String]] =
-        try Some(s.table(t.meta).schema.fieldNames.toSeq)
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-      if (metaCols.exists(_.headOption.contains("version"))) {
-        // CDC-built index: overwriting its meta with k-mode values would
-        // silently reset the version watermark to 0 and make the next
-        // ensureCdc replay the ENTIRE feed history. Same catalog corpus
-        // → delegate to the exact version-keyed maintenance; anything
-        // else → full rebuild, which explicitly converts the index (and
-        // its meta schema) to k-mode.
-        return src match {
-          case Some((tbl, _)) => ensureCdc(s, tbl, name)
-          case None => build(s, docs, t, -1L)
-        }
-      }
-      val fp = src.map(_._2).getOrElse(-1L)
-
-      val stored: Option[(Long, Long, Long)] =
-        try {
-          val r = s.table(t.meta).select("k", "n_docs", "max_id").head
-          Some((r.getLong(0), r.getLong(1), r.getLong(2)))
-        } catch {
-          case _: org.apache.spark.sql.AnalysisException => None
-          case _: NoSuchElementException => None
-        }
-      val sigsExist =
-        try { s.table(t.sigs).schema; true }
-        catch { case _: org.apache.spark.sql.AnalysisException => false }
-
-      (stored, sigsExist) match {
-        case (Some((storedK, storedN, storedMax)), true) if storedN > 0 =>
-          val cs = docs.agg(count(lit(1)), max(col("doc_id")),
-            count(when(col("doc_id") <= lit(storedMax), 1))).head
-          val (cnt, mx, prefixCnt) = (cs.getLong(0),
-            if (cs.isNullAt(1)) -1L else cs.getLong(1), cs.getLong(2))
-          if (cnt == storedN && mx == storedMax && storedK == fp)
-            t // covered — no-op
-          else if (cnt == storedN && mx == storedMax && storedK >= 0 &&
-              fp > storedK &&
-              CdcIndex.appendOnlyBetween(s, src.get._1, storedK, fp)) {
-            // content-preserving commits (compact, zorder, tag, alter —
-            // or a zero-row append) moved the fingerprint while count and
-            // max prove the indexed content unchanged: advance the
-            // watermark instead of an O(corpus) rebuild
-            s.sql(s"INSERT OVERWRITE ${t.meta} SELECT CAST($fp AS BIGINT), " +
-              s"CAST($storedN AS BIGINT), CAST($storedMax AS BIGINT)")
-            t
-          } else if (mx > storedMax && prefixCnt == storedN &&
-              ((storedK < 0 && fp < 0) ||
-               (storedK >= 0 && fp > storedK &&
-                CdcIndex.appendOnlyBetween(s, src.get._1, storedK, fp)))) {
-            val delta = signatures(docs.filter(col("doc_id") > lit(storedMax)))
-            val view = s"graft_dedup_delta_" +
-              java.util.UUID.randomUUID().toString.replace("-", "")
-            delta.createOrReplaceTempView(view)
-            try CdcIndex.inTxn(s) {
-              s.sql(s"INSERT INTO ${t.sigs} SELECT * FROM $view")
-              s.sql(s"INSERT OVERWRITE ${t.meta} SELECT CAST($fp AS BIGINT), " +
-                s"CAST($cnt AS BIGINT), CAST($mx AS BIGINT)")
-            } finally s.catalog.dropTempView(view)
-            refreshes.incrementAndGet()
-            t
-          } else build(s, docs, t, fp)
-        case _ => build(s, docs, t, fp)
+      CdcIndex.sourceTable(s, docs) match {
+        case Some(tbl) => ensureCdc(s, tbl, name)
+        case None =>
+          CdcIndex.ensureAppendMeta(s, docs,
+            sigsKeyed(name).copy(refreshes = refreshes))
+          tables(name)
       }
     }
 
@@ -161,16 +90,14 @@ object DedupIndex {
     * a rebuild" through this. */
   val cdcRefreshes = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Version-keyed maintenance over a CATALOG-table corpus: where
-    * [[ensure]]'s watermark can only REJECT a mutated corpus (the
-    * count/max check catches deletes; the version fingerprint catches
-    * in-place updates on catalog sources, forcing a full rebuild), this
-    * variant keys coverage on the table's committed VERSION and applies
-    * the change feed through [[CdcIndex.ensureKeyed]], keyed by
-    * `doc_id`: a MinHash signature is a pure per-document function, so
-    * retracting every changed doc and re-signing its head image makes
-    * CDC maintenance EXACT — the maintained index is row-identical to a
-    * rebuild over the head snapshot (spec-pinned). Meta:
+  /** Version-keyed maintenance over a CATALOG-table corpus: coverage
+    * is keyed on the table's committed VERSION, and the change feed is
+    * applied through [[CdcIndex.ensureKeyed]], keyed by `doc_id`: a
+    * MinHash signature is a pure per-document function, so retracting
+    * every changed doc and re-signing its head image makes CDC
+    * maintenance EXACT — the maintained index is row-identical to a
+    * rebuild over the head snapshot (spec-pinned). Deletes and in-place
+    * updates apply as feed-sized work, never a rebuild. Meta:
     * `(version BIGINT, corpus STRING)`.
     *
     * At 100 TB this is the erasure-compliance path for the index tier:
@@ -198,20 +125,6 @@ object DedupIndex {
   private def writeSigs(docs: DataFrame, t: Tables): Unit = {
     CdcIndex.createArtifact(signatures(docs), t.sigs)
     builds.incrementAndGet()
-  }
-
-  private def build(s: SparkSession, docs: DataFrame, t: Tables,
-      fp: Long): Tables = {
-    val cs = docs.agg(count(lit(1)), max(col("doc_id"))).head
-    val (cnt, mx) = (cs.getLong(0),
-      if (cs.isNullAt(1)) -1L else cs.getLong(1))
-    writeSigs(docs, t)
-    // meta LAST: a crash above leaves meta ≠ corpus → next ensure rebuilds
-    s.sql(s"DROP TABLE IF EXISTS ${t.meta}")
-    s.sql(s"CREATE TABLE ${t.meta} (k BIGINT, n_docs BIGINT, max_id BIGINT)")
-    s.sql(s"INSERT INTO ${t.meta} SELECT CAST($fp AS BIGINT), " +
-      s"CAST($cnt AS BIGINT), CAST($mx AS BIGINT)")
-    t
   }
 
   // ------------------------------------------- component-label index
@@ -565,10 +478,7 @@ object DedupIndex {
     // a legacy index without the edge/postings artifacts cannot
     // retract / cannot apply batch-sized — rebuild (which migrates it;
     // the feed-refusal path of CdcIndex.ensure)
-    val artifactsExist =
-      try { s.table(edges).schema; s.table(t.posts).schema; true }
-      catch { case _: org.apache.spark.sql.AnalysisException => false }
-    if (!artifactsExist)
+    if (!CdcIndex.exists(s, edges) || !CdcIndex.exists(s, t.posts))
       throw new UnsupportedOperationException(
         "component labels: no stored edge/postings artifact " +
           "(pre-round-12 index)")

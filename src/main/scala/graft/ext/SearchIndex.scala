@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions._
   *   - `graft_cat.db.search_<name>_docs` (doc_id BIGINT, dl BIGINT) —
   *     document lengths (every doc, including token-less ones: BM25's
   *     N and avgdl count them);
-  *   - `graft_cat.db.search_<name>_meta` (k, n_docs, max_id) — the
-  *     corpus watermark ([[DedupIndex]]'s discipline: coverage cannot
-  *     be derived from postings — empty docs have no postings rows).
+  *   - `graft_cat.db.search_<name>_meta` — the corpus watermark
+  *     ([[DedupIndex]]'s discipline: coverage cannot be derived from
+  *     postings — empty docs have no postings rows): `(n_docs, max_id)`
+  *     from a plain DataFrame, `(version, corpus)` from [[ensureCdc]].
   *
   * The refresh publishes postings append + docs append + watermark in
   * ONE THREE-TABLE transaction (SegTxn): a torn refresh can never leave
@@ -78,91 +79,22 @@ object SearchIndex {
     (tf, dl)
   }
 
-  /** Ensure the named index covers `docs` (doc_id BIGINT, text STRING):
+  /** Ensure the named index covers `docs` (doc_id BIGINT, text STRING).
+    * A pure scan of a catalog table goes to [[ensureCdc]]; any other
+    * frame takes the shared append watermark
+    * ([[CdcIndex.ensureAppendMeta]], `(n_docs, max_id)` in meta):
     * covered → no-op; append-only growth → tokenize ONLY the delta,
-    * publish all three tables in one txn; anything else → rebuild.
-    *
-    * Watermark strength ([[DedupIndex.ensure]]'s discipline): a pure
-    * `graft_cat`-scan corpus stores the table's committed VERSION in
-    * meta's `k` as a content fingerprint, so count/max-preserving
-    * in-place UPDATEs still force a rebuild and the delta-append path
-    * requires provably append-only intervening commits. A plain
-    * DataFrame corpus has no fingerprint (k = −1): an UPDATE preserving
-    * count+max is NOT detected — use [[ensureCdc]] for mutable
-    * catalog corpora. */
+    * publish all three tables in one txn; anything else → rebuild. */
   def ensure(s: SparkSession, docs: DataFrame, name: String): Tables =
     CdcIndex.withNameLock(s"search:$name") {
       CdcIndex.requireIndexName(name)
       graft.ops.ensureGraftCatalog(s)
-      val t = tables(name)
-
-      val src = CdcIndex.sourceVersion(s, docs)
-      val metaCols: Option[Seq[String]] =
-        try Some(s.table(t.meta).schema.fieldNames.toSeq)
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-      if (metaCols.exists(_.headOption.contains("version"))) {
-        // CDC-built index: k-mode meta values would silently reset the
-        // version watermark to 0 (full feed replay on the next
-        // ensureCdc). Same catalog corpus → delegate; else → rebuild,
-        // explicitly converting the index to k-mode.
-        return src match {
-          case Some((tbl, _)) => ensureCdc(s, tbl, name)
-          case None => build(s, docs, t, -1L)
-        }
-      }
-      val fp = src.map(_._2).getOrElse(-1L)
-
-      val stored: Option[(Long, Long, Long)] =
-        try {
-          val r = s.table(t.meta).select("k", "n_docs", "max_id").head
-          Some((r.getLong(0), r.getLong(1), r.getLong(2)))
-        } catch {
-          case _: org.apache.spark.sql.AnalysisException => None
-          case _: NoSuchElementException => None
-        }
-      val bodiesExist =
-        try { s.table(t.postings).schema; s.table(t.docs).schema; true }
-        catch { case _: org.apache.spark.sql.AnalysisException => false }
-
-      (stored, bodiesExist) match {
-        case (Some((storedK, storedN, storedMax)), true) if storedN > 0 =>
-          val cs = docs.agg(count(lit(1)), max(col("doc_id")),
-            count(when(col("doc_id") <= lit(storedMax), 1))).head
-          val (cnt, mx, prefixCnt) = (cs.getLong(0),
-            if (cs.isNullAt(1)) -1L else cs.getLong(1), cs.getLong(2))
-          if (cnt == storedN && mx == storedMax && storedK == fp)
-            t // covered — no-op
-          else if (cnt == storedN && mx == storedMax && storedK >= 0 &&
-              fp > storedK &&
-              CdcIndex.appendOnlyBetween(s, src.get._1, storedK, fp)) {
-            // content-preserving commits (compact, zorder, tag, alter —
-            // or a zero-row append) moved the fingerprint while count and
-            // max prove the indexed content unchanged: advance the
-            // watermark instead of an O(corpus) rebuild
-            s.sql(s"INSERT OVERWRITE ${t.meta} SELECT CAST($fp AS BIGINT), " +
-              s"CAST($storedN AS BIGINT), CAST($storedMax AS BIGINT)")
-            t
-          } else if (mx > storedMax && prefixCnt == storedN &&
-              ((storedK < 0 && fp < 0) ||
-               (storedK >= 0 && fp > storedK &&
-                CdcIndex.appendOnlyBetween(s, src.get._1, storedK, fp)))) {
-            val (tf, dl) = postingsOf(docs.filter(col("doc_id") > lit(storedMax)))
-            val uid = java.util.UUID.randomUUID().toString.replace("-", "")
-            val (tfV, dlV) = (s"graft_srch_tf_$uid", s"graft_srch_dl_$uid")
-            tf.createOrReplaceTempView(tfV)
-            dl.createOrReplaceTempView(dlV)
-            try CdcIndex.inTxn(s) {
-              s.sql(s"INSERT INTO ${t.postings} SELECT * FROM $tfV")
-              s.sql(s"INSERT INTO ${t.docs} SELECT * FROM $dlV")
-              s.sql(s"INSERT OVERWRITE ${t.meta} SELECT CAST($fp AS BIGINT), " +
-                s"CAST($cnt AS BIGINT), CAST($mx AS BIGINT)")
-            } finally {
-              s.catalog.dropTempView(tfV); s.catalog.dropTempView(dlV)
-            }
-            refreshes.incrementAndGet()
-            t
-          } else build(s, docs, t, fp)
-        case _ => build(s, docs, t, fp)
+      CdcIndex.sourceTable(s, docs) match {
+        case Some(tbl) => ensureCdc(s, tbl, name)
+        case None =>
+          CdcIndex.ensureAppendMeta(s, docs,
+            postingsKeyed(name).copy(refreshes = refreshes))
+          tables(name)
       }
     }
 
@@ -208,19 +140,6 @@ object SearchIndex {
     writePostings(tf, t)
     CdcIndex.createArtifact(dl, t.docs)
     builds.incrementAndGet()
-  }
-
-  private def build(s: SparkSession, docs: DataFrame, t: Tables,
-      fp: Long): Tables = {
-    val cs = docs.agg(count(lit(1)), max(col("doc_id"))).head
-    val (cnt, mx) = (cs.getLong(0),
-      if (cs.isNullAt(1)) -1L else cs.getLong(1))
-    writeAll(docs, t)
-    s.sql(s"DROP TABLE IF EXISTS ${t.meta}")
-    s.sql(s"CREATE TABLE ${t.meta} (k BIGINT, n_docs BIGINT, max_id BIGINT)")
-    s.sql(s"INSERT INTO ${t.meta} SELECT CAST($fp AS BIGINT), " +
-      s"CAST($cnt AS BIGINT), CAST($mx AS BIGINT)")
-    t
   }
 
 }

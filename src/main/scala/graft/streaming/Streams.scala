@@ -636,9 +636,10 @@ object Streams {
   /** ext133 — STREAMING MAINTENANCE OF A PERSISTED INDEX: the segment
     * stream over a catalog docs table drives [[graft.ext.DedupIndex]]
     * maintenance from `foreachBatch` — the micro-batch is the
-    * NOTIFICATION, and `ensure()` reads the table's current snapshot
-    * and signs only the uncovered suffix (its corpus watermark makes
-    * the reaction IDEMPOTENT: a replayed or empty batch finds the
+    * NOTIFICATION, and `ensure()` over the table (a pure catalog scan,
+    * so it maintains through `ensureCdc`) signs only the docs the
+    * change feed since its version watermark touched (the watermark
+    * makes the reaction IDEMPOTENT: a replayed or empty batch finds the
     * corpus covered and does nothing, so exactly-once delivery is not
     * required for index correctness — the watermark, published
     * atomically with the signatures, is the dedup). The query seeds the
@@ -684,8 +685,8 @@ object Streams {
   }
 
   /** ext138 — THE FULL INGEST→INDEX PIPELINE UNDER DELETES: where ext133
-    * streams the SEGMENT source (append notifications only, append-only
-    * `ensure`), this entry streams the table's CHANGE FEED
+    * streams the SEGMENT source (append notifications only), this entry
+    * streams the table's CHANGE FEED
     * (`readStream.table("….changes")`) and drives the VERSION-KEYED
     * [[graft.ext.DedupIndex.ensureCdc]] from `foreachBatch` — so
     * in-place DELETEs and UPDATEs on the corpus reach the persisted

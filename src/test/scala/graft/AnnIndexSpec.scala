@@ -474,45 +474,80 @@ class AnnIndexSpec extends SparkTestBase {
       s"codes retraction not a DV append: $ops_")
   }
 
-  test("ensureSq on a pure catalog scan delegates to the exact CDC watermark") {
-    // the plain (cnt, max, prefixCnt) watermark is blind to an in-place
-    // UPDATE that preserves row count and max vec_id — but when the
-    // corpus frame is a PURE scan of a catalog table the committed
-    // version IS an exact content fingerprint, so ensureSq must route
-    // through ensureSqCdc and serve refreshed codes, not stale ones
+  test("every DataFrame ensure on a pure catalog scan takes the exact CDC watermark") {
+    // an append watermark (count, max key, prefix count) is blind to an
+    // in-place UPDATE that keeps row count and max key — but when the
+    // corpus frame is a PURE scan of a catalog table, each of the five
+    // DataFrame entry points hands it to its ensure*Cdc twin, whose
+    // committed-version watermark sees the UPDATE: one feed-slice
+    // refresh, no rebuild, the updated key re-derived from its head image
+    import graft.ext.{CdcIndex, DedupIndex, SearchIndex}
+    import java.util.concurrent.atomic.AtomicLong
     ops.configure(spark)
     ops.ensureGraftCatalog(spark)
-    spark.sql("DROP TABLE IF EXISTS graft_cat.db.sqdel_vecs")
-    Seq("sq_codes", "sq_meta").foreach(x =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.ann_sqdel_$x"))
-    spark.sql("CREATE TABLE graft_cat.db.sqdel_vecs (vec_id BIGINT, " +
-      "v ARRAY<DOUBLE>) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
-    mkCorpus64(200).writeTo("graft_cat.db.sqdel_vecs").append()
-    val b0 = AnnIndex.sqBuilds.get()
-    val c0 = AnnIndex.sqCdcRefreshes.get()
-    val t = AnnIndex.ensureSq(spark, spark.table("graft_cat.db.sqdel_vecs"),
-      "sqdel")
-    assert(AnnIndex.sqBuilds.get() === b0 + 1)
-    // count- and max-preserving in-place re-embedding
-    spark.sql("UPDATE graft_cat.db.sqdel_vecs SET v = reverse(v) " +
-      "WHERE vec_id = 5")
-    AnnIndex.ensureSq(spark, spark.table("graft_cat.db.sqdel_vecs"), "sqdel")
-    assert(AnnIndex.sqBuilds.get() === b0 + 1,
-      "the UPDATE slice must apply via the feed, not a rebuild")
-    assert(AnnIndex.sqCdcRefreshes.get() === c0 + 1,
-      "count/max-preserving UPDATE was invisible — stale codes served")
-    // the refreshed row equals the row-local encode of the HEAD image
-    val got = spark.table(t).filter(col("vec_id") === 5)
-      .head.getSeq[Int](3)
-    val want = spark.table("graft_cat.db.sqdel_vecs")
-      .filter(col("vec_id") === 5)
-      .select(expr("transform(v, x -> CAST(floor((x - array_min(v)) * 255" +
-        " / (array_max(v) - array_min(v)) + 0.5D) AS INT))"))
-      .head.getSeq[Int](0)
-    assert(got === want, "refreshed codes do not encode the head image")
-    spark.sql("DROP TABLE IF EXISTS graft_cat.db.sqdel_vecs")
-    Seq("sq_codes", "sq_meta").foreach(x =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.ann_sqdel_$x"))
+    val (docsT, vecsT) = ("graft_cat.db.dfcat_docs", "graft_cat.db.dfcat_vecs")
+    Seq(docsT, vecsT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    spark.sql(s"CREATE TABLE $docsT (doc_id BIGINT, text STRING) " +
+      "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
+    spark.range(0, 300).select(col("id").as("doc_id"),
+        expr("concat('graft doc ', id % 41, ' shares words ', id % 7, " +
+          "' with its neighbours')").as("text"))
+      .writeTo(docsT).append()
+    spark.sql(s"CREATE TABLE $vecsT (vec_id BIGINT, v ARRAY<DOUBLE>, " +
+      "norm DOUBLE) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
+    mkCorpus64(200)
+      .withColumn("norm", expr("sqrt(aggregate(v, 0D, (a, x) -> a + x * x))"))
+      .writeTo(vecsT).append()
+    val docUpd = s"UPDATE $docsT SET text = " +
+      "'graft mutated body of document five' WHERE doc_id = 5"
+    val vecUpd = s"UPDATE $vecsT SET v = reverse(v) WHERE vec_id = 5"
+    // (entry, corpus, count+max-preserving UPDATE, DataFrame ensure,
+    //  the family's Keyed, builds counter)
+    val cases: Seq[(String, String, String, org.apache.spark.sql.DataFrame => Unit,
+        CdcIndex.Keyed, AtomicLong)] = Seq(
+      ("DedupIndex.ensure", docsT, docUpd,
+        DedupIndex.ensure(spark, _, "dfcat"), DedupIndex.sigsKeyed("dfcat"),
+        DedupIndex.builds),
+      ("SearchIndex.ensure", docsT, docUpd,
+        SearchIndex.ensure(spark, _, "dfcat"),
+        SearchIndex.postingsKeyed("dfcat"), SearchIndex.builds),
+      ("AnnIndex.ensure", vecsT, vecUpd, AnnIndex.ensure(spark, _, "dfcat"),
+        AnnIndex.ivfKeyed(spark, "dfcat"), AnnIndex.builds),
+      ("AnnIndex.ensurePq", vecsT, vecUpd,
+        df => AnnIndex.ensurePq(spark, df.select("vec_id", "v"), "dfcat"),
+        AnnIndex.pqKeyed(spark, "dfcat"), AnnIndex.pqBuilds),
+      ("AnnIndex.ensureSq", vecsT, vecUpd,
+        df => AnnIndex.ensureSq(spark, df.select("vec_id", "v"), "dfcat"),
+        AnnIndex.sqKeyed(spark, "dfcat"), AnnIndex.sqBuilds))
+    cases.foreach { case (entry, corpus, upd, ensure, f, builds) =>
+      (f.meta +: f.artifacts.map(_._1)).foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS $t"))
+      ensure(spark.table(corpus))
+      val b0 = builds.get()
+      val c0 = f.refreshes.get()
+      spark.sql(upd)
+      ensure(spark.table(corpus))
+      assert(builds.get() === b0, s"$entry: the UPDATE slice rebuilt")
+      assert(f.refreshes.get() === c0 + 1,
+        s"$entry: count/max-preserving UPDATE was invisible — stale index")
+      val head = spark.table(corpus).select(f.head.map(col): _*)
+        .filter(col(f.key) === 5)
+      f.artifacts.foreach { case (t, derive) =>
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(_.toSeq).sortBy(_.toString).toSeq
+        assert(rows(spark.table(t).filter(col(f.key) === 5)) ===
+          rows(derive(head)), s"$entry: $t does not derive the head image")
+      }
+      val m = spark.table(f.meta)
+      assert(m.schema.fieldNames.toSeq === Seq("version", "corpus"), entry)
+      assert((m.head.getLong(0), m.head.getString(1)) === ((
+        spark.sql(s"SELECT max(v) FROM $corpus.versions").head.getLong(0),
+        corpus)), s"$entry: meta not at the corpus head")
+    }
+    (Seq(docsT, vecsT, "graft_cat.db.ann_dfcat_cents",
+        "graft_cat.db.ann_dfcat_pq_cents") ++ cases.flatMap(c =>
+        c._5.meta +: c._5.artifacts.map(_._1)))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("a plain rebuild invalidates the CDC watermark — no stale no-op") {

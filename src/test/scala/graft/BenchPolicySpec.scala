@@ -177,15 +177,18 @@ class BenchPolicySpec extends AnyFunSuite {
     // round-15 ADVICE: the seeded-entry prefixes were hardcoded in Bench
     // and would go stale silently when the next seed-consuming entry is
     // added. The set now lives next to Dedup.ensureLabelSeeds; pin that
-    // Bench references it (no literal prefix list in Bench's source) and
-    // that every current consumer is present.
-    val text = new String(
+    // the one guard (Harness.warmSeeds, which Bench calls) references it
+    // (no literal prefix list in either source) and that every current
+    // consumer is present.
+    def src(f: String) = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-        "src/main/scala/graft/Bench.scala")), "UTF-8")
-    assert(text.contains("Dedup.SeedConsumerPrefixes"),
-      "Bench must consume the shared prefix set")
-    assert(!text.contains("\"ext153_\""),
-      "no hardcoded seed-consumer prefixes in Bench")
+        s"src/main/scala/graft/$f.scala")), "UTF-8")
+    assert(src("Harness").contains("Dedup.SeedConsumerPrefixes"),
+      "the seed guard must consume the shared prefix set")
+    assert(src("Bench").contains("Harness.warmSeeds"),
+      "Bench must build its seeds through the shared guard")
+    assert(Seq("Bench", "Harness").forall(f => !src(f).contains("\"ext153_\"")),
+      "no hardcoded seed-consumer prefixes in Bench or Harness")
     assert(graft.ext.Dedup.SeedConsumerPrefixes === Set(
       "ext141_", "ext153_", "ext161_", "ext167_", "ext171_", "ext141b_"))
   }

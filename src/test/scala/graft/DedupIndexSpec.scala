@@ -95,7 +95,7 @@ class DedupIndexSpec extends SparkTestBase {
     spark.sql("DROP TABLE IF EXISTS graft_cat.db.dedup_spec_fp_meta")
     docs.filter(col("doc_id") < 300).writeTo("graft_cat.db.fp_docs").create()
     val b0 = DedupIndex.builds.get()
-    val rf0 = DedupIndex.refreshes.get()
+    val c0 = DedupIndex.cdcRefreshes.get()
 
     val t = DedupIndex.ensure(spark, spark.table("graft_cat.db.fp_docs"),
       "spec_fp")
@@ -103,15 +103,17 @@ class DedupIndexSpec extends SparkTestBase {
     // covered (same committed version): pure no-op
     DedupIndex.ensure(spark, spark.table("graft_cat.db.fp_docs"), "spec_fp")
     assert(DedupIndex.builds.get() === b0 + 1)
-    assert(DedupIndex.refreshes.get() === rf0)
-    // the fingerprint stored is the corpus table's committed version
-    assert(spark.table(t.meta).select("k").head.getLong(0) ===
+    assert(DedupIndex.cdcRefreshes.get() === c0)
+    // a pure catalog scan is maintained by the CDC twin: the watermark
+    // stored is the corpus table's committed version
+    assert(spark.table(t.meta).select("version").head.getLong(0) ===
       spark.sql("SELECT max(v) FROM graft_cat.db.fp_docs.versions")
         .head.getLong(0))
 
     // in-place UPDATE that preserves BOTH row count and max doc_id —
-    // invisible to the (cnt, max, prefixCnt) watermark, caught only by
-    // the version fingerprint
+    // invisible to a (cnt, max, prefixCnt) watermark, caught by the
+    // version watermark (the copy-on-write rewrite the feed cannot
+    // attribute row-exactly degrades to a rebuild)
     spark.sql("UPDATE graft_cat.db.fp_docs " +
       "SET text = 'graft mutated body' WHERE doc_id = 5")
     DedupIndex.ensure(spark, spark.table("graft_cat.db.fp_docs"), "spec_fp")
@@ -124,14 +126,14 @@ class DedupIndexSpec extends SparkTestBase {
     assert(stored.toSeq === fresh.toSeq,
       "rebuilt index diverged from the mutated corpus")
 
-    // append-only growth on the SAME catalog corpus still takes the
-    // exact delta path (the intervening commits are provably appends)
+    // append-only growth on the SAME catalog corpus applies as one
+    // feed slice, not a rebuild
     docs.filter(col("doc_id") >= 300 && col("doc_id") < 400)
       .writeTo("graft_cat.db.fp_docs").append()
     DedupIndex.ensure(spark, spark.table("graft_cat.db.fp_docs"), "spec_fp")
     assert(DedupIndex.builds.get() === b0 + 2,
       "catalog append triggered a full rebuild instead of a delta sign")
-    assert(DedupIndex.refreshes.get() === rf0 + 1)
+    assert(DedupIndex.cdcRefreshes.get() === c0 + 1)
   }
 
   test("plain ensure on a CDC-built index preserves the version watermark") {
@@ -262,6 +264,74 @@ class DedupIndexSpec extends SparkTestBase {
       "incremental apply after the migration diverged from a rebuild")
   }
 
+  test("legacy (k, n_docs, max_id) meta on a DataFrame corpus rebuilds once, then appends") {
+    // older builds kept a version fingerprint `k` in the DataFrame-path
+    // meta; the catalog persists across processes, so such a meta can
+    // meet the (n_docs, max_id) layout — it must self-migrate by one
+    // rebuild, after which the append watermark works as usual
+    ops.configure(spark)
+    ops.ensureGraftCatalog(spark)
+    Seq("sigs", "meta").foreach(x =>
+      spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_spec_legk_$x"))
+    val t = DedupIndex.ensure(spark, docs.filter(col("doc_id") < 300),
+      "spec_legk")
+    spark.sql(s"DROP TABLE ${t.meta}")
+    spark.sql(s"CREATE TABLE ${t.meta} (k BIGINT, n_docs BIGINT, " +
+      "max_id BIGINT)")
+    spark.sql(s"INSERT INTO ${t.meta} SELECT CAST(-1 AS BIGINT), " +
+      "CAST(300 AS BIGINT), CAST(299 AS BIGINT)")
+    val b0 = DedupIndex.builds.get()
+    val rf0 = DedupIndex.refreshes.get()
+
+    DedupIndex.ensure(spark, docs.filter(col("doc_id") < 300), "spec_legk")
+    assert(DedupIndex.builds.get() === b0 + 1,
+      "a legacy-layout meta must rebuild once")
+    assert(spark.table(t.meta).schema.fieldNames.toSeq ===
+      Seq("n_docs", "max_id"), "the rebuild did not migrate the meta")
+    DedupIndex.ensure(spark, docs.filter(col("doc_id") < 300), "spec_legk")
+    assert(DedupIndex.builds.get() === b0 + 1,
+      "a migrated meta over the same corpus must be a no-op")
+    assert(DedupIndex.refreshes.get() === rf0)
+
+    DedupIndex.ensure(spark, docs.filter(col("doc_id") < 400), "spec_legk")
+    assert(DedupIndex.builds.get() === b0 + 1,
+      "the migrated index rebuilt instead of signing the delta")
+    assert(DedupIndex.refreshes.get() === rf0 + 1)
+    val m = spark.table(t.meta).head
+    assert((m.getLong(0), m.getLong(1)) === ((400L, 399L)))
+    val stored = spark.table(t.sigs).orderBy("doc_id").collect().map(_.toSeq)
+    val fresh = DedupIndex.signatures(docs.filter(col("doc_id") < 400))
+      .orderBy("doc_id").collect().map(_.toSeq)
+    assert(stored.toSeq === fresh.toSeq,
+      "delta refresh after the migration diverged from a rebuild")
+    Seq("sigs", "meta").foreach(x =>
+      spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_spec_legk_$x"))
+  }
+
+  test("a branch scan has no version log of its own: it takes the append watermark") {
+    // the CDC twin reads `<table>.versions`, which a branch handle
+    // (`t.branch_x`) does not resolve — routing it there would fail
+    // every call, so it must stay on the DataFrame path
+    ops.configure(spark)
+    ops.ensureGraftCatalog(spark)
+    Seq("br_docs", "dedup_spec_br_sigs", "dedup_spec_br_meta").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.$t"))
+    spark.sql("CREATE TABLE graft_cat.db.br_docs (doc_id BIGINT, text STRING)")
+    docs.filter(col("doc_id") < 100).writeTo("graft_cat.db.br_docs").append()
+    spark.sql("CALL graft_cat.system.branch('db.br_docs', 'px')")
+    val b0 = DedupIndex.builds.get()
+    val t = DedupIndex.ensure(spark,
+      spark.table("graft_cat.db.br_docs.branch_px"), "spec_br")
+    DedupIndex.ensure(spark,
+      spark.table("graft_cat.db.br_docs.branch_px"), "spec_br")
+    assert(DedupIndex.builds.get() === b0 + 1)
+    val m = spark.table(t.meta)
+    assert(m.schema.fieldNames.toSeq === Seq("n_docs", "max_id"))
+    assert((m.head.getLong(0), m.head.getLong(1)) === ((100L, 99L)))
+    Seq("br_docs", "dedup_spec_br_sigs", "dedup_spec_br_meta").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.$t"))
+  }
+
   test("content-preserving corpus commits advance the fingerprint, no rebuild") {
     ops.configure(spark)
     ops.ensureGraftCatalog(spark)
@@ -273,18 +343,18 @@ class DedupIndexSpec extends SparkTestBase {
     val t = DedupIndex.ensure(spark, spark.table("graft_cat.db.cp_docs"),
       "spec_cp")
     val b0 = DedupIndex.builds.get()
-    val k0 = spark.table(t.meta).select("k").head.getLong(0)
+    val k0 = spark.table(t.meta).select("version").head.getLong(0)
 
     // content-identical commits: a tag and a property alter — the
-    // version fingerprint moves, the indexed content does not
+    // version watermark moves, the indexed content does not
     spark.sql("CALL graft_cat.system.tag('db.cp_docs', 'cp_snap')")
     spark.sql("ALTER TABLE graft_cat.db.cp_docs " +
       "SET TBLPROPERTIES ('graft.note'='cp')")
     DedupIndex.ensure(spark, spark.table("graft_cat.db.cp_docs"), "spec_cp")
     assert(DedupIndex.builds.get() === b0,
       "a metadata-only commit forced an O(corpus) rebuild")
-    val k1 = spark.table(t.meta).select("k").head.getLong(0)
-    assert(k1 > k0, "fingerprint not advanced — next ensure re-pays the check")
+    val k1 = spark.table(t.meta).select("version").head.getLong(0)
+    assert(k1 > k0, "watermark not advanced — next ensure re-pays the check")
     // and the advanced watermark makes the NEXT call a pure no-op
     DedupIndex.ensure(spark, spark.table("graft_cat.db.cp_docs"), "spec_cp")
     assert(DedupIndex.builds.get() === b0)
@@ -294,15 +364,15 @@ class DedupIndexSpec extends SparkTestBase {
     ops.configure(spark)
     ops.ensureGraftCatalog(spark)
     val b0 = DedupIndex.builds.get()
-    val rf0 = DedupIndex.refreshes.get()
+    val c0 = DedupIndex.cdcRefreshes.get()
     // the entry seeds 400 docs (first trigger -> BUILD), appends 100
-    // mid-stream (second trigger -> exact incremental REFRESH), and any
+    // mid-stream (second trigger -> one feed-slice CDC REFRESH), and any
     // further empty trigger finds the corpus covered (no-op)
     val rows = streaming.Streams.queries("ext133_stream_index_maintenance")(spark, d)
       .collect()
     assert(DedupIndex.builds.get() === b0 + 1,
       "streaming maintenance should build exactly once (the seed batch)")
-    assert(DedupIndex.refreshes.get() === rf0 + 1,
+    assert(DedupIndex.cdcRefreshes.get() === c0 + 1,
       "the mid-stream append should refresh incrementally, not rebuild")
     // ...and the stream-maintained index answers exactly like the
     // in-query ext03 pass over the same 500 docs
@@ -757,11 +827,11 @@ class DedupIndexSpec extends SparkTestBase {
   }
 
   test("expired UPDATE commit cannot hide from the append-only proof") {
-    // the plain delta path trusts appendOnlyBetween(storedK, fp): if an
-    // in-place UPDATE's commit record was EXPIRED out of that range,
-    // judging only the retained rows would declare the range append-only
-    // and sign just the delta — serving a stale signature for the
-    // updated doc. The completeness check (retained count == range
+    // a plain ensure over a pure catalog scan is maintained from the
+    // change feed: if an in-place UPDATE's commit record was EXPIRED out
+    // of (watermark, head], the slice cannot be read, and signing just
+    // the appended docs would serve a stale signature for the updated
+    // doc. CdcIndex.ensure's retention guard (retained count == range
     // width) must force the rebuild instead.
     ops.configure(spark)
     ops.ensureGraftCatalog(spark)
@@ -773,7 +843,7 @@ class DedupIndexSpec extends SparkTestBase {
     spark.sql(s"CREATE TABLE $corpus (doc_id BIGINT, text STRING) " +
       "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     docs.filter(col("doc_id") < 200).writeTo(corpus).append()
-    // PLAIN ensure over a pure catalog scan — k-mode fingerprint path
+    // PLAIN ensure over a pure catalog scan — the CDC twin's path
     val t = DedupIndex.ensure(spark, spark.table(corpus), "expu")
     // count+max-preserving UPDATE, then an append, then expire the
     // history so the UPDATE's commit record vanishes from the range
@@ -783,11 +853,11 @@ class DedupIndexSpec extends SparkTestBase {
       .writeTo(corpus).append()
     spark.sql(s"CALL graft_cat.system.expire_versions('db.expu_docs', 1)")
     val b0 = DedupIndex.builds.get()
-    val rf0 = DedupIndex.refreshes.get()
+    val c0 = DedupIndex.cdcRefreshes.get()
     DedupIndex.ensure(spark, spark.table(corpus), "expu")
     assert(DedupIndex.builds.get() === b0 + 1,
-      "an expired UPDATE slipped past the append-only proof — stale index")
-    assert(DedupIndex.refreshes.get() === rf0)
+      "an expired UPDATE slipped past the retention guard — stale index")
+    assert(DedupIndex.cdcRefreshes.get() === c0)
     val stored = spark.table(t.sigs).orderBy("doc_id").collect().map(_.toSeq)
     val fresh = DedupIndex.signatures(
         spark.table(corpus).select("doc_id", "text"))
