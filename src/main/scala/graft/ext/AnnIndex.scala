@@ -13,26 +13,31 @@ import org.apache.spark.sql.functions._
   *   - `graft_cat.db.ann_<name>_cents`  (cid INT, c ARRAY<DOUBLE>)
   *   - `graft_cat.db.ann_<name>_cells`  (vec_id BIGINT, cell BIGINT,
   *                                        v ARRAY<DOUBLE>, norm DOUBLE)
+  *   - `graft_cat.db.ann_<name>_meta`   the one watermark record
   *
-  * Each tier (IVF cells, PQ codes, SQ codes) has two entry points over
-  * the same tables: `ensure*Cdc` maintains them from a catalog table's
-  * change feed (version watermark, exact under deletes and updates),
-  * and the DataFrame `ensure`/`ensurePq`/`ensureSq` hands a pure
-  * catalog scan to that twin and keeps any other frame current with
-  * [[CdcIndex.ensureAppend]]'s append watermark. For IVF, that is
-  * IDEMPOTENT:
-  *   - tables absent / corpus changed non-monotonically → FULL BUILD
+  * Each tier (IVF cells, PQ codes, SQ codes) is a [[CdcIndex.Keyed]]
+  * family with two entry points over the same tables and the same meta:
+  * `ensure*Cdc` maintains them from a catalog table's change feed
+  * (`(version, corpus)` meta, exact under deletes and updates), and the
+  * DataFrame `ensure`/`ensurePq`/`ensureSq` goes through
+  * [[CdcIndex.ensureFrame]] — a pure catalog scan takes the CDC
+  * lifecycle, any other frame the `(n_docs, max_id)` append watermark.
+  * A meta written by one path reads as absent on the other, so each
+  * publish invalidates the other path's watermark. For IVF over a
+  * DataFrame, that is IDEMPOTENT:
+  *   - no usable meta / corpus changed non-monotonically → FULL BUILD
   *     (the deterministic k-means-lite of ext20 — seed every 64th
   *     vector, one integer-scaled Lloyd step, re-assign — so a freshly
   *     built index is bit-identical to the in-query build and the same
   *     DuckDB oracles apply);
-  *   - corpus grew by APPEND (stored rows are exactly the prefix below
-  *     the stored max vec_id) → INCREMENTAL REFRESH: assign ONLY the new
-  *     vectors against the STORED centroids and append them to the cells
-  *     table — the standard production IVF maintenance discipline
-  *     (centroids are retrained on rebuild, not per append);
-  *   - index already covers the corpus → NO-OP (zero jobs beyond two
-  *     manifest-folded count/max lookups).
+  *   - corpus grew by APPEND (the stored corpus is exactly the prefix
+  *     below the stored max vec_id) → INCREMENTAL REFRESH: assign ONLY
+  *     the new vectors against the STORED centroids and append them to
+  *     the cells table in one txn with the meta advance — the standard
+  *     production IVF maintenance discipline (centroids are retrained on
+  *     rebuild, not per append);
+  *   - index already covers the corpus → NO-OP (one meta read and one
+  *     count/max aggregate over the corpus).
   *
   * At 100 TB: the cells table is the corpus co-located by cell — probe
   * joins shuffle only the (small) query side; the centroid table is a
@@ -77,35 +82,17 @@ object AnnIndex {
     * commit); concurrent readers see either the old or the new complete
     * index version, never a torn one.
     *
-    * A pure scan of a catalog table goes to [[ensureCdc]]; any other
-    * frame takes the shared append watermark ([[CdcIndex.ensureAppend]])
-    * read off the cells table's (count, max vec_id). A cells table whose
-    * layout predates the BIGINT/bucketed migration (or whose centroids
-    * are missing) has no usable watermark and rebuilds — an INT-cell
-    * table could not take the delta append. */
+    * Routed by [[CdcIndex.ensureFrame]]: a pure scan of a catalog table
+    * takes [[ensureCdc]]'s lifecycle; any other frame the append
+    * watermark, its deltas assigned to the STORED centroids (old
+    * assignments and the quantizer untouched) and counted on
+    * [[refreshes]]. */
   def ensure(s: SparkSession, corpus: DataFrame, name: String): Tables =
     CdcIndex.withNameLock(s"ann:$name") {
       CdcIndex.requireBaseFamilyName(name, "ann")
-      graft.ops.ensureGraftCatalog(s)
-      CdcIndex.sourceTable(s, corpus) match {
-        case Some(tbl) => ensureCdc(s, tbl, name)
-        case None =>
-          graft.functions.SquaredDistance.register(s)
-          val t = tables(name)
-          val current = CdcIndex.exists(s, t.cents) &&
-            scala.util.Try(s.table(t.cells).schema("cell").dataType)
-              .toOption.contains(org.apache.spark.sql.types.LongType)
-          val stored =
-            if (current) CdcIndex.artifactWatermark(s, t.cells, "vec_id")
-            else None
-          CdcIndex.ensureAppend(corpus, "vec_id", stored) { (delta, _) =>
-            // assign the delta to the STORED centroids; old assignments
-            // and the quantizer are untouched
-            cellsOf(delta, s.table(t.cents)).writeTo(t.cells).append()
-            refreshes.incrementAndGet()
-          }(_ => build(s, corpus, t))
-          t
-      }
+      graft.functions.SquaredDistance.register(s)
+      CdcIndex.ensureFrame(s, corpus, ivfKeyed(s, name), refreshes)
+      tables(name)
     }
 
   // ------------------------------------------------- CDC maintenance
@@ -126,8 +113,8 @@ object AnnIndex {
     * production IVF discipline — centroids retrain on rebuild, not per
     * change), so the maintained cells table is row-identical to
     * re-assigning the head corpus against the stored centroids
-    * (spec-pinned). Meta (CDC variant only): `graft_cat.db.ann_<name>_meta
-    * (version BIGINT, corpus STRING)`.
+    * (spec-pinned). Meta: `graft_cat.db.ann_<name>_meta (version BIGINT,
+    * corpus STRING)`.
     *
     * At 100 TB this is the erasure path for the vector tier: deleting a
     * user's embeddings (q155's pipeline on the primary) reaches the
@@ -150,7 +137,7 @@ object AnnIndex {
     CdcIndex.Keyed(s"graft_cat.db.ann_${name}_meta", "vec_id", "vec_id",
       Seq("vec_id", "v", "norm"),
       Seq(t.cells -> (cellsOf(_, s.table(t.cents)))), build(s, _, t),
-      cdcRefreshes)
+      cdcRefreshes, Seq(t.cents))
   }
 
   /** Stored cells rows: `vs` assigned against `cents`. */
@@ -169,7 +156,8 @@ object AnnIndex {
     *   - `graft_cat.db.ann_<name>_pq_cents` (j INT, cid INT,
     *     c ARRAY<DOUBLE>) — codebook of subspace j;
     *   - `graft_cat.db.ann_<name>_pq_codes` (vec_id BIGINT, j INT,
-    *     code INT) — the encoded corpus, 8 rows per vector.
+    *     code INT) — the encoded corpus, 8 rows per vector;
+    *   - `graft_cat.db.ann_<name>_pq_meta` — the watermark record.
     * Subspace geometry is fixed at 8 subspaces × 8 dims (the 64-dim
     * embeddings fixture; ext75's split), asserted at build.
     *
@@ -206,32 +194,14 @@ object AnnIndex {
       .drop("cents")
 
   /** Ensure the PQ tier of the named index covers `corpus`
-    * (vec_id BIGINT, v ARRAY<DOUBLE> of 64 dims). A pure scan of a
-    * catalog table goes to [[ensurePqCdc]]; any other frame takes
-    * [[ensure]]'s append watermark, read off the codes table (8 rows per
-    * vector; missing codebooks or a partial vector read as no
-    * watermark, which rebuilds). */
+    * (vec_id BIGINT, v ARRAY<DOUBLE> of 64 dims), routed like
+    * [[ensure]]: a delta is encoded against the STORED codebooks. */
   def ensurePq(s: SparkSession, corpus: DataFrame, name: String): PqTables =
     CdcIndex.withNameLock(s"ann-pq:$name") {
       CdcIndex.requireIndexName(name)
-      graft.ops.ensureGraftCatalog(s)
-      CdcIndex.sourceTable(s, corpus) match {
-        case Some(tbl) => ensurePqCdc(s, tbl, name)
-        case None =>
-          graft.functions.SquaredDistance.register(s)
-          val t = pqTables(name)
-          val stored =
-            if (!CdcIndex.exists(s, t.cents)) None
-            else CdcIndex.artifactWatermark(s, t.codes, "vec_id")
-              .collect { case (n, mx) if n % 8 == 0 => (n / 8, mx) }
-          CdcIndex.ensureAppend(corpus, "vec_id", stored) { (delta, _) =>
-            // encode the delta against the STORED codebooks; old codes
-            // and the codebooks are untouched
-            pqCodes(delta, s.table(t.cents)).writeTo(t.codes).append()
-            pqRefreshes.incrementAndGet()
-          }(_ => buildPq(s, corpus, t))
-          t
-      }
+      graft.functions.SquaredDistance.register(s)
+      CdcIndex.ensureFrame(s, corpus, pqKeyed(s, name), pqRefreshes)
+      pqTables(name)
     }
 
   /** CDC-applied PQ refreshes. */
@@ -263,7 +233,7 @@ object AnnIndex {
     val t = pqTables(name)
     CdcIndex.Keyed(s"graft_cat.db.ann_${name}_pq_meta", "vec_id", "vec_id",
       Seq("vec_id", "v"), Seq(t.codes -> (pqCodes(_, s.table(t.cents)))),
-      buildPq(s, _, t), pqCdcRefreshes)
+      buildPq(s, _, t), pqCdcRefreshes, Seq(t.cents))
   }
 
   /** Stored code rows: `vs` encoded against the codebooks `cents`. */
@@ -279,10 +249,7 @@ object AnnIndex {
     * are written FIRST and the final encoding reads them back from the
     * catalog, so stored codebooks and stored codes can never disagree. */
   private def buildPq(s: SparkSession, corpus: DataFrame,
-      t: PqTables): PqTables = {
-    // plain rebuild invalidates any CDC watermark (see build())
-    s.sql("DROP TABLE IF EXISTS " +
-      t.codes.stripSuffix("_codes") + "_meta")
+      t: PqTables): Unit = {
     val sub = subvectors(corpus)
     val seeds = sub.filter(col("vec_id") % 64 === 0)
       .select(col("j"), (col("vec_id") / 64).cast("int").as("cid"),
@@ -300,7 +267,6 @@ object AnnIndex {
     cents1.writeTo(t.cents).createOrReplace()
     CdcIndex.createArtifact(pqCodes(corpus, s.table(t.cents)), t.codes)
     pqBuilds.incrementAndGet()
-    t
   }
 
   /** The deterministic k-means-lite full build (ext20 semantics): seeds
@@ -309,13 +275,7 @@ object AnnIndex {
     * Centroids are written FIRST and the final assignment reads them
     * back from the catalog, so the stored quantizer and the stored
     * assignments can never disagree. */
-  private def build(s: SparkSession, corpus: DataFrame, t: Tables): Tables = {
-    // a PLAIN rebuild invalidates any CDC watermark for this name: the
-    // rebuilt content is keyed to the caller's DataFrame, not to the
-    // version the stale meta records — leaving it would let the next
-    // ensureCdc no-op over codes that encode a different corpus
-    s.sql("DROP TABLE IF EXISTS " +
-      t.cells.stripSuffix("_cells") + "_meta")
+  private def build(s: SparkSession, corpus: DataFrame, t: Tables): Unit = {
     val seeds = corpus.filter(col("vec_id") % 64 === 0)
       .select((col("vec_id") / 64).cast("int").as("cid"), col("v").as("c"))
     val a0 = assign(corpus, seeds)
@@ -339,7 +299,6 @@ object AnnIndex {
       .tableProperty("graft.autocompact", CdcIndex.AutoCompactSpec)
       .createOrReplace()
     builds.incrementAndGet()
-    t
   }
 
   // ---------------------------------------------------------------- SQ8
@@ -349,7 +308,7 @@ object AnnIndex {
     * corpus vector keeps only its per-vector (mn, mx) scale and one
     * 256-level code per dimension (ext143's row-local quantizer), stored
     * as `graft_cat.db.ann_<name>_sq_codes (vec_id BIGINT, mn DOUBLE,
-    * mx DOUBLE, codes ARRAY<INT>)`.
+    * mx DOUBLE, codes ARRAY<INT>)`, watermarked by `ann_<name>_sq_meta`.
     *
     * SQ has no trained artifact — encode/decode are pure per-row
     * functions — which is exactly what makes the maintenance story the
@@ -377,24 +336,13 @@ object AnnIndex {
           .as("codes"))
 
   /** Ensure the SQ tier of the named index covers `corpus` (vec_id
-    * BIGINT, v ARRAY<DOUBLE>). A pure scan of a catalog table goes to
-    * [[ensureSqCdc]]; any other frame takes [[ensure]]'s append
-    * watermark, read off the codes table (one row per vector). */
+    * BIGINT, v ARRAY<DOUBLE>), routed like [[ensure]]. */
   def ensureSq(s: SparkSession, corpus: DataFrame, name: String): String =
     CdcIndex.withNameLock(s"ann-sq:$name") {
       CdcIndex.requireIndexName(name)
-      graft.ops.ensureGraftCatalog(s)
-      CdcIndex.sourceTable(s, corpus) match {
-        case Some(tbl) => ensureSqCdc(s, tbl, name)
-        case None =>
-          val codes = s"graft_cat.db.ann_${name}_sq_codes"
-          CdcIndex.ensureAppend(corpus, "vec_id",
-              CdcIndex.artifactWatermark(s, codes, "vec_id")) { (delta, _) =>
-            sqEncode(delta).writeTo(codes).append()
-            sqRefreshes.incrementAndGet()
-          }(_ => buildSq(s, corpus, codes))
-          codes
-      }
+      val f = sqKeyed(s, name)
+      CdcIndex.ensureFrame(s, corpus, f, sqRefreshes)
+      f.artifacts.head._1
     }
 
   /** Version-keyed CDC maintenance of the SQ tier, keyed by `vec_id`
@@ -419,12 +367,9 @@ object AnnIndex {
   }
 
   private def buildSq(s: SparkSession, corpus: DataFrame,
-      codes: String): String = {
-    // plain rebuild invalidates any CDC watermark (see build())
-    s.sql("DROP TABLE IF EXISTS " + codes.stripSuffix("_codes") + "_meta")
+      codes: String): Unit = {
     CdcIndex.createArtifact(sqEncode(corpus), codes)
     sqBuilds.incrementAndGet()
-    codes
   }
 
   // ------------------------------------------------ graph (NSW edges)

@@ -3,25 +3,32 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Watermark-keyed index maintenance, one rule per corpus kind.
+/** Watermark-keyed index maintenance: one meta record per index, one
+  * rebuild order, two corpus kinds.
   *
   * A CATALOG-table corpus is keyed on its committed version:
-  * [[ensure]] resolves the table's head version, compares it to the
-  * watermark stored in the index's `(version, corpus)` meta table, and
-  * dispatches to no-op / feed apply / full rebuild. [[ensureKeyed]] is
-  * the whole lifecycle of the seven KEYED families (minhash sigs, exact
-  * grams, BM25 postings, IVF cells, PQ codes, SQ codes, NSW graph
-  * edges): each supplies only its key, derives and full build as a
-  * [[Keyed]]. The two component-label families run over [[ensure]] with
-  * one shared relabel path of their own (`DedupIndex.publishLabels` and
-  * its helpers) — a label is a global property, not a per-key one.
+  * [[ensure]] compares the `(version, corpus)` meta to the table's head
+  * version and dispatches to no-op / feed apply / full rebuild.
+  * [[ensureKeyed]] is the whole lifecycle of the seven KEYED families
+  * (minhash sigs, exact grams, BM25 postings, IVF cells, PQ codes, SQ
+  * codes, NSW graph edges): each supplies only its key, derives and
+  * full build as a [[Keyed]]. The two component-label families run over
+  * [[ensure]] with one shared relabel path of their own
+  * (`DedupIndex.publishLabels` and its helpers) — a label is a global
+  * property, not a per-key one.
   *
-  * Any OTHER corpus (a derived frame, raw parquet) has no version, so
-  * the five DataFrame entry points (`DedupIndex.ensure`,
-  * `SearchIndex.ensure`, `AnnIndex.ensure`/`ensurePq`/`ensureSq`) share
-  * one append watermark, [[ensureAppend]]; a frame that is a pure scan
-  * of a catalog table ([[sourceTable]]) goes to the entry point's
-  * version-keyed `ensure*Cdc` twin instead.
+  * Any OTHER corpus (a derived frame, raw parquet) has no version: its
+  * meta is `(n_docs, max_id)`, kept by [[ensureAppendMeta]]. The five
+  * DataFrame entry points (`DedupIndex.ensure`, `SearchIndex.ensure`,
+  * `AnnIndex.ensure`/`ensurePq`/`ensureSq`) all go through
+  * [[ensureFrame]], which sends a pure catalog scan ([[sourceTable]])
+  * to [[ensureKeyed]] and any other frame to [[ensureAppendMeta]]. Both
+  * lifecycles write the SAME meta table, each in its own layout, so a
+  * publish on either path invalidates the other's watermark: a meta of
+  * the other layout reads as absent and rebuilds once. A meta counts
+  * only while every table the index owns ([[Keyed.tables]]) exists, and
+  * every rebuild drops it BEFORE the family's build and writes it LAST,
+  * so a crash inside a build always rebuilds.
   *
   * The feed-apply callback may throw `UnsupportedOperationException`
   * when the change feed refuses a slice it cannot attribute row-exactly
@@ -87,42 +94,51 @@ private[graft] object CdcIndex {
       s.table(s"$table.versions").agg(max(col("v"))).head.getLong(0))
 
   /** (version, corpus) from one meta read, or None when the meta is
-    * absent, empty, or not exactly the `(version BIGINT, corpus STRING)`
-    * layout — a legacy meta (pre-`corpus`, or the older keyed metas'
-    * write-only `n_docs`/`max_id` columns) is unverifiable, and [[ensure]]
-    * rebuilds it once, which self-migrates it. */
-  private def storedMeta(s: SparkSession, meta: String)
+    * absent, empty, not exactly the `(version BIGINT, corpus STRING)`
+    * layout — a legacy meta, or the DataFrame path's `(n_docs, max_id)`,
+    * is unverifiable here, and [[ensure]] rebuilds it once, which
+    * self-migrates it — or when one of the `owns` tables is missing. */
+  private def storedMeta(s: SparkSession, meta: String, owns: Seq[String])
       : Option[(Long, String)] =
     graft.ops.withDesc(s, "cdc: watermark")(
-      metaRow(s, meta, "version", "corpus"))
+      metaRow(s, meta, owns, "version", "corpus"))
       .map(r => (r.getLong(0), r.getString(1)))
 
-  /** The one row of `meta` when its columns are exactly `layout`; None
-    * when it is absent, empty, or of any other layout. */
-  private def metaRow(s: SparkSession, meta: String, layout: String*)
-      : Option[Row] =
+  /** The one row of `meta` when its columns are exactly `layout` and
+    * every table in `owns` exists (schema checks, no read); None when
+    * it is absent, empty, of any other layout, or its index is torn. */
+  private def metaRow(s: SparkSession, meta: String, owns: Seq[String],
+      layout: String*): Option[Row] =
     try {
       val df = s.table(meta)
-      if (df.schema.fieldNames.toSeq != layout) None else Some(df.head())
+      if (df.schema.fieldNames.toSeq != layout || !owns.forall(exists(s, _)))
+        None
+      else Some(df.head())
     } catch {
       case _: org.apache.spark.sql.AnalysisException => None
       case _: NoSuchElementException => None
     }
 
   /** Dispatch: covered → no-op, stale → apply (rebuild on feed refusal),
-    * absent → rebuild. Returns whatever the branches return.
+    * absent → rebuild. Returns whatever the branches return. The meta
+    * is read first (it counts only while every `owns` table exists);
+    * then ONE aggregate over `<corpusTable>.versions` gives both the
+    * head version and the retention count the stale branch needs.
     *
     * The watermark is a version NUMBER, meaningful only against the
     * table it was recorded for — so the meta also records the corpus
     * IDENT, and a call naming a DIFFERENT table rebuilds (re-binding
     * the index to the requested corpus) instead of silently no-opping
     * or grafting another table's feed slice onto this index. */
-  def ensure[T](s: SparkSession, corpusTable: String, meta: String)(
-      noOp: => T)(apply: (Long, Long) => T)(rebuild: Long => T): T = {
-    val headV = headVersion(s, corpusTable)
-    storedMeta(s, meta) match {
-      case Some((v0, c)) if c == corpusTable && v0 >= headV => noOp
-      case Some((v0, c)) if c == corpusTable =>
+  def ensure[T](s: SparkSession, corpusTable: String, meta: String,
+      owns: Seq[String] = Nil)(noOp: => T)(apply: (Long, Long) => T)(
+      rebuild: Long => T): T =
+    storedMeta(s, meta, owns).filter(_._2 == corpusTable) match {
+      case Some((v0, _)) =>
+        val r = graft.ops.withDesc(s, "cdc: watermark")(
+          s.table(s"$corpusTable.versions")
+            .agg(max(col("v")), count(when(col("v") >= v0, 1))).head)
+        val headV = r.getLong(0)
         // retention guard: `expire_versions` may have dropped commits
         // INSIDE (v0, headV] — the change feed then refuses the range
         // with IllegalArgumentException (NOT the feed-refusal
@@ -136,17 +152,14 @@ private[graft] object CdcIndex {
         // the delta's base), so v0 itself must still be retained — an
         // expiry that kept exactly (v0, headV] passes a (v0, headV]
         // count but still throws IAE on the read. Count [v0, headV].
-        val retained = graft.ops.withDesc(s, "cdc: watermark")(
-          s.table(s"$corpusTable.versions")
-            .filter(col("v") >= v0 && col("v") <= headV).count())
-        if (retained < headV - v0 + 1) rebuild(headV)
+        if (v0 >= headV) noOp
+        else if (r.getLong(1) < headV - v0 + 1) rebuild(headV)
         else try apply(v0, headV)
         catch {
           case _: UnsupportedOperationException => rebuild(headV)
         }
-      case _ => rebuild(headV)
+      case None => rebuild(headVersion(s, corpusTable))
     }
-  }
 
   /** A KEYED index family: every artifact row belongs to exactly one
     * key, and the rows of a key are a pure function of the head images
@@ -155,7 +168,8 @@ private[graft] object CdcIndex {
     * [[ensureKeyed]] maintain it from the change feed by retracting and
     * re-deriving touched keys only.
     *
-    * @param meta      the `(version, corpus)` watermark table
+    * @param meta      the watermark table: `(version, corpus)` over a
+    *                  catalog table, `(n_docs, max_id)` over a DataFrame
     * @param key       the retraction column every artifact table carries
     * @param keyOf     SQL expression computing `key` from a corpus row
     *                  (the feed slice carries full rows, so a deleted row
@@ -165,11 +179,32 @@ private[graft] object CdcIndex {
     *                  from head images
     * @param build     the family's full build over the head projection
     *                  (it counts its own builds)
-    * @param refreshes the family's CDC-apply counter */
+    * @param refreshes the family's CDC-apply counter
+    * @param models    tables only a build writes that the derives read
+    *                  (the IVF centroids, the PQ codebooks) */
   final case class Keyed(meta: String, key: String, keyOf: String,
       head: Seq[String], artifacts: Seq[(String, DataFrame => DataFrame)],
       build: DataFrame => Unit,
-      refreshes: java.util.concurrent.atomic.AtomicLong)
+      refreshes: java.util.concurrent.atomic.AtomicLong,
+      models: Seq[String] = Nil) {
+    /** Every table the index owns besides its meta: the meta counts only
+      * while all of them exist. */
+    def tables: Seq[String] = artifacts.map(_._1) ++ models
+  }
+
+  /** The one route of the five DataFrame entry points: a pure scan of a
+    * catalog table ([[sourceTable]]) takes the version-keyed lifecycle
+    * ([[ensureKeyed]]), whose watermark also sees the count+max-preserving
+    * in-place edits an append watermark cannot; any other frame takes
+    * [[ensureAppendMeta]], its deltas counted on `appends`. */
+  def ensureFrame(s: SparkSession, corpus: DataFrame, f: Keyed,
+      appends: java.util.concurrent.atomic.AtomicLong): Unit = {
+    graft.ops.ensureGraftCatalog(s)
+    sourceTable(s, corpus) match {
+      case Some(t) => ensureKeyed(s, t, f)
+      case None => ensureAppendMeta(s, corpus, f.copy(refreshes = appends))
+    }
+  }
 
   /** Version-keyed CDC maintenance of a [[Keyed]] family over a
     * CATALOG-table corpus, dispatched by [[ensure]]:
@@ -180,9 +215,9 @@ private[graft] object CdcIndex {
     *     artifacts, cost ∝ changes); the touched keys' surviving head
     *     images are re-derived; ONE cross-table txn ([[inTxn]]) lands
     *     every insert together with the `(version, corpus)` advance;
-    *   - rebuild: the family's full build, `merge-on-read` on every
-    *     artifact table (retractions must be DV appends, not segment
-    *     rewrites), the meta LAST.
+    *   - rebuild ([[rebuild]]): the family's full build, `merge-on-read`
+    *     on every artifact table (retractions must be DV appends, not
+    *     segment rewrites).
     *
     * Crash ordering: the retraction publishes immediately (row-level
     * ops never stage into [[graft.sources.SegTxn]]), the inserts and the
@@ -190,11 +225,11 @@ private[graft] object CdcIndex {
     * leaves meta at the old version, and the re-run replays the SAME
     * feed slice: the DELETE is a no-op on already-retracted keys and the
     * txn lands re-derive + advance together — convergent without
-    * exactly-once. A crash inside a rebuild leaves meta absent or
-    * stale against the rebuilt tables, so the next call rebuilds. */
+    * exactly-once. A crash inside a rebuild leaves no meta, so the next
+    * call rebuilds. */
   def ensureKeyed(s: SparkSession, corpusTable: String, f: Keyed): Unit = {
     graft.ops.ensureGraftCatalog(s)
-    ensure(s, corpusTable, f.meta)(()) { (v0, headV) =>
+    ensure(s, corpusTable, f.meta, f.tables)(()) { (v0, headV) =>
       val tv = s"graft_cdc_touched_${uid()}"
       s.sql(s"SELECT DISTINCT ${f.keyOf} AS ${f.key} FROM $corpusTable " +
           s"VERSION AS OF 'cdf:$v0..$headV'")
@@ -213,11 +248,56 @@ private[graft] object CdcIndex {
       } finally s.catalog.dropTempView(tv)
     } { headV =>
       graft.ops.withDesc(s, "cdc: rebuild") {
-        f.build(s.table(corpusTable).select(f.head.map(col): _*))
-        f.artifacts.foreach { case (t, _) => mergeOnRead(s, t) }
-        writeMeta(s, f.meta, headV, corpusTable)
+        rebuild(s, f, s.table(corpusTable).select(f.head.map(col): _*),
+          VersionLayout, s"CAST($headV AS BIGINT), '$corpusTable'") {
+          f.artifacts.foreach { case (t, _) => mergeOnRead(s, t) }
+        }
       }
     }
+  }
+
+  /** The append watermark of a DataFrame corpus: `f.meta` holds the
+    * `(n_docs, max_id)` the index covers (the artifacts cannot show it:
+    * a doc without shingles or tokens leaves no row). One count/max
+    * aggregate over `corpus` then decides:
+    *   - covered (same count, same max) → no-op;
+    *   - the stored rows are exactly the prefix `key <= max_id` and the
+    *     corpus grew past it → the rows above `max_id` are derived and
+    *     published with the advanced meta ([[publish]]; counted on
+    *     `f.refreshes`);
+    *   - anything else (a delete, a shrink, an edit that moves the
+    *     count, no usable meta) → [[rebuild]].
+    * An in-place edit that keeps count and max is invisible here — which
+    * is why [[ensureFrame]] never sends a pure catalog scan this way. */
+  def ensureAppendMeta(s: SparkSession, corpus: DataFrame, f: Keyed): Unit = {
+    val stored = metaRow(s, f.meta, f.tables, "n_docs", "max_id")
+      .map(r => (r.getLong(0), r.getLong(1))).filter(_._1 > 0)
+    val k = col(f.key)
+    val max0 = stored.fold(-1L)(_._2)
+    val r = corpus.agg(count(lit(1)), max(k), count(when(k <= max0, 1))).head
+    val (n, mx) = (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
+    val row = s"CAST($n AS BIGINT), CAST($mx AS BIGINT)"
+    stored match {
+      case Some(w) if w == ((n, mx)) => ()
+      case Some((n0, _)) if mx > max0 && r.getLong(2) == n0 =>
+        publish(s, f, corpus.filter(k > max0), row)
+      case _ => rebuild(s, f, corpus, "n_docs BIGINT, max_id BIGINT", row)()
+    }
+  }
+
+  private final val VersionLayout = "version BIGINT, corpus STRING"
+
+  /** The one rebuild order of both lifecycles: drop the meta, run the
+    * family's build over `rows`, then `after`, and write the meta (one
+    * `row` of `layout`) LAST — a crash anywhere before the last step
+    * leaves no meta, so the next call rebuilds instead of trusting a
+    * watermark the artifacts no longer match. */
+  private def rebuild(s: SparkSession, f: Keyed, rows: DataFrame,
+      layout: String, row: String)(after: => Unit = ()): Unit = {
+    s.sql(s"DROP TABLE IF EXISTS ${f.meta}")
+    f.build(rows)
+    after
+    replaceMeta(s, f.meta, layout, row)
   }
 
   /** The publish that ends every incremental refresh of a [[Keyed]]
@@ -246,71 +326,6 @@ private[graft] object CdcIndex {
   private def uid(): String =
     java.util.UUID.randomUUID().toString.replace("-", "")
 
-  /** The append watermark every DataFrame-corpus ensure shares: `stored`
-    * is the (rows, max `key`) the index covers, read by the family from
-    * its meta or its artifact (None when absent or unusable). One
-    * count/max aggregate over `corpus` then decides:
-    *   - covered (same count, same max) → no-op;
-    *   - the stored rows are exactly the prefix `key <= max` and the
-    *     corpus grew past it → `delta` derives and publishes the rows
-    *     above the stored max (given the corpus count and max);
-    *   - anything else (a delete, a shrink, an edit that moves the
-    *     count) → `build`, given the corpus count and max BY NAME: only
-    *     the meta-backed families read it, so an absent watermark costs
-    *     the others no aggregate.
-    * An in-place edit that keeps count and max is invisible here — which
-    * is why a pure catalog scan never takes this path ([[sourceTable]]
-    * routes it to the version-keyed twin). */
-  def ensureAppend(corpus: DataFrame, key: String,
-      stored: Option[(Long, Long)])(delta: (DataFrame, (Long, Long)) => Unit)(
-      build: (=> (Long, Long)) => Unit): Unit =
-    stored.filter(_._1 > 0) match {
-      case Some((n0, max0)) =>
-        val r = corpus.agg(count(lit(1)), max(col(key)),
-          count(when(col(key) <= lit(max0), 1))).head
-        val now = countMax(r)
-        if (now == ((n0, max0))) ()
-        else if (now._2 > max0 && r.getLong(2) == n0)
-          delta(corpus.filter(col(key) > lit(max0)), now)
-        else build(now)
-      case None => build(countMax(corpus.agg(count(lit(1)), max(col(key))).head))
-    }
-
-  /** [[ensureAppend]] for a [[Keyed]] family whose artifacts cannot show
-    * coverage (minhash sigs, BM25 postings: a doc without shingles or
-    * tokens leaves no row), so the watermark lives in `f.meta` as
-    * `(n_docs, max_id)`. The delta's derives and the meta advance publish
-    * in one txn and count on `f.refreshes`; a build writes the meta LAST,
-    * so a crash before it rebuilds. A meta of any other layout — the
-    * older `(k, n_docs, max_id)`, or the CDC twin's `(version, corpus)` —
-    * reads as absent and rebuilds once. */
-  def ensureAppendMeta(s: SparkSession, corpus: DataFrame, f: Keyed): Unit = {
-    val stored =
-      if (!f.artifacts.forall(a => exists(s, a._1))) None
-      else metaRow(s, f.meta, "n_docs", "max_id")
-        .map(r => (r.getLong(0), r.getLong(1)))
-    ensureAppend(corpus, f.key, stored) { case (delta, (n, mx)) =>
-      publish(s, f, delta, s"CAST($n AS BIGINT), CAST($mx AS BIGINT)")
-    } { now =>
-      val (n, mx) = now
-      f.build(corpus)
-      replaceMeta(s, f.meta, "n_docs BIGINT, max_id BIGINT",
-        s"CAST($n AS BIGINT), CAST($mx AS BIGINT)")
-    }
-  }
-
-  /** (count, max) from an aggregate row's first two columns; the max of
-    * an empty frame reads as -1. */
-  private def countMax(r: Row): (Long, Long) =
-    (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
-
-  /** (rows, max `key`) of an index artifact, None when it is absent: an
-    * ungrouped COUNT/MAX, which folds from the manifest (no data scan). */
-  def artifactWatermark(s: SparkSession, table: String,
-      key: String): Option[(Long, Long)] =
-    try Some(countMax(s.table(table).agg(count(lit(1)), max(col(key))).head))
-    catch { case _: org.apache.spark.sql.AnalysisException => None }
-
   /** True when `table` resolves (schema only, no read). */
   def exists(s: SparkSession, table: String): Boolean =
     try { s.table(table).schema; true }
@@ -323,11 +338,11 @@ private[graft] object CdcIndex {
       "('graft.dml.mode'='merge-on-read')")
 
   /** (Re)create a `(version, corpus)` meta at `version` — the LAST step
-    * of every rebuild, so a crash before it leaves the meta absent or
-    * stale and the next ensure rebuilds. */
+    * of a label rebuild or a seed clone, so a crash before it leaves the
+    * meta absent or stale and the next ensure rebuilds. */
   def writeMeta(s: SparkSession, meta: String, version: Long,
       corpusTable: String): Unit =
-    replaceMeta(s, meta, "version BIGINT, corpus STRING",
+    replaceMeta(s, meta, VersionLayout,
       s"CAST($version AS BIGINT), '$corpusTable'")
 
   private def replaceMeta(s: SparkSession, meta: String, schema: String,
@@ -348,10 +363,9 @@ private[graft] object CdcIndex {
     * aliases / bare-attribute projections over one head-version
     * `graft_cat` DataSourceV2Relation whose `.versions` log resolves —
     * or None for anything else (filters, computed columns, joins, time
-    * travel, branches, non-catalog sources). The DataFrame entry points
-    * hand such a corpus to their version-keyed `ensure*Cdc` twin, whose
-    * watermark also sees the count+max-preserving in-place edits
-    * [[ensureAppend]] cannot. Plan and schema inspection only, no read. */
+    * travel, branches, non-catalog sources). [[ensureFrame]] hands such
+    * a corpus to [[ensureKeyed]]. Plan and schema inspection only, no
+    * read. */
   def sourceTable(s: SparkSession, df: DataFrame): Option[String] = {
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
     import org.apache.spark.sql.catalyst.expressions.AttributeReference

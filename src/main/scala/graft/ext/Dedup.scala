@@ -687,10 +687,10 @@ object Dedup {
 
   /** Opt-in capture of one loop iteration's EXECUTED plan (round-16,
     * VERDICT r15 #1: the 3-exchanges-per-iteration claim must be
-    * checkable — ExtensionsSpec pins the count and PlanDumpMain commits
-    * the text as plans/r16 evidence). Off by default: rendering the
-    * adaptive plan to a string each iteration is pure overhead on a
-    * real run. */
+    * checkable — ExtensionsSpec pins the count and `graft.Harness
+    * plans` (selector `cc_iteration`) commits the text as plans/r16
+    * evidence). Off by default: rendering the adaptive plan to a string
+    * each iteration is pure overhead on a real run. */
   private[graft] val ccCapturePlan =
     new java.util.concurrent.atomic.AtomicBoolean(false)
   private[graft] val lastCcIterPlan =

@@ -32,9 +32,10 @@ import org.apache.spark.sql.functions._
   * advance in ONE cross-table transaction ([[graft.sources.SegTxn]]'s
   * intent-log discipline, via CALL system.txn_*), so "delta signed" and
   * "watermark advanced" never diverge durably — a torn refresh would
-  * otherwise re-sign or skip the delta. A full rebuild writes sigs
-  * first and meta LAST outside a txn: a crash between the two leaves
-  * meta ≠ corpus, which the next ensure() resolves by rebuilding.
+  * otherwise re-sign or skip the delta. A full rebuild drops the meta,
+  * writes sigs, and writes the meta LAST outside a txn: a crash in
+  * between leaves no meta, which the next ensure() resolves by
+  * rebuilding.
   *
   * Reference capability: `transformation.py`'s dedup steps (SURVEY §2
   * P4/P5) scaled to the near-dup family; construction is bit-identical
@@ -66,22 +67,16 @@ object DedupIndex {
   }
 
   /** Ensure the named index covers `docs` (doc_id BIGINT, text STRING).
-    * A pure scan of a catalog table goes to [[ensureCdc]] (its version
-    * watermark is exact). Any other frame takes the shared append
-    * watermark ([[CdcIndex.ensureAppendMeta]], `(n_docs, max_id)` in
-    * meta): covered → no-op; append-only growth → sign ONLY the delta
-    * and publish sigs+meta in one txn; any other change → full rebuild. */
+    * Routed by [[CdcIndex.ensureFrame]]: a pure scan of a catalog table
+    * takes [[ensureCdc]]'s lifecycle (its version watermark is exact);
+    * any other frame the append watermark (`(n_docs, max_id)` in meta):
+    * covered → no-op; append-only growth → sign ONLY the delta and
+    * publish sigs+meta in one txn; any other change → full rebuild. */
   def ensure(s: SparkSession, docs: DataFrame, name: String): Tables =
     CdcIndex.withNameLock(s"dedup:$name") {
       CdcIndex.requireBaseFamilyName(name, "dedup")
-      graft.ops.ensureGraftCatalog(s)
-      CdcIndex.sourceTable(s, docs) match {
-        case Some(tbl) => ensureCdc(s, tbl, name)
-        case None =>
-          CdcIndex.ensureAppendMeta(s, docs,
-            sigsKeyed(name).copy(refreshes = refreshes))
-          tables(name)
-      }
+      CdcIndex.ensureFrame(s, docs, sigsKeyed(name), refreshes)
+      tables(name)
     }
 
   // ------------------------------------------------- CDC maintenance

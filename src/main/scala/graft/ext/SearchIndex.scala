@@ -80,22 +80,16 @@ object SearchIndex {
   }
 
   /** Ensure the named index covers `docs` (doc_id BIGINT, text STRING).
-    * A pure scan of a catalog table goes to [[ensureCdc]]; any other
-    * frame takes the shared append watermark
-    * ([[CdcIndex.ensureAppendMeta]], `(n_docs, max_id)` in meta):
-    * covered → no-op; append-only growth → tokenize ONLY the delta,
-    * publish all three tables in one txn; anything else → rebuild. */
+    * Routed by [[CdcIndex.ensureFrame]]: a pure scan of a catalog table
+    * takes [[ensureCdc]]'s lifecycle; any other frame the append
+    * watermark (`(n_docs, max_id)` in meta): covered → no-op;
+    * append-only growth → tokenize ONLY the delta, publish all three
+    * tables in one txn; anything else → rebuild. */
   def ensure(s: SparkSession, docs: DataFrame, name: String): Tables =
     CdcIndex.withNameLock(s"search:$name") {
       CdcIndex.requireIndexName(name)
-      graft.ops.ensureGraftCatalog(s)
-      CdcIndex.sourceTable(s, docs) match {
-        case Some(tbl) => ensureCdc(s, tbl, name)
-        case None =>
-          CdcIndex.ensureAppendMeta(s, docs,
-            postingsKeyed(name).copy(refreshes = refreshes))
-          tables(name)
-      }
+      CdcIndex.ensureFrame(s, docs, postingsKeyed(name), refreshes)
+      tables(name)
     }
 
   // ------------------------------------------------- CDC maintenance

@@ -1769,8 +1769,9 @@ object SemiStructured {
       .writeTo("graft_cat.db.inv_q_vecs").append()
     // the three family builds write DISJOINT artifact sets — overlap
     // them (optimization guide §2.6; striped ensure* locks). The SQ
-    // tier runs in CDC mode — ann metas are CDC-only — so the inventory
-    // row covers `ann_*_sq_meta` discovery.
+    // tier runs in CDC mode over a catalog table, so the inventory also
+    // covers a `(version, corpus)` `ann_*_sq_meta` (a DataFrame-built
+    // ANN index lists too, through its `(n_docs, max_id)` meta).
     graft.ops.inParallel[Any](Seq(
       () => graft.ext.DedupIndex.ensure(s, docs, "inv_q"),
       () => graft.ext.SearchIndex.ensure(s, docs, "inv_q"),

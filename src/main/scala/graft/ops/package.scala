@@ -145,7 +145,7 @@ package object ops {
       s"${spark.sparkContext.applicationId}_${sessionToken(spark)}"
 
   /** Label the Spark jobs a driver-side phase launches (optimization
-    * guide §1.5) so the UI and `graft.ProfMain` can attribute wall time
+    * guide §1.5) so the UI and `graft.Harness prof` can attribute wall time
     * to index-maintenance phases. Thread-local (safe under the striped
     * concurrent ensure* paths); restores the enclosing description so
     * nested phases re-expose their parent on exit. */
@@ -163,7 +163,7 @@ package object ops {
   }
 
   /** Driver-side wall time per labelled phase (nested phases count in
-    * both labels) — the decomposition `graft.ProfMain` reports. Cheap
+    * both labels) — the decomposition `graft.Harness prof` reports. Cheap
     * enough to record always: one CHM merge per phase exit. */
   private[graft] val phaseTimes =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()

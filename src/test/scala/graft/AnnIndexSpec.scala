@@ -147,6 +147,9 @@ class AnnIndexSpec extends SparkTestBase {
   }
 
   /** 64-dim corpus for the PQ tier (8 subspaces × 8 dims). */
+  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).sortBy(_.toString).toSeq
+
   private def mkCorpus64(n: Long) =
     spark.range(0, n).select(col("id").as("vec_id"),
       expr("transform(sequence(0, 63), " +
@@ -326,8 +329,8 @@ class AnnIndexSpec extends SparkTestBase {
   test("legacy INT-cells layout routes a grown corpus to rebuild, not a failed append") {
     ops.configure(spark)
     ops.ensureGraftCatalog(spark)
-    spark.sql("DROP TABLE IF EXISTS graft_cat.db.ann_spec_legacy_cells")
-    spark.sql("DROP TABLE IF EXISTS graft_cat.db.ann_spec_legacy_cents")
+    Seq("cells", "cents", "meta").foreach(x =>
+      spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.ann_spec_legacy_$x"))
     // simulate an index persisted before the BIGINT/bucketed migration:
     // INT cell column, unpartitioned — a BIGINT delta append into it
     // fails analysis, so ensure() must treat the layout as "not
@@ -571,6 +574,94 @@ class AnnIndexSpec extends SparkTestBase {
     assert(AnnIndex.sqBuilds.get() === b0 + 2,
       "stale CDC watermark served a plain-rebuilt index as covered")
     assert(spark.table("graft_cat.db.ann_spec_xm_sq_codes").count() === 500L)
+  }
+
+  test("a DataFrame publish between two CDC ensures leaves no stale CDC watermark") {
+    // the DataFrame path and the CDC twin share one meta table, each in
+    // its own layout: a DataFrame ensure over another corpus rewrites it,
+    // so the next ensure*Cdc over the catalog table must rebuild rather
+    // than no-op over vectors that came from that other corpus
+    import graft.ext.CdcIndex
+    import org.apache.spark.sql.DataFrame
+    ops.configure(spark)
+    ops.ensureGraftCatalog(spark)
+    val vecsT = "graft_cat.db.xpath_vecs"
+    def withNorm(df: DataFrame) =
+      df.withColumn("norm", expr("sqrt(aggregate(v, 0D, (a, x) -> a + x * x))"))
+    spark.sql(s"DROP TABLE IF EXISTS $vecsT")
+    spark.sql(s"CREATE TABLE $vecsT (vec_id BIGINT, v ARRAY<DOUBLE>, " +
+      "norm DOUBLE) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
+    withNorm(mkCorpus64(100)).writeTo(vecsT).append()
+    val cases: Seq[(String, DataFrame => Any, () => Any, CdcIndex.Keyed,
+        java.util.concurrent.atomic.AtomicLong)] = Seq(
+      ("IVF", AnnIndex.ensure(spark, _, "xpath"),
+        () => AnnIndex.ensureCdc(spark, vecsT, "xpath"),
+        AnnIndex.ivfKeyed(spark, "xpath"), AnnIndex.builds),
+      ("PQ", AnnIndex.ensurePq(spark, _, "xpath"),
+        () => AnnIndex.ensurePqCdc(spark, vecsT, "xpath"),
+        AnnIndex.pqKeyed(spark, "xpath"), AnnIndex.pqBuilds),
+      ("SQ", AnnIndex.ensureSq(spark, _, "xpath"),
+        () => AnnIndex.ensureSqCdc(spark, vecsT, "xpath"),
+        AnnIndex.sqKeyed(spark, "xpath"), AnnIndex.sqBuilds))
+    cases.foreach { case (fam, ensureDf, ensureCdc, f, builds) =>
+      (f.meta +: f.tables).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      ensureCdc()
+      ensureDf(withNorm(mkCorpus64(120)))
+      val b0 = builds.get()
+      ensureCdc()
+      assert(builds.get() === b0 + 1,
+        s"$fam: the CDC watermark survived a DataFrame publish — stale no-op")
+      val head = spark.table(vecsT).select(f.head.map(col): _*)
+      f.artifacts.foreach { case (t, derive) =>
+        assert(sortedRows(spark.table(t)) === sortedRows(derive(head)),
+          s"$fam: $t does not derive the 100-row catalog corpus")
+      }
+      (f.meta +: f.tables).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+    spark.sql(s"DROP TABLE IF EXISTS $vecsT")
+  }
+
+  test("a build that crashes after writing its artifacts leaves no watermark") {
+    // build over 0..99, then a build over 0..49 that lands its artifacts
+    // and throws before the meta, then growth to 0..119: the old
+    // (100, 99) meta must not survive the crash, or the last call would
+    // append 100..119 onto the 50-row build and lose 50..99
+    import graft.ext.{CdcIndex, DedupIndex, SearchIndex}
+    import org.apache.spark.sql.DataFrame
+    import java.util.concurrent.atomic.AtomicLong
+    ops.configure(spark)
+    ops.ensureGraftCatalog(spark)
+    graft.functions.SquaredDistance.register(spark)
+    def docs(n: Long) = spark.range(0, n).select(col("id").as("doc_id"),
+      expr("concat('graft doc ', id % 41, ' shares words ', id % 7)").as("text"))
+    def vecs(n: Long) = mkCorpus64(n)
+      .withColumn("norm", expr("sqrt(aggregate(v, 0D, (a, x) -> a + x * x))"))
+    val cases: Seq[(CdcIndex.Keyed, Long => DataFrame, AtomicLong)] = Seq(
+      (DedupIndex.sigsKeyed("crash"), docs, DedupIndex.builds),
+      (SearchIndex.postingsKeyed("crash"), docs, SearchIndex.builds),
+      (AnnIndex.ivfKeyed(spark, "crash"), vecs, AnnIndex.builds),
+      (AnnIndex.pqKeyed(spark, "crash"), vecs, AnnIndex.pqBuilds),
+      (AnnIndex.sqKeyed(spark, "crash"), vecs, AnnIndex.sqBuilds))
+    cases.foreach { case (f, corpus, builds) =>
+      (f.meta +: f.tables).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      val appends = new AtomicLong(0)
+      val crashing = f.copy(build = rows => {
+        f.build(rows); throw new IllegalStateException("crash after build")
+      })
+      CdcIndex.ensureFrame(spark, corpus(100), f, appends)
+      intercept[IllegalStateException](
+        CdcIndex.ensureFrame(spark, corpus(50), crashing, appends))
+      val b0 = builds.get()
+      CdcIndex.ensureFrame(spark, corpus(120), f, appends)
+      assert(builds.get() === b0 + 1 && appends.get() === 0,
+        s"${f.meta}: grew over a crashed build's stale watermark")
+      val head = corpus(120).select(f.head.map(col): _*)
+      f.artifacts.foreach { case (t, derive) =>
+        assert(sortedRows(spark.table(t)) === sortedRows(derive(head)),
+          s"$t does not derive ids 0..119")
+      }
+      (f.meta +: f.tables).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
   }
 
   test("graph: oversized cell pair join is O(n*cap), not O(n^2)") {
