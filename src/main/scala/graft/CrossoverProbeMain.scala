@@ -77,9 +77,9 @@ object CrossoverProbeMain {
     }
 
     def dropIx(name: String): Unit = {
-      graft.ext.DedupIndex.exactLabelTables(name).drop(spark)
-      graft.ext.DedupIndex.cappedLabelTables(name).drop(spark)
-      spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_${name}_lu_choice")
+      graft.ext.IndexFamily.ExactLabels.drop(spark, name)
+      graft.ext.IndexFamily.CappedLabels.drop(spark, name)
+      spark.sql("DROP TABLE IF EXISTS " + graft.ext.IndexFamily.choiceTable(name))
     }
 
     /** Build + one-block append apply for ONE family; returns secs. */

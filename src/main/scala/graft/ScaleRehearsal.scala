@@ -303,7 +303,7 @@ object ScaleRehearsal {
     val name = s"lblsc_${tag}_$pid"
     val corpus = s"graft_cat.db.lblsc_docs_${tag}_$pid"
     spark.sql(s"DROP TABLE IF EXISTS $corpus")
-    graft.ext.DedupIndex.exactLabelTables(name).drop(spark)
+    graft.ext.IndexFamily.ExactLabels.drop(spark, name)
     spark.sql(s"CREATE TABLE $corpus (doc_id BIGINT, text STRING) " +
       "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -324,7 +324,7 @@ object ScaleRehearsal {
       // wouldn't be cleaned by this run's entry drop — drop our own
       // tables here instead of orphaning them in the shared catalog
       spark.sql(s"DROP TABLE IF EXISTS $corpus")
-      graft.ext.DedupIndex.exactLabelTables(name).drop(spark)
+      graft.ext.IndexFamily.ExactLabels.drop(spark, name)
       Harness.release(spark)
     }
   }
@@ -340,8 +340,7 @@ object ScaleRehearsal {
     val name = s"grsc_${tag}_$pid"
     val corpus = s"graft_cat.db.grsc_vecs_${tag}_$pid"
     spark.sql(s"DROP TABLE IF EXISTS $corpus")
-    Seq("gr_edges", "gr_meta").foreach(x =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.ann_${name}_$x"))
+    graft.ext.IndexFamily.Graph.drop(spark, name)
     spark.sql(s"CREATE TABLE $corpus (vec_id BIGINT, label INT, " +
       "v ARRAY<DOUBLE>) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     try {
@@ -355,8 +354,7 @@ object ScaleRehearsal {
       (System.nanoTime() - t0) / 1e9
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $corpus")
-      Seq("gr_edges", "gr_meta").foreach(x =>
-        spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.ann_${name}_$x"))
+      graft.ext.IndexFamily.Graph.drop(spark, name)
     }
   }
 
@@ -376,8 +374,7 @@ object ScaleRehearsal {
     val corpus = s"graft_cat.db.grmt_vecs_${tag}_$pid"
     val ncells = math.max(2L, n / 200L)
     spark.sql(s"DROP TABLE IF EXISTS $corpus")
-    Seq("gr_edges", "gr_meta").foreach(x =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.ann_${name}_$x"))
+    graft.ext.IndexFamily.Graph.drop(spark, name)
     spark.sql(s"CREATE TABLE $corpus (vec_id BIGINT, label INT, " +
       "v ARRAY<DOUBLE>) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     try {
@@ -402,8 +399,7 @@ object ScaleRehearsal {
       (build, apply, spark.table(edges).count())
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $corpus")
-      Seq("gr_edges", "gr_meta").foreach(x =>
-        spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.ann_${name}_$x"))
+      graft.ext.IndexFamily.Graph.drop(spark, name)
       Harness.release(spark)
     }
   }
@@ -436,23 +432,20 @@ object ScaleRehearsal {
     val name = s"lbst_${tag}_$pid"
     val corpus = s"graft_cat.db.lbst_docs_${tag}_$pid"
     spark.sql(s"DROP TABLE IF EXISTS $corpus")
-    val arts =
-      if (capped) graft.ext.DedupIndex.cappedLabelTables(name)
-      else graft.ext.DedupIndex.exactLabelTables(name)
-    arts.drop(spark)
+    val family = if (capped) graft.ext.IndexFamily.CappedLabels
+      else graft.ext.IndexFamily.ExactLabels
+    family.drop(spark, name)
     spark.sql(s"CREATE TABLE $corpus (doc_id BIGINT, text STRING) " +
       "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     try {
       spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
         .writeTo(corpus).append()
       val t0 = System.nanoTime()
-      if (capped)
-        graft.ext.DedupIndex.ensureLabelsCappedCdc(spark, corpus, name)
-      else graft.ext.DedupIndex.ensureLabelsCdc(spark, corpus, name)
+      family.ensure(spark, corpus, name)
       (System.nanoTime() - t0) / 1e9
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $corpus")
-      arts.drop(spark)
+      family.drop(spark, name)
       Harness.release(spark)
     }
   }
@@ -473,7 +466,7 @@ object ScaleRehearsal {
     val name = s"lcx_${tag}_$pid"
     val corpus = s"graft_cat.db.lcx_docs_${tag}_$pid"
     spark.sql(s"DROP TABLE IF EXISTS $corpus")
-    graft.ext.DedupIndex.cappedLabelTables(name).drop(spark)
+    graft.ext.IndexFamily.CappedLabels.drop(spark, name)
     spark.sql(s"CREATE TABLE $corpus (doc_id BIGINT, text STRING) " +
       "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     try {
@@ -491,7 +484,7 @@ object ScaleRehearsal {
       (System.nanoTime() - t0) / 1e9
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $corpus")
-      graft.ext.DedupIndex.cappedLabelTables(name).drop(spark)
+      graft.ext.IndexFamily.CappedLabels.drop(spark, name)
       Harness.release(spark)
     }
   }

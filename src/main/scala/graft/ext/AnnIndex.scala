@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import IndexFamily.{Graph, Ivf, Pq, Sq}
 
 /** PERSISTED ANN index: the IVF coarse quantizer (centroids) and the
   * per-vector cell assignments stored as `graft_cat` catalog tables, so
@@ -129,12 +130,12 @@ object AnnIndex {
     }
 
   private def tables(name: String): Tables =
-    Tables(s"graft_cat.db.ann_${name}_cells", s"graft_cat.db.ann_${name}_cents")
+    Tables(Ivf.table(name, "cells"), Ivf.table(name, "cents"))
 
   /** The IVF cells family as a [[CdcIndex.Keyed]] (keyed by `vec_id`). */
   private[graft] def ivfKeyed(s: SparkSession, name: String): CdcIndex.Keyed = {
     val t = tables(name)
-    CdcIndex.Keyed(s"graft_cat.db.ann_${name}_meta", "vec_id", "vec_id",
+    CdcIndex.Keyed(Ivf.meta(name), "vec_id", "vec_id",
       Seq("vec_id", "v", "norm"),
       Seq(t.cells -> (cellsOf(_, s.table(t.cents)))), build(s, _, t),
       cdcRefreshes, Seq(t.cents))
@@ -225,13 +226,12 @@ object AnnIndex {
   }
 
   private def pqTables(name: String): PqTables =
-    PqTables(s"graft_cat.db.ann_${name}_pq_codes",
-      s"graft_cat.db.ann_${name}_pq_cents")
+    PqTables(Pq.table(name, "codes"), Pq.table(name, "cents"))
 
   /** The PQ codes family as a [[CdcIndex.Keyed]] (keyed by `vec_id`). */
   private[graft] def pqKeyed(s: SparkSession, name: String): CdcIndex.Keyed = {
     val t = pqTables(name)
-    CdcIndex.Keyed(s"graft_cat.db.ann_${name}_pq_meta", "vec_id", "vec_id",
+    CdcIndex.Keyed(Pq.meta(name), "vec_id", "vec_id",
       Seq("vec_id", "v"), Seq(t.codes -> (pqCodes(_, s.table(t.cents)))),
       buildPq(s, _, t), pqCdcRefreshes, Seq(t.cents))
   }
@@ -340,9 +340,8 @@ object AnnIndex {
   def ensureSq(s: SparkSession, corpus: DataFrame, name: String): String =
     CdcIndex.withNameLock(s"ann-sq:$name") {
       CdcIndex.requireIndexName(name)
-      val f = sqKeyed(s, name)
-      CdcIndex.ensureFrame(s, corpus, f, sqRefreshes)
-      f.artifacts.head._1
+      CdcIndex.ensureFrame(s, corpus, sqKeyed(s, name), sqRefreshes)
+      Sq.table(name, "codes")
     }
 
   /** Version-keyed CDC maintenance of the SQ tier, keyed by `vec_id`
@@ -353,15 +352,14 @@ object AnnIndex {
   def ensureSqCdc(s: SparkSession, corpusTable: String,
       name: String): String = CdcIndex.withNameLock(s"ann-sq:$name") {
     CdcIndex.requireIndexName(name)
-    val f = sqKeyed(s, name)
-    CdcIndex.ensureKeyed(s, corpusTable, f)
-    f.artifacts.head._1
+    CdcIndex.ensureKeyed(s, corpusTable, sqKeyed(s, name))
+    Sq.table(name, "codes")
   }
 
   /** The SQ codes family as a [[CdcIndex.Keyed]] (keyed by `vec_id`). */
   private[graft] def sqKeyed(s: SparkSession, name: String): CdcIndex.Keyed = {
-    val codes = s"graft_cat.db.ann_${name}_sq_codes"
-    CdcIndex.Keyed(s"graft_cat.db.ann_${name}_sq_meta", "vec_id", "vec_id",
+    val codes = Sq.table(name, "codes")
+    CdcIndex.Keyed(Sq.meta(name), "vec_id", "vec_id",
       Seq("vec_id", "v"), Seq(codes -> (sqEncode _)), buildSq(s, _, codes),
       sqCdcRefreshes)
   }
@@ -454,17 +452,16 @@ object AnnIndex {
       name: String): String = CdcIndex.withNameLock(s"ann-gr:$name") {
     CdcIndex.requireIndexName(name)
     graft.functions.CosineSimilarity.register(s)
-    val f = graphKeyed(name)
-    CdcIndex.ensureKeyed(s, corpusTable, f)
-    f.artifacts.head._1
+    CdcIndex.ensureKeyed(s, corpusTable, graphKeyed(name))
+    Graph.table(name, "edges")
   }
 
   /** The graph family as a [[CdcIndex.Keyed]], keyed by `cell`: the
     * feed slice carries full rows, so a DELETED vector still exposes its
     * cell — the retraction key. */
   private[graft] def graphKeyed(name: String): CdcIndex.Keyed = {
-    val edges = s"graft_cat.db.ann_${name}_gr_edges"
-    CdcIndex.Keyed(s"graft_cat.db.ann_${name}_gr_meta", "cell",
+    val edges = Graph.table(name, "edges")
+    CdcIndex.Keyed(Graph.meta(name), "cell",
       "CAST(label AS BIGINT)", Seq("vec_id", "label", "v"),
       Seq(edges -> (graphEdges _)), { head =>
         CdcIndex.createArtifact(graphEdges(head), edges)

@@ -66,9 +66,8 @@ private[graft] object CdcIndex {
 
   /** Extra validation for the BASE-family entry points of a prefix that
     * owns sub-families (minhash under `dedup`, IVF under `ann`): a base
-    * index named with one of the prefix's sub-family suffixes — derived
-    * from the classification source of truth,
-    * [[graft.sources.IndexesProcedure.Families]] — would make its meta
+    * index named with one of the prefix's sub-family suffixes — read
+    * from the family registry, [[IndexFamily.All]] — would make its meta
     * table (`dedup_x_gr_meta`, `ann_x_pq_meta`, …) the SAME name a
     * sub-family index uses, so the two could clobber each other and
     * `CALL system.indexes()` could not classify the row. Sub-family
@@ -79,8 +78,8 @@ private[graft] object CdcIndex {
     * [[requireIndexName]]. */
   def requireBaseFamilyName(name: String, prefix: String): Unit = {
     requireIndexName(name)
-    val reserved = graft.sources.IndexesProcedure.Families
-      .collect { case (_, p, suf, _) if p == prefix && suf.nonEmpty => suf }
+    val reserved = IndexFamily.All
+      .collect { case f if f.prefix == prefix && f.suffix.nonEmpty => f.suffix }
     require(!reserved.exists(name.endsWith),
       s"index name '$name' ends with a reserved $prefix sub-family " +
         s"suffix (${reserved.mkString(", ")}) — its tables would collide " +

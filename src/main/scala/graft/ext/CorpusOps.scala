@@ -137,8 +137,7 @@ object CorpusOps {
   val gramIndexScreen: Q = (s, d) => {
     graft.ops.ensureGraftCatalog(s)
     s.sql("DROP TABLE IF EXISTS graft_cat.db.gram_docs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.dedup_gram_ix_gr_grams")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.dedup_gram_ix_gr_meta")
+    IndexFamily.Grams.drop(s, "gram_ix")
     s.sql("CREATE TABLE graft_cat.db.gram_docs (doc_id BIGINT, " +
       "text STRING) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     val all = table(s, d, "documents").select(col("doc_id"), col("text"))
@@ -161,8 +160,7 @@ object CorpusOps {
   val gramCdcMaintenance: Q = (s, d) => {
     graft.ops.ensureGraftCatalog(s)
     s.sql("DROP TABLE IF EXISTS graft_cat.db.cdc_gram_docs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.dedup_cdc_gram_gr_grams")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.dedup_cdc_gram_gr_meta")
+    IndexFamily.Grams.drop(s, "cdc_gram")
     s.sql("CREATE TABLE graft_cat.db.cdc_gram_docs (doc_id BIGINT, " +
       "text STRING) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     val all = table(s, d, "documents").select(col("doc_id"), col("text"))

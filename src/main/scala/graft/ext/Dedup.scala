@@ -315,8 +315,7 @@ object Dedup {
   val cdcIndexMaintenance: Q = (s, d) => {
     graft.ops.ensureGraftCatalog(s)
     s.sql("DROP TABLE IF EXISTS graft_cat.db.cdc_idx_docs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.dedup_cdc_idx_sigs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.dedup_cdc_idx_meta")
+    IndexFamily.Sigs.drop(s, "cdc_idx")
     s.sql("CREATE TABLE graft_cat.db.cdc_idx_docs (doc_id BIGINT, " +
       "text STRING) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     table(s, d, "documents").select(col("doc_id"), col("text"))
@@ -1033,9 +1032,9 @@ object Dedup {
       }
       graft.ops.ensureGraftCatalog(s)
       Seq("exact", "full", "capped", "lcfull").map(seedNames).foreach {
-        case (docs, ix, tables) =>
+        case (docs, ix, family) =>
           s.sql(s"DROP TABLE IF EXISTS graft_cat.db.$docs")
-          tables(ix).drop(s)
+          family.drop(s, ix)
       }
       // all four seed states are DIRECT from-scratch builds: the
       // measured decomposition (round 14) put a from-scratch build at
@@ -1070,23 +1069,21 @@ object Dedup {
       seededDir.set(d)
     }
 
+  private def seedNames(seed: String): (String, String, IndexFamily) =
+    seed match {
+      case "exact" => ("lbseed_docs", "lbseed_ix", IndexFamily.ExactLabels)
+      case "full" => ("lbfull_docs", "lbfull_ix", IndexFamily.ExactLabels)
+      case "capped" => ("lcseed_docs", "lcseed_ix", IndexFamily.CappedLabels)
+      case "lcfull" => ("lcfull_docs", "lcfull_ix", IndexFamily.CappedLabels)
+      case other => throw new IllegalArgumentException(s"bad seed: $other")
+    }
+
   /** Zero-copy clone of a built seed label index under an entry's own
     * names: corpus + artifact data tables via `CALL system.clone`
     * (metadata-only — segments are referenced, never copied), then the
     * meta watermark re-bound to the CLONED corpus at its clone head
     * version, so the next ensure() over the clone no-ops until the
     * entry's own mutations land and then applies exactly their slice. */
-  private def seedNames(seed: String)
-      : (String, String, String => DedupIndex.LabelTables) = seed match {
-    case "exact" => ("lbseed_docs", "lbseed_ix", DedupIndex.exactLabelTables)
-    case "full" => ("lbfull_docs", "lbfull_ix", DedupIndex.exactLabelTables)
-    case "capped" =>
-      ("lcseed_docs", "lcseed_ix", DedupIndex.cappedLabelTables)
-    case "lcfull" =>
-      ("lcfull_docs", "lcfull_ix", DedupIndex.cappedLabelTables)
-    case other => throw new IllegalArgumentException(s"bad seed: $other")
-  }
-
   private[graft] def cloneLabelIndex(s: SparkSession, seed: String,
       toCorpus: String, toIx: String): Unit =
     graft.ops.withDesc(s, "lbl: clone seed") {
@@ -1103,14 +1100,15 @@ object Dedup {
     * it, or a clone-sibling like ext141's shared `er_docs`). */
   private[graft] def cloneSeedIndexTo(s: SparkSession, seed: String,
       toIx: String, boundCorpus: String): Unit = {
-    val (_, srcIx, tables) = seedNames(seed)
-    val (from, to) = (tables(srcIx), tables(toIx))
-    to.drop(s)
+    val (_, srcIx, family) = seedNames(seed)
+    family.drop(s, toIx)
     def short(t: String) = t.stripPrefix("graft_cat.")
-    from.data.zip(to.data).foreach { case (a, b) => s.sql(
-      s"CALL graft_cat.system.clone('${short(a)}', '${short(b)}')") }
-    CdcIndex.writeMeta(s, to.meta, CdcIndex.headVersion(s, boundCorpus),
-      boundCorpus)
+    // every table but the meta (last), which is re-bound below
+    family.tables(srcIx).init.zip(family.tables(toIx)).foreach {
+      case (a, b) => s.sql(
+        s"CALL graft_cat.system.clone('${short(a)}', '${short(b)}')") }
+    CdcIndex.writeMeta(s, family.meta(toIx),
+      CdcIndex.headVersion(s, boundCorpus), boundCorpus)
   }
 
   /** ext153 — INCREMENTAL COMPONENT LABELS from the persisted label
@@ -1233,12 +1231,12 @@ object Dedup {
     // the build it would delegate to is already covered by the clone
     ensureLabelSeeds(s, d)
     cloneLabelIndex(s, "exact", "graft_cat.db.lua_docs", "lua_ix")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.dedup_lua_ix_lu_choice")
+    s.sql(s"DROP TABLE IF EXISTS ${IndexFamily.choiceTable("lua_ix")}")
     DedupIndex.ensureLabels(s, "graft_cat.db.lua_docs", "lua_ix") // choice
     cohortDocs(s, d).filter(col("doc_id") % 10 === 7)
       .writeTo("graft_cat.db.lua_docs").append()
     val labels = DedupIndex.ensureLabels(s, "graft_cat.db.lua_docs", "lua_ix")
-    val fam = s.table("graft_cat.db.dedup_lua_ix_lu_choice")
+    val fam = s.table(IndexFamily.choiceTable("lua_ix"))
       .select(col("family"))
     s.table(labels)
       .select(col("doc_id"), col("comp").as("cluster"),

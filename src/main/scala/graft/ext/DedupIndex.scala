@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import IndexFamily.{CappedLabels, ExactLabels, Grams, Sigs}
 
 /** PERSISTED near-dup index: the MinHash signature table of ext03
   * stored as a `graft_cat` catalog artifact with incremental append
@@ -107,8 +108,7 @@ object DedupIndex {
     }
 
   private def tables(name: String): Tables =
-    Tables(s"graft_cat.db.dedup_${name}_sigs",
-      s"graft_cat.db.dedup_${name}_meta")
+    Tables(Sigs.table(name, "sigs"), Sigs.meta(name))
 
   /** The signature family as a [[CdcIndex.Keyed]] (keyed by `doc_id`). */
   private[graft] def sigsKeyed(name: String): CdcIndex.Keyed = {
@@ -124,29 +124,10 @@ object DedupIndex {
 
   // ------------------------------------------- component-label index
 
-  /** The artifact tables of one component-label family under index
-    * `name`: `dedup_<name>_<fam>_{labels, <sidecar>, posts, meta}`. The
-    * sidecar is the exact family's persisted edge set (`lb_edges`) or
-    * the capped family's document frequencies (`lc_df`). The ensures,
-    * the superseded-family drop of [[ensureLabels]] and the shared
-    * seeds all spell the two families' tables through this. */
-  private[graft] final case class LabelTables(fam: String, part: String,
-      name: String) {
-    private def t(x: String) = s"graft_cat.db.dedup_${name}_${fam}_$x"
-    val labels: String = t("labels")
-    val sidecar: String = t(part)
-    val posts: String = t("posts")
-    val meta: String = t("meta")
-    /** The data tables (what a seed clone copies), then every table. */
-    def data: Seq[String] = Seq(labels, sidecar, posts)
-    def all: Seq[String] = data :+ meta
-    def drop(s: SparkSession): Unit =
-      all.foreach(x => s.sql(s"DROP TABLE IF EXISTS $x"))
-  }
-  private[graft] def exactLabelTables(name: String): LabelTables =
-    LabelTables("lb", "edges", name)
-  private[graft] def cappedLabelTables(name: String): LabelTables =
-    LabelTables("lc", "df", name)
+  /** A label index's tables by part — `labels`, `posts`, `meta` and the
+    * family's sidecar (`edges` exact, `df` capped): the family's
+    * [[IndexFamily]] row bound to one index name. */
+  private type Parts = String => String
 
   /** PERSISTED DEDUP-CLUSTER LABELS with APPEND-INCREMENTAL maintenance
     * — the hardest derived artifact so far, because a component label is
@@ -221,21 +202,21 @@ object DedupIndex {
       name: String): String = CdcIndex.withNameLock(s"label:$name") {
     CdcIndex.requireIndexName(name)
     graft.ops.ensureGraftCatalog(s)
-    val t = exactLabelTables(name)
-    CdcIndex.ensure(s, corpusTable, t.meta)(t.labels) { (v0, headV) =>
+    val t: Parts = ExactLabels.table(name, _)
+    CdcIndex.ensure(s, corpusTable, t("meta"))(t("labels")) { (v0, headV) =>
       applyLabelsInc(s, corpusTable, t, v0, headV)
-      t.labels
+      t("labels")
     } { headV =>
       rebuildLabels(s, "lbl-build", corpusTable, t, headV, labelBuilds) {
         // the edge artifact derives from the stored postings
         graft.ops.withDesc(s, "lbl-build: edges") {
-          CdcIndex.createArtifact(jaccardEdgesFromShingles(s.table(t.posts)),
-            t.sidecar)
-          CdcIndex.mergeOnRead(s, t.sidecar)
+          CdcIndex.createArtifact(jaccardEdgesFromShingles(s.table(t("posts"))),
+            t("edges"))
+          CdcIndex.mergeOnRead(s, t("edges"))
         }
         // the edge artifact just landed, so its MANIFEST row count (one
         // metadata read, never a scan) is the exact symmetric count / 2
-        (s.table(t.sidecar), () => 2L * s.table(s"${t.sidecar}.files")
+        (s.table(t("edges")), () => 2L * s.table(s"${t("edges")}.files")
           .agg(coalesce(sum("live_rows"), lit(0L))).head.getLong(0))
       }
     }
@@ -252,13 +233,13 @@ object DedupIndex {
     * labels are each doc's min component id over those edges, and the
     * meta lands LAST — a torn build just rebuilds. */
   private def rebuildLabels(s: SparkSession, tag: String,
-      corpusTable: String, t: LabelTables, headV: Long,
+      corpusTable: String, t: Parts, headV: Long,
       builds: java.util.concurrent.atomic.AtomicLong)(
       sidecar: => (DataFrame, () => Long)): String = {
     val docs = s.table(corpusTable).select(col("doc_id"), col("text"))
     graft.ops.withDesc(s, s"$tag: postings") {
-      CdcIndex.createArtifact(Dedup.shingles(docs, widen = true), t.posts)
-      CdcIndex.mergeOnRead(s, t.posts)
+      CdcIndex.createArtifact(Dedup.shingles(docs, widen = true), t("posts"))
+      CdcIndex.mergeOnRead(s, t("posts"))
     }
     val (edges, sizeHint) = sidecar
     graft.ops.withDesc(s, s"$tag: cc+labels") {
@@ -267,12 +248,12 @@ object DedupIndex {
       CdcIndex.createArtifact(docs.select(col("doc_id"))
         .join(lab.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp")),
-        t.labels)
+        t("labels"))
     }
-    CdcIndex.mergeOnRead(s, t.labels)
-    CdcIndex.writeMeta(s, t.meta, headV, corpusTable)
+    CdcIndex.mergeOnRead(s, t("labels"))
+    CdcIndex.writeMeta(s, t("meta"), headV, corpusTable)
     builds.incrementAndGet()
-    t.labels
+    t("labels")
   }
 
   /** Caches a label apply persists, released together. Each apply
@@ -423,7 +404,7 @@ object DedupIndex {
     * capped family instead detects a landed MERGE by its stored-probe
     * guard and rebuilds. */
   private def publishLabels(s: SparkSession, tag: String,
-      corpusTable: String, headV: Long, t: LabelTables,
+      corpusTable: String, headV: Long, t: Parts,
       refreshes: java.util.concurrent.atomic.AtomicLong)(
       rows: DataFrame, ckpt: Seq[DataFrame], ready: Seq[DataFrame])(
       retract: Seq[LabelDml], insert: Seq[LabelDml]): Unit = {
@@ -443,7 +424,7 @@ object DedupIndex {
       graft.ops.inParallel[Unit](retract.map(dml => () =>
         graft.ops.withDesc(s, s"$tag: retract DML") { s.sql(dml(view)); () }
       ) :+ (() => graft.ops.withDesc(s, s"$tag: label MERGE") {
-        s.sql(s"""MERGE INTO ${t.labels} t USING $uv u ON t.doc_id = u.doc_id
+        s.sql(s"""MERGE INTO ${t("labels")} t USING $uv u ON t.doc_id = u.doc_id
           WHEN MATCHED AND u.del THEN DELETE
           WHEN MATCHED THEN UPDATE SET comp = u.comp
           WHEN NOT MATCHED AND NOT u.del THEN
@@ -451,7 +432,7 @@ object DedupIndex {
       }))
       CdcIndex.inTxn(s) {
         insert.foreach(dml => s.sql(dml(view)))
-        s.sql(s"INSERT OVERWRITE ${t.meta} SELECT CAST($headV AS BIGINT), " +
+        s.sql(s"INSERT OVERWRITE ${t("meta")} SELECT CAST($headV AS BIGINT), " +
           s"'$corpusTable'")
       }
       refreshes.incrementAndGet()
@@ -468,12 +449,12 @@ object DedupIndex {
     * an empty D-phase (no touched doc is stored) and reduces to the
     * append path. */
   private def applyLabelsInc(s: SparkSession, corpusTable: String,
-      t: LabelTables, v0: Long, headV: Long): Unit = {
-    val edges = t.sidecar
+      t: Parts, v0: Long, headV: Long): Unit = {
+    val edges = t("edges")
     // a legacy index without the edge/postings artifacts cannot
     // retract / cannot apply batch-sized — rebuild (which migrates it;
     // the feed-refusal path of CdcIndex.ensure)
-    if (!CdcIndex.exists(s, edges) || !CdcIndex.exists(s, t.posts))
+    if (!CdcIndex.exists(s, edges) || !CdcIndex.exists(s, t("posts")))
       throw new UnsupportedOperationException(
         "component labels: no stored edge/postings artifact " +
           "(pre-round-12 index)")
@@ -489,7 +470,7 @@ object DedupIndex {
     val head = s.table(corpusTable).select(col("doc_id"), col("text"))
     val headTouched = head.join(touched, Seq("doc_id"), "left_semi")
     val gone = touched.join(head.select("doc_id"), Seq("doc_id"), "left_anti")
-    val stored = s.table(t.labels)
+    val stored = s.table(t("labels"))
     val (held, scratch) = (new Held, new Held)
     try {
       // D-phase: fast path — a slice of GENUINELY NEW docs (the common
@@ -529,7 +510,7 @@ object DedupIndex {
           // shNewFeed note)
           val shN = held(Dedup.shingles(headTouched
             .repartition(s.sparkContext.defaultParallelism, col("doc_id"))))
-          val postsHead = s.table(t.posts)
+          val postsHead = s.table(t("posts"))
             .join(touched, Seq("doc_id"), "left_anti")
             .unionAll(shN)
           // held: consumed by BOTH the quotient path (q → CC) and the
@@ -573,11 +554,11 @@ object DedupIndex {
         retract = Seq(
           v => s"DELETE FROM $edges WHERE a_id IN (SELECT doc_id FROM " +
             s"${v(touched)}) OR b_id IN (SELECT doc_id FROM ${v(touched)})",
-          v => s"DELETE FROM ${t.posts} WHERE doc_id IN " +
+          v => s"DELETE FROM ${t("posts")} WHERE doc_id IN " +
             s"(SELECT doc_id FROM ${v(touched)})"),
         insert = Seq(
           v => s"INSERT INTO $edges SELECT * FROM ${v(headEdges)}",
-          v => s"INSERT INTO ${t.posts} SELECT * FROM ${v(shNew)}"))
+          v => s"INSERT INTO ${t("posts")} SELECT * FROM ${v(shNew)}"))
     } finally { scratch.release(); held.release() }
   }
 
@@ -651,30 +632,30 @@ object DedupIndex {
     CdcIndex.withNameLock(s"label:$name") {
     CdcIndex.requireIndexName(name)
     graft.ops.ensureGraftCatalog(s)
-    val t = cappedLabelTables(name)
+    val t: Parts = CappedLabels.table(name, _)
     def rebuild(headV: Long): String =
       rebuildLabels(s, "lc-build", corpusTable, t, headV, labelCappedBuilds) {
         graft.ops.withDesc(s, "lc-build: df sidecar") {
           CdcIndex.createArtifact(
-            s.table(t.posts).groupBy("sh").agg(count(lit(1)).as("df")),
-            t.sidecar)
-          CdcIndex.mergeOnRead(s, t.sidecar)
+            s.table(t("posts")).groupBy("sh").agg(count(lit(1)).as("df")),
+            t("df"))
+          CdcIndex.mergeOnRead(s, t("df"))
         }
         // the capped view: postings whose shingle survives the df cap —
         // every posting list entering the self-join is ≤ cap docs. Size
         // hint: Σ df·(df−1) over the cap-surviving shingles bounds the
         // symmetric pair count — one aggregate over the
         // (shingle-count-sized) sidecar, BEFORE the edge build
-        val okDf = s.table(t.sidecar).filter(col("df") <= cap)
-        (jaccardEdgesFromShingles(s.table(t.posts)
+        val okDf = s.table(t("df")).filter(col("df") <= cap)
+        (jaccardEdgesFromShingles(s.table(t("posts"))
             .join(okDf.select("sh"), Seq("sh"), "left_semi")),
           () => okDf.agg(coalesce(sum(expr("df * (df - 1)")), lit(0L)))
             .head.getLong(0))
       }
-    CdcIndex.ensure(s, corpusTable, t.meta)(t.labels) { (v0, headV) =>
+    CdcIndex.ensure(s, corpusTable, t("meta"))(t("labels")) { (v0, headV) =>
       if (!applyLabelsCappedInc(s, corpusTable, t, cap, v0, headV))
         rebuild(headV)
-      t.labels
+      t("labels")
     }(rebuild)
   }
 
@@ -702,8 +683,8 @@ object DedupIndex {
     * capped rows derive from the STORED postings (no re-shingle) and
     * the postings/df artifacts need no writes for them. */
   private def applyLabelsCappedInc(s: SparkSession, corpusTable: String,
-      t: LabelTables, cap: Int, v0: Long, headV: Long): Boolean = {
-    val dfTab = t.sidecar
+      t: Parts, cap: Int, v0: Long, headV: Long): Boolean = {
+    val dfTab = t("df")
     val feed = s.sql(s"SELECT * FROM $corpusTable " +
       s"VERSION AS OF 'cdf:$v0..$headV'")
     if (graft.ops.withDesc(s, "lc-apply: erasure probe")(
@@ -711,7 +692,7 @@ object DedupIndex {
       return false // erasure slice → rebuild
     val feedTouched = graft.ops.withDesc(s, "lc-apply: touched ckpt")(
       feed.select(col("doc_id")).distinct().localCheckpoint(true))
-    val stored = s.table(t.labels)
+    val stored = s.table(t("labels"))
     if (graft.ops.withDesc(s, "lc-apply: stored probe")(
         stored.join(feedTouched, Seq("doc_id"), "left_semi")
           .limit(1).count() > 0L))
@@ -733,7 +714,7 @@ object DedupIndex {
       // + their HEAD df, recomputed from the logical head postings
       // (stored ∪ fresh) — identical values on any replay
       val affected = shNewFeed.select("sh").distinct()
-      val postsStored = s.table(t.posts)
+      val postsStored = s.table(t("posts"))
       val postsHeadFull = postsStored
         .join(feedTouched, Seq("doc_id"), "left_anti") // replay paranoia
         .unionAll(shNewFeed)
@@ -789,7 +770,7 @@ object DedupIndex {
       // path (ADVICE r13).
       if (anyCross) {
         val crossCnt = crossDocs.count()
-        val storedCnt = s.table(s"${t.labels}.files")
+        val storedCnt = s.table(s"${t("labels")}.files")
           .agg(coalesce(sum("live_rows"), lit(0L))).head.getLong(0)
         if (crossCnt * 3L > storedCnt) return false
       }
@@ -839,7 +820,7 @@ object DedupIndex {
         retract = Seq(v =>
           s"DELETE FROM $dfTab WHERE sh IN (SELECT sh FROM ${v(affected)})"),
         insert = Seq(
-          v => s"INSERT INTO ${t.posts} SELECT * FROM ${v(shNewFeed)}",
+          v => s"INSERT INTO ${t("posts")} SELECT * FROM ${v(shNewFeed)}",
           v => s"INSERT INTO $dfTab SELECT * FROM ${v(dfRows)}"))
       true
     } finally { scratch.release(); held.release() }
@@ -911,7 +892,7 @@ object DedupIndex {
     graft.ops.ensureGraftCatalog(s)
     force.foreach(f => require(f == "exact" || f == "capped",
       s"ensureLabels: unknown family '$f' (want exact|capped)"))
-    val meta = s"graft_cat.db.dedup_${name}_lu_choice"
+    val meta = IndexFamily.choiceTable(name)
     val recorded: Option[String] =
       if (!s.catalog.tableExists(meta)) None
       else s.table(meta).select("family").collect()
@@ -938,10 +919,8 @@ object DedupIndex {
       // a force that supersedes a recorded choice retires the old
       // family's artifacts (its meta watermark included) — one name,
       // one index
-      recorded.foreach { old =>
-        (if (old == "exact") exactLabelTables(name)
-         else cappedLabelTables(name)).drop(s)
-      }
+      recorded.foreach(old =>
+        (if (old == "exact") ExactLabels else CappedLabels).drop(s, name))
       s.sql(s"DROP TABLE IF EXISTS $meta")
       s.sql(s"CREATE TABLE $meta (family STRING, forced BOOLEAN, " +
         "max_df BIGINT, n_posts BIGINT, pair_bound BIGINT, corpus STRING)")
@@ -993,15 +972,14 @@ object DedupIndex {
   def ensureGramsCdc(s: SparkSession, corpusTable: String,
       name: String): String = CdcIndex.withNameLock(s"dedup-gr:$name") {
     CdcIndex.requireIndexName(name)
-    val f = gramsKeyed(name)
-    CdcIndex.ensureKeyed(s, corpusTable, f)
-    f.artifacts.head._1
+    CdcIndex.ensureKeyed(s, corpusTable, gramsKeyed(name))
+    Grams.table(name, "grams")
   }
 
   /** The gram family as a [[CdcIndex.Keyed]] (keyed by `doc_id`). */
   private[graft] def gramsKeyed(name: String): CdcIndex.Keyed = {
-    val grams = s"graft_cat.db.dedup_${name}_gr_grams"
-    CdcIndex.Keyed(s"graft_cat.db.dedup_${name}_gr_meta", "doc_id", "doc_id",
+    val grams = Grams.table(name, "grams")
+    CdcIndex.Keyed(Grams.meta(name), "doc_id", "doc_id",
       Seq("doc_id", "text"), Seq(grams -> (gramRows(_))), { head =>
         CdcIndex.createArtifact(gramRows(head, widen = true), grams)
         gramBuilds.incrementAndGet()

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import IndexFamily.{CappedLabels, ExactLabels}
 
 /** ext140 — the end-to-end LLM corpus pipeline, one oracle-checked
   * entry chaining the curation operators the catalog provides piecemeal
@@ -154,19 +155,9 @@ object Pipeline {
     * the label and postings artifacts. */
   val erasureE2e: Q = (s, d) => {
     graft.ops.ensureGraftCatalog(s)
-    Seq("er_docs", "er_vecs",
-      "dedup_er_sigs", "dedup_er_meta",
-      "dedup_er_gr_grams", "dedup_er_gr_meta",
-      "dedup_er_lb_labels", "dedup_er_lb_edges", "dedup_er_lb_posts",
-      "dedup_er_lb_meta",
-      "dedup_er_lc_labels", "dedup_er_lc_posts", "dedup_er_lc_df",
-      "dedup_er_lc_meta",
-      "search_er_postings", "search_er_docs", "search_er_meta",
-      "ann_er_cells", "ann_er_cents", "ann_er_meta",
-      "ann_er_pq_codes", "ann_er_pq_cents", "ann_er_pq_meta",
-      "ann_er_sq_codes", "ann_er_sq_meta",
-      "ann_er_gr_edges", "ann_er_gr_meta")
+    Seq("er_docs", "er_vecs")
       .foreach(t => s.sql(s"DROP TABLE IF EXISTS graft_cat.db.$t"))
+    IndexFamily.All.foreach(_.drop(s, "er"))
     s.sql("CREATE TABLE graft_cat.db.er_vecs (vec_id BIGINT, label INT, " +
       "v ARRAY<DOUBLE>, norm DOUBLE) " +
       "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
@@ -189,8 +180,8 @@ object Pipeline {
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("norm", expr("sqrt(aggregate(v, 0D, (a, x) -> a + x * x))"))
       .writeTo("graft_cat.db.er_vecs").append()
-    // the nine families, each named by the audit leg its returned table
-    // feeds. Their builds write DISJOINT artifact sets: overlap them
+    // every registered family, each named by the audit leg its returned
+    // table feeds. Their builds write DISJOINT artifact sets: overlap them
     // (optimization guide §2.6 — the striped ensure* locks + thread-
     // scoped txns make concurrent maintenance of different indexes in
     // one driver safe; measured r15: the builds are many small stages,
@@ -198,19 +189,9 @@ object Pipeline {
     // without changing any artifact). The two label families share the
     // "label:er" lock and serialize with each other by design.
     val (docs, vecs) = ("graft_cat.db.er_docs", "graft_cat.db.er_vecs")
-    val families: Seq[(String, () => String)] = Seq(
-      "minhash-signatures" -> (() => DedupIndex.ensureCdc(s, docs, "er").sigs),
-      "exact-grams" -> (() => DedupIndex.ensureGramsCdc(s, docs, "er")),
-      "component-labels" -> (() => DedupIndex.ensureLabelsCdc(s, docs, "er")),
-      "component-labels-capped" ->
-        (() => DedupIndex.ensureLabelsCappedCdc(s, docs, "er")),
-      "bm25-postings" -> (() => SearchIndex.ensureCdc(s, docs, "er").postings),
-      "ivf-cells" -> (() => AnnIndex.ensureCdc(s, vecs, "er").cells),
-      "pq-codes" -> (() => AnnIndex.ensurePqCdc(s, vecs, "er").codes),
-      "sq-codes" -> (() => AnnIndex.ensureSqCdc(s, vecs, "er")),
-      "nsw-edges" -> (() => AnnIndex.ensureGraphCdc(s, vecs, "er")))
-    def ensureAll(): Map[String, String] = families.map(_._1)
-      .zip(graft.ops.inParallel(families.map(_._2))).toMap
+    def ensureAll(): Map[String, String] = IndexFamily.All.map(_.id)
+      .zip(graft.ops.inParallel(IndexFamily.All.map(f => () =>
+        f.ensure(s, if (f.vectors) vecs else docs, "er")))).toMap
     ensureAll()
     // the erasure request lands on the PRIMARY tables only
     s.sql(s"DELETE FROM $docs WHERE doc_id % 7 = 2")
@@ -223,21 +204,21 @@ object Pipeline {
         count(lit(1)).as("n_live"))
         .select(lit(family).as("family"),
           col("n_erased_live"), col("n_live"))
-    leg("bm25-doclens", "graft_cat.db.search_er_docs", "doc_id")
+    leg("bm25-doclens", IndexFamily.Postings.table("er", "docs"), "doc_id")
       .unionAll(leg("bm25-postings", t("bm25-postings"), "doc_id"))
       .unionAll(leg("component-labels", t("component-labels"), "doc_id"))
-      .unionAll(s.table("graft_cat.db.dedup_er_lb_edges").agg(
+      .unionAll(s.table(ExactLabels.table("er", "edges")).agg(
         count(when(col("a_id") % 7 === 2 || col("b_id") % 7 === 2, 1))
           .as("n_erased_live"),
         count(lit(1)).as("n_live"))
         .select(lit("component-edges").as("family"),
           col("n_erased_live"), col("n_live")))
       .unionAll(leg("component-postings",
-        "graft_cat.db.dedup_er_lb_posts", "doc_id"))
+        ExactLabels.table("er", "posts"), "doc_id"))
       .unionAll(leg("component-labels-capped",
         t("component-labels-capped"), "doc_id"))
       .unionAll(leg("component-capped-postings",
-        "graft_cat.db.dedup_er_lc_posts", "doc_id"))
+        CappedLabels.table("er", "posts"), "doc_id"))
       .unionAll(leg("ivf-cells", t("ivf-cells"), "vec_id"))
       .unionAll(leg("minhash-signatures", t("minhash-signatures"), "doc_id"))
       .unionAll(leg("exact-grams", t("exact-grams"), "doc_id"))
@@ -288,14 +269,13 @@ object Pipeline {
     graft.ops.ensureGraftCatalog(s)
     // hermetic start: a previous run's choice record or capped
     // artifacts would re-route step 1
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.dedup_er2_lu_choice")
-    Seq("lc_labels", "lc_posts", "lc_df", "lc_meta").foreach(x =>
-      s.sql(s"DROP TABLE IF EXISTS graft_cat.db.dedup_er2_$x"))
+    s.sql(s"DROP TABLE IF EXISTS ${IndexFamily.choiceTable("er2")}")
+    CappedLabels.drop(s, "er2")
     Dedup.ensureLabelSeeds(s, d)
     Dedup.cloneLabelIndex(s, "full", "graft_cat.db.er2_docs", "er2")
     // 1. auto choice (records exact) + covered no-op on the clone
     DedupIndex.ensureLabels(s, "graft_cat.db.er2_docs", "er2")
-    val cA = s.table("graft_cat.db.dedup_er2_lu_choice")
+    val cA = s.table(IndexFamily.choiceTable("er2"))
       .select("family", "forced").head
     val (famA, forcedA) = (cA.getString(0), cA.getBoolean(1))
     // 2. erasure request, propagated through the SAME entry point
@@ -309,15 +289,15 @@ object Pipeline {
           col("n_erased_live"), col("n_live"))
     val e7 = (c: Column) => c % 7 === 2
     val exactLegs =
-      leg("exact-labels", "graft_cat.db.dedup_er2_lb_labels", "doc_id",
+      leg("exact-labels", ExactLabels.table("er2", "labels"), "doc_id",
         e7(col("doc_id")))
-        .unionAll(s.table("graft_cat.db.dedup_er2_lb_edges").agg(
+        .unionAll(s.table(ExactLabels.table("er2", "edges")).agg(
           count(when(e7(col("a_id")) || e7(col("b_id")), 1))
             .as("n_erased_live"),
           count(lit(1)).as("n_live"))
           .select(lit("exact-edges").as("family"),
             col("n_erased_live"), col("n_live")))
-        .unionAll(leg("exact-posts", "graft_cat.db.dedup_er2_lb_posts",
+        .unionAll(leg("exact-posts", ExactLabels.table("er2", "posts"),
           "doc_id", e7(col("doc_id"))))
         .localCheckpoint(true) // step 3 retires these tables
     // 3. forced family switch mid-life
@@ -327,14 +307,14 @@ object Pipeline {
     //    documented linear rebuild
     s.sql("DELETE FROM graft_cat.db.er2_docs WHERE doc_id % 5 = 1")
     DedupIndex.ensureLabels(s, "graft_cat.db.er2_docs", "er2")
-    val cB = s.table("graft_cat.db.dedup_er2_lu_choice")
+    val cB = s.table(IndexFamily.choiceTable("er2"))
       .select("family", "forced").head
     val (famB, forcedB) = (cB.getString(0), cB.getBoolean(1))
     val eB = (c: Column) => c % 7 === 2 || c % 5 === 1
     val cappedLegs =
-      leg("capped-labels", "graft_cat.db.dedup_er2_lc_labels", "doc_id",
+      leg("capped-labels", CappedLabels.table("er2", "labels"), "doc_id",
         eB(col("doc_id")))
-        .unionAll(leg("capped-posts", "graft_cat.db.dedup_er2_lc_posts",
+        .unionAll(leg("capped-posts", CappedLabels.table("er2", "posts"),
           "doc_id", eB(col("doc_id"))))
     val choiceLegs = s.range(1).select(
         lit(s"lu-choice-a-$famA").as("family"),
@@ -380,8 +360,7 @@ object Pipeline {
     val sigT = DedupIndex.ensure(s, corpus,
       "inc_" + d.replaceAll("[^a-zA-Z0-9]", "_"))
     s.sql("DROP TABLE IF EXISTS graft_cat.db.inc_docs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.dedup_inc_pipe_gr_grams")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.dedup_inc_pipe_gr_meta")
+    IndexFamily.Grams.drop(s, "inc_pipe")
     s.sql("CREATE TABLE graft_cat.db.inc_docs (doc_id BIGINT, " +
       "text STRING) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     corpus.writeTo("graft_cat.db.inc_docs").append()

@@ -374,9 +374,7 @@ object Search {
   val cdcBm25Maintenance: Q = (s, d) => {
     graft.ops.ensureGraftCatalog(s)
     s.sql("DROP TABLE IF EXISTS graft_cat.db.cdc_sdocs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.search_cdc_sr_postings")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.search_cdc_sr_docs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.search_cdc_sr_meta")
+    IndexFamily.Postings.drop(s, "cdc_sr")
     s.sql("CREATE TABLE graft_cat.db.cdc_sdocs (doc_id BIGINT, " +
       "text STRING) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     table(s, d, "documents").select(col("doc_id"), col("text"))

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import IndexFamily.Postings
 
 /** PERSISTED lexical index: the inverted postings of the BM25 demo
   * (ext70) stored as `graft_cat` catalog tables with incremental append
@@ -116,10 +117,9 @@ object SearchIndex {
       tables(name)
     }
 
-  private def tables(name: String): Tables =
-    Tables(s"graft_cat.db.search_${name}_postings",
-      s"graft_cat.db.search_${name}_docs",
-      s"graft_cat.db.search_${name}_meta")
+  private def tables(name: String): Tables = Tables(
+    Postings.table(name, "postings"), Postings.table(name, "docs"),
+    Postings.meta(name))
 
   /** The postings family as a [[CdcIndex.Keyed]] (keyed by `doc_id`). */
   private[graft] def postingsKeyed(name: String): CdcIndex.Keyed = {

@@ -679,9 +679,7 @@ object Similarity {
     graft.ops.ensureGraftCatalog(s)
     graft.functions.CosineSimilarity.register(s)
     s.sql("DROP TABLE IF EXISTS graft_cat.db.cdc_vecs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.ann_cdc_vecs_cells")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.ann_cdc_vecs_cents")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.ann_cdc_vecs_meta")
+    IndexFamily.Ivf.drop(s, "cdc_vecs")
     s.sql("CREATE TABLE graft_cat.db.cdc_vecs (vec_id BIGINT, " +
       "v ARRAY<DOUBLE>, norm DOUBLE) " +
       "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
@@ -784,9 +782,7 @@ object Similarity {
   val pqCdcMaintenance: Q = (s, d) => {
     graft.ops.ensureGraftCatalog(s)
     s.sql("DROP TABLE IF EXISTS graft_cat.db.cdc_pqvecs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.ann_cdc_pq_pq_codes")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.ann_cdc_pq_pq_cents")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.ann_cdc_pq_pq_meta")
+    IndexFamily.Pq.drop(s, "cdc_pq")
     s.sql("CREATE TABLE graft_cat.db.cdc_pqvecs (vec_id BIGINT, " +
       "v ARRAY<DOUBLE>) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     vecs(s, d).select(col("vec_id"), col("v"))
@@ -897,8 +893,7 @@ object Similarity {
   val sqCdcMaintenance: Q = (s, d) => {
     graft.ops.ensureGraftCatalog(s)
     s.sql("DROP TABLE IF EXISTS graft_cat.db.cdc_sqvecs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.ann_cdc_sq_sq_codes")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.ann_cdc_sq_sq_meta")
+    IndexFamily.Sq.drop(s, "cdc_sq")
     s.sql("CREATE TABLE graft_cat.db.cdc_sqvecs (vec_id BIGINT, " +
       "v ARRAY<DOUBLE>) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     vecs(s, d).select(col("vec_id"), col("v"))
@@ -1347,8 +1342,7 @@ object Similarity {
     graft.ops.ensureGraftCatalog(s)
     graft.functions.CosineSimilarity.register(s)
     s.sql("DROP TABLE IF EXISTS graft_cat.db.gr_tvecs")
-    Seq("gr_edges", "gr_meta").foreach(x =>
-      s.sql(s"DROP TABLE IF EXISTS graft_cat.db.ann_gr_tix_$x"))
+    IndexFamily.Graph.drop(s, "gr_tix")
     s.sql("CREATE TABLE graft_cat.db.gr_tvecs (vec_id BIGINT, label INT, " +
       "v ARRAY<DOUBLE>) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     val (corpus, entry) = trainedProbeN(s, d, probes = 8, lloydIters = 2,
@@ -1369,8 +1363,7 @@ object Similarity {
     graft.ops.ensureGraftCatalog(s)
     graft.functions.CosineSimilarity.register(s)
     s.sql("DROP TABLE IF EXISTS graft_cat.db.gr_vecs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.ann_gr_ix_gr_edges")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.ann_gr_ix_gr_meta")
+    IndexFamily.Graph.drop(s, "gr_ix")
     s.sql("CREATE TABLE graft_cat.db.gr_vecs (vec_id BIGINT, label INT, " +
       "v ARRAY<DOUBLE>) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     vecs(s, d).select(col("vec_id"), col("label"), col("v"))
@@ -1395,8 +1388,7 @@ object Similarity {
     graft.ops.ensureGraftCatalog(s)
     graft.functions.CosineSimilarity.register(s)
     s.sql("DROP TABLE IF EXISTS graft_cat.db.cdc_grvecs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.ann_cdc_gr_gr_edges")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.ann_cdc_gr_gr_meta")
+    IndexFamily.Graph.drop(s, "cdc_gr")
     s.sql("CREATE TABLE graft_cat.db.cdc_grvecs (vec_id BIGINT, label INT, " +
       "v ARRAY<DOUBLE>) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     vecs(s, d).select(col("vec_id"), col("label"), col("v"))

@@ -1756,10 +1756,8 @@ object SemiStructured {
     * vectors) agrees with the data it summarizes, without scanning it. */
   val q178IndexInventory: Q = (s, d) => {
     ensureGraftCatalog(s)
-    Seq("dedup_inv_q_sigs", "dedup_inv_q_meta", "search_inv_q_postings",
-      "search_inv_q_docs", "search_inv_q_meta",
-      "inv_q_vecs", "ann_inv_q_sq_codes", "ann_inv_q_sq_meta").foreach(t =>
-      s.sql(s"DROP TABLE IF EXISTS graft_cat.db.$t"))
+    s.sql("DROP TABLE IF EXISTS graft_cat.db.inv_q_vecs")
+    graft.ext.IndexFamily.All.foreach(_.drop(s, "inv_q"))
     val docs = table(s, d, "documents").select(col("doc_id"), col("text"))
     s.sql("CREATE TABLE graft_cat.db.inv_q_vecs (vec_id BIGINT, " +
       "v ARRAY<DOUBLE>) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")

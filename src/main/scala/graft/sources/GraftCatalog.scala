@@ -5154,42 +5154,18 @@ class VacuumProcedure(catalog: GraftCatalog) extends UnboundProcedure {
   }
 }
 
-/** `CALL graft_cat.system.clone('db.src', 'db.dst')` — zero-copy shallow
-  * clone ([[GraftCatalog.cloneTable]]). */
 /** Persisted-index inventory (`CALL system.indexes('db')`): one row per
   * index artifact discovered by its `_meta` watermark table — family
-  * (minhash-signatures / exact-grams / component-labels / ivf-cells /
-  * pq-codes / sq-codes / nsw-edges / bm25-postings), index
+  * (minhash-signatures / exact-grams / component-labels /
+  * component-labels-capped / ivf-cells / pq-codes / sq-codes /
+  * nsw-edges / bm25-postings), index
   * name, the data table, its live row count (manifest arithmetic,
   * deletion vectors subtracted), segment count, and the data table's
   * committed head version. The operational complement of the ensure*()
   * maintenance entry points: which derived artifacts exist and how big
-  * they are, answerable without touching data. */
-object IndexesProcedure {
-  /** THE single source of truth for index-family classification — one
-    * row per persisted-index family:
-    * (family, meta prefix, reserved name suffix or "", data suffix).
-    * A family's meta table is named `<prefix>_<name><suffix>_meta` and
-    * its data table `<prefix>_<name><suffix>_<dataSuffix>`. The
-    * inventory classifier derives its candidate branches from this
-    * table, `CdcIndex.requireBaseFamilyName` derives the base-family
-    * ensure*() name rejections from it, and the completeness spec
-    * enumerates it — a new family added here is automatically
-    * classified, name-protected, and spec-covered; one added anywhere
-    * else fails the completeness spec. Within a prefix, suffixed rows
-    * MUST precede the unsuffixed fallback (candidate priority). */
-  val Families: Seq[(String, String, String, String)] = Seq(
-    ("exact-grams",        "dedup",  "_gr", "grams"),
-    ("component-labels",   "dedup",  "_lb", "labels"),
-    ("component-labels-capped", "dedup", "_lc", "labels"),
-    ("minhash-signatures", "dedup",  "",    "sigs"),
-    ("bm25-postings",      "search", "",    "postings"),
-    ("pq-codes",           "ann",    "_pq", "codes"),
-    ("sq-codes",           "ann",    "_sq", "codes"),
-    ("nsw-edges",          "ann",    "_gr", "edges"),
-    ("ivf-cells",          "ann",    "",    "cells"))
-}
-
+  * they are, answerable without touching data. The families, their
+  * table names and their classification priority all come from
+  * [[graft.ext.IndexFamily.All]]. */
 class IndexesProcedure(catalog: GraftCatalog) extends UnboundProcedure {
   override def name(): String = "indexes"
   override def description(): String =
@@ -5204,46 +5180,32 @@ class IndexesProcedure(catalog: GraftCatalog) extends UnboundProcedure {
     override def call(input: InternalRow): util.Iterator[Scan] = {
       import org.apache.spark.unsafe.types.UTF8String
       val ns = input.getUTF8String(0).toString
-      val MetaRe = "(dedup|ann|search)_(.+)_meta".r
-      // (family, data table, index display name) candidates in priority
-      // order. Base-family ensure entry points reject index names ending
-      // in their prefix's sub-family suffixes
-      // (CdcIndex.requireBaseFamilyName), so the suffix-specific
-      // candidate is authoritative for all indexes built through this
-      // codebase — but a LEGACY artifact whose name carries a reserved
-      // suffix still resolves via the sibling-family fallback (its
-      // sub-family data table is absent, its base-family one exists)
-      // instead of silently vanishing from the inventory. The display
-      // name strips exactly ONE suffix — the one the matched family
-      // owns — never a chain (a PQ index named 'a_sq' has meta base
-      // 'a_sq_pq' and must report 'a_sq', not 'a').
-      def candidates(fam0: String, base: String)
-          : Seq[(String, String, String)] =
-        IndexesProcedure.Families.collect {
-          case (family, p, suffix, dataSuffix)
-              if p == fam0 && (suffix.isEmpty || base.endsWith(suffix)) =>
-            (family, s"${p}_${base}_$dataSuffix", base.stripSuffix(suffix))
-        }
+      // candidates in priority order (IndexFamily.candidates). Base-
+      // family ensure entry points reject index names ending in their
+      // prefix's sub-family suffixes (CdcIndex.requireBaseFamilyName), so
+      // the suffix-specific candidate is authoritative for all indexes
+      // built through this codebase — but a LEGACY artifact whose name
+      // carries a reserved suffix still resolves via the sibling-family
+      // fallback (its sub-family data table is absent, its base-family
+      // one exists) instead of silently vanishing from the inventory.
       val rows = catalog.listTables(Array(ns)).toSeq
-        .map(_.name()).sorted.flatMap {
-          case MetaRe(fam0, base) =>
-            // first candidate whose data table resolves wins; a meta
-            // with NO resolvable data table = a torn build the next
-            // ensure*() will rebuild — not an inventory row
-            candidates(fam0, base).iterator.flatMap {
-              case (family, dataName, display) =>
-                try {
-                  val t = catalog.segTable(s"$ns.$dataName")
-                  Some(new GenericInternalRow(Array[Any](
-                    UTF8String.fromString(family),
-                    UTF8String.fromString(display),
-                    UTF8String.fromString(s"$ns.$dataName"),
-                    t.currentLiveRows,
-                    t.currentSegmentCount.toLong,
-                    t.currentVersion)): InternalRow)
-                } catch { case _: Exception => None }
-            }.take(1).toSeq
-          case _ => None
+        .map(_.name()).sorted.flatMap { t =>
+          // first candidate whose data table resolves wins; a meta with
+          // NO resolvable data table = a torn build the next ensure*()
+          // will rebuild — not an inventory row
+          graft.ext.IndexFamily.candidates(t).iterator.flatMap {
+            case (f, display, dataName) =>
+              try {
+                val seg = catalog.segTable(s"$ns.$dataName")
+                Some(new GenericInternalRow(Array[Any](
+                  UTF8String.fromString(f.id),
+                  UTF8String.fromString(display),
+                  UTF8String.fromString(s"$ns.$dataName"),
+                  seg.currentLiveRows,
+                  seg.currentSegmentCount.toLong,
+                  seg.currentVersion)): InternalRow)
+              } catch { case _: Exception => None }
+          }.take(1).toSeq
         }
       val schema = StructType(Seq(
         StructField("family", StringType, nullable = false),
@@ -5258,6 +5220,8 @@ class IndexesProcedure(catalog: GraftCatalog) extends UnboundProcedure {
   }
 }
 
+/** `CALL graft_cat.system.clone('db.src', 'db.dst')` — zero-copy shallow
+  * clone ([[GraftCatalog.cloneTable]]). */
 class CloneProcedure(catalog: GraftCatalog) extends UnboundProcedure {
   override def name(): String = "clone"
   override def description(): String =

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ext.IndexFamily
 import graft.ops.{dsum, events, scratchDir, sessionToken, Q}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -655,33 +656,15 @@ object Streams {
     * probes an index that is as fresh as the last commit. */
   val streamIndexMaintenance: Q = (s, d) => {
     graft.ops.ensureGraftCatalog(s)
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.six_docs")
-    s.sql("CREATE TABLE graft_cat.db.six_docs (doc_id BIGINT, text STRING)")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.dedup_stream_six_sigs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.dedup_stream_six_meta")
-    val docs = graft.ops.table(s, d, "documents")
-      .select(col("doc_id"), col("text"))
-    docs.filter(col("doc_id") < 400).writeTo("graft_cat.db.six_docs").append()
-    withStreamShuffle(s) {
-      val query = s.readStream.table("graft_cat.db.six_docs")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // the micro-batch runs on a cloned session: re-register the
-          // catalog there before resolving catalog identifiers
-          val bs = batch.sparkSession
-          graft.ops.ensureGraftCatalog(bs)
-          graft.ext.DedupIndex.ensure(bs,
-            bs.table("graft_cat.db.six_docs"), "stream_six")
-          ()
-        }.start()
-      try {
-        query.processAllAvailable()
-        docs.filter(col("doc_id") >= 400)
-          .writeTo("graft_cat.db.six_docs").append()
-        query.processAllAvailable()
-      } finally query.stop()
-    }
-    graft.ext.Dedup.lshOverSig(s.table("graft_cat.db.dedup_stream_six_sigs"))
+    IndexFamily.Sigs.drop(s, "stream_six")
+    val (t, docs) = ("graft_cat.db.six_docs", graft.ops.table(s, d, "documents")
+      .select(col("doc_id"), col("text")))
+    streamMaintained(s, t, "doc_id BIGINT, text STRING",
+      docs.filter(col("doc_id") < 400), t)(bs =>
+      graft.ext.DedupIndex.ensure(bs, bs.table(t), "stream_six"))(
+      () => docs.filter(col("doc_id") >= 400).writeTo(t).append())
+    graft.ext.Dedup.lshOverSig(
+      s.table(IndexFamily.Sigs.table("stream_six", "sigs")))
   }
 
   /** ext138 — THE FULL INGEST→INDEX PIPELINE UNDER DELETES: where ext133
@@ -705,48 +688,21 @@ object Streams {
     * current — erasure deletes included — at cost ∝ change volume. */
   val streamCdcIndexMaintenance: Q = (s, d) => {
     graft.ops.ensureGraftCatalog(s)
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.scdc_docs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.dedup_stream_cdc_sigs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.dedup_stream_cdc_meta")
-    s.sql("CREATE TABLE graft_cat.db.scdc_docs (doc_id BIGINT, " +
-      "text STRING) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
-    val docs = graft.ops.table(s, d, "documents")
-      .select(col("doc_id"), col("text"))
-    docs.filter(col("doc_id") < 400).writeTo("graft_cat.db.scdc_docs").append()
-    withStreamShuffle(s) {
-      val query = s.readStream.table("graft_cat.db.scdc_docs.changes")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bs = batch.sparkSession
-          graft.ops.ensureGraftCatalog(bs)
-          graft.ext.DedupIndex.ensureCdc(bs,
-            "graft_cat.db.scdc_docs", "stream_cdc")
-          ()
-        }.start()
-      try {
-        query.processAllAvailable()
-        docs.filter(col("doc_id") >= 400)
-          .writeTo("graft_cat.db.scdc_docs").append()
-        s.sql("DELETE FROM graft_cat.db.scdc_docs WHERE doc_id % 7 = 0")
-        s.sql("UPDATE graft_cat.db.scdc_docs " +
-          "SET text = concat(text, ' graft cdc rev') WHERE doc_id % 11 = 3")
-        query.processAllAvailable()
-      } finally query.stop()
+    IndexFamily.Sigs.drop(s, "stream_cdc")
+    val (t, docs) = ("graft_cat.db.scdc_docs", graft.ops.table(s, d, "documents")
+      .select(col("doc_id"), col("text")))
+    streamMaintained(s, t, "doc_id BIGINT, text STRING",
+      docs.filter(col("doc_id") < 400), s"$t.changes")(
+      IndexFamily.Sigs.ensure(_, t, "stream_cdc")) { () =>
+      docs.filter(col("doc_id") >= 400).writeTo(t).append()
+      s.sql(s"DELETE FROM $t WHERE doc_id % 7 = 0")
+      s.sql(s"UPDATE $t SET text = concat(text, ' graft cdc rev') " +
+        "WHERE doc_id % 11 = 3")
     }
-    graft.ext.Dedup.lshOverSig(s.table("graft_cat.db.dedup_stream_cdc_sigs"))
+    graft.ext.Dedup.lshOverSig(
+      s.table(IndexFamily.Sigs.table("stream_cdc", "sigs")))
   }
 
-  /** ext151 — STREAMED MAINTENANCE OF THE SQ TIER: ext138's operating
-    * mode applied to the vector family — one streaming job tails the
-    * vector table's change feed and drives the version-keyed
-    * [[graft.ext.AnnIndex.ensureSqCdc]] from `foreachBatch`, so appends,
-    * erasure DELETEs and re-embedding UPDATEs reach the persisted codes
-    * mid-stream as feed-sized work. The stream sees the seed append
-    * (build), a second append + a delete + an update (CDC refreshes),
-    * and the final probe over the stream-maintained codes must
-    * hash-match ext145's oracle over the post-mutation corpus — the
-    * batch and streaming maintenance paths converge to the same
-    * artifact (SQ's per-row purity makes that convergence EXACT). */
   /** ext164 — STREAMED MAINTENANCE OF THE COMPONENT-LABEL INDEX: the
     * delete-tolerant label family (round-12) under ext138's operating
     * mode — one streaming job tails the corpus change feed and drives
@@ -765,34 +721,18 @@ object Streams {
     * job). */
   val streamLabelMaintenance: Q = (s, d) => {
     graft.ops.ensureGraftCatalog(s)
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.slb_docs")
-    graft.ext.DedupIndex.exactLabelTables("stream_lb").drop(s)
-    s.sql("CREATE TABLE graft_cat.db.slb_docs (doc_id BIGINT, " +
-      "text STRING) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
-    val docs = graft.ops.table(s, d, "documents")
-      .select(col("doc_id"), col("text")).filter(col("doc_id") < 600)
-    docs.filter(col("doc_id") < 500).writeTo("graft_cat.db.slb_docs").append()
-    withStreamShuffle(s) {
-      val query = s.readStream.table("graft_cat.db.slb_docs.changes")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bs = batch.sparkSession
-          graft.ops.ensureGraftCatalog(bs)
-          graft.ext.DedupIndex.ensureLabelsCdc(bs,
-            "graft_cat.db.slb_docs", "stream_lb")
-          ()
-        }.start()
-      try {
-        query.processAllAvailable()
-        docs.filter(col("doc_id") >= 500)
-          .writeTo("graft_cat.db.slb_docs").append()
-        s.sql("DELETE FROM graft_cat.db.slb_docs WHERE doc_id % 9 = 0")
-        s.sql("UPDATE graft_cat.db.slb_docs " +
-          "SET text = text || ' graft slb rev' WHERE doc_id % 11 = 4")
-        query.processAllAvailable()
-      } finally query.stop()
+    IndexFamily.ExactLabels.drop(s, "stream_lb")
+    val (t, docs) = ("graft_cat.db.slb_docs", graft.ops.table(s, d, "documents")
+      .select(col("doc_id"), col("text")).filter(col("doc_id") < 600))
+    streamMaintained(s, t, "doc_id BIGINT, text STRING",
+      docs.filter(col("doc_id") < 500), s"$t.changes")(
+      IndexFamily.ExactLabels.ensure(_, t, "stream_lb")) { () =>
+      docs.filter(col("doc_id") >= 500).writeTo(t).append()
+      s.sql(s"DELETE FROM $t WHERE doc_id % 9 = 0")
+      s.sql(s"UPDATE $t SET text = text || ' graft slb rev' " +
+        "WHERE doc_id % 11 = 4")
     }
-    s.table("graft_cat.db.dedup_stream_lb_lb_labels")
+    s.table(IndexFamily.ExactLabels.table("stream_lb", "labels"))
       .select(col("doc_id"), col("comp").as("cluster"),
         (col("doc_id") === col("comp")).as("is_canonical"))
       .orderBy("doc_id")
@@ -812,73 +752,81 @@ object Streams {
     * discipline). */
   val streamCappedLabelMaintenance: Q = (s, d) => {
     graft.ops.ensureGraftCatalog(s)
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.slc_docs")
-    graft.ext.DedupIndex.cappedLabelTables("stream_lc").drop(s)
-    s.sql("CREATE TABLE graft_cat.db.slc_docs (doc_id BIGINT, " +
-      "text STRING) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
-    val docs = graft.ops.table(s, d, "documents")
-      .select(col("doc_id"), col("text")).filter(col("doc_id") < 600)
-    docs.filter(col("doc_id") < 500).writeTo("graft_cat.db.slc_docs").append()
-    withStreamShuffle(s) {
-      val query = s.readStream.table("graft_cat.db.slc_docs.changes")
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bs = batch.sparkSession
-          graft.ops.ensureGraftCatalog(bs)
-          graft.ext.DedupIndex.ensureLabelsCappedCdc(bs,
-            "graft_cat.db.slc_docs", "stream_lc")
-          ()
-        }.start()
-      try {
-        query.processAllAvailable()
-        docs.filter(col("doc_id") >= 500)
-          .writeTo("graft_cat.db.slc_docs").append()
-        query.processAllAvailable()
-        s.sql("DELETE FROM graft_cat.db.slc_docs WHERE doc_id % 9 = 0")
-        s.sql("UPDATE graft_cat.db.slc_docs " +
-          "SET text = text || ' graft slc rev' WHERE doc_id % 11 = 4")
-        query.processAllAvailable()
-      } finally query.stop()
-    }
-    s.table("graft_cat.db.dedup_stream_lc_lc_labels")
+    IndexFamily.CappedLabels.drop(s, "stream_lc")
+    val (t, docs) = ("graft_cat.db.slc_docs", graft.ops.table(s, d, "documents")
+      .select(col("doc_id"), col("text")).filter(col("doc_id") < 600))
+    streamMaintained(s, t, "doc_id BIGINT, text STRING",
+      docs.filter(col("doc_id") < 500), s"$t.changes")(
+      IndexFamily.CappedLabels.ensure(_, t, "stream_lc"))(
+      () => docs.filter(col("doc_id") >= 500).writeTo(t).append(),
+      () => {
+        s.sql(s"DELETE FROM $t WHERE doc_id % 9 = 0")
+        s.sql(s"UPDATE $t SET text = text || ' graft slc rev' " +
+          "WHERE doc_id % 11 = 4")
+      })
+    s.table(IndexFamily.CappedLabels.table("stream_lc", "labels"))
       .select(col("doc_id"), col("comp").as("cluster"),
         (col("doc_id") === col("comp")).as("is_canonical"))
       .orderBy("doc_id")
   }
 
+  /** ext151 — STREAMED MAINTENANCE OF THE SQ TIER: ext138's operating
+    * mode applied to the vector family — one streaming job tails the
+    * vector table's change feed and drives the version-keyed
+    * [[graft.ext.AnnIndex.ensureSqCdc]] from `foreachBatch`, so appends,
+    * erasure DELETEs and re-embedding UPDATEs reach the persisted codes
+    * mid-stream as feed-sized work. The stream sees the seed append
+    * (build), a second append + a delete + an update (CDC refreshes),
+    * and the final probe over the stream-maintained codes must
+    * hash-match ext145's oracle over the post-mutation corpus — the
+    * batch and streaming maintenance paths converge to the same
+    * artifact (SQ's per-row purity makes that convergence EXACT). */
   val streamSqMaintenance: Q = (s, d) => {
     graft.ops.ensureGraftCatalog(s)
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.ssq_vecs")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.ann_stream_sq_sq_codes")
-    s.sql("DROP TABLE IF EXISTS graft_cat.db.ann_stream_sq_sq_meta")
-    s.sql("CREATE TABLE graft_cat.db.ssq_vecs (vec_id BIGINT, " +
-      "v ARRAY<DOUBLE>) TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
-    val vecs = graft.ops.table(s, d, "embeddings")
+    IndexFamily.Sq.drop(s, "stream_sq")
+    val (t, vecs) = ("graft_cat.db.ssq_vecs", graft.ops.table(s, d, "embeddings")
       .select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-    vecs.filter(col("vec_id") < 400).writeTo("graft_cat.db.ssq_vecs").append()
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v")))
+    streamMaintained(s, t, "vec_id BIGINT, v ARRAY<DOUBLE>",
+      vecs.filter(col("vec_id") < 400), s"$t.changes")(
+      IndexFamily.Sq.ensure(_, t, "stream_sq")) { () =>
+      vecs.filter(col("vec_id") >= 400).writeTo(t).append()
+      s.sql(s"DELETE FROM $t WHERE vec_id % 9 = 0")
+      s.sql(s"UPDATE $t SET v = reverse(v) WHERE vec_id % 11 = 4")
+    }
+    graft.ext.Similarity.sqTopKFrom(s,
+      IndexFamily.Sq.table("stream_sq", "codes"), s.table(t))
+  }
+
+  /** The streamed index maintenance of ext133/138/151/164/169: `corpus`
+    * is (re)created merge-on-read with columns `cols` and seeded with
+    * `seed`; a stream over `source` (the table itself — the segment
+    * stream — or its `.changes` feed) runs `ensure` from `foreachBatch`
+    * (the micro-batch is only the notification; the index's watermark
+    * makes the reaction idempotent). The stream drains after the seed
+    * and after each of `rounds`, and stops in `finally`. */
+  private def streamMaintained(s: SparkSession, corpus: String, cols: String,
+      seed: DataFrame, source: String)(ensure: SparkSession => Unit)(
+      rounds: (() => Unit)*): Unit = {
+    s.sql(s"DROP TABLE IF EXISTS $corpus")
+    s.sql(s"CREATE TABLE $corpus ($cols) " +
+      "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
+    seed.writeTo(corpus).append()
     withStreamShuffle(s) {
-      val query = s.readStream.table("graft_cat.db.ssq_vecs.changes")
+      val query = s.readStream.table(source)
         .writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, _: Long) =>
+          // the micro-batch runs on a cloned session: re-register the
+          // catalog there before resolving catalog identifiers
           val bs = batch.sparkSession
           graft.ops.ensureGraftCatalog(bs)
-          graft.ext.AnnIndex.ensureSqCdc(bs,
-            "graft_cat.db.ssq_vecs", "stream_sq")
-          ()
+          ensure(bs)
         }.start()
       try {
         query.processAllAvailable()
-        vecs.filter(col("vec_id") >= 400)
-          .writeTo("graft_cat.db.ssq_vecs").append()
-        s.sql("DELETE FROM graft_cat.db.ssq_vecs WHERE vec_id % 9 = 0")
-        s.sql("UPDATE graft_cat.db.ssq_vecs SET v = reverse(v) " +
-          "WHERE vec_id % 11 = 4")
-        query.processAllAvailable()
+        rounds.foreach { round => round(); query.processAllAvailable() }
       } finally query.stop()
     }
-    graft.ext.Similarity.sqTopKFrom(s,
-      "graft_cat.db.ann_stream_sq_sq_codes", s.table("graft_cat.db.ssq_vecs"))
   }
 
   /** ext103 — admission-controlled catalog streaming: the ext92 source

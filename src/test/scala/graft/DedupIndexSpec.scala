@@ -725,19 +725,19 @@ class DedupIndexSpec extends SparkTestBase {
     ops.configure(spark)
     ops.ensureGraftCatalog(spark)
     val corpus = "graft_cat.db.lblcw_docs"
-    val (ix, ref) = (DedupIndex.exactLabelTables("lblcw"),
-      DedupIndex.exactLabelTables("lblcw_ref"))
+    val f = graft.ext.IndexFamily.ExactLabels
+    val (ix, ref) = (f.table("lblcw", _: String), f.table("lblcw_ref", _: String))
     // chain 1-2-3 (2 the only bridge: J(1,2) = J(2,3) = 0.5), pair 4-5
     val t1 = "a b c d e f g h"
     val t3 = "e f g h i j k l"
     val cases = Seq(
-      "edges retraction" -> Seq(ix.sidecar),
-      "postings retraction" -> Seq(ix.posts),
-      "edges + postings retraction" -> Seq(ix.sidecar, ix.posts))
+      "edges retraction" -> Seq(ix("edges")),
+      "postings retraction" -> Seq(ix("posts")),
+      "edges + postings retraction" -> Seq(ix("edges"), ix("posts")))
     cases.foreach { case (window, landed) =>
       spark.sql(s"DROP TABLE IF EXISTS $corpus")
-      ix.drop(spark)
-      ref.drop(spark)
+      f.drop(spark, "lblcw")
+      f.drop(spark, "lblcw_ref")
       spark.sql(s"CREATE TABLE $corpus (doc_id BIGINT, text STRING) " +
         "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
       spark.sql(s"INSERT INTO $corpus VALUES (1, '$t1'), " +
@@ -754,7 +754,7 @@ class DedupIndexSpec extends SparkTestBase {
           s"VERSION AS OF 'cdf:$v0..$head'")
         .collect().map(_.getLong(0)).mkString(", ")
       landed.foreach {
-        case t if t == ix.sidecar => spark.sql(
+        case t if t == ix("edges") => spark.sql(
           s"DELETE FROM $t WHERE a_id IN ($ids) OR b_id IN ($ids)")
         case t => spark.sql(s"DELETE FROM $t WHERE doc_id IN ($ids)")
       }
@@ -766,18 +766,18 @@ class DedupIndexSpec extends SparkTestBase {
       DedupIndex.ensureLabelsCdc(spark, corpus, "lblcw_ref")
       def rows(t: String) = spark.table(t).collect().map(_.toSeq.mkString(","))
         .sorted.toSeq
-      Seq(ix.labels -> ref.labels, ix.sidecar -> ref.sidecar,
-          ix.posts -> ref.posts).foreach { case (got, want) =>
+      Seq(ix("labels") -> ref("labels"), ix("edges") -> ref("edges"),
+          ix("posts") -> ref("posts")).foreach { case (got, want) =>
         assert(rows(got) === rows(want), s"$window: $got diverged")
       }
-      assert(spark.table(ix.labels).collect()
+      assert(spark.table(ix("labels")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap ===
         Map(1L -> 1L, 3L -> 3L, 7L -> 3L, 4L -> 4L, 5L -> 4L, 9L -> 4L),
         window)
     }
     spark.sql(s"DROP TABLE IF EXISTS $corpus")
-    ix.drop(spark)
-    ref.drop(spark)
+    f.drop(spark, "lblcw")
+    f.drop(spark, "lblcw_ref")
   }
 
   test("expire_versions below the watermark: maintenance rebuilds, never wedges") {

@@ -6,12 +6,13 @@ import org.apache.spark.sql.functions._
   * fixed three families that silently vanished from the inventory via
   * older families' suffix branches; this spec prevents the fourth:
   *
-  *  1. it builds ONE index of EVERY family enumerated by the single
-  *     source of truth ([[graft.sources.IndexesProcedure.Families]] —
-  *     the same table the classifier derives its branches from and the
-  *     ensure*() name validation derives its rejections from) and
-  *     asserts the inventory reports exactly that family set, so a new
-  *     family cannot ship without inventory coverage;
+  *  1. it builds ONE index of EVERY family of the registry
+  *     ([[graft.ext.IndexFamily.All]] — the rows the classifier derives
+  *     its candidates from, the ensure*() name validation its
+  *     rejections from, and whose `ensure` and `drop` this spec calls)
+  *     and asserts the inventory reports exactly that family set with
+  *     each row's data table, so a new family cannot ship without
+  *     inventory coverage;
   *  2. it pins the reserved-suffix name rejection at every family's
   *     ensure entry point (the collision that made indexes vanish);
   *  3. it pins the LEGACY fallback: a pre-rejection artifact whose
@@ -21,30 +22,15 @@ import org.apache.spark.sql.functions._
   */
 class IndexInventorySpec extends SparkTestBase {
 
-  import graft.ext.{AnnIndex, DedupIndex, SearchIndex}
-  import graft.sources.IndexesProcedure
+  import graft.ext.{AnnIndex, DedupIndex, IndexFamily, SearchIndex}
 
   private def inventory() =
     spark.sql("CALL graft_cat.system.indexes('db')")
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)))
 
-  private def dropArtifacts(name: String): Unit = {
-    val tables = Seq(
-      s"dedup_${name}_sigs", s"dedup_${name}_meta",
-      s"dedup_${name}_gr_grams", s"dedup_${name}_gr_meta",
-      s"dedup_${name}_lb_labels", s"dedup_${name}_lb_edges",
-      s"dedup_${name}_lb_posts", s"dedup_${name}_lb_meta",
-      s"dedup_${name}_lc_labels", s"dedup_${name}_lc_posts",
-      s"dedup_${name}_lc_df", s"dedup_${name}_lc_meta",
-      s"search_${name}_postings", s"search_${name}_docs",
-      s"search_${name}_meta",
-      s"ann_${name}_cells", s"ann_${name}_cents", s"ann_${name}_meta",
-      s"ann_${name}_pq_codes", s"ann_${name}_pq_cents", s"ann_${name}_pq_meta",
-      s"ann_${name}_sq_codes", s"ann_${name}_sq_meta",
-      s"ann_${name}_gr_edges", s"ann_${name}_gr_meta")
-    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft_cat.db.$t"))
-  }
+  private def dropArtifacts(name: String): Unit =
+    IndexFamily.All.foreach(_.drop(spark, name))
 
   test("one index of EVERY family: inventory reports the full family set") {
     ops.configure(spark)
@@ -69,33 +55,23 @@ class IndexInventorySpec extends SparkTestBase {
       .withColumn("norm", expr("sqrt(aggregate(v, 0D, (a, x) -> a + x * x))"))
       .writeTo(vecsT).append()
 
-    // one index per family, all under the same index name — the 9
-    // builders below are the complete set of persisted-artifact
-    // families; if Families gains a row this list goes stale and the
-    // set assertion fails, which is the point
-    DedupIndex.ensureCdc(spark, docsT, name)       // minhash-signatures
-    DedupIndex.ensureGramsCdc(spark, docsT, name)  // exact-grams
-    DedupIndex.ensureLabelsCdc(spark, docsT, name) // component-labels
-    DedupIndex.ensureLabelsCappedCdc(spark, docsT, name) // component-labels-capped
-    SearchIndex.ensureCdc(spark, docsT, name)      // bm25-postings
-    AnnIndex.ensureCdc(spark, vecsT, name)         // ivf-cells
-    AnnIndex.ensurePqCdc(spark, vecsT, name)       // pq-codes
-    AnnIndex.ensureSqCdc(spark, vecsT, name)       // sq-codes
-    AnnIndex.ensureGraphCdc(spark, vecsT, name)    // nsw-edges
+    // one index per registered family, all under the same index name;
+    // each ensure returns the data table the inventory must report
+    val wantTables = IndexFamily.All.map { f =>
+      f.id -> f.ensure(spark, if (f.vectors) vecsT else docsT, name)
+    }.toMap
+    assert(wantTables ===
+      IndexFamily.All.map(f => f.id -> f.table(name, f.data)).toMap)
 
     val rows = inventory().filter(_._2 == name)
-    val wantFamilies = IndexesProcedure.Families.map(_._1).toSet
+    val wantFamilies = IndexFamily.All.map(_.id).toSet
     assert(rows.map(_._1).toSet === wantFamilies,
       s"inventory families diverged from the source of truth: ${rows.toSeq}")
     assert(rows.length === wantFamilies.size,
       s"expected exactly one row per family: ${rows.toSeq}")
-    // each row's data table matches the Families naming scheme
-    val wantTables = IndexesProcedure.Families.map {
-      case (family, p, suffix, dataSuffix) =>
-        family -> s"db.${p}_$name${suffix}_$dataSuffix"
-    }.toMap
+    // each row's data table is its family's data table
     rows.foreach { case (family, _, dataTable) =>
-      assert(dataTable === wantTables(family),
+      assert(s"graft_cat.$dataTable" === wantTables(family),
         s"$family data table misnamed: $dataTable")
     }
     dropArtifacts(name)

@@ -287,31 +287,28 @@ class SearchIndexSpec extends SparkTestBase {
     // ensure*Cdc replays the SAME feed slice; the re-run's retraction is
     // a no-op on already-deleted keys and the txn lands the re-derive +
     // advance together
-    import graft.ext.{AnnIndex, CdcIndex, DedupIndex}
+    import graft.ext.{AnnIndex, CdcIndex, DedupIndex, IndexFamily}
     ops.configure(spark)
     ops.ensureGraftCatalog(spark)
     val (docsT, vecsT) =
       ("graft_cat.db.cdc_crash_docs", "graft_cat.db.cdc_crash_vecs")
     val n = "cdc_cr"
-    // (corpus, public ensure, the family's keyed lifecycle)
-    val families: Seq[(String, () => Any, CdcIndex.Keyed)] = Seq(
-      (docsT, () => DedupIndex.ensureCdc(spark, docsT, n),
-        DedupIndex.sigsKeyed(n)),
-      (docsT, () => DedupIndex.ensureGramsCdc(spark, docsT, n),
-        DedupIndex.gramsKeyed(n)),
-      (docsT, () => SearchIndex.ensureCdc(spark, docsT, n),
-        SearchIndex.postingsKeyed(n)),
-      (vecsT, () => AnnIndex.ensureCdc(spark, vecsT, n),
-        AnnIndex.ivfKeyed(spark, n)),
-      (vecsT, () => AnnIndex.ensurePqCdc(spark, vecsT, n),
-        AnnIndex.pqKeyed(spark, n)),
-      (vecsT, () => AnnIndex.ensureSqCdc(spark, vecsT, n),
-        AnnIndex.sqKeyed(spark, n)),
-      (vecsT, () => AnnIndex.ensureGraphCdc(spark, vecsT, n),
-        AnnIndex.graphKeyed(n)))
-    (Seq(docsT, vecsT) ++ families.flatMap { case (_, _, f) =>
-      f.meta +: f.artifacts.map(_._1) }).foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t"))
+    // (corpus, public ensure, the family's keyed lifecycle): each keyed
+    // row of the registry with its own Keyed
+    val keyed: Seq[(IndexFamily, CdcIndex.Keyed)] = Seq(
+      IndexFamily.Sigs -> DedupIndex.sigsKeyed(n),
+      IndexFamily.Grams -> DedupIndex.gramsKeyed(n),
+      IndexFamily.Postings -> SearchIndex.postingsKeyed(n),
+      IndexFamily.Ivf -> AnnIndex.ivfKeyed(spark, n),
+      IndexFamily.Pq -> AnnIndex.pqKeyed(spark, n),
+      IndexFamily.Sq -> AnnIndex.sqKeyed(spark, n),
+      IndexFamily.Graph -> AnnIndex.graphKeyed(n))
+    val families = keyed.map { case (r, f) =>
+      val corpus = if (r.vectors) vecsT else docsT
+      (corpus, () => r.ensure(spark, corpus, n), f)
+    }
+    Seq(docsT, vecsT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    keyed.foreach(_._1.drop(spark, n))
     spark.sql(s"CREATE TABLE $docsT (doc_id BIGINT, text STRING) " +
       "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
     docs.writeTo(docsT).append()
