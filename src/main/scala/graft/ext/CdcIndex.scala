@@ -388,29 +388,9 @@ private[graft] object CdcIndex {
     }
   }
 
-  /** One cross-table transaction (CALL system.txn_*): the atomic
-    * publish every CDC refresh ends with.
-    *
-    * Serialized on a JVM-global gate (round-15, VERDICT r14 #5): the
-    * catalog allows ONE open transaction per JVM (`txn_begin` throws on
-    * a second), so with the per-name build locks two concurrent ensures
-    * would otherwise race their publish windows into that error. The
-    * gate queues them instead — the expensive build phases (shingle
-    * scans, pair joins, CC) run fully in parallel; only the
-    * metadata-sized commit section serializes, which is how lakehouse
-    * commit protocols behave on a real cluster anyway (the table
-    * pointer is a CAS). */
-  private val txnGate = new Object
-  def inTxn(s: SparkSession)(body: => Unit): Unit = txnGate.synchronized {
-    graft.ops.withDesc(s, "cdc: txn publish") {
-      s.sql("CALL graft_cat.system.txn_begin()").collect()
-      try { body; s.sql("CALL graft_cat.system.txn_commit()").collect() }
-      catch {
-        case t: Throwable =>
-          try s.sql("CALL graft_cat.system.txn_abort()").collect()
-          catch { case s2: Throwable => t.addSuppressed(s2) }
-          throw t
-      }
-    }
-  }
+  /** The atomic publish every CDC refresh ends with: one gated
+    * cross-table transaction ([[graft.ops.inTxn]]) whose jobs carry the
+    * `cdc: txn publish` label. */
+  def inTxn(s: SparkSession)(body: => Unit): Unit =
+    graft.ops.inTxn(s, Some("cdc: txn publish"))(body)
 }

@@ -180,17 +180,6 @@ object IncrementalMv {
       sumMap = Map(sumCol -> "sum_v"), countCol = "cnt"))
   }
 
-  private def inTxn(s: SparkSession)(body: => Unit): Unit = {
-    s.sql("CALL graft_cat.system.txn_begin()").collect()
-    try { body; s.sql("CALL graft_cat.system.txn_commit()").collect() }
-    catch {
-      case t: Throwable =>
-        try s.sql("CALL graft_cat.system.txn_abort()").collect()
-        catch { case s2: Throwable => t.addSuppressed(s2) }
-        throw t
-    }
-  }
-
   type Q = (SparkSession, String) => DataFrame
 
   /** q173 — the end-to-end claim: build at v1, four DML waves (append,

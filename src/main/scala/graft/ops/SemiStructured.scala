@@ -1043,7 +1043,7 @@ object SemiStructured {
   }
 
   /** q151 — `CALL system.zorder`: multi-dimensional clustering (Delta's
-    * OPTIMIZE ZORDER BY, [[graft.sources.ZOrderProcedure]]). The fixture
+    * OPTIMIZE ZORDER BY, [[graft.sources.CatalogProc.ZOrder]]). The fixture
     * is a 64×64 grid scattered across 4 ingest segments — before the
     * rewrite every segment spans the full range of BOTH keys, so a 2-D
     * box predicate prunes nothing; after it each segment covers a small
@@ -1076,7 +1076,7 @@ object SemiStructured {
   }
 
   /** q152 — named version refs (Iceberg tags, [[graft.sources
-    * .TagProcedure]]): `CALL system.tag('db.t', 'rel1')` pins the
+    * .CatalogProc.Tag]]): `CALL system.tag('db.t', 'rel1')` pins the
     * current snapshot under a name; `VERSION AS OF 'rel1'` reads it
     * forever after, whatever lands on the table since. The ref is a
     * `graft.tag.rel1` property COMMIT — it versions with the table,
@@ -1398,7 +1398,7 @@ object SemiStructured {
   }
 
   /** q161 — `CALL system.evolve_spec`: partition-spec evolution
-    * ([[graft.sources.EvolveSpecProcedure]]), Iceberg's signature
+    * ([[graft.sources.CatalogProc.EvolveSpec]]), Iceberg's signature
     * metadata operation. The table starts identity-partitioned on a
     * coarse group key, takes a batch, then evolves to `bucket:4:id` —
     * one metadata-only manifest commit, no data rewritten — and takes a
@@ -1441,8 +1441,8 @@ object SemiStructured {
   }
 
   /** q162 — named branches + fast-forward merge
-    * ([[graft.sources.BranchProcedure]] /
-    * [[graft.sources.FastForwardProcedure]]): Iceberg's writable-ref
+    * ([[graft.sources.CatalogProc.Branch]] /
+    * [[graft.sources.CatalogProc.FastForward]]): Iceberg's writable-ref
     * surface. `CALL system.branch` seeds a SECOND version log in the
     * same table directory (zero bytes copied); the branch then takes a
     * multi-commit pipeline — an append and a row-level DELETE — fully

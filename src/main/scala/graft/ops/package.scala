@@ -100,6 +100,36 @@ package object ops {
   }
   private val ensureCatalogLock = new Object
 
+  /** Run `body` inside one cross-table transaction (`CALL
+    * system.txn_begin` … `txn_commit`, `txn_abort` on failure) — the
+    * atomic publish of a CDC refresh or an MV refresh. Jobs run under
+    * `desc` when given.
+    *
+    * Serialized on a JVM-global gate: the catalog allows ONE open
+    * transaction per JVM (`txn_begin` throws on a second), so two
+    * concurrent publishes would otherwise race their windows into that
+    * error. The gate queues them instead — the expensive build phases
+    * (shingle scans, pair joins, CC) run fully in parallel; only the
+    * metadata-sized commit section serializes, which is how lakehouse
+    * commit protocols behave on a real cluster anyway (the table pointer
+    * is a CAS). The gate sits outside the label, so time spent queued is
+    * not charged to it. */
+  def inTxn(s: SparkSession, desc: Option[String] = None)(body: => Unit): Unit =
+    txnGate.synchronized {
+      def run(): Unit = {
+        s.sql("CALL graft_cat.system.txn_begin()").collect()
+        try { body; s.sql("CALL graft_cat.system.txn_commit()").collect() }
+        catch {
+          case t: Throwable =>
+            try s.sql("CALL graft_cat.system.txn_abort()").collect()
+            catch { case s2: Throwable => t.addSuppressed(s2) }
+            throw t
+        }
+      }
+      desc.fold(run())(withDesc(s, _)(run()))
+    }
+  private val txnGate = new Object
+
   /** The events fixture's `ts` physical type has varied across driver
     * testdata generations: TIMESTAMP(NANOS) (no native Spark type — read
     * as long under nanosAsLong and integer-divide to micros; float math

@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, NonEmptyNamespaceException, TableAlreadyExistsException}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression => CatalystExpr, GenericInternalRow, JoinedRow, Literal => CatalystLiteral, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
+import org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
 import org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference, Transform}
@@ -153,51 +153,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * by many tasks/micro-batches accumulate segments far below the ideal
     * scan granularity, and scan parallelism degenerates into per-tiny-file
     * scheduling overhead. `expire_versions` bounds manifest history and
-    * garbage-collects segment files no retained version references. */
+    * garbage-collects segment files no retained version references.
+    * Every procedure is one row of [[CatalogProc.All]]; the lookup is
+    * case-insensitive. */
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
-    Array(Identifier.of(namespace, "compact"),
-      Identifier.of(namespace, "expire_versions"),
-      Identifier.of(namespace, "vacuum"),
-      Identifier.of(namespace, "clone"),
-      Identifier.of(namespace, "zorder"),
-      Identifier.of(namespace, "tag"),
-      Identifier.of(namespace, "rollback"),
-      Identifier.of(namespace, "evolve_spec"),
-      Identifier.of(namespace, "branch"),
-      Identifier.of(namespace, "fast_forward"),
-      Identifier.of(namespace, "cherry_pick"),
-      Identifier.of(namespace, "drop_branch"),
-      Identifier.of(namespace, "indexes"),
-      Identifier.of(namespace, "txn_begin"),
-      Identifier.of(namespace, "txn_commit"),
-      Identifier.of(namespace, "txn_abort"),
-      Identifier.of(namespace, "txn_recover"))
+    CatalogProc.All.map(p => Identifier.of(namespace, p.name)).toArray
 
-  override def loadProcedure(ident: Identifier): UnboundProcedure =
-    ident.name().toLowerCase match {
-      case "compact" => new CompactProcedure(this)
-      case "expire_versions" => new ExpireVersionsProcedure(this)
-      case "vacuum" => new VacuumProcedure(this)
-      case "clone" => new CloneProcedure(this)
-      case "zorder" => new ZOrderProcedure(this)
-      case "tag" => new TagProcedure(this)
-      case "rollback" => new RollbackProcedure(this)
-      case "evolve_spec" => new EvolveSpecProcedure(this)
-      case "branch" => new BranchProcedure(this)
-      case "fast_forward" => new FastForwardProcedure(this)
-      case "cherry_pick" => new CherryPickProcedure(this)
-      case "drop_branch" => new DropBranchProcedure(this)
-      case "indexes" => new IndexesProcedure(this)
-      case "txn_begin" => new TxnProcedure(this, "txn_begin")
-      case "txn_commit" => new TxnProcedure(this, "txn_commit")
-      case "txn_abort" => new TxnProcedure(this, "txn_abort")
-      case "txn_recover" => new TxnProcedure(this, "txn_recover")
-      case other => throw new IllegalArgumentException(
-        s"catalog $catalogName has no procedure `$other` (available: " +
-          "compact, expire_versions, vacuum, clone, zorder, tag, rollback, " +
-          "evolve_spec, branch, fast_forward, cherry_pick, drop_branch, " +
-          "indexes, txn_begin, txn_commit, txn_abort, txn_recover)")
-    }
+  override def loadProcedure(ident: Identifier): UnboundProcedure = {
+    val wanted = ident.name().toLowerCase
+    CatalogProc.All.find(_.name == wanted).getOrElse(
+      throw new IllegalArgumentException(
+        s"catalog $catalogName has no procedure `$wanted` (available: " +
+          CatalogProc.All.map(_.name).mkString(", ") + ")")).load(this)
+  }
 
   /** Resolve a dotted table name to its [[SegTable]] (procedure target). */
   private[graft] def segTable(name: String): SegTable = {
@@ -2010,7 +1978,7 @@ class SegTable private (ident: String, dir: Path,
     }
   }
 
-  // Set by [[ZOrderProcedure]] just before its INSERT OVERWRITE so the
+  // Set by [[CatalogProc.ZOrder]] just before its INSERT OVERWRITE so the
   // commit labels the version 'zorder' — a content-identical physical
   // reorganization the change feed skips like 'compact' — instead of
   // 'overwrite' (a logical replace-all a CDC consumer must replay).
@@ -3632,29 +3600,24 @@ object SegOffset {
     }
 }
 
-/** Micro-batch stream over a segment table: offsets are manifest
-  * versions, a batch is the segment diff `(start, end]` — computed from
-  * the manifest alone, re-read from disk each trigger so commits from
+/** Offsets of a micro-batch stream over one manifest log: offsets are
+  * manifest versions, re-read from disk each trigger so commits from
   * OTHER catalog instances (another session, another process) are
-  * observed. Each segment is delivered in exactly one batch; non-append
-  * history mid-stream (compaction / row-level rewrite) is refused the
-  * same way the version-range travel read refuses it. */
-class SegMicroBatchStream(tableName: String, dir: Path, scan: SegScan,
-    maxSegsPerTrigger: Option[Int] = None,
-    log: String = SegStore.MetaFile,
-    startingVersion: Option[String] = None)
-    extends MicroBatchStream with SupportsAdmissionControl {
-  private def versions: Vector[SegVersion] = SegStore.readVersions(dir, log)
+  * observed; a fresh stream starts at [[SegOffset.start]]. Nothing is
+  * retained between triggers, so `commit` and `stop` have nothing to
+  * release. */
+abstract class SegVersionStream(tableName: String, dir: Path, log: String,
+    startingVersion: Option[String]) extends MicroBatchStream {
+  protected def versions: Vector[SegVersion] = SegStore.readVersions(dir, log)
 
-  /** Where a FRESH stream (no checkpoint) begins — the `startingVersion`
-    * read option (Delta's knob of the same name). Default 'earliest'
-    * replays all history; but a table with a historical rewrite (an old
-    * merge-on-read DELETE, an overwrite) can then never start a new
-    * stream — the replay hits the non-append step and refuses forever.
-    * 'latest' streams only commits AFTER stream start (the CDC-tail
-    * operating mode); a numeric N delivers from version N inclusive
-    * (clamped to surviving history, so an expired prefix doesn't strand
-    * the offset on a version `planInputPartitions` can't resolve). */
+  /** Version `v` of `vs`, or a refusal naming the lagging stream's way
+    * out: an expired offset cannot be resumed. */
+  protected def versionAt(vs: Vector[SegVersion], v: Long): SegVersion =
+    vs.find(_.v == v).getOrElse(throw new IllegalArgumentException(
+      s"$tableName has no version $v (latest: ${vs.last.v}); it may " +
+        "have been expired while this stream lagged — restart from a " +
+        "fresh checkpoint"))
+
   override def initialOffset(): StreamOffset =
     SegOffset.start(versions, startingVersion)
   override def latestOffset(): StreamOffset = SegOffset(versions.last.v)
@@ -3662,7 +3625,20 @@ class SegMicroBatchStream(tableName: String, dir: Path, scan: SegScan,
     SegOffset(json.toLong)
   override def commit(end: StreamOffset): Unit = ()
   override def stop(): Unit = ()
+  override def createReaderFactory(): PartitionReaderFactory = SegReaderFactory
+}
 
+/** Micro-batch stream over a segment table: a batch is the segment diff
+  * `(start, end]` — computed from the manifest alone. Each segment is
+  * delivered in exactly one batch; non-append history mid-stream
+  * (compaction / row-level rewrite) is refused the same way the
+  * version-range travel read refuses it. */
+class SegMicroBatchStream(tableName: String, dir: Path, scan: SegScan,
+    maxSegsPerTrigger: Option[Int] = None,
+    log: String = SegStore.MetaFile,
+    startingVersion: Option[String] = None)
+    extends SegVersionStream(tableName, dir, log, startingVersion)
+    with SupportsAdmissionControl {
   /** Admission control (`maxSegmentsPerTrigger` read option): each
     * trigger admits the furthest version whose cumulative new-segment
     * count since the start offset stays within the cap — the lakehouse
@@ -3716,12 +3692,7 @@ class SegMicroBatchStream(tableName: String, dir: Path, scan: SegScan,
     val vs = versions
     val startV = start.asInstanceOf[SegOffset].v
     val endV = end.asInstanceOf[SegOffset].v
-    def at(v: Long): SegVersion = vs.find(_.v == v).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName has no version $v (latest: ${vs.last.v}); it may " +
-          "have been expired while this stream lagged — restart from a " +
-          "fresh checkpoint"))
-    var prev = at(startV)
+    var prev = versionAt(vs, startV)
     val newSegs = Vector.newBuilder[Seg]
     vs.filter(v => v.v > startV && v.v <= endV).sortBy(_.v).foreach { v =>
       val reorg = v.op == "compact" || v.op == "zorder" ||
@@ -3742,8 +3713,6 @@ class SegMicroBatchStream(tableName: String, dir: Path, scan: SegScan,
     }
     scan.partitionsFor(newSegs.result())
   }
-
-  override def createReaderFactory(): PartitionReaderFactory = SegReaderFactory
 }
 
 /** Streaming change-data-feed scan (`readStream.table("cat.db.t.changes")`
@@ -3778,36 +3747,22 @@ class SegCdfStreamScanBuilder(ident: String, dir: Path, cur: SegVersion,
   }
 }
 
-/** Micro-batch half of the streaming change feed: offsets are manifest
-  * versions (re-read from disk each trigger, so commits from other
-  * catalog instances are observed); a batch is [[CdfPlan.slices]] over
+/** Micro-batch half of the streaming change feed: a batch is
+  * [[CdfPlan.slices]] over
   * the step walk `(start, end]` — exactly-once per change row across
   * triggers and across checkpoint restarts. Expired intermediate
   * versions refuse (steps would merge commits and misattribute
   * versions), matching the batch feed. */
 class SegCdfMicroBatchStream(ident: String, dir: Path,
     required: StructType, startingVersion: Option[String], log: String)
-    extends MicroBatchStream {
-  private def versions: Vector[SegVersion] = SegStore.readVersions(dir, log)
-  override def initialOffset(): StreamOffset =
-    SegOffset.start(versions, startingVersion)
-  override def latestOffset(): StreamOffset = SegOffset(versions.last.v)
-  override def deserializeOffset(json: String): StreamOffset =
-    SegOffset(json.toLong)
-  override def commit(end: StreamOffset): Unit = ()
-  override def stop(): Unit = ()
-
+    extends SegVersionStream(ident, dir, log, startingVersion) {
   override def planInputPartitions(start: StreamOffset,
       end: StreamOffset): Array[InputPartition] = {
     val vs = versions
     val startV = start.asInstanceOf[SegOffset].v
     val endV = end.asInstanceOf[SegOffset].v
     if (endV <= startV) return Array.empty
-    val from = vs.find(_.v == startV).getOrElse(
-      throw new IllegalArgumentException(
-        s"$ident has no version $startV (latest: ${vs.last.v}); it may " +
-          "have been expired while this stream lagged — restart from a " +
-          "fresh checkpoint"))
+    val from = versionAt(vs, startV)
     val steps = vs.filter(v => v.v > startV && v.v <= endV)
     require(steps.size == endV - startV,
       s"$ident: versions inside v$startV..v$endV were expired; the " +
@@ -3815,8 +3770,6 @@ class SegCdfMicroBatchStream(ident: String, dir: Path,
     CdfPlan.partitions(dir, steps.last, CdfPlan.slices(ident, from, steps),
       required)
   }
-
-  override def createReaderFactory(): PartitionReaderFactory = SegReaderFactory
 }
 
 /** VECTORIZED segment read path. The row path pays per-row costs on a
@@ -3992,10 +3945,7 @@ object SegReaderFactory extends PartitionReaderFactory {
     SegColumnar.createReader(segOf(partition))
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-      val p = partition match {
-        case k: KeyedSegPartition => k.seg
-        case s: SegPartition => s
-      }
+      val p = segOf(partition)
       new PartitionReader[InternalRow] {
         private val in = new DataInputStream(new BufferedInputStream(
           Files.newInputStream(Paths.get(p.file))))
@@ -5039,20 +4989,6 @@ object SegCompactor {
   }
 }
 
-/** Single-row procedure result, surfaced to SQL through `LocalScan`. */
-private class ProcResultScan(schema: StructType, row: InternalRow)
-    extends LocalScan {
-  override def rows(): Array[InternalRow] = Array(row)
-  override def readSchema(): StructType = schema
-}
-
-/** Multi-row procedure result (the indexes() inventory). */
-private class ProcRowsScan(schema: StructType, rs: Array[InternalRow])
-    extends LocalScan {
-  override def rows(): Array[InternalRow] = rs
-  override def readSchema(): StructType = schema
-}
-
 /** Read-only manifest-backed relation ([[SegTable.metadataTable]]) —
   * driver-local by design: its rows ARE the manifest, which every
   * catalog operation already materializes on the driver. */
@@ -5067,492 +5003,7 @@ private[sources] class MetaTable(tname: String, tschema: StructType,
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new LocalScan {
-      override def rows(): Array[InternalRow] = metaRows.toArray
-      override def readSchema(): StructType = tschema
-    }
-}
-
-/** `CALL graft_cat.system.compact('db.t' [, target_bytes])`. */
-class CompactProcedure(catalog: GraftCatalog) extends UnboundProcedure {
-  override def name(): String = "compact"
-  override def description(): String =
-    "merge segment files smaller than target_bytes (small-file compaction)"
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "compact"
-    override def description(): String = CompactProcedure.this.description()
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("target_bytes", LongType)
-        .defaultValue((128L * 1024 * 1024).toString)
-        .comment("segments below this size are merge candidates").build())
-    override def isDeterministic: Boolean = false
-    override def call(input: InternalRow): util.Iterator[Scan] = {
-      val (g, before, after) =
-        catalog.segTable(input.getUTF8String(0).toString)
-          .compact(input.getLong(1))
-      val schema = StructType(Seq(
-        StructField("merged_groups", LongType, nullable = false),
-        StructField("segments_before", LongType, nullable = false),
-        StructField("segments_after", LongType, nullable = false)))
-      util.Collections.singletonList[Scan](new ProcResultScan(schema,
-        new GenericInternalRow(Array[Any](g, before, after)))).iterator()
-    }
-  }
-}
-
-/** `CALL graft_cat.system.expire_versions('db.t', keep_last)`. */
-class ExpireVersionsProcedure(catalog: GraftCatalog) extends UnboundProcedure {
-  override def name(): String = "expire_versions"
-  override def description(): String =
-    "retain only the last keep_last manifest versions; GC unreferenced segments"
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "expire_versions"
-    override def description(): String = ExpireVersionsProcedure.this.description()
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("keep_last", LongType).build())
-    override def isDeterministic: Boolean = false
-    override def call(input: InternalRow): util.Iterator[Scan] = {
-      val (expired, deleted) =
-        catalog.segTable(input.getUTF8String(0).toString)
-          .expire(input.getLong(1).toInt)
-      val schema = StructType(Seq(
-        StructField("versions_expired", LongType, nullable = false),
-        StructField("files_deleted", LongType, nullable = false)))
-      util.Collections.singletonList[Scan](new ProcResultScan(schema,
-        new GenericInternalRow(Array[Any](expired, deleted)))).iterator()
-    }
-  }
-}
-
-/** `CALL graft_cat.system.vacuum('db.t' [, max_age_ms])`. */
-class VacuumProcedure(catalog: GraftCatalog) extends UnboundProcedure {
-  override def name(): String = "vacuum"
-  override def description(): String =
-    "delete unreferenced table-dir files older than max_age_ms (orphan GC)"
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "vacuum"
-    override def description(): String = VacuumProcedure.this.description()
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("max_age_ms", LongType)
-        .defaultValue((60L * 60 * 1000).toString)
-        .comment("grace period protecting in-flight writers' staged files")
-        .build())
-    override def isDeterministic: Boolean = false
-    override def call(input: InternalRow): util.Iterator[Scan] = {
-      val (deleted, kept) =
-        catalog.segTable(input.getUTF8String(0).toString)
-          .vacuum(input.getLong(1))
-      val schema = StructType(Seq(
-        StructField("orphans_deleted", LongType, nullable = false),
-        StructField("live_files", LongType, nullable = false)))
-      util.Collections.singletonList[Scan](new ProcResultScan(schema,
-        new GenericInternalRow(Array[Any](deleted, kept)))).iterator()
-    }
-  }
-}
-
-/** Persisted-index inventory (`CALL system.indexes('db')`): one row per
-  * index artifact discovered by its `_meta` watermark table — family
-  * (minhash-signatures / exact-grams / component-labels /
-  * component-labels-capped / ivf-cells / pq-codes / sq-codes /
-  * nsw-edges / bm25-postings), index
-  * name, the data table, its live row count (manifest arithmetic,
-  * deletion vectors subtracted), segment count, and the data table's
-  * committed head version. The operational complement of the ensure*()
-  * maintenance entry points: which derived artifacts exist and how big
-  * they are, answerable without touching data. The families, their
-  * table names and their classification priority all come from
-  * [[graft.ext.IndexFamily.All]]. */
-class IndexesProcedure(catalog: GraftCatalog) extends UnboundProcedure {
-  override def name(): String = "indexes"
-  override def description(): String =
-    "list persisted index artifacts (dedup/ann/pq/search) in a namespace"
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "indexes"
-    override def description(): String = IndexesProcedure.this.description()
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("namespace", StringType).defaultValue("'db'")
-        .build())
-    override def isDeterministic: Boolean = false
-    override def call(input: InternalRow): util.Iterator[Scan] = {
-      import org.apache.spark.unsafe.types.UTF8String
-      val ns = input.getUTF8String(0).toString
-      // candidates in priority order (IndexFamily.candidates). Base-
-      // family ensure entry points reject index names ending in their
-      // prefix's sub-family suffixes (CdcIndex.requireBaseFamilyName), so
-      // the suffix-specific candidate is authoritative for all indexes
-      // built through this codebase — but a LEGACY artifact whose name
-      // carries a reserved suffix still resolves via the sibling-family
-      // fallback (its sub-family data table is absent, its base-family
-      // one exists) instead of silently vanishing from the inventory.
-      val rows = catalog.listTables(Array(ns)).toSeq
-        .map(_.name()).sorted.flatMap { t =>
-          // first candidate whose data table resolves wins; a meta with
-          // NO resolvable data table = a torn build the next ensure*()
-          // will rebuild — not an inventory row
-          graft.ext.IndexFamily.candidates(t).iterator.flatMap {
-            case (f, display, dataName) =>
-              try {
-                val seg = catalog.segTable(s"$ns.$dataName")
-                Some(new GenericInternalRow(Array[Any](
-                  UTF8String.fromString(f.id),
-                  UTF8String.fromString(display),
-                  UTF8String.fromString(s"$ns.$dataName"),
-                  seg.currentLiveRows,
-                  seg.currentSegmentCount.toLong,
-                  seg.currentVersion)): InternalRow)
-              } catch { case _: Exception => None }
-          }.take(1).toSeq
-        }
-      val schema = StructType(Seq(
-        StructField("family", StringType, nullable = false),
-        StructField("index_name", StringType, nullable = false),
-        StructField("data_table", StringType, nullable = false),
-        StructField("live_rows", LongType, nullable = false),
-        StructField("n_segments", LongType, nullable = false),
-        StructField("data_version", LongType, nullable = false)))
-      util.Collections.singletonList[Scan](
-        new ProcRowsScan(schema, rows.toArray)).iterator()
-    }
-  }
-}
-
-/** `CALL graft_cat.system.clone('db.src', 'db.dst')` — zero-copy shallow
-  * clone ([[GraftCatalog.cloneTable]]). */
-class CloneProcedure(catalog: GraftCatalog) extends UnboundProcedure {
-  override def name(): String = "clone"
-  override def description(): String =
-    "zero-copy shallow clone: new table referencing the source's current segments"
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "clone"
-    override def description(): String = CloneProcedure.this.description()
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("source", StringType).build(),
-      ProcedureParameter.in("target", StringType).build())
-    override def isDeterministic: Boolean = false
-    override def call(input: InternalRow): util.Iterator[Scan] = {
-      val (segs, bytes, srcV) = catalog.cloneTable(
-        input.getUTF8String(0).toString, input.getUTF8String(1).toString)
-      val schema = StructType(Seq(
-        StructField("segments_referenced", LongType, nullable = false),
-        StructField("bytes_referenced", LongType, nullable = false),
-        StructField("source_version", LongType, nullable = false)))
-      util.Collections.singletonList[Scan](new ProcResultScan(schema,
-        new GenericInternalRow(Array[Any](segs, bytes, srcV)))).iterator()
-    }
-  }
-}
-
-/** `CALL graft_cat.system.rollback('db.t', version)` — restore table
-  * content to a snapshot as a NEW version ([[SegTable.rollback]]);
-  * history stays intact and time-travelable. */
-class RollbackProcedure(catalog: GraftCatalog) extends UnboundProcedure {
-  override def name(): String = "rollback"
-  override def description(): String =
-    "restore the table's content to a historical version (history preserved)"
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "rollback"
-    override def description(): String = RollbackProcedure.this.description()
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("version", LongType).build())
-    override def isDeterministic: Boolean = false
-    override def call(input: InternalRow): util.Iterator[Scan] = {
-      val (from, now) = catalog.segTable(input.getUTF8String(0).toString)
-        .rollback(input.getLong(1))
-      val schema = StructType(Seq(
-        StructField("restored_version", LongType, nullable = false),
-        StructField("new_version", LongType, nullable = false)))
-      util.Collections.singletonList[Scan](new ProcResultScan(schema,
-        new GenericInternalRow(Array[Any](from, now)))).iterator()
-    }
-  }
-}
-
-/** `CALL graft_cat.system.tag('db.t', 'name' [, version])` — pin a named
-  * ref (Iceberg tag) to a snapshot; `VERSION AS OF 'name'` then reads it.
-  * The ref is an ordinary `graft.tag.<name>` property commit: it versions
-  * with the table, persists in the manifest, and UNSET TBLPROPERTIES
-  * drops it. Version defaults to the current head (-1 sentinel). */
-class TagProcedure(catalog: GraftCatalog) extends UnboundProcedure {
-  override def name(): String = "tag"
-  override def description(): String =
-    "pin a named ref to a snapshot version, readable via VERSION AS OF 'name'"
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "tag"
-    override def description(): String = TagProcedure.this.description()
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("name", StringType).build(),
-      ProcedureParameter.in("version", LongType).defaultValue("-1")
-        .comment("snapshot to pin; -1 = current head").build())
-    override def isDeterministic: Boolean = false
-    override def call(input: InternalRow): util.Iterator[Scan] = {
-      val v = input.getLong(2)
-      val pinned = catalog.segTable(input.getUTF8String(0).toString)
-        .createTag(input.getUTF8String(1).toString,
-          if (v < 0) None else Some(v))
-      val schema = StructType(Seq(
-        StructField("pinned_version", LongType, nullable = false)))
-      util.Collections.singletonList[Scan](new ProcResultScan(schema,
-        new GenericInternalRow(Array[Any](pinned)))).iterator()
-    }
-  }
-}
-
-/** `CALL graft_cat.system.branch('db.t', 'dev')` — create a named
-  * writable branch ([[SegTable.createBranch]]): a second version log in
-  * the table's directory seeded at the current head. Read and write it
-  * as `graft_cat.db.t.branch_dev`; merge back with fast_forward. */
-class BranchProcedure(catalog: GraftCatalog) extends UnboundProcedure {
-  override def name(): String = "branch"
-  override def description(): String =
-    "create a named writable branch of the table (zero-copy)"
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "branch"
-    override def description(): String = BranchProcedure.this.description()
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("name", StringType).build())
-    override def isDeterministic: Boolean = false
-    override def call(input: InternalRow): util.Iterator[Scan] = {
-      val fork = catalog.segTable(input.getUTF8String(0).toString)
-        .createBranch(input.getUTF8String(1).toString)
-      val schema = StructType(Seq(
-        StructField("forked_at_version", LongType, nullable = false)))
-      util.Collections.singletonList[Scan](new ProcResultScan(schema,
-        new GenericInternalRow(Array[Any](fork)))).iterator()
-    }
-  }
-}
-
-/** `CALL graft_cat.system.fast_forward('db.t', 'dev')` — adopt branch
-  * `dev`'s head as main's next version ([[SegTable.fastForward]]);
-  * refuses if main advanced past the fork point (diverged). */
-class FastForwardProcedure(catalog: GraftCatalog) extends UnboundProcedure {
-  override def name(): String = "fast_forward"
-  override def description(): String =
-    "fast-forward the main table to a branch's head (metadata-only)"
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "fast_forward"
-    override def description(): String = FastForwardProcedure.this.description()
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("name", StringType).build())
-    override def isDeterministic: Boolean = false
-    override def call(input: InternalRow): util.Iterator[Scan] = {
-      val tbl = input.getUTF8String(0).toString
-      val nm = input.getUTF8String(1).toString
-      val (mainV, branchV, merged) = catalog.segTable(tbl).fastForward(nm)
-      // the merge re-seeded the branch log; a cached branch handle would
-      // read the pre-merge view until refreshed — drop it now
-      catalog.invalidateBranchHandle(tbl, nm)
-      val schema = StructType(Seq(
-        StructField("main_version", LongType, nullable = false),
-        StructField("branch_version", LongType, nullable = false),
-        StructField("commits_merged", LongType, nullable = false)))
-      util.Collections.singletonList[Scan](new ProcResultScan(schema,
-        new GenericInternalRow(Array[Any](mainV, branchV, merged)))).iterator()
-    }
-  }
-}
-
-/** `CALL graft_cat.system.drop_branch('db.t', 'dev')` — delete the
-  * branch's log; branch-only segment files become vacuum-reclaimable
-  * orphans ([[SegTable.dropBranch]]). */
-class CherryPickProcedure(catalog: GraftCatalog) extends UnboundProcedure {
-  override def name(): String = "cherry_pick"
-  override def description(): String =
-    "adopt a branch's commits onto an advanced main when their touched " +
-      "segment sets are disjoint (metadata-only); refuses on overlap"
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "cherry_pick"
-    override def description(): String = CherryPickProcedure.this.description()
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("name", StringType).build())
-    override def isDeterministic: Boolean = false
-    override def call(input: InternalRow): util.Iterator[Scan] = {
-      val tbl = input.getUTF8String(0).toString
-      val nm = input.getUTF8String(1).toString
-      val (mainV, branchV, picked) = catalog.segTable(tbl).cherryPick(nm)
-      catalog.invalidateBranchHandle(tbl, nm)
-      val schema = StructType(Seq(
-        StructField("main_version", LongType, nullable = false),
-        StructField("branch_version", LongType, nullable = false),
-        StructField("commits_picked", LongType, nullable = false)))
-      util.Collections.singletonList[Scan](new ProcResultScan(schema,
-        new GenericInternalRow(Array[Any](mainV, branchV, picked)))).iterator()
-    }
-  }
-}
-
-class DropBranchProcedure(catalog: GraftCatalog) extends UnboundProcedure {
-  override def name(): String = "drop_branch"
-  override def description(): String =
-    "drop a named branch (its exclusive files fall to vacuum)"
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "drop_branch"
-    override def description(): String = DropBranchProcedure.this.description()
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("name", StringType).build())
-    override def isDeterministic: Boolean = false
-    override def call(input: InternalRow): util.Iterator[Scan] = {
-      val tbl = input.getUTF8String(0).toString
-      val nm = input.getUTF8String(1).toString
-      val dropped = catalog.segTable(tbl).dropBranch(nm)
-      catalog.invalidateBranchHandle(tbl, nm)
-      val schema = StructType(Seq(
-        StructField("dropped", org.apache.spark.sql.types.BooleanType,
-          nullable = false)))
-      util.Collections.singletonList[Scan](new ProcResultScan(schema,
-        new GenericInternalRow(Array[Any](dropped)))).iterator()
-    }
-  }
-}
-
-/** `CALL graft_cat.system.evolve_spec('db.t', 'spec')` — partition-spec
-  * evolution ([[SegTable.evolveSpec]]): one metadata-only commit changes
-  * how future writes are routed ('col' = identity, 'days:col',
-  * 'bucket:n:col', '' = unpartition); no data is rewritten and every
-  * historical version stays readable. Per-segment spec stamps
-  * ([[Seg.spec]]) keep bucket pruning / storage-partitioned joins /
-  * keyed compaction honest across the boundary. */
-class EvolveSpecProcedure(catalog: GraftCatalog) extends UnboundProcedure {
-  override def name(): String = "evolve_spec"
-  override def description(): String =
-    "change the table's partition spec for future writes (metadata-only)"
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "evolve_spec"
-    override def description(): String = EvolveSpecProcedure.this.description()
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("spec", StringType)
-        .comment("'col' | 'days:col' | 'bucket:n:col' | '' = unpartition")
-        .build())
-    override def isDeterministic: Boolean = false
-    override def call(input: InternalRow): util.Iterator[Scan] = {
-      val raw = input.getUTF8String(1).toString.trim
-      val (old, now, v) = catalog.segTable(input.getUTF8String(0).toString)
-        .evolveSpec(if (raw.isEmpty) None else Some(raw))
-      val schema = StructType(Seq(
-        StructField("old_spec", StringType, nullable = false),
-        StructField("new_spec", StringType, nullable = false),
-        StructField("version", LongType, nullable = false)))
-      import org.apache.spark.unsafe.types.UTF8String
-      util.Collections.singletonList[Scan](new ProcResultScan(schema,
-        new GenericInternalRow(Array[Any](
-          UTF8String.fromString(old.getOrElse("")),
-          UTF8String.fromString(now.getOrElse("")), v)))).iterator()
-    }
-  }
-}
-
-/** `CALL graft_cat.system.zorder('db.t', 'col_a', 'col_b' [, n])` —
-  * multi-dimensional clustering rewrite (Delta's OPTIMIZE ZORDER BY):
-  * rewrites the table's current rows ordered by the Morton interleave of
-  * two BIGINT or STRING columns (strings cluster by their
-  * order-preserving 8-byte prefix — the same encoding their zone maps
-  * store), so each segment covers a small RECTANGLE of
-  * the (a, b) key space and the existing zone maps prune range
-  * predicates on EITHER column (or both) to a handful of segments. A
-  * declared single-column sort (`graft.sort`) makes one column's zone
-  * maps disjoint at the other's expense; z-order is the two-column
-  * compromise — bounded range per segment on both axes.
-  *
-  * Mechanics: bucket scale comes from MANIFEST zone maps (no data scan);
-  * each value maps to a 0..255 bucket, the 16-bit Morton key range-
-  * partitions into `n` write tasks sorted within partitions, and the
-  * result lands through the table's normal INSERT OVERWRITE path — one
-  * atomic version step (truncate + new segments), CHECK constraints
-  * re-verified, old versions still readable (time travel), replaced
-  * files reclaimed by expire/vacuum. Reading and overwriting the SAME
-  * table is safe because data files are immutable: the scan reads the
-  * pre-rewrite segment files while the commit only swaps manifest refs.
-  * At 100 TB this is the standard nightly layout job: one distributed
-  * sort of the data, zero driver-side rows. */
-class ZOrderProcedure(catalog: GraftCatalog) extends UnboundProcedure {
-  override def name(): String = "zorder"
-  override def description(): String =
-    "rewrite the table clustered by the Morton interleave of two BIGINT columns"
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = "zorder"
-    override def description(): String = ZOrderProcedure.this.description()
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType).build(),
-      ProcedureParameter.in("col_a", StringType).build(),
-      ProcedureParameter.in("col_b", StringType).build(),
-      ProcedureParameter.in("num_partitions", LongType).defaultValue("8")
-        .comment("write tasks = output segments (unpartitioned table)")
-        .build())
-    override def isDeterministic: Boolean = false
-    override def call(input: InternalRow): util.Iterator[Scan] = {
-      val tname = input.getUTF8String(0).toString
-      val cA = input.getUTF8String(1).toString
-      val cB = input.getUTF8String(2).toString
-      val nParts = input.getLong(3).toInt
-      require(nParts > 0, s"num_partitions must be positive, got $nParts")
-      val st = catalog.segTable(tname)
-      require(!st.hasDeclaredSort,
-        s"$tname declares a write sort order (graft.sort) — drop it " +
-          "before z-ordering; the two clustering contracts conflict")
-      val before = st.currentSegmentCount.toLong
-      val schema = StructType(Seq(
-        StructField("segments_before", LongType, nullable = false),
-        StructField("segments_after", LongType, nullable = false),
-        StructField("rows_rewritten", LongType, nullable = false)))
-      def result(after: Long, rows: Long) =
-        util.Collections.singletonList[Scan](new ProcResultScan(schema,
-          new GenericInternalRow(Array[Any](before, after, rows)))).iterator()
-      (st.columnBounds(cA), st.columnBounds(cB)) match {
-        case (Some((mnA, mxA)), Some((mnB, mxB))) =>
-          val spark = org.apache.spark.sql.SparkSession.active
-          import org.apache.spark.sql.functions.{col, expr}
-          // bucket width so (max-min)/div fits 0..255; BigInt driver-side
-          // arithmetic (the span of two Long extremes overflows Long)
-          def divisor(mn: Long, mx: Long): Long =
-            ((BigInt(mx) - BigInt(mn)) / 256 + 1).toLong
-          val (dA, dB) = (divisor(mnA, mxA), divisor(mnB, mxB))
-          val full = s"${catalog.name()}.$tname"
-          // a STRING column buckets by its order-preserving 8-byte
-          // prefix — the SAME encoding its zone maps store
-          // ([[SegStore.strPrefix]]), spelled in codegen'd built-ins:
-          // unsigned big-endian hex -> decimal, then the sign-bit flip
-          def keyExpr(c: String): String =
-            if (st.columnIsString(c))
-              s"CAST(CAST(conv(rpad(hex(substring(CAST(`$c` AS BINARY), 1, 8)), " +
-                "16, '0'), 16, 10) AS DECIMAL(20,0)) - 9223372036854775808 AS BIGINT)"
-            else s"`$c`"
-          val z = graft.ext.Layout.morton8(
-            expr(s"(${keyExpr(cA)} - ${mnA}L) div ${dA}L"),
-            expr(s"(${keyExpr(cB)} - ${mnB}L) div ${dB}L"))
-          val tmp = s"graft_zorder_${java.util.UUID.randomUUID.toString.take(8)}"
-          spark.table(full)
-            .withColumn("__graft_z", z)
-            .repartitionByRange(nParts, col("__graft_z"))
-            .sortWithinPartitions("__graft_z")
-            .drop("__graft_z")
-            .createOrReplaceTempView(tmp)
-          // label the overwrite 'zorder' (content-identical, change-feed
-          // skippable); cleared in finally so a failed rewrite can never
-          // mislabel a later genuine overwrite
-          st.markZorderRewrite()
-          try spark.sql(s"INSERT OVERWRITE $full SELECT * FROM $tmp")
-          finally {
-            st.clearZorderRewrite()
-            spark.catalog.dropTempView(tmp)
-          }
-          // post-rewrite numbers from the manifest — metadata, not a scan
-          result(st.currentSegmentCount.toLong, st.currentRowCount)
-        case _ => // empty table (or no stats): nothing to rewrite
-          result(before, 0L)
-      }
-    }
-  }
+    () => new RowsScan(tschema, metaRows.toArray)
 }
 
 /** The catalog's `days(col)` partition transform as a connector function
@@ -5656,56 +5107,5 @@ object MulModFunction
     def invoke(x: Long): Long = (x * 2654435761L) % 1000L
     override def produceResult(input: InternalRow): java.lang.Long =
       invoke(input.getLong(0))
-  }
-}
-
-/** Cross-table transaction control as stored procedures — the SQL
-  * surface of [[SegTxn]] (Iceberg ships the same capability through its
-  * REST catalog's multi-table commit; a single-file engine like the
-  * reference's DuckDB gets it implicitly from one database file,
-  * `transformation.py:517-547`):
-  *
-  *   CALL graft_cat.system.txn_begin()    -- returns txn_id
-  *   INSERT / INSERT OVERWRITE ...        -- stages (invisible)
-  *   CALL graft_cat.system.txn_commit()   -- all-or-nothing publish
-  *   CALL graft_cat.system.txn_abort()    -- drop staged writes
-  *   CALL graft_cat.system.txn_recover()  -- roll forward torn txns
-  *
-  * All four are zero-argument; one result row each. */
-class TxnProcedure(catalog: GraftCatalog, which: String)
-    extends UnboundProcedure {
-  override def name(): String = which
-  override def description(): String = which match {
-    case "txn_begin" => "open a cross-table transaction (writes stage until commit)"
-    case "txn_commit" => "atomically publish every staged write (all-or-nothing)"
-    case "txn_abort" => "drop the open transaction and its staged segment files"
-    case _ => "roll forward transactions that crashed after their commit point"
-  }
-  override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-    override def name(): String = which
-    override def description(): String = TxnProcedure.this.description()
-    override def parameters(): Array[ProcedureParameter] = Array.empty
-    override def isDeterministic: Boolean = false
-    override def call(input: InternalRow): util.Iterator[Scan] = {
-      import org.apache.spark.unsafe.types.UTF8String
-      val (schema, row) = which match {
-        case "txn_begin" =>
-          (StructType(Seq(StructField("txn_id", StringType, nullable = false))),
-            new GenericInternalRow(Array[Any](UTF8String.fromString(SegTxn.begin()))))
-        case "txn_commit" =>
-          (StructType(Seq(StructField("tables_committed", LongType, nullable = false))),
-            new GenericInternalRow(Array[Any](SegTxn.commit().toLong)))
-        case "txn_abort" =>
-          (StructType(Seq(StructField("aborted", org.apache.spark.sql.types.BooleanType,
-              nullable = false))),
-            { val was = SegTxn.active; SegTxn.abort()
-              new GenericInternalRow(Array[Any](was)) })
-        case _ =>
-          (StructType(Seq(StructField("recovered", LongType, nullable = false))),
-            new GenericInternalRow(Array[Any](catalog.recoverTxns().toLong)))
-      }
-      util.Collections.singletonList[Scan](
-        new ProcResultScan(schema, row)).iterator()
-    }
   }
 }

@@ -1480,7 +1480,7 @@ object Streams {
   /** ext114 — streaming write-audit-publish onto a NAMED BRANCH: the
     * full lakehouse ingestion discipline composed from this round's
     * primitives. The stream lands its micro-batches on branch `ingest`
-    * ([[graft.sources.BranchProcedure]]) — main is never touched while
+    * ([[graft.sources.CatalogProc.Branch]]) — main is never touched while
     * raw data arrives; the audit prices only the branch DELTA
     * (`VERSION AS OF 'fork..'`, the incremental changes read, valid
     * because the stream's commits are append-only); the policy
